@@ -1,15 +1,53 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
-/** Parquet corpus loaders (TESTDATA.md). One call = one lazy scan;
-  * Catalyst prunes columns/pushes filters into the parquet reader, so
-  * callers should NOT pre-select — just compose and let the optimizer
-  * narrow the scan (verify with .explain: ReadSchema / PushedFilters).
+/** Parquet corpus loaders (TESTDATA.md). One call = one lazy scan and no
+  * Spark job: the schema comes from one parquet footer read on the driver
+  * ([[footerSchema]]), so the read skips the one-task schema-inference job
+  * `spark.read.parquet` would launch. Catalyst prunes columns/pushes
+  * filters into the parquet reader, so callers should NOT pre-select —
+  * just compose and let the optimizer narrow the scan (verify with
+  * .explain: ReadSchema / PushedFilters).
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path) // missing or empty: Spark's own error
+    }
+  }
+
+  /** The schema Spark's non-merging parquet inference would give `path`,
+    * read on the driver without a job: the footer of the first data file
+    * (a plain file, or the sorted first of a directory's files that do not
+    * start with `_` or `.`), converted by the same
+    * [[ParquetToSparkSchemaConverter]] over the session's current conf, so
+    * settings such as `spark.sql.legacy.parquet.nanosAsLong` apply. None
+    * when the path has no data file. Read afresh on every call. */
+  private[graft] def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val file =
+      if (!fs.exists(root)) None
+      else if (fs.getFileStatus(root).isFile) Some(root)
+      else fs.listStatus(root).filter(_.isFile).map(_.getPath)
+        .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+        .sortBy(_.getName).headOption
+    file.map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      val footer = try reader.getFooter finally reader.close()
+      ParquetFileFormat.readSchemaFromFooter(new Footer(f, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")

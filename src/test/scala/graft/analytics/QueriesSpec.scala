@@ -1,10 +1,12 @@
 package graft.analytics
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 
 /** Equivalence proofs-by-execution for the two plan rewrites the analytics
   * layer makes relative to the reference's literal formulation (the
@@ -51,6 +53,66 @@ class QueriesSpec extends SparkSpec {
     // ratios, and hence the ranks, must be bit-identical
     assert(naiveWeakest.except(rewritten).isEmpty
       && rewritten.except(naiveWeakest).isEmpty)
+  }
+
+  test("q2/q3a company filter on supplier == the post-join left_semi form") {
+    for (dir <- Seq(sfDir, SparkSpec.gateDir)) {
+      // the view first, then the Q1c semi-join on its company column
+      val li = Tables.lineitem(spark, dir)
+      val o = Tables.orders(spark, dir)
+      val c = Tables.customer(spark, dir)
+      val n = Tables.nation(spark, dir)
+      val s = Tables.supplier(spark, dir)
+      val p = Tables.part(spark, dir)
+      val cf = li.join(o, li("l_orderkey") === o("o_orderkey"))
+        .join(c, o("o_custkey") === c("c_custkey"))
+        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
+        .join(s, li("l_suppkey") === s("s_suppkey"))
+        .join(p, li("l_partkey") === p("p_partkey"))
+        .select(
+          col("s_name").as("company"), col("n_name").as("state"),
+          year(col("l_shipdate")).cast("long").as("year"),
+          month(col("l_shipdate")).cast("long").as("month"),
+          col("p_brand").as("product"), col("p_type").as("sub_product"),
+          col("o_orderpriority").as("issue"), col("o_orderstatus").as("sub_issue"),
+          when(col("l_returnflag") === "N", 1).otherwise(0).as("timely_response"),
+          when(col("l_linestatus") === "F", 1).otherwise(0).as("consumer_disputed"))
+        .join(broadcast(Queries.q1cCompanies(spark, dir)), Seq("company"), "left_semi")
+      val q2 = cf.groupBy(col("company"), col("state"))
+        .agg(
+          count(lit(1)).as("total_cases"),
+          (count(when(col("timely_response") === 1, 1)) / count(lit(1)))
+            .as("timely_response_ratio"),
+          (lit(1) - count(when(col("consumer_disputed") === 1, 1)) / count(lit(1)))
+            .as("consumer_disputed_false"))
+        .orderBy(col("timely_response_ratio").desc, col("company"), col("state"))
+      val q3a = cf.groupBy(col("company"), col("state"), col("year"), col("month"),
+          col("product"), col("sub_product"), col("issue"), col("sub_issue"))
+        .agg(
+          count(lit(1)).as("total_cases"),
+          sum(col("timely_response")).as("timely_responses"),
+          sum(col("consumer_disputed")).as("consumer_disputed"))
+      assert(Queries.q2StateRatios(spark, dir).collect().toSeq == q2.collect().toSeq, dir)
+      val rows = (df: DataFrame) => df.collect().toSeq.sortBy(_.toString)
+      val q3aRows = rows(q3a)
+      assert(q3aRows.nonEmpty && rows(Queries.q3aCfView(spark, dir)) == q3aRows, dir)
+    }
+  }
+
+  test("q2/q3a: the companies semi-join sits under the lineitem-orders join") {
+    for (q <- Seq(Queries.q2StateRatios _, Queries.q3aCfView _)) {
+      // optimized without cache substitution: another test caches q3a
+      val plan = spark.sessionState.optimizer.execute(q(spark, sfDir).queryExecution.analyzed)
+      def refs(j: Join) = j.condition.toSeq.flatMap(_.references.map(_.name)).toSet
+      val liOrders = plan.collect {
+        case j: Join if Set("l_orderkey", "o_orderkey").subsetOf(refs(j)) => j
+      }
+      assert(liOrders.size == 1, plan)
+      val semi = (p: LogicalPlan) => p.collect {
+        case j: Join if j.joinType == LeftSemi && refs(j).contains("s_name") => j
+      }
+      assert(semi(plan).size == 1 && semi(liOrders.head).size == 1, plan)
+    }
   }
 
   test("q1b undisputed ranking from counts matches the ratio-complement ordering") {
