@@ -426,7 +426,7 @@ object Multimodal {
     graft.functions.DhashBits.register(lib.sparkSession)
     Dedup.bandedHammingPairs(
       lib.select(col("media_id").as("doc_id"), dhashCol(col("grid")).as("phash")),
-      "phash")
+      Seq("phash"), Dedup.SimBands)
       .withColumnRenamed("doc_a", "media_a")
       .withColumnRenamed("doc_b", "media_b")
   }
@@ -584,7 +584,7 @@ object Multimodal {
     Dedup.bandedHammingPairs(
       lib.select(col("media_id").as("doc_id"),
         dhashCol(audioEnvelope(col("sm"))).as("afp")),
-      "afp")
+      Seq("afp"), Dedup.SimBands)
       .withColumnRenamed("doc_a", "media_a")
       .withColumnRenamed("doc_b", "media_b")
   }

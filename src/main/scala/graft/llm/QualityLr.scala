@@ -65,7 +65,7 @@ object QualityLr {
     * (UNROUNDED, exactly [[TextAnalysis.withQualityScore]]'s inputs)
     * and the teacher label y = [score ≥ 0.5] on the 6dp-rounded score
     * both engines output. */
-  private[llm] def featFrame(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def featFrame(spark: SparkSession, dir: String): DataFrame =
     featsOf(Tables.spread(Tables.documents(spark, dir)))
 
   /** Feature kernel: APPENDS the three clamped terms and the teacher
@@ -109,7 +109,7 @@ object QualityLr {
     * defaultParallelism` and this is the identity — nothing is tuned to
     * local[32]. Results are invariant either way: every per-round
     * aggregate is an exact decimal sum (combination-order-proof). */
-  private[llm] def trainWeightsFrom(feats0: DataFrame): IndexedSeq[Double] = {
+  private[graft] def trainWeightsFrom(feats0: DataFrame): IndexedSeq[Double] = {
     val sized = {
       val bytes = feats0.queryExecution.optimizedPlan.stats.sizeInBytes
       val cap = feats0.sparkSession.sparkContext.defaultParallelism
@@ -137,31 +137,7 @@ object QualityLr {
     w
   }
 
-  /** Session-scoped trained-model ARTIFACT (the `centroidArtifact`
-    * lifecycle): the first consumer pays the [[Rounds]]-pass training,
-    * every later consumer — the score and eval entries — reads the 4
-    * collected doubles. Keyed by (applicationId, dir); training is
-    * deterministic, so sharing can never change results.
-    *
-    * Staleness contract (ADVICE r19): the key is the PATH, not the
-    * data — like every model file, the artifact does not watch its
-    * training set. Rewriting a dir's parquet inside one application
-    * and re-reading through this cache serves the weights trained on
-    * the old bytes, by design (the offline-train / online-serve
-    * lifecycle); a pipeline that rewrites corpora in-session must
-    * train through [[trainWeightsFrom]] directly or restart the
-    * session (new applicationId → fresh key). The harness never
-    * rewrites testdata, so the gate cannot observe the difference. */
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, IndexedSeq[Double]]()
-  private[graft] def modelArtifact(spark: SparkSession, dir: String): IndexedSeq[Double] =
-    modelCache.computeIfAbsent(
-      spark.sparkContext.applicationId + "|" + dir,
-      _ => trainWeightsFrom(featFrame(spark, dir)))
-
-  /** The trained weights, one row per feature. This entry measures the
-    * honest one-time TRAINING cost (it trains inline, not through the
-    * artifact — the `dedup_clusters` precedent). */
+  /** The trained weights, one row per feature. */
   def qualityLrTrain(spark: SparkSession, dir: String): DataFrame = {
     val w = trainWeightsFrom(featFrame(spark, dir))
     spark.createDataFrame(FeatNames.zip(w)).toDF("feature", "weight")
@@ -170,13 +146,14 @@ object QualityLr {
 
   /** Every document scored with the trained model: sigmoid probability
     * (6dp) and the keep flag at the 0.5 boundary — the frame a
-    * model-gated ingest actually reads. Map-only over the corpus; the
-    * model comes from [[modelArtifact]]. */
+    * model-gated ingest actually reads. The model is trained by
+    * [[trainWeightsFrom]] inside this call (the weights are a value, so
+    * a rewritten corpus is always scored by a model trained on it);
+    * scoring is then map-only over the corpus. */
   def qualityLrScore(spark: SparkSession, dir: String): DataFrame = {
-    val w = modelArtifact(spark, dir)
-    val scored = scoreWith(featFrame(spark, dir), w)
-    scored.select(col("doc_id"), col("lr_score"),
-        (col("lr_score") >= 0.5).as("keep"))
+    val feats = featFrame(spark, dir)
+    scoreWith(feats, trainWeightsFrom(feats))
+      .select(col("doc_id"), col("lr_score"), (col("lr_score") >= 0.5).as("keep"))
       .orderBy("doc_id")
   }
 
@@ -188,10 +165,11 @@ object QualityLr {
 
   /** Student-vs-teacher confusion, one row: how often the trained gate
     * agrees with the composite-score gate it distilled. The acceptance
-    * audit a pipeline runs before swapping a hand rule for a model. */
+    * audit a pipeline runs before swapping a hand rule for a model.
+    * Trains its own model in the call, like [[qualityLrScore]]. */
   def qualityLrEval(spark: SparkSession, dir: String): DataFrame = {
-    val w = modelArtifact(spark, dir)
-    scoreWith(featFrame(spark, dir), w)
+    val feats = featFrame(spark, dir)
+    scoreWith(feats, trainWeightsFrom(feats))
       .select(col("y"), (col("lr_score") >= 0.5).as("keep"))
       .agg(
         count(lit(1)).as("n"),

@@ -490,12 +490,11 @@ object Sampling {
     * Scale shape: the cluster table is the (small) dedup output joined
     * LEFT to the corpus — broadcast under AQE, map-only on the corpus
     * side — and the split itself stays the shuffle-free md5 projection.
-    * The cluster labels come from [[Dedup.clusterArtifact]] (built once
-    * per session, read thereafter), so this entry's warm cost is the
-    * join + split only — the CC build is paid by whichever dedup entry
-    * runs first and amortized across all three consumers. */
+    * The cluster labels come from [[Dedup.clusterLabels]], built inside
+    * this call, so each execution pays the CC build plus the join and
+    * split. */
   def leakageSafeSplit(spark: SparkSession, dir: String): DataFrame = {
-    val clusters = Dedup.clusterArtifact(spark, dir)
+    val clusters = Dedup.clusterLabels(spark, dir)
       .select(col("doc_id"), col("cluster_id"))
     val keyed = Tables.documents(spark, dir).select("doc_id")
       .join(clusters, Seq("doc_id"), "left")

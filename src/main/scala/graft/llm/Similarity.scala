@@ -532,33 +532,36 @@ object Similarity {
     * order-dependent, and requires the double to be exactly x.5e-14 —
     * astronomically unlikely at unit scale where doubles carry ~17
     * significant digits). */
-  private val IvfK = 8
+  private[llm] val IvfK = 8
   private val IvfNprobe = 2
   private val IvfIters = 2
   private val CentroidDp = 4
 
-  /** Session-scoped trained-centroid ARTIFACT — the `Dedup.clusterArtifact`
-    * persist-once lifecycle applied to the IVF coarse quantizer: the first
-    * consumer in a session pays the [[IvfIters]]-Lloyd-iteration training
-    * chain and pins the result; every later consumer — including
-    * [[embeddingAnnIvf]] on subsequent bench passes and [[ivfIndexSearch]]'s
-    * index build — reads the trained model and pays only assignment+probe
-    * (or its table write). The artifact is the COLLECTED K ≤ 8 (cent_id,
-    * centroid) rows (bounded by the compile-time [[IvfK]], never by data
-    * size), so it is a plain JVM value: `catalog.clearCache()` at a bench
-    * pass boundary cannot evict it, exactly like a persisted model file.
-    * Keyed by (applicationId, dir) so a restarted session or a different
-    * scale factor never sees a stale model. Training is deterministic
-    * (seeded with the first K vectors, decimal-exact means), so sharing
-    * the artifact can never change results vs retraining inline. */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, IndexedSeq[(Long, Seq[Double])]]()
-  private[llm] def centroidArtifact(spark: SparkSession, dir: String,
-      e: DataFrame): IndexedSeq[(Long, Seq[Double])] =
-    centroidCache.computeIfAbsent(
-      spark.sparkContext.applicationId + "|" + dir,
-      _ => trainIvfCentroids(e).collect().toIndexedSeq
-        .map(r => (r.getLong(0), r.getSeq[Double](1))))
+  /** (vec_id, ed): the embedding table with its vectors cast to double,
+    * laid out by a size-derived partition count (r21, Tables.sizedSpread)
+    * — the input every IVF, PQ and semantic entry starts from. */
+  private def vectors(spark: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(spark, dir)
+      .withColumn("ed", col("embedding").cast("array<double>"))
+      .select("vec_id", "ed")
+      .sizedSpread()
+
+  /** A (cent_id, centroid) frame collected into a model value — K rows,
+    * bounded by the caller's K, never by data size. */
+  private[llm] def centroidModel(cents: DataFrame): IndexedSeq[(Long, Seq[Double])] =
+    cents.collect().toIndexedSeq.map(r => (r.getLong(0), r.getSeq[Double](1)))
+
+  /** The trained K-cell coarse quantizer as a value: every consumer
+    * trains it inside its own call (training is deterministic — seeded
+    * with the first K vectors, decimal-exact means — so the model is a
+    * function of the vectors it is given, never of an earlier call). */
+  private[llm] def ivfModel(e: DataFrame, k: Int): IndexedSeq[(Long, Seq[Double])] =
+    centroidModel(trainCentroidsK(e, k))
+
+  /** [[ivfModel]] at K = [[IvfK]] as a (cent_id, ced) frame — the form
+    * the IVF search kernels take. */
+  private def ivfModelFrame(e: DataFrame): DataFrame =
+    e.sparkSession.createDataFrame(ivfModel(e, IvfK)).toDF("cent_id", "ced")
 
   /** Map-side argmax-cosine cell pick against a COLLECTED centroid
     * model, via the native [[graft.functions.ArgmaxCell]] kernel: the
@@ -626,38 +629,30 @@ object Similarity {
       (-best.getField("nid")).as("cell"))
   }
 
-  /** Deterministic k-means coarse quantizer: seeds = the first K vectors,
-    * then [[IvfIters]] Lloyd iterations of (assign every vector to its
-    * max-cosine centroid with a cent_id tie-break, recompute each
-    * centroid as the per-dimension mean rounded to [[CentroidDp]]
-    * decimals). Assignment is the map-side [[argmaxCellLit]] fold over
-    * the collected K-row model; the only per-round aggregate is the
-    * K×Dim means shuffle — no driver-side loops over data, only over
-    * the K-row centroid frame between iterations. Cells that lose all
-    * members drop out identically on both engines. */
-  private[llm] def trainIvfCentroids(e: DataFrame): DataFrame =
-    trainCentroidsK(e, IvfK)
-
-  /** [[trainIvfCentroids]] with the cluster count as a parameter — the
-    * dial the semantic-dedup scale story turns (K ∝ n/target-cell; the
-    * SCALE.md 100× rehearsal trains K=256 over 200k vectors). The
-    * registered entries stay on the compile-time [[IvfK]] so the
-    * unrolled oracle chain mirrors them exactly.
+  /** Deterministic k-means coarse quantizer of K cells: seeds = the
+    * first K vectors, then [[IvfIters]] Lloyd iterations of (assign
+    * every vector to its max-cosine centroid with a cent_id tie-break,
+    * recompute each centroid as the per-dimension mean rounded to
+    * [[CentroidDp]] decimals). Cells that lose all members drop out
+    * identically on both engines. K is the dial the semantic-dedup scale
+    * story turns (K ∝ n/target-cell; the SCALE.md 100× rehearsal trains
+    * K=256 over 200k vectors); the IVF entries train at the
+    * compile-time [[IvfK]] so the unrolled oracle chain mirrors them
+    * exactly.
     *
     * Each Lloyd round collects the K-row centroid frame (a bounded
-    * MODEL artifact — K is the caller's dial, never data-sized; the
-    * same class as the [[centroidArtifact]] collect) and assigns cells
-    * with the map-side [[argmaxCellLit]] fold, so a round's corpus
-    * pass is one projection + the K×Dim means aggregate — the
-    * crossJoin+argmax-aggregate formulation this replaces streamed
-    * n×K ed-carrying rows per round. */
+    * MODEL — K is the caller's dial, never data-sized; the same class as
+    * the [[ivfModel]] collect) and assigns cells with the map-side
+    * [[argmaxCellLit]] fold, so a round's corpus pass is one projection
+    * + the K×Dim means aggregate — no driver-side loops over data, only
+    * over the K-row centroid frame between iterations. The
+    * crossJoin+argmax-aggregate formulation this replaces streamed n×K
+    * ed-carrying rows per round. */
   private[llm] def trainCentroidsK(e: DataFrame, k: Int): DataFrame = {
     var cents = e.filter(col("vec_id") < k)
       .select(col("vec_id").as("cent_id"), col("ed").as("ced"))
     for (_ <- 1 to IvfIters) {
-      val model = cents.collect().toIndexedSeq
-        .map(r => (r.getLong(0), r.getSeq[Double](1)))
-      val assigned = argmaxCellLit(e, model)
+      val assigned = argmaxCellLit(e, centroidModel(cents))
         .select(col("vec_id"), col("ed"), col("cell").as("cent_id"))
       // per-dimension decimal-exact mean via explode + narrow groupBy —
       // NOT 64 separate sum columns: that generates a 64-accumulator
@@ -680,7 +675,7 @@ object Similarity {
   }
 
   /** IVF-bucketed ANN: a trained coarse quantizer of K cells
-    * ([[trainIvfCentroids]] — deterministic k-means, seeded with the
+    * ([[trainCentroidsK]] — deterministic k-means, seeded with the
     * first K vectors, centroids shared with the oracle through the
     * mirrored SQL formulation rather than literals), every vector
     * assigned to its max-cosine cell, queries probing their nprobe best
@@ -692,22 +687,14 @@ object Similarity {
     CosineSimilarity.register(spark)
     // the vector table feeds training (once per Lloyd iteration), cell
     // assignment, and the candidate join — cache it once
-    val e = Tables.embeddings(spark, dir)
-      .withColumn("ed", col("embedding").cast("array<double>"))
-      .select("vec_id", "ed")
-      .sizedSpread() // size-derived, not a core constant (r21; Tables.sizedSpread)
-      .scratchCache()
-    // The trained quantizer is a MODEL ARTIFACT of K ≤ 8 rows (bounded by
-    // the compile-time constant, never by data size): train once per
-    // (session, dir) via centroidArtifact and re-plan the search against
-    // literal centroids, cutting the 2-Lloyd-iteration lineage out of
-    // every downstream plan AND out of every warm re-execution — warm
-    // cost drops to assignment+probe. The full lifecycle (persist +
-    // bucketed layout) is ivfIndexSearch, which shares the same artifact;
-    // this entry keeps the query-side semantics for the shared oracle.
-    val cents = spark.createDataFrame(centroidArtifact(spark, dir, e))
-      .toDF("cent_id", "ced")
-    ivfSearchFrom(e, cents, 100L, 105L)
+    val e = vectors(spark, dir).scratchCache()
+    // The trained quantizer is a MODEL of K ≤ 8 rows (bounded by the
+    // compile-time constant, never by data size): train it, collect it,
+    // and re-plan the search against literal centroids, cutting the
+    // 2-Lloyd-iteration lineage out of every downstream plan. The full
+    // lifecycle (persist + bucketed layout) is ivfIndexSearch; this
+    // entry keeps the query-side semantics for the shared oracle.
+    ivfSearchFrom(e, ivfModelFrame(e), 100L, 105L)
   }
 
   /** The assignment+probe+search phase of IVF ANN against an already
@@ -720,8 +707,7 @@ object Similarity {
     // full-corpus assignment: the map-side argmax fold over the
     // collected K-row model — one codegen'd projection, no n×K
     // ed-carrying stream (see argmaxCellLit)
-    val assign = argmaxCellLit(e, cents.collect().toIndexedSeq
-      .map(r => (r.getLong(0), r.getSeq[Double](1))))
+    val assign = argmaxCellLit(e, centroidModel(cents))
     // probe ranking needs top-nprobe (not argmax) but only for the few
     // query vectors — filter FIRST, then window over |queries|×K rows
     val probes = e
@@ -857,25 +843,18 @@ object Similarity {
     *
     * MEASUREMENT caveat: as a registered entry this re-runs build+search
     * per execution (it drops and rewrites its fixed-name managed tables),
-    * so the bench number is the lifecycle cost minus training on warm
-    * passes (centroid training itself rides the session-scoped
-    * [[centroidArtifact]], paid once per session) — NOT the amortized
-    * per-query search this design buys at scale. The fixed table names
-    * also mean two drivers sharing a warehouse dir would clobber each
-    * other; the entries are single-driver by design (the driver gate and
-    * bench run serially). */
+    * so the bench number is the whole lifecycle cost, centroid training
+    * included — NOT the amortized per-query search this design buys at
+    * scale. The fixed table names also mean two drivers sharing a
+    * warehouse dir would clobber each other; the entries are
+    * single-driver by design (the driver gate and bench run serially). */
   def ivfIndexSearch(spark: SparkSession, dir: String): DataFrame = {
     CosineSimilarity.register(spark)
     // ---- index build: once per corpus, not per query ----
     Layout.dropManagedTable(spark, "graft_ivf_centroids")
     Layout.dropManagedTable(spark, "graft_ivf_assign")
-    val e = Tables.embeddings(spark, dir)
-      .withColumn("ed", col("embedding").cast("array<double>"))
-      .select("vec_id", "ed")
-      .sizedSpread() // size-derived, not a core constant (r21; Tables.sizedSpread)
-      .scratchCache()
-    spark.createDataFrame(centroidArtifact(spark, dir, e))
-      .toDF("cent_id", "ced")
+    val e = vectors(spark, dir).scratchCache()
+    ivfModelFrame(e)
       .write.mode("overwrite")
       .saveAsTable("graft_ivf_centroids")
     // the table holds exactly ≤ IvfK rows by construction, but read back
@@ -885,8 +864,7 @@ object Similarity {
     // sees), so the broadcast cross joins below are provably not
     // quadratic (VERDICT r15 #2)
     val cents = spark.table("graft_ivf_centroids").limit(IvfK)
-    argmaxCellLit(e, cents.collect().toIndexedSeq
-        .map(r => (r.getLong(0), r.getSeq[Double](1))))
+    argmaxCellLit(e, centroidModel(cents))
       .write.bucketBy(8, "cell").mode("overwrite")
       .saveAsTable("graft_ivf_assign")
     // ---- search: reads ONLY the persisted artifacts ----
@@ -1320,17 +1298,13 @@ object Similarity {
     cents
   }
 
-  /** Session-scoped trained-codebook artifact — the [[centroidArtifact]]
-    * lifecycle for PQ: M·K ≤ 16 (m, cent_id, centroid) rows collected
-    * once per (session, dir); warm executions pay encode only. */
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, IndexedSeq[(Int, Long, Seq[Double])]]()
-  private[llm] def pqArtifact(spark: SparkSession, dir: String,
-      e: DataFrame): IndexedSeq[(Int, Long, Seq[Double])] =
-    pqCache.computeIfAbsent(
-      spark.sparkContext.applicationId + "|" + dir,
-      _ => trainPqCodebooks(e).collect().toIndexedSeq
+  /** The trained M·K ≤ 16-row codebooks as a (m, cent_id, ced) frame
+    * of collected literals — the PQ model value, trained inside each
+    * consumer's call like [[ivfModel]]. */
+  private def pqModelFrame(e: DataFrame): DataFrame =
+    e.sparkSession.createDataFrame(trainPqCodebooks(e).collect().toIndexedSeq
         .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2))))
+      .toDF("m", "cent_id", "ced")
 
   /** Product-quantization encode + distortion audit — the vector-payload
     * compression step an ANN system at 100 TB runs before anything else
@@ -1347,14 +1321,8 @@ object Similarity {
     * IVF cell layout ([[ivfIndexSearch]]); the codes here are the
     * storage format that search would read. */
   def embeddingPq(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-      .withColumn("ed", col("embedding").cast("array<double>"))
-      .select("vec_id", "ed")
-      .sizedSpread() // size-derived, not a core constant (r21; Tables.sizedSpread)
-      .scratchCache()
-    val cents = spark.createDataFrame(pqArtifact(spark, dir, e))
-      .toDF("m", "cent_id", "ced")
-    pqEncodeWith(e, cents)
+    val e = vectors(spark, dir).scratchCache()
+    pqEncodeWith(e, pqModelFrame(e))
   }
 
   /** Long-form codes — (vec_id, m, code, d2): each vector's per-subspace
@@ -1466,14 +1434,8 @@ object Similarity {
     * encode; the per-pair sum of M of them accumulates in DECIMAL —
     * bit-identical on both engines, ties broken by c_id. */
   def embeddingAdcSearch(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-      .withColumn("ed", col("embedding").cast("array<double>"))
-      .select("vec_id", "ed")
-      .sizedSpread() // size-derived, not a core constant (r21; Tables.sizedSpread)
-      .scratchCache()
-    val cents = spark.createDataFrame(pqArtifact(spark, dir, e))
-      .toDF("m", "cent_id", "ced")
-    adcSearchFrom(e, cents, AdcQLo, AdcQHi)
+    val e = vectors(spark, dir).scratchCache()
+    adcSearchFrom(e, pqModelFrame(e), AdcQLo, AdcQHi)
   }
 
   /** The ADC phase against given codebooks over query ids `[qLo, qHi)` —
@@ -1509,8 +1471,7 @@ object Similarity {
     * both probed cells). Shared by [[embeddingIvfAdcSearch]] and specs. */
   private[llm] def ivfCandidatesFrom(e: DataFrame, cents: DataFrame,
       qLo: Long, qHi: Long): DataFrame = {
-    val assign = argmaxCellLit(e, cents.collect().toIndexedSeq
-        .map(r => (r.getLong(0), r.getSeq[Double](1))))
+    val assign = argmaxCellLit(e, centroidModel(cents))
       .select(col("vec_id"), col("cell"))
     val probes = e
       .filter(col("vec_id") >= qLo && col("vec_id") < qHi)
@@ -1532,10 +1493,11 @@ object Similarity {
     * cells' members (~n·nprobe/K of the corpus), and each survivor is
     * scored by ASYMMETRIC DISTANCE over its PQ codes — the raw candidate
     * floats are touched by neither stage. This is the end-to-end path a
-    * 10⁹-vector deployment actually runs: both model artifacts
-    * (K-row IVF centroids, M×K PQ codebooks) are the session-scoped
-    * collected artifacts their standalone entries train, so the composed
-    * entry adds only the candidate join and the table-sum.
+    * 10⁹-vector deployment actually runs: both models (K-row IVF
+    * centroids, M×K PQ codebooks) are trained once each inside this call
+    * and collected to literals, exactly as their standalone entries
+    * train them; the composed path adds the candidate join and the
+    * table-sum.
     *
     * Scale shape: candidate generation is the [[embeddingAnnIvf]] probe
     * join (shuffles on `cell`; at scale the assignment side is the
@@ -1545,16 +1507,8 @@ object Similarity {
     * for candidates. */
   def embeddingIvfAdcSearch(spark: SparkSession, dir: String): DataFrame = {
     CosineSimilarity.register(spark)
-    val e = Tables.embeddings(spark, dir)
-      .withColumn("ed", col("embedding").cast("array<double>"))
-      .select("vec_id", "ed")
-      .sizedSpread() // size-derived, not a core constant (r21; Tables.sizedSpread)
-      .scratchCache()
-    val ivfCents = spark.createDataFrame(centroidArtifact(spark, dir, e))
-      .toDF("cent_id", "ced")
-    val pqCents = spark.createDataFrame(pqArtifact(spark, dir, e))
-      .toDF("m", "cent_id", "ced")
-    ivfAdcFrom(e, ivfCents, pqCents, AdcQLo, AdcQHi)
+    val e = vectors(spark, dir).scratchCache()
+    ivfAdcFrom(e, ivfModelFrame(e), pqModelFrame(e), AdcQLo, AdcQHi)
   }
 
   /** The composed IVF-candidates + ADC-scoring phase against given model
@@ -1657,19 +1611,14 @@ object Similarity {
     * unique — that makes the bound STRUCTURAL for the registry lint);
     * run it over a sampled query set in production, exactly as FAISS
     * benchmarks do. The searches reuse the entries' own kernels
-    * ([[ivfSearchFrom]], [[ivfAdcFrom]]) and the session-scoped model
-    * artifacts, so the report measures the deployed paths, not copies. */
+    * ([[ivfSearchFrom]], [[ivfAdcFrom]]) against one IVF model and one
+    * PQ model trained in this call, so the report measures the deployed
+    * paths, not copies. */
   def annRecallReport(spark: SparkSession, dir: String): DataFrame = {
     CosineSimilarity.register(spark)
-    val e = Tables.embeddings(spark, dir)
-      .withColumn("ed", col("embedding").cast("array<double>"))
-      .select("vec_id", "ed")
-      .sizedSpread() // size-derived, not a core constant (r21; Tables.sizedSpread)
-      .scratchCache()
-    val ivfCents = spark.createDataFrame(centroidArtifact(spark, dir, e))
-      .toDF("cent_id", "ced")
-    val pqCents = spark.createDataFrame(pqArtifact(spark, dir, e))
-      .toDF("m", "cent_id", "ced")
+    val e = vectors(spark, dir).scratchCache()
+    val ivfCents = ivfModelFrame(e)
+    val pqCents = pqModelFrame(e)
     val queries = e.filter(col("vec_id") >= AdcQLo && col("vec_id") < AdcQHi)
       .limit((AdcQHi - AdcQLo).toInt)
       .select(col("vec_id").as("q_id"), col("ed").as("qed"))
@@ -1795,21 +1744,14 @@ object Similarity {
     * once within the probe set. */
   private val SemProbeN = 64
 
-  /** Shared (vec_id, ed, cell) assignment: every vector's max-cosine
-    * trained centroid, via the session-scoped [[centroidArtifact]]
-    * (K ≤ [[IvfK]] collected rows — the persist-once model lifecycle
-    * shared with the IVF entries, so a session that already ran ANN
-    * pays nothing here) and the map-side [[argmaxCellLit]] fold. */
-  private def semanticAssignFrom(spark: SparkSession, dir: String,
-      e: DataFrame): DataFrame =
-    semanticAssignLit(e, centroidArtifact(spark, dir, e))
-
   /** Assignment against an explicit centroid frame — factored so the
     * spec can drive the kernel with a planted-cluster fixture. */
   private[llm] def semanticAssignWith(e: DataFrame, cents: DataFrame): DataFrame =
-    semanticAssignLit(e, cents.collect().toIndexedSeq
-      .map(r => (r.getLong(0), r.getSeq[Double](1))))
+    semanticAssignLit(e, centroidModel(cents))
 
+  /** Shared (vec_id, ed, cell) assignment: every vector's max-cosine
+    * centroid of a collected model, via the map-side [[argmaxCellLit]]
+    * fold. */
   private def semanticAssignLit(e: DataFrame,
       model: IndexedSeq[(Long, Seq[Double])]): DataFrame =
     argmaxCellLit(e, model)
@@ -1821,7 +1763,8 @@ object Similarity {
   /** Within-cell candidate pairs confirmed at [[SemCosine]] — shared by
     * [[semanticDedup]] and [[semanticDedupApply]] (and the spec's
     * planted-cluster fixture through [[semanticAssignWith]]). */
-  private[llm] def semanticPairsFrom(assign: DataFrame): DataFrame =
+  private[llm] def semanticPairsFrom(assign: DataFrame): DataFrame = {
+    CosineSimilarity.register(assign.sparkSession)
     assign.as("a")
       .join(assign.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
@@ -1835,6 +1778,15 @@ object Similarity {
       .select(col("doc_a"), col("doc_b"), col("cell"),
         round(col("c"), 6).as("cosine"))
       .filter(col("cosine") >= SemCosine)
+  }
+
+  /** The semantic-dedup path at K cells: train the K-cell quantizer on
+    * `e` ([[ivfModel]]), assign every vector to its cell, and confirm
+    * within-cell pairs — [[semanticDedup]], [[semanticDedupK64]] and
+    * [[semanticDedupAuto]] differ only in K. */
+  private def semanticDedupAt(e: DataFrame, k: Int): DataFrame =
+    semanticPairsFrom(semanticAssignLit(e, ivfModel(e, k)))
+      .orderBy("doc_a", "doc_b")
 
   /** SEMANTIC near-dup pairs, cluster-partitioned (the SemDeDup kernel):
     * assign every vector to its max-cosine trained centroid, then
@@ -1855,15 +1807,8 @@ object Similarity {
     * cell), measured honestly by [[semanticDedupRecall]] at this
     * corpus's 0.45 demo threshold. K stays the compile-time [[IvfK]]
     * here so the oracle mirrors the exact centroid chain. */
-  def semanticDedup(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
-    val e = Tables.embeddings(spark, dir)
-      .withColumn("ed", col("embedding").cast("array<double>"))
-      .select("vec_id", "ed")
-      .sizedSpread() // size-derived, not a core constant (r21; Tables.sizedSpread)
-    semanticPairsFrom(semanticAssignFrom(spark, dir, e))
-      .orderBy("doc_a", "doc_b")
-  }
+  def semanticDedup(spark: SparkSession, dir: String): DataFrame =
+    semanticDedupAt(vectors(spark, dir), IvfK)
 
   /** Oracle: the identical centroid chain ([[kmeansCteSql]] — same K,
     * iterations, decimal means, rounding) plus the within-cell pair
@@ -1909,15 +1854,8 @@ object Similarity {
     * quantizer through [[trainCentroidsK]] — the identical chain the
     * oracle unrolls at the same K — then runs the same within-cell
     * candidate + exact-confirm kernel. */
-  def semanticDedupK64(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
-    val e = Tables.embeddings(spark, dir)
-      .withColumn("ed", col("embedding").cast("array<double>"))
-      .select("vec_id", "ed")
-      .sizedSpread() // size-derived, not a core constant (r21; Tables.sizedSpread)
-    semanticPairsFrom(semanticAssignWith(e, trainCentroidsK(e, SemWideK)))
-      .orderBy("doc_a", "doc_b")
-  }
+  def semanticDedupK64(spark: SparkSession, dir: String): DataFrame =
+    semanticDedupAt(vectors(spark, dir), SemWideK)
 
   /** Oracle: the same generator at K=[[SemWideK]]. */
   val semanticDedupK64Sql: String = semanticDedupSqlFor(SemWideK)
@@ -1957,15 +1895,9 @@ object Similarity {
     * POLICY, not a K constant: re-verified at sf0.01 (K=20) and sf0.1
     * (K=80), the gate itself proves K moves with corpus size. */
   def semanticDedupAuto(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
-    val e = Tables.embeddings(spark, dir)
-      .withColumn("ed", col("embedding").cast("array<double>"))
-      .select("vec_id", "ed")
-      .sizedSpread() // size-derived, not a core constant (r21; Tables.sizedSpread)
+    val e = vectors(spark, dir)
       .scratchCache() // count + IvfIters Lloyd rounds + both join sides
-    val k = semAutoK(e.count())
-    semanticPairsFrom(semanticAssignWith(e, trainCentroidsK(e, k)))
-      .orderBy("doc_a", "doc_b")
+    semanticDedupAt(e, semAutoK(e.count()))
   }
 
   /** Oracle: the same generator with K as the same clamped
@@ -1984,10 +1916,7 @@ object Similarity {
     * full truth). Emits ONE row (n_true, n_found, recall). */
   def semanticDedupRecall(spark: SparkSession, dir: String): DataFrame = {
     CosineSimilarity.register(spark)
-    val e = Tables.embeddings(spark, dir)
-      .withColumn("ed", col("embedding").cast("array<double>"))
-      .select("vec_id", "ed")
-      .sizedSpread() // size-derived, not a core constant (r21; Tables.sizedSpread)
+    val e = vectors(spark, dir)
       .scratchCache() // probe side + candidate side + assignment
     val probes = e.filter(col("vec_id") < SemProbeN).limit(SemProbeN)
       .select(col("vec_id").as("p_id"), col("ed").as("ped"))
@@ -1998,7 +1927,7 @@ object Similarity {
       .filter(col("c") >= SemCosine - 1e-6)
       .filter(round(col("c"), 6) >= SemCosine)
       .select("p_id", "c_id")
-    val assign = semanticAssignFrom(spark, dir, e).select("vec_id", "cell")
+    val assign = semanticAssignLit(e, ivfModel(e, IvfK)).select("vec_id", "cell")
     val joined = truth
       .join(assign.select(col("vec_id").as("p_id"), col("cell").as("pc")), "p_id")
       .join(assign.select(col("vec_id").as("c_id"), col("cell").as("cc")), "c_id")
@@ -2045,12 +1974,8 @@ object Similarity {
     * list is near-dup-sized, so the anti-join broadcasts under AQE and
     * the corpus streams map-only. */
   def semanticDedupApply(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
-    val e = Tables.embeddings(spark, dir)
-      .withColumn("ed", col("embedding").cast("array<double>"))
-      .select("vec_id", "ed")
-      .sizedSpread() // size-derived, not a core constant (r21; Tables.sizedSpread)
-    val pairs = semanticPairsFrom(semanticAssignFrom(spark, dir, e))
+    val e = vectors(spark, dir)
+    val pairs = semanticPairsFrom(semanticAssignLit(e, ivfModel(e, IvfK)))
       .select(col("doc_a").as("u"), col("doc_b").as("v"))
     val drops = Dedup.connectedComponents(pairs)
       .filter(col("node") =!= col("component"))

@@ -222,12 +222,12 @@ object TextAnalysis {
     * cluster policy. One row a release pipeline stamps next to the
     * data; every number is definitionally consistent with the
     * drill-down entries because it composes their kernels verbatim
-    * ([[qualityFrame]] for quality, [[Dedup.clusterArtifact]] for
-    * duplication — fourth consumer of the session-scoped artifact).
+    * ([[qualityFrame]] for quality, [[Dedup.clusterLabels]] for
+    * duplication, built inside this call).
     *
     * Shape at 100 TB: three independent 1-row aggregates (corpus
     * counters incl. two low-cardinality DISTINCTs, the quality decimal
-    * sum, the artifact's non-canonical count) crossed as broadcast
+    * sum, the cluster labels' non-canonical count) crossed as broadcast
     * 1-row frames. Nothing here adds a shuffle beyond what the composed
     * kernels already pay. */
   def datasetCard(spark: SparkSession, dir: String): DataFrame = {
@@ -240,7 +240,7 @@ object TextAnalysis {
       sum(col("n_tokens")).as("n_tokens"),
       round(sum(col("quality_score").cast("decimal(18,6)")).cast("double") /
         count(lit(1)), 6).as("mean_quality"))
-    val dups = Dedup.clusterArtifact(spark, dir)
+    val dups = Dedup.clusterLabels(spark, dir)
       .filter(!col("is_canonical"))
       .agg(count(lit(1)).as("n_dup_docs"))
     corpus.crossJoin(broadcast(qual)).crossJoin(broadcast(dups))
@@ -1042,18 +1042,13 @@ object TextAnalysis {
   private val TokO = "\u001F"
   private val TokC = "\u001E"
 
-  /** Session-scoped learned-merge artifact — the tokenizer MODEL file of
-    * the BPE loop, same lifecycle as `Similarity.centroidArtifact`: the
-    * first consumer pays the [[bpeMergePairs]] mining aggregate, later
-    * consumers read the collected [[BpeMergeK]]-row rank-ordered merge
-    * list (bounded by the compile-time constant, never by data size). */
-  private val bpeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, IndexedSeq[String]]()
-  private[llm] def bpeMergeArtifact(spark: SparkSession, dir: String): IndexedSeq[String] =
-    bpeCache.computeIfAbsent(
-      spark.sparkContext.applicationId + "|" + dir,
-      _ => bpeMergePairs(spark, dir).orderBy("rk").collect()
-        .map(_.getString(1)).toIndexedSeq)
+  /** The learned single-character merge list, collected — the
+    * tokenizer MODEL of the BPE loop: the [[bpeMergePairs]] mining
+    * aggregate's [[BpeMergeK]] rank-ordered pairs (bounded by the
+    * compile-time constant, never by data size). A plain value its
+    * consumer trains in its own call. */
+  private[llm] def bpeMerges(spark: SparkSession, dir: String): IndexedSeq[String] =
+    bpeMergePairs(spark, dir).orderBy("rk").collect().map(_.getString(1)).toIndexedSeq
 
   /** BPE ENCODE — the follow-through that closes the tokenizer-training
     * loop [[bpeMergePairs]] opens: apply the learned merges, in rank
@@ -1069,9 +1064,9 @@ object TextAnalysis {
     * after `th` merges, `he` can no longer claim the consumed `h`). The
     * K replaces are FOLDED INTO ONE projection over the word array —
     * per-document, in-row, shuffle-free (the only exchange is the
-    * presentation sort); the merge list rides the session-scoped
-    * [[bpeMergeArtifact]] as literal patterns, so the mining aggregate
-    * is not in the per-document plan at all.
+    * presentation sort); the merge list is collected first by
+    * [[bpeMerges]] and rides the plan as literal patterns, so the mining
+    * aggregate is not in the per-document plan at all.
     *
     * Token counting is a length difference (#␟ marks = token count) —
     * no second tokenization pass. Zero-token documents report NULL
@@ -1098,7 +1093,7 @@ object TextAnalysis {
   }
 
   def bpeApply(spark: SparkSession, dir: String): DataFrame = {
-    val merges = bpeMergeArtifact(spark, dir)
+    val merges = bpeMerges(spark, dir)
     // spread: per-doc regex/replace work serializes on a single-split
     // scan (identity at real scale, see Tables.spread)
     val d = Tables.spread(Tables.documents(spark, dir))
@@ -1191,8 +1186,9 @@ object TextAnalysis {
     * Shape at 100 TB: the corpus collapses ONCE to the frequency-weighted
     * word VOCABULARY (the classic BPE trainer structure — training cost
     * scales with distinct words, not corpus bytes); each round is one
-    * aggregate over that vocab-sized frame plus a top-1 collect (R
-    * driver-side rows total). The per-round rewrite appends a single
+    * aggregate over that vocab-sized frame plus a bounded
+    * top-[[BpeBatchWindow]] collect of which the first row is the
+    * merge. The per-round rewrite appends a single
     * `replace` projection to the run-scoped cached vocab frame, so round
     * k never re-tokenizes from scratch. Pair extraction zips adjacent
     * slices of the token array (no per-index `element_at` into a derived
@@ -1200,69 +1196,15 @@ object TextAnalysis {
     * explodes with `explode_outer` (non-outer explode plants an
     * interpreted generator filter, same study).
     *
+    * The loop is [[bpeTrainBatchedFrom]] with a batch of one: the first
+    * candidate of a round's window has no higher-ranked candidate, so it
+    * is always the one accepted, and round k learns merge k.
+    *
     * Output: the rank-ordered learned merge list (rk, lhs, rhs, n) —
     * the tokenizer model file. */
   def bpeTrain(spark: SparkSession, dir: String): DataFrame =
-    bpeTrainFrom(spark, Tables.spread(Tables.documents(spark, dir)),
-      BpeTrainRounds)
-
-  private[llm] def bpeTrainFrom(spark: SparkSession, docs: DataFrame,
-                                rounds: Int): DataFrame = {
-    val vocab = docs
-      .select(explode(split(lower(trim(col("text"))), "\\s+")).as("w"))
-      .filter(length(col("w")) >= 2)
-      .groupBy("w").agg(count(lit(1)).as("cnt"))
-    var cur = graft.Tables.sizedSpread(vocab.select(col("cnt"),
-      regexp_replace(col("w"), "(.)", TokO + "$1" + TokC).as("s"))).scratchCache()
-    // ^ size-derived cache layout (r21, Tables.sizedSpread): the vocab
-    // frame is tens of KB at bench scale, and every training round runs
-    // a full aggregate job over the cached partitions — a blanket
-    // 32-partition cache made each round schedule near-empty tasks
-    // deep-train cache discipline (r20, found by the 256-merge pricing
-    // probe at 25×): each round caches a NEW rewritten frame, so an
-    // R-round train would stack R vocab-sized caches and OOM long
-    // before a production 32k-merge depth. The round's pair-count
-    // collect fully materializes the CURRENT round's cache, after
-    // which the previous round's blocks are dead — release them there,
-    // keeping ≤ 2 resident regardless of depth (the standard iterative
-    // persist/unpersist discipline; RunScope's end-of-entry releaseAll
-    // still sweeps the final two, and double-unpersist is a no-op).
-    var prevCur: DataFrame = null
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-    var done = false
-    for (_ <- 1 to rounds if !done) {
-      val toks = regexp_extract_all(col("s"),
-        lit(TokO + "([^" + TokC + "]*)" + TokC), lit(1))
-      val top = cur.select(col("cnt"), toks.as("toks"))
-        .filter(size(col("toks")) >= 2)
-        .select(col("cnt"), explode_outer(zip_with(
-          slice(col("toks"), lit(1), size(col("toks")) - 1),
-          slice(col("toks"), lit(2), size(col("toks")) - 1),
-          (l, r) => struct(l.as("l"), r.as("r")))).as("pr"))
-        .groupBy(col("pr.l").as("lhs"), col("pr.r").as("rhs"))
-        .agg(sum(col("cnt")).as("n"))
-        .orderBy(col("n").desc, col("lhs"), col("rhs"))
-        .limit(1).collect()
-      if (prevCur != null) prevCur.unpersist()
-      prevCur = cur
-      if (top.isEmpty) done = true
-      else {
-        val (l, r, n) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((l, r, n))
-        val next = cur.select(col("cnt"),
-          replace(col("s"), lit(TokO + l + TokC + TokO + r + TokC),
-            lit(TokO + l + r + TokC)).as("s"))
-        // deep-train lineage truncation — see BpeCheckpointEvery
-        cur = if (merges.size % BpeCheckpointEvery == 0) next.localCheckpoint()
-          else next.scratchCache()
-      }
-    }
-    import spark.implicits._
-    merges.toSeq.zipWithIndex
-      .map { case ((l, r, n), i) => (i + 1L, l, r, n) }
-      .toDF("rk", "lhs", "rhs", "n")
-      .orderBy("rk")
-  }
+    bpeTrainBatchedFrom(spark, Tables.spread(Tables.documents(spark, dir)),
+      BpeTrainRounds, batchK = 1).drop("round")
 
   /** Oracle: the SAME loop unrolled as chained CTE stages (merge #k's
     * stage counts pairs over stage k-1's rewritten strings — generated
@@ -1361,11 +1303,11 @@ object TextAnalysis {
     }.map(_._1).take(batchK)
   }
 
-  /** BATCHED BPE training (VERDICT r18 #2) — the scale path past
-    * [[bpeTrain]]'s one-job-per-merge driver loop: each round mines ONE
-    * pair-count aggregate over the vocab frame, collects the bounded
-    * top-[[BpeBatchWindow]] candidate window, accepts up to
-    * [[BpeBatchK]] pairwise-non-interacting merges from it
+  /** BATCHED BPE training (VERDICT r18 #2) — the one BPE trainer
+    * ([[bpeTrain]] is its `batchK = 1` case, one job per merge). Each
+    * round mines ONE pair-count aggregate over the vocab frame, collects
+    * the bounded top-[[BpeBatchWindow]] candidate window, accepts up to
+    * `batchK` pairwise-non-interacting merges from it
     * ([[bpeSelectBatch]]), and applies them all in ONE rewrite
     * projection. A 32k-merge vocabulary then costs 32k/K Spark jobs
     * instead of 32k, and the chained-lineage depth drops by the same
@@ -1395,10 +1337,14 @@ object TextAnalysis {
     // frame is tens of KB at bench scale, and every training round runs
     // a full aggregate job over the cached partitions — a blanket
     // 32-partition cache made each round schedule near-empty tasks
-    // same ≤2-resident-rounds cache discipline as the sequential
-    // trainer (see bpeTrainFrom) — at R/K rounds the batched trainer
-    // stacks K× fewer caches, but a 32k-merge depth still needs them
-    // released as the window collect retires each round
+    // deep-train cache discipline (r20, found by the 256-merge pricing
+    // probe at 25×): each round caches a NEW rewritten frame, so an
+    // R-round train would stack R vocab-sized caches and OOM long
+    // before a production 32k-merge depth. The round's window collect
+    // fully materializes the CURRENT round's cache, after which the
+    // previous round's blocks are dead — release them there, keeping
+    // ≤ 2 resident regardless of depth (RunScope's end-of-entry
+    // releaseAll still sweeps the final two; double-unpersist is a no-op)
     var prevCur: DataFrame = null
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var done = false

@@ -119,37 +119,32 @@ object DocStream {
     bandedPairStream(
       fingerprints(docs).select(col("doc_id").as("id"), col("ts"),
         col("simhash").as("fp")),
-      horizon, "doc_a", "doc_b")
+      Seq("fp"), Dedup.SimBands, horizon, "doc_a", "doc_b")
 
-  /** The 60-bit banded pair-stream body shared by the text SimHash twin
-    * and the media dHash twin ([[streamingMediaDedup]]) — the streaming
-    * form of [[Dedup.bandedHammingPairs]]: band-explode the (id, ts, fp)
-    * stream into the 8 [[Dedup.SimBands]] slices, self-join within the
+  /** The banded pair-stream body shared by the text SimHash twins
+    * (60- and 120-bit) and the media dHash twin ([[streamingMediaDedup]])
+    * — the streaming form of [[Dedup.bandedHammingPairs]]: band-explode
+    * the (id, ts, words…) stream into the `bands` slices
+    * ([[Dedup.SimBands]] or [[Dedup.WideBands]]), self-join within the
     * symmetric event-time horizon on (band, key), emit Hamming ≤
     * [[Dedup.HamMax]] pairs once (a k-band match collapses via
     * in-horizon pair dedup). State = in-horizon traffic × 8 bands. */
-  private def bandedPairStream(fp: DataFrame, horizon: String,
+  private def bandedPairStream(fp: DataFrame, words: Seq[String],
+                               bands: Seq[Dedup.Band], horizon: String,
                                aName: String, bName: String): DataFrame = {
+    val cols = Seq("id", "ts") ++ words
     val banded = fp
-      .withColumn("band", explode(array(
-        Dedup.SimBands.zipWithIndex.map { case ((off, w), idx) =>
-          struct(lit(idx).as("band_id"),
-            shiftright(col("fp"), off).bitwiseAND(lit((1 << w) - 1))
-              .as("band_key"))
-        }: _*)))
-      .select(col("id"), col("ts"), col("fp"),
-        col("band.band_id"), col("band.band_key"))
-    val a = banded.toDF("a_id", "a_ts", "a_fp", "a_band", "a_key")
-      .withWatermark("a_ts", horizon)
-    val b = banded.toDF("b_id", "b_ts", "b_fp", "b_band", "b_key")
-      .withWatermark("b_ts", horizon)
-    a.join(b,
+      .withColumn("band", Dedup.bandKeys(words.map(col), bands))
+      .select(cols.map(col) ++ Seq(col("band.band_id"), col("band.band_key")): _*)
+    def side(p: String) = banded.toDF((cols :+ "band" :+ "key").map(c => s"${p}_$c"): _*)
+      .withWatermark(s"${p}_ts", horizon)
+    side("a").join(side("b"),
         col("a_band") === col("b_band") && col("a_key") === col("b_key") &&
           col("a_id") < col("b_id") &&
           col("b_ts") >= col("a_ts") - expr(s"INTERVAL $horizon") &&
           col("b_ts") <= col("a_ts") + expr(s"INTERVAL $horizon"))
       .select(col("a_id").as(aName), col("b_id").as(bName),
-        bit_count(col("a_fp").bitwiseXOR(col("b_fp"))).cast("long")
+        Dedup.hammingOf(words.map(w => col(s"a_$w")), words.map(w => col(s"b_$w")))
           .as("hamming"),
         col("a_ts").as("pair_ts"))
       .filter(col("hamming") <= Dedup.HamMax)
@@ -173,7 +168,7 @@ object DocStream {
     bandedPairStream(
       media.select(col("media_id").as("id"), col("ts"),
         graft.llm.Multimodal.dhashCol(col("grid")).as("fp")),
-      horizon, "media_a", "media_b")
+      Seq("fp"), Dedup.SimBands, horizon, "media_a", "media_b")
   }
 
   /** Streaming media ADMISSION gate — the ingest twin of the batch
@@ -274,35 +269,11 @@ object DocStream {
     * contract of the wide batch entry). Same emit/state semantics as
     * the narrow twin. */
   def streamingSimhashDedupWide(docs: DataFrame,
-                                horizon: String = "30 MINUTES"): DataFrame = {
-    val banded = fingerprintsWide(docs)
-      .withColumn("band", explode(array(
-        (0 until 2 * Dedup.WideBandsPerWord).map { idx =>
-          val word = if (idx < Dedup.WideBandsPerWord) col("sim1") else col("sim2")
-          val off = (idx % Dedup.WideBandsPerWord) * Dedup.WideBandBits
-          struct(lit(idx).as("band_id"),
-            shiftright(word, off).bitwiseAND(lit((1L << Dedup.WideBandBits) - 1))
-              .as("band_key"))
-        }: _*)))
-      .select(col("doc_id"), col("ts"), col("sim1"), col("sim2"),
-        col("band.band_id"), col("band.band_key"))
-    val a = banded.toDF("a_doc", "a_ts", "a_sim1", "a_sim2", "a_band", "a_key")
-      .withWatermark("a_ts", horizon)
-    val b = banded.toDF("b_doc", "b_ts", "b_sim1", "b_sim2", "b_band", "b_key")
-      .withWatermark("b_ts", horizon)
-    a.join(b,
-        col("a_band") === col("b_band") && col("a_key") === col("b_key") &&
-          col("a_doc") < col("b_doc") &&
-          col("b_ts") >= col("a_ts") - expr(s"INTERVAL $horizon") &&
-          col("b_ts") <= col("a_ts") + expr(s"INTERVAL $horizon"))
-      .select(col("a_doc").as("doc_a"), col("b_doc").as("doc_b"),
-        (bit_count(col("a_sim1").bitwiseXOR(col("b_sim1"))) +
-          bit_count(col("a_sim2").bitwiseXOR(col("b_sim2")))).cast("long")
-          .as("hamming"),
-        col("a_ts").as("pair_ts"))
-      .filter(col("hamming") <= Dedup.HamMax)
-      .dropDuplicatesWithinWatermark("doc_a", "doc_b")
-  }
+                                horizon: String = "30 MINUTES"): DataFrame =
+    bandedPairStream(
+      fingerprintsWide(docs).select(col("doc_id").as("id"), col("ts"),
+        col("sim1"), col("sim2")),
+      Seq("sim1", "sim2"), Dedup.WideBands, horizon, "doc_a", "doc_b")
 
   /** (doc_id, ts, sim1, sim2) — both 60-bit md5 words per document. */
   private[graft] def fingerprintsWide(docs: DataFrame): DataFrame = {

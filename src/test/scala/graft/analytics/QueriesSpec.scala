@@ -25,34 +25,36 @@ class QueriesSpec extends SparkSpec {
     // the faithful formulation: join temp_cf to Top5Information without
     // dedup (row multiplication), exactly as analysis.sql:192-196
     val tempCf = Queries.q3aCfView(spark, sfDir).cache()
-    val ratio = count(when(col("timely_responses") === 1, 1)) / count(lit(1))
-    val top5 = tempCf.groupBy(col("company"))
-      .agg(ratio.as("timely_response_ratio"))
-      .orderBy(col("timely_response_ratio").desc, col("company"))
-      .limit(5).select("company")
-    val top5Info = tempCf.join(top5, Seq("company"))
-    val naiveWeakest: DataFrame = tempCf
-      .join(top5Info.select("company", "state"), Seq("company", "state"))
-      .groupBy(col("company"), col("state"), col("product"))
-      .agg(ratio.as("timely_response_ratio"))
-      .withColumn("product_rank",
-        row_number().over(Window.partitionBy(col("company"), col("state"))
-          .orderBy(col("timely_response_ratio").asc, col("product"))).cast("long"))
-      .filter(col("product_rank") <= 2)
-      .select("company", "state", "product", "timely_response_ratio", "product_rank")
-    val rewritten = tempCf
-      .join(top5, Seq("company"), "left_semi")
-      .groupBy(col("company"), col("state"), col("product"))
-      .agg(ratio.as("timely_response_ratio"))
-      .withColumn("product_rank",
-        row_number().over(Window.partitionBy(col("company"), col("state"))
-          .orderBy(col("timely_response_ratio").asc, col("product"))).cast("long"))
-      .filter(col("product_rank") <= 2)
-      .select("company", "state", "product", "timely_response_ratio", "product_rank")
-    // (a·m)/(b·m) == a/b under correctly-rounded IEEE division — the
-    // ratios, and hence the ranks, must be bit-identical
-    assert(naiveWeakest.except(rewritten).isEmpty
-      && rewritten.except(naiveWeakest).isEmpty)
+    try {
+      val ratio = count(when(col("timely_responses") === 1, 1)) / count(lit(1))
+      val top5 = tempCf.groupBy(col("company"))
+        .agg(ratio.as("timely_response_ratio"))
+        .orderBy(col("timely_response_ratio").desc, col("company"))
+        .limit(5).select("company")
+      val top5Info = tempCf.join(top5, Seq("company"))
+      val naiveWeakest: DataFrame = tempCf
+        .join(top5Info.select("company", "state"), Seq("company", "state"))
+        .groupBy(col("company"), col("state"), col("product"))
+        .agg(ratio.as("timely_response_ratio"))
+        .withColumn("product_rank",
+          row_number().over(Window.partitionBy(col("company"), col("state"))
+            .orderBy(col("timely_response_ratio").asc, col("product"))).cast("long"))
+        .filter(col("product_rank") <= 2)
+        .select("company", "state", "product", "timely_response_ratio", "product_rank")
+      val rewritten = tempCf
+        .join(top5, Seq("company"), "left_semi")
+        .groupBy(col("company"), col("state"), col("product"))
+        .agg(ratio.as("timely_response_ratio"))
+        .withColumn("product_rank",
+          row_number().over(Window.partitionBy(col("company"), col("state"))
+            .orderBy(col("timely_response_ratio").asc, col("product"))).cast("long"))
+        .filter(col("product_rank") <= 2)
+        .select("company", "state", "product", "timely_response_ratio", "product_rank")
+      // (a·m)/(b·m) == a/b under correctly-rounded IEEE division — the
+      // ratios, and hence the ranks, must be bit-identical
+      assert(naiveWeakest.except(rewritten).isEmpty
+        && rewritten.except(naiveWeakest).isEmpty)
+    } finally tempCf.unpersist()
   }
 
   test("q2/q3a company filter on supplier == the post-join left_semi form") {
@@ -117,13 +119,15 @@ class QueriesSpec extends SparkSpec {
 
   test("q1b undisputed ranking from counts matches the ratio-complement ordering") {
     val out = Queries.q1bDisputedRank(spark, sfDir).cache()
-    // ordering by undisputed_count/total DESC must order exactly like
-    // disputed_count/total ASC on non-null binary flags
-    val byComplement = out.orderBy(col("disputed_response_ratio").asc, col("s_name"))
-      .select("s_name").collect().map(_.getString(0)).toSeq
-    val byDirect = out.orderBy(col("undisputed_response_ratio").desc, col("s_name"))
-      .select("s_name").collect().map(_.getString(0)).toSeq
-    assert(byComplement == byDirect)
+    try {
+      // ordering by undisputed_count/total DESC must order exactly like
+      // disputed_count/total ASC on non-null binary flags
+      val byComplement = out.orderBy(col("disputed_response_ratio").asc, col("s_name"))
+        .select("s_name").collect().map(_.getString(0)).toSeq
+      val byDirect = out.orderBy(col("undisputed_response_ratio").desc, col("s_name"))
+        .select("s_name").collect().map(_.getString(0)).toSeq
+      assert(byComplement == byDirect)
+    } finally out.unpersist()
   }
 
   test("set-op cohorts match a driver-side model and partition the 1995 buyers") {

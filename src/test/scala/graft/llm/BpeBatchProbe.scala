@@ -42,7 +42,7 @@ object BpeBatchProbe {
     val t0 = System.nanoTime()
     val out = mode match {
       case "sequential" =>
-        TextAnalysis.bpeTrainFrom(spark, docs, merges).collect()
+        TextAnalysis.bpeTrainBatchedFrom(spark, docs, merges, batchK = 1).collect()
       case "batched" =>
         // rounds sized so K-sized commits cover the target even with
         // deferrals; the trainer stops early when the corpus dries up

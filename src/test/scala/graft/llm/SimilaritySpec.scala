@@ -160,7 +160,7 @@ class SimilaritySpec extends SparkSpec {
       .select("vec_id", "ed")
     val seeds = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cent_id"), col("ed").as("ced"))
-    val trained = Similarity.trainIvfCentroids(e)
+    val trained = Similarity.trainCentroidsK(e, Similarity.IvfK)
     // joined on cent_id: at least one surviving cell's centroid must differ
     // from its seed vector (identical would mean training is a no-op)
     val joined = trained.as("t").join(seeds.as("s"), "cent_id")
@@ -201,7 +201,7 @@ class SimilaritySpec extends SparkSpec {
       .withColumn("ed", col("embedding").cast("array<double>"))
       .select("vec_id", "ed").cache()
     val cents = spark.createDataFrame(
-      Similarity.centroidArtifact(spark, sfDir, e)).toDF("cent_id", "ced")
+      Similarity.ivfModel(e, Similarity.IvfK)).toDF("cent_id", "ced")
     // brute-force truth for the 50 queries
     val q = e.filter(col("vec_id") >= qLo && col("vec_id") < qHi)
       .select(col("vec_id").as("q_id"), col("ed").as("qed"))
@@ -271,7 +271,7 @@ class SimilaritySpec extends SparkSpec {
       (id, ed)
     }
     val e = vecs.toDF("vec_id", "ed").cache()
-    val cents = Similarity.trainIvfCentroids(e)
+    val cents = Similarity.trainCentroidsK(e, Similarity.IvfK)
     // queries = ids 0..7, one per cluster
     val ivf = Similarity.ivfSearchFrom(e, cents, 0L, 8L).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -355,7 +355,7 @@ class SimilaritySpec extends SparkSpec {
       (id, ed)
     }
     val e = vecs.toDF("vec_id", "ed").cache()
-    val ivfCents = Similarity.trainIvfCentroids(e)
+    val ivfCents = Similarity.trainCentroidsK(e, Similarity.IvfK)
     val pqCents = Similarity.trainPqCodebooks(e)
     val cand = Similarity.ivfCandidatesFrom(e, ivfCents, 0L, 8L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -638,7 +638,7 @@ class SimilaritySpec extends SparkSpec {
   test("semantic dedup finds within-cell pairs and misses the planted cross-cell pair") {
     CosineSimilarity.register(spark)
     val e = semanticFixture
-    val assign = Similarity.semanticAssignWith(e, Similarity.trainIvfCentroids(e)
+    val assign = Similarity.semanticAssignWith(e, Similarity.trainCentroidsK(e, Similarity.IvfK)
       .select(col("cent_id"), col("ced")))
     val out = Similarity.semanticPairsFrom(assign).collect()
     val pairs = out.map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -1,5 +1,6 @@
 package graft.llm
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
@@ -256,6 +257,11 @@ class TextAnalysisSpec extends SparkSpec {
     assert(toks("a", Seq("aa")) == Seq("a"))
   }
 
+  /** The sequential trainer behind `bpe_train`: the batched trainer at
+    * one merge per round, without the round column. */
+  private def seqTrain(docs: DataFrame, rounds: Int): DataFrame =
+    TextAnalysis.bpeTrainBatchedFrom(spark, docs, rounds, batchK = 1).drop("round")
+
   test("iterative bpe training learns merges static top-K mining cannot represent") {
     import spark.implicits._
     // 4× "abab" + 1× "ba": round-one char-pair counts are ab=8, ba=5, so
@@ -266,13 +272,12 @@ class TextAnalysisSpec extends SparkSpec {
     // round-one mining where pairs are 2-char substrings.
     val docs = ((1 to 4).map(i => (i.toLong, "abab")) :+ (9L, "ba"))
       .toDF("doc_id", "text")
-    val merges = TextAnalysis.bpeTrainFrom(spark, docs, rounds = 2)
+    val merges = seqTrain(docs, rounds = 2)
       .as[(Long, String, String, Long)].collect().toSeq
     assert(merges == Seq((1L, "a", "b", 8L), (2L, "ab", "ab", 4L)),
       s"round 2 must merge the merged tokens, got $merges")
     // and the trainer stops when no adjacent pair is left to merge
-    val exhausted = TextAnalysis.bpeTrainFrom(spark,
-      Seq((1L, "ab")).toDF("doc_id", "text"), rounds = 5).count()
+    val exhausted = seqTrain(Seq((1L, "ab")).toDF("doc_id", "text"), rounds = 5).count()
     assert(exhausted == 1L, "one merge exhausts a single 2-char word")
   }
 
@@ -288,7 +293,7 @@ class TextAnalysisSpec extends SparkSpec {
       (11 to 18).map(i => (i.toLong, "cd")) ++
       (21 to 27).map(i => (i.toLong, "ef")) ++
       (31 to 36).map(i => (i.toLong, "gh"))).toDF("doc_id", "text")
-    val seq = TextAnalysis.bpeTrainFrom(spark, docs, rounds = 4)
+    val seq = seqTrain(docs, rounds = 4)
       .as[(Long, String, String, Long)].collect().toSeq
     val bat = TextAnalysis.bpeTrainBatchedFrom(spark, docs, rounds = 1, batchK = 4)
       .as[(Long, Int, String, String, Long)].collect().toSeq
@@ -308,20 +313,20 @@ class TextAnalysisSpec extends SparkSpec {
     // checkpoint perturbed the data it was only supposed to pin.
     assert(TextAnalysis.BpeCheckpointEvery == 8, "fixture assumes cadence 8")
     val docs = Tables.documents(spark, sfDir).limit(60)
-    val deep = TextAnalysis.bpeTrainFrom(spark, docs, rounds = 12)
+    val deep = seqTrain(docs, rounds = 12)
       .as[(Long, String, String, Long)].collect().toSeq
-    val shallow = TextAnalysis.bpeTrainFrom(spark, docs, rounds = 7)
+    val shallow = seqTrain(docs, rounds = 7)
       .as[(Long, String, String, Long)].collect().toSeq
     assert(deep.length == 12, s"corpus dried up early: ${deep.length}")
     assert(deep.take(7) == shallow,
       s"prefix drifted across the checkpoint boundary:\n$deep\nvs\n$shallow")
-    // and the batched trainer across its own boundary: 9 rounds × K=1 is
-    // the sequential rule, so its merges must equal the sequential 9
-    val bat = TextAnalysis.bpeTrainBatchedFrom(spark, docs, rounds = 9, batchK = 1)
-      .as[(Long, Int, String, String, Long)].collect().toSeq
-      .map { case (rk, _, l, r, n) => (rk, l, r, n) }
-    assert(bat == deep.take(9),
-      s"batched K=1 over the boundary must equal sequential:\n$bat\nvs\n$deep")
+    // and a train that stops one round past the boundary: both it and
+    // the 12-round train checkpoint after merge 8, so its 9 merges must
+    // be the 12-round train's first 9
+    val nine = seqTrain(docs, rounds = 9)
+      .as[(Long, String, String, Long)].collect().toSeq
+    assert(nine == deep.take(9),
+      s"a 9-round train must equal the 12-round prefix:\n$nine\nvs\n$deep")
   }
 
   test("batched bpe defers interacting candidates to the next round") {

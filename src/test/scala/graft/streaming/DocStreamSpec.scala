@@ -546,7 +546,7 @@ class DocStreamSpec extends SparkSpec {
     import spark.implicits._
     implicit val sql = spark.sqlContext
     // the offline-trained artifact (4 doubles) — the handoff the twin models
-    val w = graft.llm.QualityLr.modelArtifact(spark, sfDir)
+    val w = graft.llm.QualityLr.trainWeightsFrom(graft.llm.QualityLr.featFrame(spark, sfDir))
     val batch = graft.llm.QualityLr.qualityLrScore(spark, sfDir)
       .as[(Long, Double, Boolean)].collect()
     val want = batch.filter(_._3).map(r => r._1 -> r._2).toMap
