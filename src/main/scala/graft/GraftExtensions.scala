@@ -2,21 +2,21 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 
-/** Library entry point for `spark.sql.extensions` — registers graft's
-  * native Catalyst expressions on every session built with
+/** Library entry point for `spark.sql.extensions`. On every session
+  * built with
   *
   * {{{
   * --conf spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * so `cosine_similarity` / `dot_product` / `poly_hash` resolve in SQL and
-  * `expr(...)` without per-session `register(spark)` calls — the deployment
-  * shape a shared cluster uses (one config line, every notebook/job gets
-  * the functions). The function list itself is single-sourced in
-  * [[GraftFunctions.all]], shared with [[GraftFunctions.registerAll]] and
-  * the expression objects' own `register` methods for embedded use; all
-  * routes construct the same expression nodes, so plans and codegen are
-  * identical either way. */
+  * it injects the native functions listed in [[GraftFunctions.all]], so
+  * `cosine_similarity`, `dot_product`, `poly_hash` and the rest resolve
+  * in SQL and `expr(...)`, and it injects the [[graft.plans.NativeVectorRewrite]]
+  * optimizer rule. This is the shared-cluster deployment shape: one
+  * config line, and every notebook or job gets the functions.
+  * [[GraftFunctions.registerAll]] is the same list for a session that
+  * already exists. Library code needs neither route: it builds the
+  * kernels as Columns through their typed constructors. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -906,10 +906,9 @@ object Behavior {
       .groupBy("partkey").agg(count(lit(1)).as("n"))
     // native pair expansion — the interpreted flatten/transform/slice
     // chain measured ~35% of this entry at 25× (r22 §12)
-    graft.functions.OrderedPairs.register(items.sparkSession)
     val pairs = baskets
       .filter(size(col("parts")) >= 2)
-      .select(explode(expr("ordered_pairs(parts)")).as("p"))
+      .select(explode(graft.functions.OrderedPairs.of(col("parts"))).as("p"))
       .groupBy(col("p.a").as("part_a"), col("p.b").as("part_b"))
       .agg(count(lit(1)).as("pair_orders"))
       .filter(col("pair_orders") >= BasketMinSupport)

@@ -727,7 +727,6 @@ object Quantiles {
     * and the crossing compare is long-vs-double (exact below 2⁵³), so
     * both engines pick the identical row. */
   def weightedLengthQuantiles(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.RegexCount.register(spark)
     weightedQuantilesFrom(
       Tables.spread(Tables.documents(spark, dir))
         .select(col("lang"),

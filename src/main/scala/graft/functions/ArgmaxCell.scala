@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
 /** The parsed centroid model behind [[ArgmaxCell]] — ids sorted
@@ -213,14 +214,9 @@ case class ArgmaxCell(ed: Expression, ids: Expression, cents: Expression)
 }
 
 object ArgmaxCell {
-  /** Idempotently register `argmax_cell(ed, ids, centroids)` on the
-    * session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "argmax_cell",
-      { args: Seq[Expression] =>
-        require(args.length == 3, "argmax_cell expects 3 arguments")
-        ArgmaxCell(args.head, args(1), args(2))
-      },
-      "scala_udf")
+  /** `argmax_cell(ed, ids, centroids)` as a Column; `ids` and
+    * `centroids` must be foldable literals. */
+  def of(ed: Column, ids: Column, centroids: Column): Column =
+    NativeColumn(ArgmaxCell(
+      NativeColumn.expr(ed), NativeColumn.expr(ids), NativeColumn.expr(centroids)))
 }

@@ -4,13 +4,14 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
 
 /** Df-capped list collection as ONE `TypedImperativeAggregate` —
@@ -135,18 +136,7 @@ object CappedStructList {
     * discarded, result NULL); otherwise the collected rows so far. */
   final class Buf(var hot: Boolean, val items: mutable.ArrayBuffer[UnsafeRow])
 
-  /** Idempotently register `capped_list(struct, cap)` on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "capped_list", builder, "scala_udf")
-
-  private[graft] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 2, "capped_list expects (struct column, cap)")
-    val cap = args(1) match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"capped_list cap must be an integer literal, got $other")
-    }
-    CappedStructList(args.head, cap)
-  }
+  /** `capped_list(struct, cap)` as an aggregate Column. */
+  def of(struct: Column, cap: Int): Column =
+    NativeColumn(CappedStructList(NativeColumn.expr(struct), cap).toAggregateExpression())
 }

@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -77,13 +78,7 @@ object CharEntropy {
     h
   }
 
-  /** Idempotently register `char_entropy(s)` on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_entropy",
-      { args: Seq[Expression] =>
-        require(args.length == 1, "char_entropy expects 1 argument")
-        CharEntropy(args.head)
-      },
-      "scala_udf")
+  /** `char_entropy(s)` as a Column. */
+  def of(s: Column): Column =
+    NativeColumn(CharEntropy(NativeColumn.expr(s)))
 }

@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst expression computing cosine similarity between two
@@ -148,16 +149,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
-  /** Idempotently register `cosine_similarity(a, b)` on the session so it
-    * is callable from `expr(...)` / SQL. Uses the session's function
-    * registry directly — no SparkSessionExtensions wiring needed, so it
-    * works on any session the driver hands us. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_similarity",
-      { args: Seq[Expression] =>
-        require(args.length == 2, "cosine_similarity expects 2 arguments")
-        CosineSimilarity(args.head, args(1))
-      },
-      "scala_udf")
+  /** `cosine_similarity(a, b)` as a Column. */
+  def of(a: Column, b: Column): Column =
+    NativeColumn(CosineSimilarity(NativeColumn.expr(a), NativeColumn.expr(b)))
 }

@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
 /** Native Catalyst expression packing neighbor-gradient sign bits of a
@@ -100,13 +101,7 @@ object DhashBits {
     s
   }
 
-  /** Idempotently register `dhash_bits(arr, bits)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dhash_bits",
-      { args: Seq[Expression] =>
-        require(args.length == 2, "dhash_bits expects 2 arguments")
-        DhashBits(args.head, args(1))
-      },
-      "scala_udf")
+  /** `dhash_bits(arr, bits)` as a Column. */
+  def of(arr: Column, bits: Int): Column =
+    NativeColumn(DhashBits(NativeColumn.expr(arr), Literal(bits)))
 }

@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst expression computing the dot product of two
@@ -132,14 +133,7 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
-  /** Idempotently register `dot_product(a, b)` on the session so it is
-    * callable from `expr(...)` / SQL. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product",
-      { args: Seq[Expression] =>
-        require(args.length == 2, "dot_product expects 2 arguments")
-        DotProduct(args.head, args(1))
-      },
-      "scala_udf")
+  /** `dot_product(a, b)` as a Column. */
+  def of(a: Column, b: Column): Column =
+    NativeColumn(DotProduct(NativeColumn.expr(a), NativeColumn.expr(b)))
 }

@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -143,13 +144,7 @@ object HexWords {
     new GenericArrayData(out)
   }
 
-  /** Idempotently register `hex_words(h, width, n, signed)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hex_words",
-      { args: Seq[Expression] =>
-        require(args.length == 4, "hex_words expects 4 arguments")
-        HexWords(args.head, args(1), args(2), args(3))
-      },
-      "scala_udf")
+  /** `hex_words(h, width, n, signed)` as a Column. */
+  def of(h: Column, width: Int, n: Int, signed: Boolean): Column =
+    NativeColumn(HexWords(NativeColumn.expr(h), Literal(width), Literal(n), Literal(signed)))
 }

@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 
 /** Native Catalyst expression for a document's k-hash MinHash signature:
@@ -101,13 +102,7 @@ object MinHashSig {
     new GenericArrayData(mins)
   }
 
-  /** Idempotently register `minhash_sig(shingles, k)` on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig",
-      { args: Seq[Expression] =>
-        require(args.length == 2, "minhash_sig expects 2 arguments")
-        MinHashSig(args.head, args(1))
-      },
-      "scala_udf")
+  /** `minhash_sig(shingles, k)` as a Column. */
+  def of(shingles: Column, k: Int): Column =
+    NativeColumn(MinHashSig(NativeColumn.expr(shingles), Literal(k)))
 }

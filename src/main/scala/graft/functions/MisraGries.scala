@@ -4,13 +4,14 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.types.{DataType, LongType, MapType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -139,20 +140,7 @@ case class MisraGries(
 
 object MisraGries {
 
-  /** Idempotently register `misra_gries(col, k)` on the session (the
-    * analyzer wraps the returned AggregateFunction into an
-    * AggregateExpression). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "misra_gries", builder, "scala_udf")
-
-  private[graft] val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 2, "misra_gries expects (column, k)")
-    val k = args(1) match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"misra_gries k must be an integer literal, got $other")
-    }
-    MisraGries(args.head, k)
-  }
+  /** `misra_gries(col, k)` as an aggregate Column. */
+  def of(c: Column, k: Int): Column =
+    NativeColumn(MisraGries(NativeColumn.expr(c), k).toAggregateExpression())
 }

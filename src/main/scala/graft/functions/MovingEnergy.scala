@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
 /** Native Catalyst expression computing a moving-window energy envelope
@@ -96,13 +97,7 @@ object MovingEnergy {
     new GenericArrayData(out)
   }
 
-  /** Idempotently register `moving_energy(sm, window, frames)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "moving_energy",
-      { args: Seq[Expression] =>
-        require(args.length == 3, "moving_energy expects 3 arguments")
-        MovingEnergy(args.head, args(1), args(2))
-      },
-      "scala_udf")
+  /** `moving_energy(sm, window, frames)` as a Column. */
+  def of(sm: Column, window: Int, frames: Int): Column =
+    NativeColumn(MovingEnergy(NativeColumn.expr(sm), Literal(window), Literal(frames)))
 }

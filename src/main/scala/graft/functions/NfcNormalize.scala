@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -57,13 +58,7 @@ object NfcNormalize {
       java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
   }
 
-  /** Idempotently register `nfc_normalize(s)` on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize",
-      { args: Seq[Expression] =>
-        require(args.length == 1, "nfc_normalize expects 1 argument")
-        NfcNormalize(args.head)
-      },
-      "scala_udf")
+  /** `nfc_normalize(s)` as a Column. */
+  def of(s: Column): Column =
+    NativeColumn(NfcNormalize(NativeColumn.expr(s)))
 }

@@ -1,11 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.types.{ArrayType, DataType, StructField, StructType}
 
 /** Native Catalyst expression expanding a sorted in-row list into its
@@ -95,13 +96,7 @@ object OrderedPairs {
     new GenericArrayData(out)
   }
 
-  /** Idempotently register `ordered_pairs(xs)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ordered_pairs",
-      { args: Seq[Expression] =>
-        require(args.length == 1, "ordered_pairs expects 1 argument")
-        OrderedPairs(args.head)
-      },
-      "scala_udf")
+  /** `ordered_pairs(xs)` as a Column. */
+  def of(xs: Column): Column =
+    NativeColumn(OrderedPairs(NativeColumn.expr(xs)))
 }

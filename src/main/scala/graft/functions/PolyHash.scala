@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -57,13 +58,7 @@ object PolyHash {
     acc
   }
 
-  /** Idempotently register `poly_hash(s)` on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "poly_hash",
-      { args: Seq[Expression] =>
-        require(args.length == 1, "poly_hash expects 1 argument")
-        PolyHash(args.head)
-      },
-      "scala_udf")
+  /** `poly_hash(s)` as a Column. */
+  def of(s: Column): Column =
+    NativeColumn(PolyHash(NativeColumn.expr(s)))
 }

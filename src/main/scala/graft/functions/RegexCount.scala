@@ -2,10 +2,11 @@ package graft.functions
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -111,13 +112,7 @@ object RegexCount {
   def countUncached(s: UTF8String, regex: UTF8String): Int =
     count(s, Pattern.compile(regex.toString))
 
-  /** Idempotently register `regex_count(s, re)` on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "regex_count",
-      { args: Seq[Expression] =>
-        require(args.length == 2, "regex_count expects 2 arguments")
-        RegexCount(args.head, args(1))
-      },
-      "scala_udf")
+  /** `regex_count(s, re)` as a Column. */
+  def of(s: Column, re: String): Column =
+    NativeColumn(RegexCount(NativeColumn.expr(s), Literal(re)))
 }

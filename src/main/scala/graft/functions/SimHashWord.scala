@@ -2,11 +2,12 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 
 /** Native Catalyst expression for the 60-bit SimHash fingerprint of a
@@ -117,13 +118,7 @@ object SimHashWord {
     sim
   }
 
-  /** Idempotently register `simhash_word(shingles, word)` on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_word",
-      { args: Seq[Expression] =>
-        require(args.length == 2, "simhash_word expects 2 arguments")
-        SimHashWord(args.head, args(1))
-      },
-      "scala_udf")
+  /** `simhash_word(shingles, word)` as a Column. */
+  def of(shingles: Column, word: Int): Column =
+    NativeColumn(SimHashWord(NativeColumn.expr(shingles), Literal(word)))
 }

@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst expression computing the SQUARED L2 distance of two
@@ -129,13 +130,7 @@ case class SquaredL2(left: Expression, right: Expression)
 }
 
 object SquaredL2 {
-  /** Idempotently register `squared_l2(a, b)` on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "squared_l2",
-      { args: Seq[Expression] =>
-        require(args.length == 2, "squared_l2 expects 2 arguments")
-        SquaredL2(args.head, args(1))
-      },
-      "scala_udf")
+  /** `squared_l2(a, b)` as a Column. */
+  def of(a: Column, b: Column): Column =
+    NativeColumn(SquaredL2(NativeColumn.expr(a), NativeColumn.expr(b)))
 }

@@ -2,12 +2,13 @@ package graft.functions
 
 import java.util.{Map => JMap, TreeMap => JTreeMap}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -91,13 +92,7 @@ object TermCounts {
     new GenericArrayData(out)
   }
 
-  /** Idempotently register `term_counts(arr)` on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "term_counts",
-      { args: Seq[Expression] =>
-        require(args.length == 1, "term_counts expects 1 argument")
-        TermCounts(args.head)
-      },
-      "scala_udf")
+  /** `term_counts(arr)` as a Column. */
+  def of(arr: Column): Column =
+    NativeColumn(TermCounts(NativeColumn.expr(arr)))
 }

@@ -1,7 +1,11 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.NativeColumn
+import org.apache.spark.sql.types.BinaryType
 
 import graft.Tables
 import graft.RunScope.ScratchCacheOps
@@ -116,8 +120,8 @@ object Decontaminate {
     *
     * Uses Spark's own runtime-filter expressions
     * (`BloomFilterAggregate` / `BloomFilterMightContain` — the pair
-    * behind AQE's injected runtime filters) registered ad hoc: the
-    * gate function captures the built filter as a LITERAL, which is
+    * behind AQE's injected runtime filters), built as Columns: the
+    * gate captures the built filter as a LITERAL, which is
     * what `might_contain` requires of its filter side. The collected
     * filter is bench-sized (a model-class artifact: the benchmark is
     * thousands of documents, its filter a few hundred KB — the same
@@ -137,65 +141,32 @@ object Decontaminate {
       .scratchCache() // bench build + the gated train stream
     val bench = ex.filter(col("split") === "test").select("s").distinct()
       .scratchCache() // filter build + exact confirm
-    withBloomGate(spark, bench) { gate =>
-      ex.filter(col("split") =!= "test")
-        .filter(gate(col("s"))) // map-side prune, no shuffle
-        .join(bench, Seq("s"), "left_semi") // exact confirm kills the fp tail
-        .groupBy("doc_id", "split", "n_shingles")
-        .agg(count(lit(1)).as("n_hit"))
-        .withColumn("overlap",
-          round(col("n_hit").cast("double") / col("n_shingles"), 6))
-        .orderBy("doc_id")
-    }
+    val gate = bloomGate(bench)
+    ex.filter(col("split") =!= "test")
+      .filter(gate(col("s"))) // map-side prune, no shuffle
+      .join(bench, Seq("s"), "left_semi") // exact confirm kills the fp tail
+      .groupBy("doc_id", "split", "n_shingles")
+      .agg(count(lit(1)).as("n_hit"))
+      .withColumn("overlap",
+        round(col("n_hit").cast("double") / col("n_shingles"), 6))
+      .orderBy("doc_id")
   }
 
-  /** Per-invocation sequence for the ad-hoc Bloom function names — the
-    * registry is session-global, so names must be unique per call. */
-  private val bloomSeq = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Build a Bloom filter over `bench.s` and hand `use` a gate-column
-    * factory (`s => might_contain(<filter literal>, s)`), with the
-    * session function registry kept CLEAN (VERDICT r19 #6 / ADVICE):
-    * the two ad-hoc functions (`BloomFilterAggregate` to fold the
-    * filter, `BloomFilterMightContain` for the gate — Spark's own
-    * runtime-filter pair, neither SQL-registered) get per-invocation
-    * unique names, so concurrent invocations on one session cannot
-    * race on a shared name, and both are DROPPED before this returns —
-    * safe because DataFrame construction analyzes eagerly, baking the
-    * filter literal into every frame `use` built; nothing the callback
-    * returns still references the names. */
-  private[llm] def withBloomGate[T](spark: SparkSession, bench: DataFrame)
-      (use: (org.apache.spark.sql.Column => org.apache.spark.sql.Column) => T): T = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.types.BinaryType
-    val tag = bloomSeq.incrementAndGet()
-    val aggName = s"graft_bloom_agg_$tag"
-    val gateName = s"graft_bloom_gate_$tag"
-    val reg = spark.sessionState.functionRegistry
+  /** Build a Bloom filter over `bench.s` and return the gate-column
+    * factory `s => might_contain(<filter literal>, s)`. Both halves are
+    * Spark's own runtime-filter pair (`BloomFilterAggregate` folds the
+    * filter, `BloomFilterMightContain` is the gate; neither is
+    * SQL-registered), built directly as Columns, so the session's
+    * function registry is never written and concurrent gates on one
+    * session cannot interfere. */
+  private[llm] def bloomGate(bench: DataFrame): Column => Column = {
     val nb = math.max(1L, bench.count())
-    try {
-      reg.createOrReplaceTempFunction(
-        aggName,
-        { args: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-          new BloomFilterAggregate(args.head,
-            Literal(nb), Literal(nb * BloomBitsPerKey)).toAggregateExpression()
-        },
-        "scala_udf")
-      val filterBytes = bench.agg(call_function(aggName, col("s")))
-        .head().getAs[Array[Byte]](0)
-      reg.createOrReplaceTempFunction(
-        gateName,
-        { args: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-          BloomFilterMightContain(Literal(filterBytes, BinaryType), args.head)
-        },
-        "scala_udf")
-      use(c => call_function(gateName, c))
-    } finally {
-      reg.dropFunction(FunctionIdentifier(aggName))
-      reg.dropFunction(FunctionIdentifier(gateName))
-    }
+    val filterBytes = bench.agg(NativeColumn(new BloomFilterAggregate(
+        NativeColumn.expr(col("s")), Literal(nb), Literal(nb * BloomBitsPerKey))
+      .toAggregateExpression()))
+      .head().getAs[Array[Byte]](0)
+    c => NativeColumn(BloomFilterMightContain(
+      Literal(filterBytes, BinaryType), NativeColumn.expr(c)))
   }
 
   /** Oracle: the prefilter is output-invisible by construction, so the

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.{CappedStructList, MinHashSig, OrderedPairs, SimHashWord}
 import graft.RunScope.ScratchCacheOps
 
 /** Near-duplicate detection over the `documents` corpus — the dedup family
@@ -100,8 +101,6 @@ object Dedup {
     * keeps the collision probability negligible below ~10⁹ distinct
     * shingles per corpus. */
   private[llm] def ngramJaccardPairsFrom(sh: DataFrame, maxDf: Int): DataFrame = {
-    graft.functions.CappedStructList.register(sh.sparkSession)
-    graft.functions.OrderedPairs.register(sh.sparkSession)
     // Shingles are hashed INSIDE the array and |shingles| rides along
     // through the explode: the shuffled stream is (doc_id, n, hash) —
     // fixed-width longs, no string leaves the scan stage, and no later
@@ -120,14 +119,13 @@ object Dedup {
     // shingle.
     val postings = ex
       .groupBy("s")
-      .agg(expr(s"capped_list(named_struct('doc_id', doc_id, 'n', n), $maxDf)")
-        .as("ds0"))
+      .agg(CappedStructList.of(struct(col("doc_id"), col("n")), maxDf).as("ds0"))
       .filter(col("ds0").isNotNull && size(col("ds0")) >= 2)
       .select(sort_array(col("ds0")).as("ds"))
     // ordered in-list pairs — doc_a < doc_b by the sort on unique doc_id;
     // the native ordered_pairs kernel replaces the interpreted
     // flatten/transform/slice HOF chain (r22 §12)
-    val occ = postings.select(explode(expr("ordered_pairs(ds)")).as("p"))
+    val occ = postings.select(explode(OrderedPairs.of(col("ds"))).as("p"))
     occ
       .groupBy(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
         col("p.a.n").as("na"), col("p.b.n").as("nb"))
@@ -205,19 +203,16 @@ object Dedup {
     * see [[containmentDedup]] for semantics and the scale story. */
   private[llm] def containmentPairsFrom(sh: DataFrame, maxDf: Int,
       minC: Double): DataFrame = {
-    graft.functions.CappedStructList.register(sh.sparkSession)
-    graft.functions.OrderedPairs.register(sh.sparkSession)
     // one-pass capped posting build — see ngramJaccardPairsFrom (r22)
     val ex = sh.select(col("doc_id"), size(col("shingles")).as("n"),
         explode(expr("transform(shingles, s -> xxhash64(s))")).as("s"))
     val postings = ex
       .groupBy("s")
-      .agg(expr(s"capped_list(named_struct('doc_id', doc_id, 'n', n), $maxDf)")
-        .as("ds0"))
+      .agg(CappedStructList.of(struct(col("doc_id"), col("n")), maxDf).as("ds0"))
       .filter(col("ds0").isNotNull && size(col("ds0")) >= 2)
       .select(sort_array(col("ds0")).as("ds"))
     // native pair expansion — see ngramJaccardPairsFrom (r22 §12)
-    val occ = postings.select(explode(expr("ordered_pairs(ds)")).as("p"))
+    val occ = postings.select(explode(OrderedPairs.of(col("ds"))).as("p"))
     occ
       .groupBy(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
         col("p.a.n").as("na"), col("p.b.n").as("nb"))
@@ -290,7 +285,6 @@ object Dedup {
     * [[minhashDedup]] and [[Decontaminate.decontaminateFuzzy]] so "same
     * bucket" means the same thing in both audits. */
   private[graft] def minhashBands(sh: DataFrame): DataFrame = {
-    graft.functions.MinHashSig.register(sh.sparkSession)
     // non-shingle input columns pass through (the chunksFrameFrom
     // contract): Decontaminate's fuzzy audit carries its split column
     // here instead of joining it back onto the 16-rows-per-doc band
@@ -302,7 +296,7 @@ object Dedup {
     // breaks the moment a cache/checkpoint lands above the bands.
     val carry = sh.columns.filterNot(_ == "shingles").map(col).toSeq
     val sig = sh.select(carry :+
-      expr(s"minhash_sig(shingles, $NumHashes)").as("sig"): _*)
+      MinHashSig.of(col("shingles"), NumHashes).as("sig"): _*)
     sig.withColumn("band", explode(array(
       (0 until NumBands).map(b =>
         struct(lit(b).as("band_id"),
@@ -555,9 +549,8 @@ object Dedup {
     * [[graft.streaming.DocStream]], which needs exactly this per-row
     * shape to fingerprint documents as they arrive. */
   private[graft] def simhashFingerprints(shingled: DataFrame): DataFrame = {
-    graft.functions.SimHashWord.register(shingled.sparkSession)
     shingled.select(col("doc_id"),
-      expr("simhash_word(shingles, 0)").as("simhash"))
+      SimHashWord.of(col("shingles"), 0).as("simhash"))
   }
 
   /** The exploded groupBy formulation of the same fingerprint — the
@@ -671,10 +664,9 @@ object Dedup {
     simhashDedupWideFrom(withShingles(spark, dir))
 
   private[graft] def simhashDedupWideFrom(shingled: DataFrame): DataFrame = {
-    graft.functions.SimHashWord.register(shingled.sparkSession)
     bandedHammingPairs(shingled.select(col("doc_id"),
-        expr("simhash_word(shingles, 0)").as("sim1"),
-        expr("simhash_word(shingles, 1)").as("sim2")),
+        SimHashWord.of(col("shingles"), 0).as("sim1"),
+        SimHashWord.of(col("shingles"), 1).as("sim2")),
       Seq("sim1", "sim2"), WideBands)
   }
 
@@ -1197,8 +1189,6 @@ object Dedup {
     * emitted pairs to carry the same jaccard the full kernel computes
     * (the equivalence [[dedupIncremental]]'s oracle asserts). */
   private[llm] def ngramJaccardPairsTouchingNew(sh: DataFrame, maxDf: Int): DataFrame = {
-    graft.functions.CappedStructList.register(sh.sparkSession)
-    graft.functions.OrderedPairs.register(sh.sparkSession)
     // one-pass capped posting build — see ngramJaccardPairsFrom (r22).
     // The r21 sizedSpread+scratchCache existed for the two-read shape
     // (df head count + posting build, where the A/B measured −11% on
@@ -1208,9 +1198,8 @@ object Dedup {
         explode(expr("transform(shingles, s -> xxhash64(s))")).as("s"))
     val postings = ex
       .groupBy("s")
-      .agg(expr(
-        s"capped_list(named_struct('doc_id', doc_id, 'n', n, 'is_new', is_new), $maxDf)")
-        .as("ds0"))
+      .agg(CappedStructList.of(
+        struct(col("doc_id"), col("n"), col("is_new")), maxDf).as("ds0"))
       .filter(col("ds0").isNotNull && size(col("ds0")) >= 2)
       // the incremental cut: lists the new batch never touches cannot
       // produce a new-touching pair — drop them before expansion
@@ -1218,7 +1207,7 @@ object Dedup {
       .select(sort_array(col("ds0")).as("ds"))
     // native pair expansion (r22 §12); the old in-array `filter` HOF is
     // now a codegen'd row filter AFTER explode — identical surviving rows
-    val occ = postings.select(explode(expr("ordered_pairs(ds)")).as("p"))
+    val occ = postings.select(explode(OrderedPairs.of(col("ds"))).as("p"))
       .filter(col("p.a.is_new") || col("p.b.is_new"))
     occ
       .groupBy(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
@@ -1334,10 +1323,9 @@ object Dedup {
     val counts = bySh.select(explode(col("srcs")).as("source"))
       .groupBy("source").agg(count(lit(1)).as("n"))
     // native pair expansion — see ngramJaccardPairsFrom (r22 §12)
-    graft.functions.OrderedPairs.register(spark)
     val pairs = bySh
       .filter(size(col("srcs")) >= 2)
-      .select(explode(expr("ordered_pairs(srcs)")).as("p"))
+      .select(explode(OrderedPairs.of(col("srcs"))).as("p"))
       .groupBy(col("p.a").as("source_a"), col("p.b").as("source_b"))
       .agg(count(lit(1)).as("shared"))
     pairs

@@ -390,7 +390,7 @@ object Multimodal {
     * allocations + n string-radix parses per row; MultimodalSpec pins
     * element equality against that formulation corpus-wide). */
   private def gridFromHex(h: Column): Column =
-    call_function("hex_words", h, lit(2), lit(GridBytes), lit(false))
+    graft.functions.HexWords.of(h, 2, GridBytes, signed = false)
 
   /** The 60-bit dHash: bit i = 1 iff grid(i) > grid(i+1) — the native
     * [[graft.functions.DhashBits]] kernel (r22 §11: the previous
@@ -398,10 +398,9 @@ object Multimodal {
     * slices, a zipped array, and 60 accumulator structs per row; bit
     * semantics — missing/null neighbors vote 0, empty folds to 0, null
     * array is null — are pinned against the fold formulation by
-    * MultimodalSpec/PerceptualKernelsSpec). Callers must have
-    * registered `dhash_bits` (every kernel here does, idempotently). */
+    * MultimodalSpec/PerceptualKernelsSpec). */
   private[graft] def dhashCol(grid: Column): Column =
-    call_function("dhash_bits", grid, lit(DhashBits))
+    graft.functions.DhashBits.of(grid, DhashBits)
 
   /** The media library: every document's decoded grid, plus the
     * re-encoded copy of every [[ReencodeEvery]]-th document. Spread:
@@ -410,7 +409,6 @@ object Multimodal {
     * caught at the 25× rehearsal — one task carried the whole banded
     * join). */
   private[graft] def mediaLibrary(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.HexWords.register(spark)
     val g = Tables.spread(Tables.documents(spark, dir)).withColumn("h", videoHex)
       .select(col("doc_id"), gridFromHex(col("h")).as("grid"))
     g.select(col("doc_id").as("media_id"), col("grid"))
@@ -423,7 +421,6 @@ object Multimodal {
   /** The kernel over any (media_id, grid) frame — specs plant perturbed
     * payload pairs here that exact digest dedup provably misses. */
   private[graft] def mediaNearDedupFrom(lib: DataFrame): DataFrame = {
-    graft.functions.DhashBits.register(lib.sparkSession)
     Dedup.bandedHammingPairs(
       lib.select(col("media_id").as("doc_id"), dhashCol(col("grid")).as("phash")),
       Seq("phash"), Dedup.SimBands)
@@ -546,7 +543,7 @@ object Multimodal {
     * `v ≥ 32768 → v − 65536` adjustment is the expression's `signed`
     * contract at width 4; r22 §11, parity pinned by MultimodalSpec). */
   private def audioSamples(h: Column): Column =
-    call_function("hex_words", h, lit(4), lit(AfpSamples), lit(true))
+    graft.functions.HexWords.of(h, 4, AfpSamples, signed = true)
 
   /** The 61-frame moving energy envelope: E(f) = Σ s(f+j)², j<4 — exact
     * Longs (a 16-bit square is ~10⁹; four of them fit comfortably), via
@@ -557,15 +554,13 @@ object Multimodal {
     * tree, and the slice/zip_with edge semantics are pinned by
     * PerceptualKernelsSpec). */
   private[graft] def audioEnvelope(sm: Column): Column =
-    call_function("moving_energy", sm, lit(AfpWindow),
-      lit(AfpSamples - AfpWindow + 1))
+    graft.functions.MovingEnergy.of(sm, AfpWindow, AfpSamples - AfpWindow + 1)
 
   /** The audio library: every document's decoded sample array plus the
     * requantized re-encode of every [[ReencodeEvery]]-th document (same
     * id scheme as [[mediaLibrary]]; same [[Tables.spread]] guard — the
     * banded self-join must not serialize on a single-split scan). */
   private[graft] def audioLibrary(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.HexWords.register(spark)
     val s = Tables.spread(Tables.documents(spark, dir))
       .select(col("doc_id"), audioSamples(audioFpHex).as("sm"))
     s.select(col("doc_id").as("media_id"), col("sm"))
@@ -579,8 +574,6 @@ object Multimodal {
     * the same thing (≤ [[Dedup.HamMax]] of 60 gradient bits) for both
     * payload kinds. */
   private[graft] def audioNearDedupFrom(lib: DataFrame): DataFrame = {
-    graft.functions.DhashBits.register(lib.sparkSession)
-    graft.functions.MovingEnergy.register(lib.sparkSession)
     Dedup.bandedHammingPairs(
       lib.select(col("media_id").as("doc_id"),
         dhashCol(audioEnvelope(col("sm"))).as("afp")),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.RegexCount
 import graft.RunScope.ScratchCacheOps
 
 /** An in-engine TRAINED quality classifier — logistic regression fit by
@@ -75,10 +76,9 @@ object QualityLr {
     * [[graft.streaming.DocStream.streamingModelGate]] rides this).
     * Factored so the spec can plant a linearly separable fixture. */
   private[graft] def withFeatures(docs: DataFrame): DataFrame = {
-    graft.functions.RegexCount.register(docs.sparkSession)
     val nTok = TextAnalysis.wsTokenCount(col("text"))
-    val nStop = TextAnalysis.regexCount(col("text"), TextAnalysis.StopRe)
-    val nPunct = TextAnalysis.regexCount(col("text"), "[.,!?;:]")
+    val nStop = RegexCount.of(col("text"), TextAnalysis.StopRe)
+    val nPunct = RegexCount.of(col("text"), "[.,!?;:]")
     val f1 = least(nTok.cast("double") / 100d, lit(1d))
     val f2 = least(nStop.cast("double") / nTok * 5d, lit(1d))
     val f3 = least(nPunct.cast("double") / length(col("text")) * 10d, lit(1d))

@@ -86,7 +86,6 @@ object Sampling {
     * partition count — the ordering is total ((n_chars, doc_id) has no
     * ties) — pinned by SamplingSpec. */
   def tokenBudgetSelect(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.RegexCount.register(spark)
     val d = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
         TextAnalysis.wsTokenCount(col("text")).cast("long").as("n_tokens"),
@@ -154,7 +153,6 @@ object Sampling {
     * any corpus size, and the assignment is invariant to the partition
     * count (pinned by SamplingSpec alongside the token-budget entry). */
   def packSequences(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.RegexCount.register(spark)
     val d = Tables.documents(spark, dir)
       .select(col("doc_id"),
         TextAnalysis.wsTokenCount(col("text")).cast("long").as("n_tokens"))
@@ -445,7 +443,6 @@ object Sampling {
     * of the corpus total for the share — the whole report costs one
     * shuffle of per-source counter rows at any corpus size. */
   def sourceMixReport(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.RegexCount.register(spark)
     val d = Tables.documents(spark, dir)
       .select(col("source"), col("lang"),
         TextAnalysis.wsTokenCount(col("text")).cast("long").as("n_tokens"))
@@ -621,7 +618,6 @@ object Sampling {
     * 100 TB corpus costs exactly one scan, and the scan itself prunes to
     * (lang, text). */
   def epochMixPlan(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.RegexCount.register(spark)
     val d = Tables.documents(spark, dir).select(col("lang"),
       TextAnalysis.wsTokenCount(col("text")).cast("long").as("tk"))
     val perLang = d.groupBy("lang")
@@ -733,7 +729,6 @@ object Sampling {
     * across engines; all emitted ratios round to 6/4 dp, the same
     * guard the rest of the mix family uses. */
   def temperatureMix(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.RegexCount.register(spark)
     val d = Tables.documents(spark, dir).select(col("lang"),
       TextAnalysis.wsTokenCount(col("text")).cast("long").as("tk"))
     val perLang = d.groupBy("lang")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.{CosineSimilarity, DotProduct, SquaredL2}
+import graft.functions.{ArgmaxCell, CosineSimilarity, DotProduct, SquaredL2}
 import graft.sources.Layout
 import graft.RunScope.ScratchCacheOps
 import graft.Tables.SizedSpreadOps
@@ -38,12 +38,11 @@ object Similarity {
     * by SimilaritySpec's kernel-parity test), so the oracle contract is
     * unchanged while the whole pair stream stays inside codegen. */
   def embeddingTopk(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
     val e = Tables.embeddings(spark, dir)
     val queries = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val cands = e.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-    val sim = round(expr("cosine_similarity(q_emb, c_emb)"), 6)
+    val sim = round(CosineSimilarity.of(col("q_emb"), col("c_emb")), 6)
     cands.crossJoin(broadcast(queries))
       .filter(col("c_id") =!= col("q_id"))
       .withColumn("sim", sim)
@@ -84,7 +83,6 @@ object Similarity {
     * join stage compiled where the HOF formulation would interpret three
     * lambda folds per pair. */
   def embeddingKnnNative(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
     val e = Tables.embeddings(spark, dir)
     // The embeddings parquet is a couple of splits; a broadcast nested-loop
     // join runs one task per STREAM-side partition, so without this the
@@ -100,7 +98,7 @@ object Similarity {
       // exchange must shuffle (q_id, c_id, sim) triples, not 2×64-float
       // payloads (measured 6.3 s -> ~1.5 s at sf0.1)
       .select(col("q_id"), col("c_id"),
-        round(expr("cosine_similarity(q_emb, c_emb)"), 6).as("sim"))
+        round(CosineSimilarity.of(col("q_emb"), col("c_emb")), 6).as("sim"))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))).cast("long"))
       .filter(col("rank") <= 3)
@@ -146,7 +144,6 @@ object Similarity {
     * factored so specs can pin individual predictions against a
     * driver-side model. */
   private[graft] def knnPredictions(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
     val e = Tables.embeddings(spark, dir)
     // spread the stream side: see embeddingKnnNative (one task per
     // stream partition under a broadcast nested-loop join otherwise)
@@ -163,7 +160,7 @@ object Similarity {
       .filter(col("c_id") =!= col("q_id"))
       // project embeddings away before the rank exchange (knn lesson)
       .select(col("q_id"), col("c_id"), col("c_label"),
-        round(expr("cosine_similarity(q_emb, c_emb)"), 6).as("sim"))
+        round(CosineSimilarity.of(col("q_emb"), col("c_emb")), 6).as("sim"))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))))
       .filter(col("rank") <= KnnVoteK)
@@ -253,10 +250,9 @@ object Similarity {
     * and ran interpreted at 22-29 s per execution at sf0.1); one loop node
     * per plane compiles cleanly. Bit-identical to the oracle's textual sum:
     * both accumulate doubles in ascending element order and ±1.0 multiplies
-    * are exact (see [[DotProduct]] scaladoc). Requires
-    * `DotProduct.register` on the session. */
+    * are exact (see [[DotProduct]] scaladoc). */
   private def projDotExpr(weights: Seq[Int]): org.apache.spark.sql.Column =
-    expr(s"dot_product(ed, array(${weights.map(w => s"${w.toDouble}D").mkString(",")}))")
+    DotProduct.of(col("ed"), array(weights.map(w => lit(w.toDouble)): _*))
 
   /** Random-hyperplane LSH ANN: 8-bit bucket from projection signs, then
     * top-1 cosine neighbor within the bucket (expected bucket size
@@ -268,8 +264,6 @@ object Similarity {
     * norms inside its single compiled loop, which also lets the bucket
     * join shuffle (vec_id, ed, bucket) without a precomputed-norm column. */
   def embeddingAnnLsh(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
-    DotProduct.register(spark)
     // spread: bucket codes are 8 dot products per row — a single-split
     // scan would serialize them (identity at real scale, see Tables.spread)
     val e = Tables.spread(Tables.embeddings(spark, dir))
@@ -283,7 +277,7 @@ object Similarity {
         col("a.bucket") === col("b.bucket") && col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("q_id"), col("b.vec_id").as("c_id"),
         col("a.bucket").as("bucket"),
-        round(expr("cosine_similarity(a.ed, b.ed)"), 6).as("sim"))
+        round(CosineSimilarity.of(col("a.ed"), col("b.ed")), 6).as("sim"))
     pairs
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))))
@@ -301,7 +295,6 @@ object Similarity {
     * (at that similarity the bucket-collision probability is high, which
     * it is not at 0.45 — hence the exact path here). */
   def embeddingCosineDedup(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
     val e = Tables.embeddings(spark, dir)
     val a = e.select(col("vec_id").as("doc_a"), col("embedding").as("ea"))
       .repartition(spark.sessionState.conf.numShufflePartitions)
@@ -309,7 +302,7 @@ object Similarity {
     a.crossJoin(b)
       .filter(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b"),
-        expr("cosine_similarity(ea, eb)").as("c"))
+        CosineSimilarity.of(col("ea"), col("eb")).as("c"))
       // raw prefilter before the BigDecimal-backed round (see
       // lshDedupKernel's note) — on this O(n²) exact baseline the round
       // was paid per PAIR; identical survivors by the 1e-6 slack
@@ -415,8 +408,6 @@ object Similarity {
     * Reverted; do not re-try either shape without new evidence. */
   private def lshDedupKernel(e: DataFrame, tables: Int, planes: Int,
                              weights: Seq[Seq[Seq[Int]]]): DataFrame = {
-    CosineSimilarity.register(e.sparkSession)
-    DotProduct.register(e.sparkSession)
     val tb = explode(array((0 until tables).map { t =>
       val code = (0 until planes).map { p =>
         when(projDotExpr(weights(t)(p)) > 0, lit(1L << p)).otherwise(lit(0L))
@@ -430,7 +421,7 @@ object Similarity {
         col("a.t") === col("b.t") && col("a.bkt") === col("b.bkt")
           && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("doc_a"), col("b.vec_id").as("doc_b"),
-        expr("cosine_similarity(a.ed, b.ed)").as("c"))
+        CosineSimilarity.of(col("a.ed"), col("b.ed")).as("c"))
       // RAW prefilter before the 6dp round: Spark's round(double) goes
       // through BigDecimal.valueOf(Double.toString(x)) — a per-row string
       // format that dominated this kernel at the 25× rehearsal (jstack:
@@ -593,10 +584,9 @@ object Similarity {
       cents: IndexedSeq[(Long, Seq[Double])]): DataFrame = {
     require(cents.nonEmpty,
       "argmax cell assignment requires a non-empty centroid model")
-    graft.functions.ArgmaxCell.register(e.sparkSession)
     val sorted = cents.sortBy(_._1)
     e.select(col("vec_id"), col("ed"),
-      call_function("argmax_cell", col("ed"),
+      ArgmaxCell.of(col("ed"),
         typedlit(sorted.map(_._1).toSeq),
         typedlit(sorted.map(_._2.toSeq).toSeq)).as("cell"))
   }
@@ -609,7 +599,6 @@ object Similarity {
     * native kernel lifts. */
   private[llm] def argmaxCellChain(e: DataFrame,
       cents: IndexedSeq[(Long, Seq[Double])]): DataFrame = {
-    CosineSimilarity.register(e.sparkSession)
     // one struct(csim, -cent_id) COLUMN per centroid, each a direct
     // call into the native codegen'd kernel against a constant-folded
     // 64-double array literal — NOT a SQL higher-order function, which
@@ -618,8 +607,8 @@ object Similarity {
     // crossJoin it replaced)
     val packed = cents.sortBy(_._1).map { case (id, ced) =>
       struct(
-        round(call_function("cosine_similarity",
-          col("ed"), array(ced.map(lit): _*)), 6).as("csim"),
+        round(CosineSimilarity.of(col("ed"), array(ced.map(lit): _*)), 6)
+          .as("csim"),
         lit(-id).as("nid"))
     }
     val best =
@@ -684,7 +673,6 @@ object Similarity {
     * broadcast); the search never touches vectors outside the probed
     * cells — candidates shrink from n to ~n·nprobe/K. */
   def embeddingAnnIvf(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
     // the vector table feeds training (once per Lloyd iteration), cell
     // assignment, and the candidate join — cache it once
     val e = vectors(spark, dir).scratchCache()
@@ -714,7 +702,7 @@ object Similarity {
       .filter(col("vec_id") >= qLo && col("vec_id") < qHi)
       .crossJoin(broadcast(cents))
       .select(col("vec_id"), col("ed"), col("cent_id"),
-        round(expr("cosine_similarity(ed, ced)"), 6).as("csim"))
+        round(CosineSimilarity.of(col("ed"), col("ced")), 6).as("csim"))
       .withColumn("crank", row_number().over(
         Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cent_id"))))
       .filter(col("crank") <= IvfNprobe)
@@ -723,7 +711,7 @@ object Similarity {
       .join(assign, Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("c_id"),
-        round(expr("cosine_similarity(qed, ed)"), 6).as("sim"))
+        round(CosineSimilarity.of(col("qed"), col("ed")), 6).as("sim"))
       .dropDuplicates("q_id", "c_id") // a candidate can sit in both probed cells
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))).cast("long"))
@@ -849,7 +837,6 @@ object Similarity {
     * warehouse dir would clobber each other; the entries are
     * single-driver by design (the driver gate and bench run serially). */
   def ivfIndexSearch(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
     // ---- index build: once per corpus, not per query ----
     Layout.dropManagedTable(spark, "graft_ivf_centroids")
     Layout.dropManagedTable(spark, "graft_ivf_assign")
@@ -874,7 +861,7 @@ object Similarity {
       .select(col("vec_id").as("q_id"), col("ed").as("qed"))
       .crossJoin(broadcast(cents))
       .select(col("q_id"), col("qed"), col("cent_id"),
-        round(expr("cosine_similarity(qed, ced)"), 6).as("csim"))
+        round(CosineSimilarity.of(col("qed"), col("ced")), 6).as("csim"))
       .withColumn("crank", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("csim").desc, col("cent_id"))))
       .filter(col("crank") <= IvfNprobe)
@@ -883,7 +870,7 @@ object Similarity {
       .join(assign, Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("c_id"),
-        round(expr("cosine_similarity(qed, ed)"), 6).as("sim"))
+        round(CosineSimilarity.of(col("qed"), col("ed")), 6).as("sim"))
       .dropDuplicates("q_id", "c_id") // a candidate can sit in both probed cells
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))).cast("long"))
@@ -912,8 +899,6 @@ object Similarity {
     * exchange-free search; and the fixed name makes the entry
     * single-driver by design. */
   def lshIndexSearch(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
-    DotProduct.register(spark)
     // ---- index build ----
     Layout.dropManagedTable(spark, "graft_lsh_buckets")
     val e = Tables.embeddings(spark, dir)
@@ -931,7 +916,7 @@ object Similarity {
         col("a.bucket") === col("b.bucket") && col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("q_id"), col("b.vec_id").as("c_id"),
         col("a.bucket").as("bucket"),
-        round(expr("cosine_similarity(a.ed, b.ed)"), 6).as("sim"))
+        round(CosineSimilarity.of(col("a.ed"), col("b.ed")), 6).as("sim"))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))))
       .filter(col("rank") === 1)
@@ -1239,7 +1224,8 @@ object Similarity {
   private val PqK = 4
   private val PqIters = 2
 
-  /** Rounded squared-L2 between two equal-length double arrays, on the
+  /** Rounded squared-L2 between the equal-length double arrays `sub` and
+    * `ced` (a subvector and a codebook centroid), on the
     * native codegen'd [[graft.functions.SquaredL2]] kernel — an
     * ascending-index (x−y)² fold, the exact order DuckDB's list_reduce
     * walks, so both engines produce bit-identical distances (the cosine
@@ -1252,8 +1238,8 @@ object Similarity {
     * per candidate per subspace). The r19 HOF finding, SCALE.md:
     * native-in-lambda forfeits codegen; this kernel keeps the pass
     * compiled. Output bit-identical — 242/242 oracle-green unchanged.) */
-  private def l2Sql(a: String, b: String): String =
-    s"round(squared_l2($a, $b), 6)"
+  private def subL2: org.apache.spark.sql.Column =
+    round(SquaredL2.of(col("sub"), col("ced")), 6)
 
   /** Per-subspace subvectors: (vec_id, m, sub) — one row per vector per
     * subspace, sliced in-row (no shuffle). */
@@ -1276,12 +1262,11 @@ object Similarity {
       .select(col("m"), col("vec_id").as("cent_id"), col("sub").as("ced"))
 
   private[llm] def trainPqCodebooks(e: DataFrame): DataFrame = {
-    SquaredL2.register(e.sparkSession)
     val subs = pqSubvectors(e).scratchCache()
     var cents = seedPqCodebooks(e)
     for (_ <- 1 to PqIters) {
       val assigned = subs.join(broadcast(cents), Seq("m"))
-        .withColumn("d2", expr(l2Sql("sub", "ced")))
+        .withColumn("d2", subL2)
         .groupBy("vec_id", "m")
         .agg(min_by(struct(col("cent_id"), col("sub")),
           struct(col("d2"), col("cent_id"))).as("best"))
@@ -1328,9 +1313,8 @@ object Similarity {
   /** Long-form codes — (vec_id, m, code, d2): each vector's per-subspace
     * codebook assignment. The storage row [[embeddingAdcSearch]] scans. */
   private[llm] def pqCodesLong(e: DataFrame, cents: DataFrame): DataFrame = {
-    SquaredL2.register(e.sparkSession)
     pqSubvectors(e).join(broadcast(cents), Seq("m"))
-      .withColumn("d2", expr(l2Sql("sub", "ced")))
+      .withColumn("d2", subL2)
       .groupBy("vec_id", "m")
       .agg(min(struct(col("d2"), col("cent_id"))).as("best"))
       .select(col("vec_id"), col("m"),
@@ -1442,13 +1426,12 @@ object Similarity {
     * shared by the entry and the planted-fixture recall spec. */
   private[llm] def adcSearchFrom(e: DataFrame, cents: DataFrame,
       qLo: Long, qHi: Long): DataFrame = {
-    SquaredL2.register(e.sparkSession)
     val codes = pqCodesLong(e, cents)
       .select(col("vec_id").as("c_id"), col("m"), col("code"))
     val dtab = pqSubvectors(e.filter(col("vec_id") >= qLo && col("vec_id") < qHi))
       .join(broadcast(cents), Seq("m"))
       .select(col("vec_id").as("q_id"), col("m").as("dm"), col("cent_id"),
-        expr(l2Sql("sub", "ced")).as("dq"))
+        subL2.as("dq"))
     codes
       .join(broadcast(dtab),
         col("m") === col("dm") && col("code") === col("cent_id"))
@@ -1477,7 +1460,7 @@ object Similarity {
       .filter(col("vec_id") >= qLo && col("vec_id") < qHi)
       .crossJoin(broadcast(cents))
       .select(col("vec_id"), col("cent_id"),
-        round(expr("cosine_similarity(ed, ced)"), 6).as("csim"))
+        round(CosineSimilarity.of(col("ed"), col("ced")), 6).as("csim"))
       .withColumn("crank", row_number().over(
         Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cent_id"))))
       .filter(col("crank") <= IvfNprobe)
@@ -1506,7 +1489,6 @@ object Similarity {
     * broadcast |Q|·M·K lookup table — output-sized work, zero float I/O
     * for candidates. */
   def embeddingIvfAdcSearch(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
     val e = vectors(spark, dir).scratchCache()
     ivfAdcFrom(e, ivfModelFrame(e), pqModelFrame(e), AdcQLo, AdcQHi)
   }
@@ -1516,14 +1498,13 @@ object Similarity {
     * [[embeddingIvfAdcSearch]] and [[annRecallReport]]. */
   private[llm] def ivfAdcFrom(e: DataFrame, ivfCents: DataFrame,
       pqCents: DataFrame, qLo: Long, qHi: Long): DataFrame = {
-    SquaredL2.register(e.sparkSession)
     val cand = ivfCandidatesFrom(e, ivfCents, qLo, qHi)
     val codes = pqCodesLong(e, pqCents)
       .select(col("vec_id").as("c_id"), col("m"), col("code"))
     val dtab = pqSubvectors(e.filter(col("vec_id") >= qLo && col("vec_id") < qHi))
       .join(broadcast(pqCents), Seq("m"))
       .select(col("vec_id").as("dq_id"), col("m").as("dm"), col("cent_id"),
-        expr(l2Sql("sub", "ced")).as("dq"))
+        subL2.as("dq"))
     cand.join(codes, Seq("c_id"))
       .join(broadcast(dtab),
         col("q_id") === col("dq_id") && col("m") === col("dm") &&
@@ -1615,7 +1596,6 @@ object Similarity {
     * PQ model trained in this call, so the report measures the deployed
     * paths, not copies. */
   def annRecallReport(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
     val e = vectors(spark, dir).scratchCache()
     val ivfCents = ivfModelFrame(e)
     val pqCents = pqModelFrame(e)
@@ -1625,7 +1605,7 @@ object Similarity {
     val truth = e.select(col("vec_id").as("c_id"), col("ed").as("c_ed"))
       .crossJoin(broadcast(queries))
       .filter(col("c_id") =!= col("q_id"))
-      .withColumn("sim", round(expr("cosine_similarity(qed, c_ed)"), 6))
+      .withColumn("sim", round(CosineSimilarity.of(col("qed"), col("c_ed")), 6))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))))
       .filter(col("rank") <= 3)
@@ -1764,13 +1744,12 @@ object Similarity {
     * [[semanticDedup]] and [[semanticDedupApply]] (and the spec's
     * planted-cluster fixture through [[semanticAssignWith]]). */
   private[llm] def semanticPairsFrom(assign: DataFrame): DataFrame = {
-    CosineSimilarity.register(assign.sparkSession)
     assign.as("a")
       .join(assign.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("doc_a"), col("b.vec_id").as("doc_b"),
         col("a.cell").as("cell"),
-        expr("cosine_similarity(a.ed, b.ed)").as("c"))
+        CosineSimilarity.of(col("a.ed"), col("b.ed")).as("c"))
       // raw prefilter before the BigDecimal-backed round (the
       // lshDedupKernel pattern): candidates are cell-random, the 1e-6
       // slack keeps every pair that could round up to the threshold
@@ -1915,7 +1894,6 @@ object Similarity {
     * you estimate recall from a probe sample, you never compute the
     * full truth). Emits ONE row (n_true, n_found, recall). */
   def semanticDedupRecall(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
     val e = vectors(spark, dir)
       .scratchCache() // probe side + candidate side + assignment
     val probes = e.filter(col("vec_id") < SemProbeN).limit(SemProbeN)
@@ -1923,7 +1901,7 @@ object Similarity {
     val truth = e.crossJoin(broadcast(probes))
       .filter(col("vec_id") > col("p_id"))
       .select(col("p_id"), col("vec_id").as("c_id"),
-        expr("cosine_similarity(ped, ed)").as("c"))
+        CosineSimilarity.of(col("ped"), col("ed")).as("c"))
       .filter(col("c") >= SemCosine - 1e-6)
       .filter(round(col("c"), 6) >= SemCosine)
       .select("p_id", "c_id")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.analytics.Quantiles
 import graft.RunScope.ScratchCacheOps
-import graft.functions.RegexCount
+import graft.functions.{CharEntropy, MisraGries, NfcNormalize, PolyHash, RegexCount, TermCounts}
 
 /** Text-analysis operators for a large-scale training-data pipeline, over
   * the `documents` corpus table (beyond-reference surface; builder brief +
@@ -36,6 +36,14 @@ object TextAnalysis {
   def textQuality(spark: SparkSession, dir: String): DataFrame =
     qualityFrame(spark, dir).drop("source").orderBy("doc_id")
 
+  /** Whitespace-token count, identical to `size(split(trim(s), "\\s+"))`
+    * for EVERY input: Spark's `split` is Java `Pattern.split(s, -1)`,
+    * which returns one piece per separator match plus one (RegexCountSpec
+    * pins the identity, including tab/newline-edged and empty strings
+    * where a naive `greatest(count(\\S+), 1)` form would diverge). */
+  private[graft] def wsTokenCount(s: Column): Column =
+    RegexCount.of(trim(s), "\\s+") + lit(1)
+
   /** Appends `n_tokens`, `stop_ratio`, `punct_ratio` (6dp) and
     * `quality_score` (6dp) to ANY frame with a `text` column — per-row
     * expressions only, so the same scorer runs in batch and behind a
@@ -45,26 +53,10 @@ object TextAnalysis {
     * form. Quality: long-enough docs with organic stopword density and
     * low punctuation noise score high; clamped linear terms, weights sum
     * to 1. */
-  /** `regex_count(s, re)` as a Column — counts matches without
-    * materializing them ([[graft.functions.RegexCount]]; r22 §10).
-    * Callers must have registered the function on the session (every
-    * kernel below does, idempotently). */
-  private[graft] def regexCount(s: Column, re: String): Column =
-    call_function("regex_count", s, lit(re))
-
-  /** Whitespace-token count, identical to `size(split(trim(s), "\\s+"))`
-    * for EVERY input: Spark's `split` is Java `Pattern.split(s, -1)`,
-    * which returns one piece per separator match plus one (RegexCountSpec
-    * pins the identity, including tab/newline-edged and empty strings
-    * where a naive `greatest(count(\\S+), 1)` form would diverge). */
-  private[graft] def wsTokenCount(s: Column): Column =
-    regexCount(trim(s), "\\s+") + lit(1)
-
   private[graft] def withQualityScore(d: DataFrame): DataFrame = {
-    RegexCount.register(d.sparkSession)
     val nTok = wsTokenCount(col("text"))
-    val nStop = regexCount(col("text"), StopRe)
-    val nPunct = regexCount(col("text"), "[.,!?;:]")
+    val nStop = RegexCount.of(col("text"), StopRe)
+    val nPunct = RegexCount.of(col("text"), "[.,!?;:]")
     val stopRatio = nStop.cast("double") / nTok
     val punctRatio = nPunct.cast("double") / length(col("text"))
     val score =
@@ -83,10 +75,10 @@ object TextAnalysis {
     // spread: per-doc regex/hash work serializes on a single-split scan
     // (identity at real scale, see Tables.spread)
     val d = withQualityScore(Tables.spread(Tables.documents(spark, dir)))
-    val nBpe = regexCount(col("text"), BpeTokenRe)
+    val nBpe = RegexCount.of(col("text"), BpeTokenRe)
     // = length(regexp_replace(text, "\s+", "")): every \s char is exactly
     // one match of the single-char class, and no copy of the doc is built
-    val charsNoSpace = length(col("text")) - regexCount(col("text"), "\\s")
+    val charsNoSpace = length(col("text")) - RegexCount.of(col("text"), "\\s")
     d.select(
       col("doc_id"), col("lang"), col("n_chars"),
       col("n_tokens"), nBpe.cast("long").as("n_tokens_bpe"),
@@ -178,8 +170,7 @@ object TextAnalysis {
     // spread: per-doc regex/hash work serializes on a single-split scan
     // (identity at real scale, see Tables.spread)
     val d = Tables.spread(Tables.documents(spark, dir))
-    RegexCount.register(spark)
-    def hits(re: String) = regexCount(lower(col("text")), re)
+    def hits(re: String) = RegexCount.of(lower(col("text")), re)
     val cEn = hits("\\b(the|and|of|to|a|in|is)\\b")
     val cDe = hits("\\b(der|die|das|und|ist|nicht)\\b")
     val cFr = hits("\\b(le|la|les|et|est|une)\\b")
@@ -323,7 +314,6 @@ object TextAnalysis {
     * split-on-empty emits a trailing "" (Java regex, limit -1) that
     * DuckDB's does not. */
   def docFingerprint(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.PolyHash.register(spark)
     // spread: per-doc regex/hash work serializes on a single-split scan
     // (identity at real scale, see Tables.spread)
     val d = Tables.spread(Tables.documents(spark, dir))
@@ -337,7 +327,7 @@ object TextAnalysis {
       .select(
         col("doc_id"),
         md5(col("norm")).as("md5_fp"),
-        expr("poly_hash(norm)").as("poly_fp"))
+        PolyHash.of(col("norm")).as("poly_fp"))
       .orderBy("doc_id")
   }
 
@@ -605,12 +595,11 @@ object TextAnalysis {
     * into k-counter summaries and the shuffle ships summaries, never the
     * term stream. */
   def heavyHittersCheck(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.MisraGries.register(spark)
     // spread: per-doc split/explode work serializes on a single-split
     // scan (identity at real scale, see Tables.spread)
     val ex = Tables.spread(Tables.documents(spark, dir))
       .select(explode(split(lower(trim(col("text"))), "\\s+")).as("term"))
-    val sk = ex.agg(expr(s"misra_gries(term, $HeavyK)").as("sketch"),
+    val sk = ex.agg(MisraGries.of(col("term"), HeavyK).as("sketch"),
       count(lit(1)).as("n"))
     val est = coalesce(element_at(col("sketch"), col("term")), lit(0L))
     ex.groupBy("term").agg(count(lit(1)).as("tf"))
@@ -738,10 +727,8 @@ object TextAnalysis {
     * element_at lambda call, re-evaluating the sort — and the tokenizing
     * regex below it — per element; see the expression's scaladoc.) */
   private[llm] def withTermCounts(df: DataFrame, arrCol: String,
-      out: String): DataFrame = {
-    graft.functions.TermCounts.register(df.sparkSession)
-    df.withColumn(out, expr(s"term_counts($arrCol)"))
-  }
+      out: String): DataFrame =
+    df.withColumn(out, TermCounts.of(col(arrCol)))
 
   /** Top terms kept per document by [[tfidfTopTerms]]. */
   private val TfidfK = 3
@@ -895,14 +882,13 @@ object TextAnalysis {
     * fast-paths already-normalized text with a no-allocation check, so
     * ASCII corpora pay a scan, not a rewrite). */
   def textNormalize(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.NfcNormalize.register(spark)
     // spread: per-doc normalize/regex work serializes on a single-split
     // scan (identity at real scale, see Tables.spread)
     val d = Tables.spread(Tables.documents(spark, dir))
     val raw = when(col("doc_id") % 5 === 0,
       concat(col("text"), lit(NormSuffix))).otherwise(col("text"))
     val norm = lower(trim(regexp_replace(
-      regexp_replace(expr("nfc_normalize(raw)"), "[\\x00-\\x1F\\x7F]", ""),
+      regexp_replace(NfcNormalize.of(col("raw")), "[\\x00-\\x1F\\x7F]", ""),
       "\\s+", " ")))
     d.select(col("doc_id"), raw.as("raw"))
       .select(col("doc_id"), norm.as("text_norm"), col("raw"))
@@ -1473,7 +1459,6 @@ object TextAnalysis {
     // spread: per-doc regex work serializes on a single-split scan
     // (identity at real scale, see Tables.spread)
     val d = Tables.spread(Tables.documents(spark, dir))
-    RegexCount.register(spark)
     val raw = when(col("doc_id") % 4 === 1,
         concat(col("text"), lit(" contact user"), col("doc_id"), lit("@example.com")))
       .when(col("doc_id") % 4 === 2,
@@ -1481,7 +1466,7 @@ object TextAnalysis {
       .when(col("doc_id") % 4 === 3,
         concat(col("text"), lit(" from 192.168.10.42 see https://example.com/a?b=1")))
       .otherwise(col("text"))
-    def n(re: String) = regexCount(col("raw"), re).cast("long")
+    def n(re: String) = RegexCount.of(col("raw"), re).cast("long")
     val redacted = regexp_replace(
       regexp_replace(
         regexp_replace(
@@ -1796,7 +1781,6 @@ object TextAnalysis {
     * character — ~100e12 rows corpus-wide). The whole query is a
     * map-only scan-project; the only ordering is presentation. */
   def charEntropy(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CharEntropy.register(spark)
     // spread: per-doc entropy work serializes on a single-split scan
     // (identity at real scale, see Tables.spread)
     Tables.spread(Tables.documents(spark, dir))
@@ -1804,7 +1788,7 @@ object TextAnalysis {
         length(col("text")).cast("long").as("n_cp"),
         size(array_distinct(split(col("text"), ""))).cast("long")
           .as("distinct_chars"),
-        round(expr("char_entropy(text)"), 6).as("char_entropy"))
+        round(CharEntropy.of(col("text")), 6).as("char_entropy"))
       .orderBy("doc_id")
   }
 

@@ -2,7 +2,6 @@ package graft.plans
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{Sort, Window => LWindow}
 
 import graft.SparkEntry
@@ -21,12 +20,7 @@ object LintDebug {
       "usage: LintDebug <sfDir> [entry ...] (e.g. /root/testdata/sf0.001)")
     val sfDir = args.head
     val names = args.tail.toSet
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("lint-debug").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.local()
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(e => names.isEmpty || names(e._1))
       .foreach { case (name, q) =>

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 import graft.SparkEntry
@@ -15,9 +14,9 @@ import graft.SparkEntry
   * (plans/rN/<entry>_before.txt) without hand-copying console output.
   *
   * Usage: `runMain graft.plans.PlanDump <sfDir> <outDir> [entry ...]` —
-  * with no entry names, dumps the whole registry. Session config mirrors
-  * Bench (same master/shuffle-partitions/codegen knobs) so the dumped
-  * plan is the one the bench actually runs; entries whose CONSTRUCTION
+  * with no entry names, dumps the whole registry. The session is Bench's
+  * own ([[SparkEntry.local]]) so the dumped plan is the one the bench
+  * actually runs; entries whose CONSTRUCTION
   * runs jobs (iterative trainers, CTAS-style layouts) pay that cost here
   * exactly as Bench does, but nothing is executed beyond construction.
   */
@@ -29,15 +28,7 @@ object PlanDump {
     val outDir = Paths.get(args(1))
     Files.createDirectories(outDir)
     val names = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.maxFields", "256")
-      .appName("plan-dump").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.local()
     val mode = ExplainMode.fromString("formatted")
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(e => names.isEmpty || names(e._1))

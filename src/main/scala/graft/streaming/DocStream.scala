@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.SimHashWord
 import graft.llm.{Dedup, Sampling, TextAnalysis}
 
 /** Streaming document kernels — the online forms of the near-dup
@@ -102,9 +103,8 @@ object DocStream {
     * shingle stage + the native per-row fingerprint; drops sub-3-word
     * docs exactly as batch does. */
   private[graft] def fingerprints(docs: DataFrame): DataFrame = {
-    graft.functions.SimHashWord.register(docs.sparkSession)
     Dedup.shinglesOf(docs)
-      .withColumn("simhash", expr("simhash_word(shingles, 0)"))
+      .withColumn("simhash", SimHashWord.of(col("shingles"), 0))
       .drop("ws", "shingles", "text")
   }
 
@@ -164,7 +164,6 @@ object DocStream {
     * upstream at ingest, exactly where the batch library builds it. */
   def streamingMediaDedup(media: DataFrame,
                           horizon: String = "30 MINUTES"): DataFrame = {
-    graft.functions.DhashBits.register(media.sparkSession)
     bandedPairStream(
       media.select(col("media_id").as("id"), col("ts"),
         graft.llm.Multimodal.dhashCol(col("grid")).as("fp")),
@@ -189,9 +188,9 @@ object DocStream {
     * library (DocStreamSpec pair-tests this). The static side is one
     * 8-byte fingerprint per library member — a bounded curated artifact
     * (10⁷ members ≈ 80 MB), the [[streamingChunkStrip]] census-artifact
-    * pattern at media scale; a library past broadcast size shards by
-    * band into a bucketed static table and the offline
-    * `media_near_apply` sweep remains the backstop. The per-arrival
+    * pattern at media scale; no sharded path exists for a library past
+    * broadcast size, where the offline `media_near_apply` sweep is the
+    * backstop. The per-arrival
     * probe is a codegen'd bit_count scan of the broadcast set —
     * pigeonhole-equivalent to an 8-band bucket probe without the
     * explode+re-dedup (and its state) a banded stream join would need.
@@ -199,7 +198,6 @@ object DocStream {
     * Input schema: (media_id long, ts timestamp, grid array<int>);
     * `library` is a static (media_id, grid) frame. Append-mode. */
   def streamingMediaGate(media: DataFrame, library: DataFrame): DataFrame = {
-    graft.functions.DhashBits.register(media.sparkSession)
     // The static side is CACHED (r21, ADVICE r20 #4): a stream-static
     // join re-plans and re-executes its static subtree every micro-batch,
     // so an uncached library would re-decode and re-fingerprint the whole
@@ -233,17 +231,15 @@ object DocStream {
     * pair predicate (bit_count(xor) ≤ HamMax), so gate-dropped arrivals
     * are precisely the members `audio_near_dedup` pairs against the
     * same library (DocStreamSpec pair-tests this). The static side is
-    * one 8-byte fingerprint per library clip; past broadcast size the
-    * same band-sharded fallback applies. Admitted rows keep the input
-    * schema, so the gate composes in front of the in-horizon streams.
+    * one 8-byte fingerprint per library clip. Admitted rows keep the
+    * input schema, so the gate composes in front of the in-horizon
+    * streams.
     *
     * Input schema: (media_id long, ts timestamp, sm array<int> — the
     * decoded signed-16-bit samples, built upstream at ingest exactly
     * where the batch library decodes them); `library` is a static
     * (media_id, sm) frame. Append-mode. */
   def streamingAudioGate(audio: DataFrame, library: DataFrame): DataFrame = {
-    graft.functions.DhashBits.register(audio.sparkSession)
-    graft.functions.MovingEnergy.register(audio.sparkSession)
     def afp(sm: org.apache.spark.sql.Column) =
       graft.llm.Multimodal.dhashCol(graft.llm.Multimodal.audioEnvelope(sm))
     // cached for the same per-micro-batch reason as [[streamingMediaGate]];
@@ -277,10 +273,9 @@ object DocStream {
 
   /** (doc_id, ts, sim1, sim2) — both 60-bit md5 words per document. */
   private[graft] def fingerprintsWide(docs: DataFrame): DataFrame = {
-    graft.functions.SimHashWord.register(docs.sparkSession)
     Dedup.shinglesOf(docs)
-      .withColumn("sim1", expr("simhash_word(shingles, 0)"))
-      .withColumn("sim2", expr("simhash_word(shingles, 1)"))
+      .withColumn("sim1", SimHashWord.of(col("shingles"), 0))
+      .withColumn("sim2", SimHashWord.of(col("shingles"), 1))
       .drop("ws", "shingles", "text")
   }
 

@@ -1077,11 +1077,10 @@ object EventsStream {
     * passes (Append mode). The same expression drives the batch entry
     * (`heavy_hitters_check`), so stream and batch share one kernel. */
   def streamingHeavyHitters(events: DataFrame, k: Int = 4): DataFrame = {
-    graft.functions.MisraGries.register(events.sparkSession)
     events
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(expr(s"misra_gries(event_type, $k)").as("sketch"))
+      .agg(graft.functions.MisraGries.of(col("event_type"), k).as("sketch"))
       .select(col("w.start").as("hour_start"), explode(col("sketch"))
         .as(Seq("event_type", "min_count")))
   }

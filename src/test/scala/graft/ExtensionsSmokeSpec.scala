@@ -1,17 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** VERDICT r17 #8 (stretch): every registry entry must plan under a BARE
-  * session whose only wiring is the `GraftExtensions` class — the
-  * shared-cluster deployment shape (one `spark.sql.extensions` config
-  * line, every job gets the native functions and the optimizer rule).
-  * The kernels' embedded `register(spark)` calls are idempotent today;
-  * this pin prevents a future kernel from silently depending on a manual
-  * register call that an extensions-configured production session would
-  * never make, or on registration order across entries. Physical
-  * planning (sparkPlan) is forced so function resolution, the injected
+/** Every registry entry must plan under a BARE session whose only wiring
+  * is the `GraftExtensions` class — the shared-cluster deployment shape
+  * (one `spark.sql.extensions` config line, every job gets the native
+  * functions and the optimizer rule). Library code builds its kernels as
+  * Columns and needs no function names at all (OutputSchemaSpec pins
+  * that on a plain session); this pin keeps the SQL route whole: every
+  * name in [[GraftFunctions.all]] is injected, the optimizer rule is
+  * installed, and no entry trips over either. Physical planning
+  * (sparkPlan) is forced so function resolution, the injected
   * NativeVectorRewrite rule, and strategy selection all run.
   *
   * Session mechanics: `spark.sql.extensions` is a STATIC conf read from
@@ -19,24 +18,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * cannot pick it up from builder options — but
   * `Builder.withExtensions(new GraftExtensions())` is the same code
   * path minus the conf lookup: the REAL extensions class runs against
-  * the new session's fresh registry (review finding, r18 — the earlier
-  * draft wired the session through GraftFunctions.registerAll, which
-  * bypassed GraftExtensions.apply entirely).
+  * the new session's fresh registry (wiring the session through
+  * GraftFunctions.registerAll instead would bypass GraftExtensions.apply
+  * entirely).
   */
 class ExtensionsSmokeSpec extends AnyFunSuite {
 
   test("every registry entry plans under an extensions-only session") {
-    val base = SparkSpec.session // materialize the shared SparkContext
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      // a genuinely NEW SparkSession over the same context — its function
-      // registry starts fresh (built-ins only), then GraftExtensions
-      // itself injects the natives + the optimizer rule
-      val ext = SparkSpec.configure(SparkSession.builder())
-        .withExtensions(new GraftExtensions())
-        .getOrCreate()
-      assert(ext ne base, "must be a fresh session, not the shared fixture")
+    SparkSpec.withFreshSession(_.withExtensions(new GraftExtensions())) { ext =>
       GraftFunctions.all.foreach { case (id, _, _) =>
         assert(ext.sessionState.functionRegistry.functionExists(id),
           s"GraftExtensions must have injected $id")
@@ -56,11 +45,6 @@ class ExtensionsSmokeSpec extends AnyFunSuite {
       assert(failures.isEmpty,
         s"${failures.size} entries failed to plan under extensions-only:\n" +
           failures.mkString("\n"))
-    } finally {
-      RunScope.releaseAll(blocking = true)
-      // restore the shared fixture for any suite that runs after us
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
     }
   }
 }

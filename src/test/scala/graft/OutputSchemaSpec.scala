@@ -28,15 +28,35 @@ class OutputSchemaSpec extends SparkSpec {
     case _ => Nil
   }
 
+  /** Every entry's output schema, built on a fresh plain session (no
+    * extensions, no registerAll: the shape whbench, Bench and Verify use),
+    * with that session's function registry before and after. One pass
+    * over the registry serves both tests below. */
+  private lazy val (schemas, registryBefore, registryAfter) =
+    SparkSpec.withFreshSession() { plain =>
+      val registry = plain.sessionState.functionRegistry
+      val before = registry.listFunction().toSet
+      val schemas = SparkEntry.queries.toSeq.sortBy(_._1).map {
+        case (name, fn) => name -> fn(plain, sfDir).schema
+      }
+      (schemas, before, registry.listFunction().toSet)
+    }
+
   test("no registered query emits DecimalType at the output edge") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val schema = fn(spark, sfDir).schema
-        schema.fields.toSeq
-          .flatMap(f => decimalPaths(f.dataType, f.name))
-          .map(p => s"$name: $p")
+    val offenders = schemas.flatMap { case (name, schema) =>
+      schema.fields.toSeq
+        .flatMap(f => decimalPaths(f.dataType, f.name))
+        .map(p => s"$name: $p")
     }
     assert(offenders.isEmpty,
       s"queries with DECIMAL in output schema (cast to rounded DOUBLE at the edge):\n  ${offenders.mkString("\n  ")}")
+  }
+
+  test("building every registry entry leaves the session's function registry unchanged") {
+    // the library builds its native kernels as Columns; it never
+    // registers, replaces or drops a function on the caller's session
+    val added = (registryAfter -- registryBefore).map(_.funcName)
+    val removed = (registryBefore -- registryAfter).map(_.funcName)
+    assert(added.isEmpty && removed.isEmpty, s"added: $added; removed: $removed")
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import org.scalatest.{BeforeAndAfterAll, Outcome}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession fixture for all specs. sf0.001 keeps the
@@ -9,7 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   val sfDir = SparkSpec.sfDir
   lazy val spark: SparkSession = SparkSpec.session
-  override def afterAll(): Unit = spark.catalog.clearCache()
+
+  /** Every test starts on an empty cache: a frame an earlier test cached
+    * and never unpersisted would otherwise stand in, as an
+    * InMemoryRelation, for any later plan that matches it. */
+  override def withFixture(test: NoArgTest): Outcome =
+    try super.withFixture(test) finally spark.catalog.clearCache()
 }
 
 object SparkSpec {
@@ -25,6 +30,26 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", 4)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+
+  /** Runs `body` on a NEW session over the shared SparkContext, built
+    * by [[configure]] and then `wire`: its function registry starts with
+    * Spark's built-ins only. The shared fixture is restored as the
+    * default and active session afterwards. */
+  def withFreshSession[T](wire: SparkSession.Builder => SparkSession.Builder = identity)
+      (body: SparkSession => T): T = {
+    val base = session // materialize the shared SparkContext
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val fresh = wire(configure(SparkSession.builder())).getOrCreate()
+      assert(fresh ne base, "must be a fresh session, not the shared fixture")
+      body(fresh)
+    } finally {
+      RunScope.releaseAll(blocking = true)
+      SparkSession.setDefaultSession(base)
+      SparkSession.setActiveSession(base)
+    }
+  }
 
   // One session per JVM (forked test run) — specs share it.
   lazy val session: SparkSession = {

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{GraftFunctions, SparkSpec, Tables}
 
 /** Expression-level contract of the native `argmax_cell` kernel (the
   * Lloyd/IVF/semantic-dedup assignment primitive — the heavy parity
@@ -11,6 +11,8 @@ import graft.{SparkSpec, Tables}
   * plan-size independence from K). */
 class ArgmaxCellSpec extends SparkSpec {
 
+  override def beforeAll(): Unit = GraftFunctions.registerAll(spark)
+
   private def model(k: Int): (Seq[Long], Seq[Seq[Double]]) = (
     (0 until k).map(_.toLong).toSeq,
     (0 until k).map(i => (0 until 64).map(d =>
@@ -18,7 +20,6 @@ class ArgmaxCellSpec extends SparkSpec {
 
   test("assigns over float and double inputs identically; null ed yields NULL") {
     import spark.implicits._
-    ArgmaxCell.register(spark)
     val (ids, cents) = model(16)
     val e = Tables.embeddings(spark, sfDir).limit(50)
       .select(col("vec_id"), col("embedding").as("ef"))
@@ -43,7 +44,6 @@ class ArgmaxCellSpec extends SparkSpec {
 
   test("unsorted model ids still tie-break to the LOWEST id (internal sort)") {
     import spark.implicits._
-    ArgmaxCell.register(spark)
     val base = (0 until 64).map(d => math.cos(0.11 * d))
     // ids deliberately passed high-id-first; both centroids are the same
     // direction, so every non-degenerate vector ties at 6dp
@@ -58,7 +58,6 @@ class ArgmaxCellSpec extends SparkSpec {
 
   test("plan size is O(1) in K: the K=4096 model rides one literal pair") {
     import spark.implicits._
-    ArgmaxCell.register(spark)
     val (ids, cents) = model(4096)
     val df = Seq((1L, (0 until 64).map(d => math.sin(0.3 * d)).toSeq))
       .toDF("vec_id", "ed")
@@ -83,7 +82,6 @@ class ArgmaxCellSpec extends SparkSpec {
 
   test("degenerate rows fall to the lowest cent_id (chain fall-through semantics)") {
     import spark.implicits._
-    ArgmaxCell.register(spark)
     val ids = Seq(7L, 4L)
     val cents = Seq(
       (0 until 64).map(d => math.sin(0.2 * d)).toSeq,

@@ -3,12 +3,13 @@ package graft.functions
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.SparkSpec
+import graft.{GraftFunctions, SparkSpec}
 
 class CharEntropySpec extends SparkSpec {
 
+  override def beforeAll(): Unit = GraftFunctions.registerAll(spark)
+
   test("char_entropy matches closed-form values on known alphabets") {
-    CharEntropy.register(spark)
     import spark.implicits._
     val got = Seq(
       "aaaa",      // single symbol -> 0 bits
@@ -27,7 +28,6 @@ class CharEntropySpec extends SparkSpec {
   }
 
   test("kernel, codegen plan, and supplementary code points agree") {
-    CharEntropy.register(spark)
     import spark.implicits._
     // U+1D400 is outside the BMP: two UTF-16 chars, ONE code point —
     // "𝐀a" must count 2 symbols, not 3.

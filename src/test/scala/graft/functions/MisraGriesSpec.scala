@@ -2,9 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{GraftFunctions, SparkSpec}
 
 class MisraGriesSpec extends SparkSpec {
+
+  override def beforeAll(): Unit = GraftFunctions.registerAll(spark)
 
   /** Zipf-ish synthetic stream: term i appears ~N/i times — real skew, so
     * small-k sketches genuinely decrement and merges genuinely truncate. */
@@ -13,7 +15,6 @@ class MisraGriesSpec extends SparkSpec {
 
   private def sketch(xs: Seq[String], k: Int, parts: Int): Map[String, Long] = {
     import spark.implicits._
-    MisraGries.register(spark)
     xs.toDF("term").repartition(parts)
       .agg(expr(s"misra_gries(term, $k)").as("m"))
       .head().getMap[String, Long](0).toMap
@@ -48,7 +49,6 @@ class MisraGriesSpec extends SparkSpec {
 
   test("null terms are ignored, not counted") {
     import spark.implicits._
-    MisraGries.register(spark)
     val mg = Seq(Some("a"), None, Some("a"), None)
       .toDF("term")
       .agg(expr("misra_gries(term, 4)").as("m"))
@@ -60,7 +60,6 @@ class MisraGriesSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    MisraGries.register(spark)
     val src = MemoryStream[String]
     val q = src.toDF().toDF("term")
       .groupBy().agg(expr("misra_gries(term, 4)").as("m"))

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{GraftFunctions, SparkSpec}
 
 /** Pins the r22 §12 native `ordered_pairs` against the interpreted
   * higher-order formulation it replaced — pair for pair, in order,
@@ -13,6 +13,8 @@ import graft.SparkSpec
   * Those entries are hash-pinned, so any divergence is an oracle
   * break. */
 class OrderedPairsSpec extends SparkSpec {
+
+  override def beforeAll(): Unit = GraftFunctions.registerAll(spark)
 
   /** The pre-r22 HOF formulation, verbatim (Dedup.scala shape; the
     * Behavior/source sites used the end-clamped `slice(xs, i + 2,
@@ -28,7 +30,6 @@ class OrderedPairsSpec extends SparkSpec {
       |            b -> named_struct('a', a, 'b', b))))""".stripMargin
 
   private def assertSame(df: DataFrame, what: String): Unit = {
-    OrderedPairs.register(spark)
     for (ref <- Seq(hof, hofClamped)) {
       val bad = df.select(expr("ordered_pairs(xs)").as("fast"),
           expr(ref).as("ref"))
@@ -70,7 +71,6 @@ class OrderedPairsSpec extends SparkSpec {
     assertSame(df, "struct arrays")
     // order is part of the contract: explode feeds an aggregate today,
     // but the kernel must not silently reorder
-    OrderedPairs.register(spark)
     val got = df.select(expr("ordered_pairs(xs)").as("p")).collect()
     val want = df.select(expr(hof).as("p")).collect()
     assert(got.toSeq == want.toSeq, "pair order differs from the HOF form")
@@ -78,7 +78,6 @@ class OrderedPairsSpec extends SparkSpec {
 
   test("schema equals the HOF form's (names, types, nullability)") {
     import spark.implicits._
-    OrderedPairs.register(spark)
     val df = Seq(Seq(1L, 2L)).toDF("xs")
     val fast = df.select(expr("ordered_pairs(xs)").as("p")).schema
     val ref = df.select(expr(hof).as("p")).schema
@@ -92,7 +91,6 @@ class OrderedPairsSpec extends SparkSpec {
     val sh = graft.llm.Dedup.shinglesOf(
       graft.Tables.spread(graft.Tables.documents(spark, dir)))
       .select("doc_id", "shingles")
-    CappedStructList.register(spark)
     val maxDf = graft.llm.Dedup.DefaultMaxShingleDf
     val postings = sh.select(col("doc_id"), size(col("shingles")).as("n"),
         explode(expr("transform(shingles, s -> xxhash64(s))")).as("s"))

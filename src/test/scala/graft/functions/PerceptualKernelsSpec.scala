@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{GraftFunctions, SparkSpec}
 
 /** Pins the r22 §11 native perceptual kernels — `hex_words`,
   * `dhash_bits`, `moving_energy` — against the interpreted
@@ -14,11 +14,7 @@ import graft.SparkSpec
   * are hash-pinned, so any divergence is an oracle break. */
 class PerceptualKernelsSpec extends SparkSpec {
 
-  private def registerAll(): Unit = {
-    HexWords.register(spark)
-    DhashBits.register(spark)
-    MovingEnergy.register(spark)
-  }
+  override def beforeAll(): Unit = GraftFunctions.registerAll(spark)
 
   /** The pre-r22 HOF formulations, verbatim. */
   private def hofHexWords(h: Column, width: Int, n: Int, signed: Boolean): Column =
@@ -69,7 +65,6 @@ class PerceptualKernelsSpec extends SparkSpec {
   }
 
   test("hex_words == the conv(substr) transform, both widths and signs") {
-    registerAll()
     for ((w, n, s) <- Seq((2, 32, false), (4, 64, true), (2, 5, true), (4, 3, false))) {
       // non-hex slices are the one documented divergence surface
       // (conv parses prefixes where the kernel nulls the word), so the
@@ -113,7 +108,6 @@ class PerceptualKernelsSpec extends SparkSpec {
   }
 
   test("dhash_bits == the zip_with/aggregate fold (int and long arrays)") {
-    registerAll()
     for (bits <- Seq(60, 7, 0, 62)) {
       assertSame(arrFrame,
         call_function("dhash_bits", col("arr"), lit(bits)),
@@ -125,7 +119,6 @@ class PerceptualKernelsSpec extends SparkSpec {
   }
 
   test("moving_energy == the squares/slice/zip_with chain") {
-    registerAll()
     for (frames <- Seq(61, 5, 0)) {
       assertSame(arrFrame,
         call_function("moving_energy", col("arr"), lit(4), lit(frames)),
@@ -136,7 +129,6 @@ class PerceptualKernelsSpec extends SparkSpec {
   test("batch libraries and fingerprints are bit-identical corpus-wide") {
     // frame-level: the composed kernels over the real corpus equal the
     // HOF composition (library decode -> re-encode union -> fingerprint)
-    registerAll()
     val mediaNew = graft.llm.Multimodal.mediaLibrary(spark, sfDir)
     val v = graft.Tables.spread(graft.Tables.documents(spark, sfDir))
       .withColumn("h", concat(

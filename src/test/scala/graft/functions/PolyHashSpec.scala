@@ -2,12 +2,13 @@ package graft.functions
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{GraftFunctions, SparkSpec, Tables}
 
 class PolyHashSpec extends SparkSpec {
 
+  override def beforeAll(): Unit = GraftFunctions.registerAll(spark)
+
   test("native poly_hash equals the interpreted HOF fold on the corpus") {
-    PolyHash.register(spark)
     val d = Tables.documents(spark, sfDir)
       .withColumn("norm", lower(regexp_replace(col("text"), "\\s+", " ")))
     val cmp = d.select(
@@ -21,7 +22,6 @@ class PolyHashSpec extends SparkSpec {
   }
 
   test("poly_hash known values") {
-    PolyHash.register(spark)
     import spark.implicits._
     val r = Seq("", "a", "ab").toDF("s")
       .select(expr("poly_hash(s)").as("h")).collect().map(_.getLong(0))

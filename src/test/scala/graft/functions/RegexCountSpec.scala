@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{GraftFunctions, SparkSpec}
 
 /** Pins `regex_count` — the counting-only replacement for
   * `size(regexp_extract_all(s, re, 0))` (r22 §10) — against the original
@@ -13,6 +13,8 @@ import graft.SparkSpec
   * n_tokens into hash-pinned outputs (quality score, token budgets,
   * sequence packing), so any divergence here is an oracle break. */
 class RegexCountSpec extends SparkSpec {
+
+  override def beforeAll(): Unit = GraftFunctions.registerAll(spark)
 
   /** Every literal pattern a converted call site passes. */
   private val UsedPatterns = Seq(
@@ -50,10 +52,9 @@ class RegexCountSpec extends SparkSpec {
     graft.Tables.documents(spark, sfDir).select(col("text").as("s"))
 
   test("regex_count == size(regexp_extract_all) for every used pattern") {
-    RegexCount.register(spark)
     for (df <- Seq(strFrame(Adversarial), corpusTexts); re <- UsedPatterns) {
       val bad = df.select(
-          graft.llm.TextAnalysis.regexCount(col("s"), re).as("fast"),
+          RegexCount.of(col("s"), re).as("fast"),
           size(regexp_extract_all(col("s"), lit(re), lit(0))).as("ref"))
         .filter(!(col("fast") <=> col("ref")))
       assert(bad.isEmpty, s"pattern $re diverges: ${bad.head(3).toSeq}")
@@ -61,7 +62,6 @@ class RegexCountSpec extends SparkSpec {
   }
 
   test("wsTokenCount == size(split(trim(s), \\s+)) — the +1 split identity") {
-    RegexCount.register(spark)
     for (df <- Seq(strFrame(Adversarial), corpusTexts)) {
       val bad = df.select(
           graft.llm.TextAnalysis.wsTokenCount(col("s")).as("fast"),
@@ -72,10 +72,9 @@ class RegexCountSpec extends SparkSpec {
   }
 
   test("length - regex_count(\\s) == length(regexp_replace(s, \\s+, ''))") {
-    RegexCount.register(spark)
     for (df <- Seq(strFrame(Adversarial), corpusTexts)) {
       val bad = df.select(
-          (length(col("s")) - graft.llm.TextAnalysis.regexCount(col("s"), "\\s"))
+          (length(col("s")) - RegexCount.of(col("s"), "\\s"))
             .as("fast"),
           length(regexp_replace(col("s"), "\\s+", "")).as("ref"))
         .filter(!(col("fast") <=> col("ref")))
@@ -84,12 +83,11 @@ class RegexCountSpec extends SparkSpec {
   }
 
   test("zero-width-capable and non-foldable patterns keep extract_all parity") {
-    RegexCount.register(spark)
     import spark.implicits._
     // "a*" can match empty at every position — parity must hold because
     // both sides run the identical Matcher.find() advancement loop
     val zw = strFrame(Adversarial).select(
-        graft.llm.TextAnalysis.regexCount(col("s"), "a*").as("fast"),
+        RegexCount.of(col("s"), "a*").as("fast"),
         size(regexp_extract_all(col("s"), lit("a*"), lit(0))).as("ref"))
       .filter(!(col("fast") <=> col("ref")))
     assert(zw.isEmpty, s"zero-width diverges: ${zw.head(3).toSeq}")

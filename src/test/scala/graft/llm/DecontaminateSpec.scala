@@ -115,22 +115,20 @@ class DecontaminateSpec extends SparkSpec {
         explode(expr("transform(shingles, s -> xxhash64(s))")).as("s"))
       .filter(col("split") =!= "test")
     val total = postings.count()
-    // build a fresh gate over the same bench set (the entry's own names
-    // are per-invocation and dropped before it returns — r20 de-race)
+    // build a fresh gate over the same bench set
     val bench = Sampling.hashSplitFrom(
         Dedup.shinglesOf(Tables.documents(spark, sfDir)), col("doc_id"))
       .select(col("split"),
         explode(expr("transform(shingles, s -> xxhash64(s))")).as("s"))
       .filter(col("split") === "test").select("s").distinct()
-    val admitted = Decontaminate.withBloomGate(spark, bench) { gate =>
-      postings.filter(gate(col("s"))).count()
-    }
+    val registry = spark.sessionState.functionRegistry
+    val before = registry.listFunction().toSet
+    val admitted = postings.filter(Decontaminate.bloomGate(bench)(col("s"))).count()
     assert(admitted < total / 2,
       s"gate admitted $admitted of $total postings — not pruning")
-    // the registry is left clean: every graft_bloom_* name was dropped
-    val leaked = spark.sessionState.functionRegistry.listFunction()
-      .map(_.funcName).filter(_.startsWith("graft_bloom"))
-    assert(leaked.isEmpty, s"bloom function names leaked: $leaked")
+    // the gate never writes the session's function registry
+    assert(registry.listFunction().toSet == before,
+      s"bloom gate changed the registry: ${registry.listFunction().toSet -- before}")
   }
 
   test("interleaved bloom gates on one session stay independent (per-call names)") {
@@ -138,17 +136,13 @@ class DecontaminateSpec extends SparkSpec {
     val setA = (1L to 50L).toDF("s")
     val setB = (1000L to 1050L).toDF("s")
     val probe = ((1L to 50L) ++ (1000L to 1050L)).toDF("s")
-    // both gates live at once, and A's gate COLUMN is materialized only
-    // after B's registration — under the pre-r20 shared names, B's
-    // createOrReplaceTempFunction would have rebound A's gate to B's
-    // filter bytes before A resolved
-    val (hitsA, hitsB) = Decontaminate.withBloomGate(spark, setA) { gateA =>
-      val colA = gateA(col("s")) // unresolved until the filter below
-      Decontaminate.withBloomGate(spark, setB) { gateB =>
-        (probe.filter(colA).collect().map(_.getLong(0)).toSet,
-          probe.filter(gateB(col("s"))).collect().map(_.getLong(0)).toSet)
-      }
-    }
+    // both gates live at once, and A's gate COLUMN is resolved only
+    // after B's filter is built — a gate bound through a shared
+    // session-registry name would have been rebound to B's filter bytes
+    val colA = Decontaminate.bloomGate(setA)(col("s")) // unresolved until the filter below
+    val gateB = Decontaminate.bloomGate(setB)
+    val hitsA = probe.filter(colA).collect().map(_.getLong(0)).toSet
+    val hitsB = probe.filter(gateB(col("s"))).collect().map(_.getLong(0)).toSet
     // no false negatives: each gate admits its whole own set
     assert((1L to 50L).forall(hitsA), "gate A lost members of its own set")
     assert((1000L to 1050L).forall(hitsB), "gate B lost members of its own set")

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
+import graft.functions.{MinHashSig, SimHashWord}
 
 class DedupSpec extends SparkSpec {
 
@@ -44,10 +45,9 @@ class DedupSpec extends SparkSpec {
   test("native word-1 fingerprint matches the exploded vote aggregate, corpus-wide") {
     // word 0 is pinned in DocStreamSpec; this covers the wide kernel's
     // second md5 word through the same independent groupBy formulation.
-    graft.functions.SimHashWord.register(spark)
     val sh = Dedup.shinglesOf(Tables.documents(spark, sfDir)).cache()
     val native = sh.select(col("doc_id"),
-      expr("simhash_word(shingles, 1)").as("simhash"))
+      SimHashWord.of(col("shingles"), 1).as("simhash"))
     val voteAgg = Dedup.simhashFingerprintsVoteAgg(sh, word = 1)
     assert(native.count() == voteAgg.count())
     assert(native.except(voteAgg).isEmpty && voteAgg.except(native).isEmpty,
@@ -55,10 +55,9 @@ class DedupSpec extends SparkSpec {
   }
 
   test("native minhash signature matches the exploded 64-buffer min aggregate, corpus-wide") {
-    graft.functions.MinHashSig.register(spark)
     val sh = Dedup.shinglesOf(Tables.documents(spark, sfDir)).cache()
     val native = sh.select(col("doc_id"),
-      expr("minhash_sig(shingles, 64)").as("sig"))
+      MinHashSig.of(col("shingles"), 64).as("sig"))
     val exploded = Dedup.minhashSigExploded(sh)
     assert(native.count() == exploded.count())
     assert(native.except(exploded).isEmpty && exploded.except(native).isEmpty,

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.{CosineSimilarity, DotProduct}
 
 /** Manual in-JVM alternated A/B for the r22 slim LSH band join; not run
   * by the test suite.
@@ -25,8 +24,7 @@ object LshAbProfile {
       .config("spark.sql.codegen.maxFields", "256")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    CosineSimilarity.register(spark)
-    DotProduct.register(spark)
+    graft.GraftFunctions.registerAll(spark)
     def noop(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     def measure(label: String)(f: => Unit): Double = {

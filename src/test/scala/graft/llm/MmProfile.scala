@@ -24,9 +24,7 @@ object MmProfile {
       .config("spark.sql.codegen.maxFields", "256")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.HexWords.register(spark)
-    graft.functions.DhashBits.register(spark)
-    graft.functions.MovingEnergy.register(spark)
+    graft.GraftFunctions.registerAll(spark)
     def noop(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     def measure(label: String)(f: => Unit): Double = {

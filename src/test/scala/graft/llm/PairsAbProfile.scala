@@ -94,7 +94,7 @@ object PairsAbProfile {
     }
 
     def oldJaccard(sh: DataFrame, maxDf: Int): DataFrame = {
-      graft.functions.CappedStructList.register(sh.sparkSession)
+      graft.GraftFunctions.registerAll(sh.sparkSession)
       val ex = sh.select(col("doc_id"), size(col("shingles")).as("n"),
           explode(expr("transform(shingles, s -> xxhash64(s))")).as("s"))
       val postings = ex

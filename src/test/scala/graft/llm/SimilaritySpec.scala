@@ -3,13 +3,13 @@ package graft.llm
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
-import graft.functions.CosineSimilarity
+import graft.{GraftFunctions, SparkSpec, Tables}
 
 class SimilaritySpec extends SparkSpec {
 
+  override def beforeAll(): Unit = GraftFunctions.registerAll(spark)
+
   test("native CosineSimilarity equals the HOF formulation bit-for-bit") {
-    CosineSimilarity.register(spark)
     val e = Tables.embeddings(spark, sfDir).limit(50)
     val a = e.select(col("vec_id").as("qa"), col("embedding").as("ea"))
     val b = e.select(col("vec_id").as("qb"), col("embedding").as("eb"))
@@ -28,7 +28,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("cosine: mismatched lengths yield NULL, matching DotProduct and the zip_with fold") {
     import spark.implicits._
-    CosineSimilarity.register(spark)
     val df = Seq(
       (1L, Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0)), // longer left
       (2L, Seq(1.0), Seq(4.0, 5.0)), // longer right
@@ -41,7 +40,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("double and mixed float/double inputs equal the HOF formulation bit-for-bit") {
-    CosineSimilarity.register(spark)
     val e = Tables.embeddings(spark, sfDir).limit(30)
     val a = e.select(col("vec_id").as("qa"), col("embedding").as("fa"),
       col("embedding").cast("array<double>").as("da"))
@@ -65,7 +63,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("a null array element yields NULL similarity (eval + codegen paths)") {
-    CosineSimilarity.register(spark)
     import spark.implicits._
     val df = Seq(
       (1L, Seq[Option[Double]](Some(1.0), None, Some(2.0)), Seq[Option[Double]](Some(1.0), Some(1.0), Some(1.0))),
@@ -78,7 +75,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("cosine of a vector with itself is 1") {
-    CosineSimilarity.register(spark)
     val e = Tables.embeddings(spark, sfDir).limit(20)
     val selfSim = e.select(expr("cosine_similarity(embedding, embedding)").as("s"))
     assert(selfSim.filter(abs(col("s") - 1.0) > 1e-12).isEmpty)
@@ -141,7 +137,6 @@ class SimilaritySpec extends SparkSpec {
     // what the driver verifies against) so a testdata regeneration that
     // introduces a genuine near-dup fails loudly here instead of
     // intermittently (~0.25% per pair) at the oracle compare.
-    CosineSimilarity.register(spark)
     val e = spark.read.parquet(s"${graft.SparkSpec.gateDir}/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     val maxCos = e.as("a").crossJoin(e.as("b"))
@@ -154,7 +149,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("IVF: k-means training moves centroids off their first-K seeds") {
-    CosineSimilarity.register(spark)
     val e = Tables.embeddings(spark, sfDir)
       .withColumn("ed", col("embedding").cast("array<double>"))
       .select("vec_id", "ed")
@@ -195,7 +189,6 @@ class SimilaritySpec extends SparkSpec {
     // signal above probed mass. Everything here is deterministic (fixed
     // corpus, seeded k-means, hash-free probe choice), so the comparison
     // is exact, not flaky. 50 queries × 3 = 150 truth pairs.
-    CosineSimilarity.register(spark)
     val (qLo, qHi) = (100L, 150L)
     val e = Tables.embeddings(spark, sfDir)
       .withColumn("ed", col("embedding").cast("array<double>"))
@@ -261,7 +254,6 @@ class SimilaritySpec extends SparkSpec {
     // must recover them. Ids interleave clusters (vec_id = i*8 + c) so
     // the first-K training seeds land one per cluster.
     import spark.implicits._
-    CosineSimilarity.register(spark)
     val vecs = for (c <- 0 until 8; i <- 0 until 10) yield {
       val id = i.toLong * 8 + c
       val ed = (0 until 64).map { d =>
@@ -345,7 +337,6 @@ class SimilaritySpec extends SparkSpec {
     // can miss its cell, or the code distance can misrank it — the
     // fixture pins that NEITHER does on separable structure
     import spark.implicits._
-    CosineSimilarity.register(spark)
     val vecs = for (c <- 0 until 8; i <- 0 until 10) yield {
       val id = i.toLong * 8 + c
       val ed = (0 until 64).map { d =>
@@ -373,7 +364,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("int8 quantization: reconstruction error under one step, top-k preserved") {
-    CosineSimilarity.register(spark)
     val e = Tables.embeddings(spark, sfDir)
       .withColumn("ed", col("embedding").cast("array<double>"))
     val mn = array_min(col("ed"))
@@ -636,7 +626,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("semantic dedup finds within-cell pairs and misses the planted cross-cell pair") {
-    CosineSimilarity.register(spark)
     val e = semanticFixture
     val assign = Similarity.semanticAssignWith(e, Similarity.trainCentroidsK(e, Similarity.IvfK)
       .select(col("cent_id"), col("ced")))

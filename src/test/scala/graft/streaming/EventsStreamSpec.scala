@@ -684,10 +684,9 @@ class EventsStreamSpec extends SparkSpec {
         .select("event_type", "min_count").collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       // batch twin: the same expression over the same rows
-      graft.functions.MisraGries.register(spark)
       val want = rows.toDF("ts", "event_type", "value")
         .filter(col("ts") < ts("2024-01-01 11:00:00"))
-        .agg(expr("misra_gries(event_type, 2)")).head()
+        .agg(graft.functions.MisraGries.of(col("event_type"), 2)).head()
         .getMap[String, Long](0)
       assert(got == want.toMap, s"got $got want $want")
       // Misra-Gries guarantee at k=2 over 6 rows: true count − n/(k+1) ≤ est
