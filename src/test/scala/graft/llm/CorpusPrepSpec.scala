@@ -6,7 +6,9 @@ import graft.{SparkSpec, Tables}
 
 class CorpusPrepSpec extends SparkSpec {
 
-  private lazy val selected = CorpusPrep.corpusPrep(spark, sfDir).cache()
+  // checkpointed, not cached: SparkSpec clears the cache after every
+  // test, and every test below reads this one funnel result
+  private lazy val selected = CorpusPrep.corpusPrep(spark, sfDir).localCheckpoint()
 
   test("every selected document clears the quality gate") {
     val under = selected.filter(col("quality_score") < TextAnalysis.LowQuality)
