@@ -3,9 +3,13 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, spark_partition_id, sum}
+import org.apache.spark.sql.types.{LongType, StructType}
+
+import graft.RunScope.ScratchCacheOps
 
 /** Parquet corpus loaders (TESTDATA.md). One call = one lazy scan and no
   * Spark job: the schema comes from one parquet footer read on the driver
@@ -122,5 +126,65 @@ object Tables {
     * pattern). */
   implicit class SizedSpreadOps(private val df: DataFrame) extends AnyVal {
     def sizedSpread(): DataFrame = Tables.sizedSpread(df)
+  }
+
+  /** Two-phase distributed global running sum of the LONG `value` under
+    * the total order `sortCols` (which must be tie-free), added as
+    * `outCol` = the inclusive running sum. With `value = lit(1L)` it IS
+    * `row_number()` under that order: the one ordinal kernel, behind the
+    * surrogate keys and SCD id stamps (category_dim, company_dim,
+    * scd2_resolution, scd3_issue), the rank statistics (gini_spend,
+    * customer_percentiles, mann_whitney_value, spearman_value_hour) and
+    * the token running totals (token_budget_select, pack_sequences,
+    * corpus_prep_pipeline).
+    *
+    *  1. range-partition on the order and sort within partitions (the one
+    *     data-sized exchange, at any scale; no single-task window);
+    *  2. per-partition local running sums, a partition-local fold;
+    *  3. each partition's offset = prefix sum of the per-partition totals,
+    *     a window over ≤ #partitions rows (config-bounded, not
+    *     data-bounded), broadcast-joined back.
+    *
+    * The ranged frame is cached because both consumers (local sums,
+    * partition totals) must see the identical partition placement; rows
+    * in a cached partition keep their `sortWithinPartitions` order, so the
+    * fold visits them in the window's frame order and integer addition is
+    * exact. The local sums are a `mapPartitions` fold, not a
+    * `Window.partitionBy(_pid)`: Catalyst cannot know the cache's layout
+    * already clusters by `_pid`, so the window form re-shuffled the whole
+    * frame a second time. Nulls follow sum-over-longs (NULL until the
+    * first non-null value, skipped after; SamplingSpec pins the kernel
+    * against a single-window reference), so `outCol` is nullable exactly
+    * when `value` is. Building the result starts no Spark job. */
+  private[graft] def globalRunningSum(d: DataFrame, sortCols: Seq[Column],
+      value: Column, outCol: String): DataFrame = {
+    val n = d.sparkSession.sessionState.conf.numShufflePartitions
+    val ranged = d.repartitionByRange(n, sortCols: _*)
+      .sortWithinPartitions(sortCols: _*)
+      .withColumn("_pid", spark_partition_id())
+      .withColumn("_v", value)
+      .scratchCache()
+    val v = ranged.schema("_v")
+    require(v.dataType == LongType,
+      s"globalRunningSum expects a LONG value column, got ${v.dataType.simpleString}")
+    val outSchema = ranged.schema.add("_lcum", LongType, nullable = v.nullable)
+    val vIdx = ranged.schema.fieldIndex("_v")
+    val local = ranged.mapPartitions { it =>
+      var acc = 0L
+      var seen = false
+      it.map { r =>
+        if (!r.isNullAt(vIdx)) { acc += r.getLong(vIdx); seen = true }
+        Row.fromSeq(r.toSeq :+ (if (seen) java.lang.Long.valueOf(acc) else null))
+      }
+    }(Encoders.row(outSchema))
+    val offsets = ranged.groupBy("_pid")
+      .agg(sum(col("_v")).as("_ptot"))
+      .withColumn("_off", coalesce(
+        sum(col("_ptot")).over(Window.orderBy(col("_pid"))
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .select("_pid", "_off")
+    local.join(broadcast(offsets), Seq("_pid"))
+      .withColumn(outCol, col("_off") + col("_lcum"))
+      .drop("_pid", "_v", "_lcum", "_off")
   }
 }

@@ -136,7 +136,7 @@ object Stats {
     *
     * Scale shape: spend aggregates per customer first (one keyed sum of
     * mergeable decimal partials — the fact-side cost), then the global
-    * rank comes from [[graft.llm.Sampling.globalRunningSum]] with
+    * rank comes from [[Tables.globalRunningSum]] with
     * value = 1 — the two-phase `_pid` prefix-sum kernel (range-partition,
     * parallel local row counts, #partition-row offset window broadcast
     * back): `row_number()` under the total order with NO single-task
@@ -149,7 +149,7 @@ object Stats {
     val spend = Tables.orders(spark, dir)
       .groupBy(col("o_custkey").as("custkey"))
       .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("spend"))
-    val ranked = graft.llm.Sampling.globalRunningSum(spark, spend,
+    val ranked = Tables.globalRunningSum(spend,
       Seq(col("spend").asc, col("custkey").asc), lit(1L), "i")
     ranked.agg(count(lit(1)).as("n"),
         sum(col("spend")).as("tot"),
@@ -446,7 +446,7 @@ object Stats {
   /** Per-customer spend percentile report — percent_rank, cume_dist and
     * the ntile quartile over total customer spend, WITHOUT the global
     * single-partition window those functions normally plan: the total
-    * order comes from [[graft.llm.Sampling.globalRunningSum]] with
+    * order comes from [[Tables.globalRunningSum]] with
     * value = 1 (the two-phase `_pid` prefix-sum kernel, the `gini_spend`
     * pattern — no single-task window at any scale; r16 whitelist
     * retirement), and the three statistics are closed forms over that
@@ -471,7 +471,7 @@ object Stats {
     val spend = Tables.orders(spark, dir)
       .groupBy(col("o_custkey").as("custkey"))
       .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("spend"))
-    val ranked = graft.llm.Sampling.globalRunningSum(spark, spend,
+    val ranked = Tables.globalRunningSum(spend,
       Seq(col("spend").asc, col("custkey").asc), lit(1L), "i")
     val tot = ranked.agg(count(lit(1)).as("n"))
     val peers = Window.partitionBy(col("spend"))
@@ -704,7 +704,7 @@ object Stats {
     // midrank of every row at value v: rows-before + (cv + 1)/2, the
     // prefix over the distinct-value frame from the two-phase `_pid`
     // kernel (r16 whitelist retirement — was a global window)
-    val ranked = graft.llm.Sampling.globalRunningSum(spark, byValue,
+    val ranked = Tables.globalRunningSum(byValue,
         Seq(col("v")), col("cv"), "cum_cv")
       .withColumn("before", col("cum_cv") - col("cv"))
       .withColumn("midrank",
@@ -800,7 +800,7 @@ object Stats {
     // per-variable midranks over the distinct-value frame via the
     // two-phase `_pid` prefix sum (r16 whitelist retirement)
     def midranks(df: DataFrame, c: String): DataFrame =
-      graft.llm.Sampling.globalRunningSum(spark,
+      Tables.globalRunningSum(
           df.groupBy(c).agg(count(lit(1)).as("cv")),
           Seq(col(c)), col("cv"), "cum_cv")
         .select(col(c),

@@ -53,7 +53,7 @@ import graft.RunScope.ScratchCacheOps
   *     survivors.
   *  5. Budget: fill [[PrepTokenBudget]] tokens in (quality_score DESC,
   *     doc_id) order — best documents first, deterministic tie-break —
-  *     via [[Sampling.globalRunningSum]]'s two-phase prefix sum.
+  *     via [[Tables.globalRunningSum]]'s two-phase prefix sum.
   *
   * Scale shape: the gate join is a co-partitioned equi-join on the
   * primary key; exact-dedup is one hash aggregate on md5(text);
@@ -145,8 +145,8 @@ object CorpusPrep {
       .select("doc_id", "split", "n_tokens", "quality_score")
       .scratchCache()
     // stage 5: quality-first token-budget fill
-    val picked = Sampling.globalRunningSum(spark, clean,
-        Seq(col("quality_score").desc, col("doc_id")), col("n_tokens"))
+    val picked = Tables.globalRunningSum(clean,
+        Seq(col("quality_score").desc, col("doc_id")), col("n_tokens"), "cum_tokens")
       .filter(col("cum_tokens") - col("n_tokens") < PrepTokenBudget)
       .select("doc_id", "split", "n_tokens", "quality_score", "cum_tokens")
     Stages(docs, gated, exact, nd, clean, picked)

@@ -54,12 +54,6 @@ object QualityLr {
   private[llm] val Rounds = 16
   private[llm] val Lr = 8.0
 
-  /** Target bytes per cached-feature partition for the GD loop — the
-    * advisory-partition-size class of constant (not a core count): one
-    * partition per 64 MB of estimated feature bytes, capped at
-    * `defaultParallelism`. See [[trainWeightsFrom]]. */
-  private val GdPartitionBytes = 64L << 20
-
   private val FeatNames = Seq("bias", "len_term", "stop_term", "punct_term")
 
   /** Per-document training frame: the three clamped quality terms
@@ -96,28 +90,17 @@ object QualityLr {
     * sequence — no driver-side float math beyond reading the 4 doubles
     * back per round).
     *
-    * The cached frame is repartitioned to a SIZE-DERIVED partition count
-    * before caching (r21, guide §2: derive partitioning from input size,
-    * not a core-count constant): a feature row is 5 numerics (~40 B), so
-    * at bench scale the whole frame is a few hundred KB and the [[Rounds]]
-    * sequential one-row aggregate jobs would otherwise each schedule
-    * `defaultParallelism` near-empty tasks over the cached partitions —
-    * pure scheduler overhead paid 16×. The repartition is a SHUFFLE
-    * (round-robin), so the regex-heavy feature extraction upstream keeps
-    * its full scan parallelism; only the cached layout narrows. At real
-    * scale the plan-stats estimate exceeds `GdPartitionBytes ×
-    * defaultParallelism` and this is the identity — nothing is tuned to
-    * local[32]. Results are invariant either way: every per-round
-    * aggregate is an exact decimal sum (combination-order-proof). */
+    * The cached frame is [[Tables.sizedSpread]] before caching: a feature
+    * row is 5 numerics (~40 B), so at bench scale the whole frame is a few
+    * hundred KB and the [[Rounds]] sequential one-row aggregate jobs
+    * would otherwise each schedule `defaultParallelism` near-empty tasks
+    * over the cached partitions — pure scheduler overhead paid 16×. The
+    * repartition is a shuffle, so the regex-heavy feature extraction
+    * upstream keeps its full scan parallelism. Results are invariant to
+    * the partition count: every per-round aggregate is an exact decimal
+    * sum (combination-order-proof). */
   private[graft] def trainWeightsFrom(feats0: DataFrame): IndexedSeq[Double] = {
-    val sized = {
-      val bytes = feats0.queryExecution.optimizedPlan.stats.sizeInBytes
-      val cap = feats0.sparkSession.sparkContext.defaultParallelism
-      val p = ((bytes + GdPartitionBytes - 1) / GdPartitionBytes)
-        .min(BigInt(cap)).max(BigInt(1)).toInt
-      if (p < cap) feats0.repartition(p) else feats0
-    }
-    val feats = sized.scratchCache() // Rounds aggregated passes
+    val feats = Tables.sizedSpread(feats0).scratchCache() // Rounds aggregated passes
     var w = IndexedSeq(0d, 0d, 0d, 0d)
     for (_ <- 1 to Rounds) {
       val z = lit(w(0)) + lit(w(1)) * col("f1") +

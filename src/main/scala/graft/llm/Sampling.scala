@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.RunScope.ScratchCacheOps
 
 /** Corpus-selection operators for training-data preparation (beyond-
   * reference surface): deterministic stratified sampling (data-mixing
@@ -75,23 +74,17 @@ object Sampling {
     *
     * The running sum is a GLOBAL prefix sum, which must not funnel the
     * corpus through one partition (document metadata scales with the
-    * corpus — at 10¹¹ docs a single-partition window is terabytes). Same
-    * two-phase shape as `Dims.surrogateKeysScalable`, expressed fully in
-    * dataflow: range-partition on the total ordering, per-partition local
-    * running sums in parallel, then each partition's offset = prefix sum
-    * of the per-partition totals (a window over #partitions rows, bounded
-    * by config not data) broadcast-joined back. The ranged frame is
-    * cached because BOTH consumers (local sums, partition totals) must
-    * see the identical partition placement. Results are invariant to the
-    * partition count — the ordering is total ((n_chars, doc_id) has no
-    * ties) — pinned by SamplingSpec. */
+    * corpus — at 10¹¹ docs a single-partition window is terabytes), so it
+    * runs on the two-phase [[Tables.globalRunningSum]]. Results are
+    * invariant to the partition count — the ordering is total
+    * ((n_chars, doc_id) has no ties) — pinned by SamplingSpec. */
   def tokenBudgetSelect(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
         TextAnalysis.wsTokenCount(col("text")).cast("long").as("n_tokens"),
         col("n_chars"))
-    globalRunningSum(spark, d, Seq(col("n_chars").desc, col("doc_id")),
-        col("n_tokens"))
+    Tables.globalRunningSum(d, Seq(col("n_chars").desc, col("doc_id")),
+        col("n_tokens"), "cum_tokens")
       .filter(col("cum_tokens") - col("n_tokens") < TokenBudget)
       .select("doc_id", "lang", "n_tokens", "cum_tokens")
       .orderBy("cum_tokens")
@@ -156,7 +149,8 @@ object Sampling {
     val d = Tables.documents(spark, dir)
       .select(col("doc_id"),
         TextAnalysis.wsTokenCount(col("text")).cast("long").as("n_tokens"))
-    val cum = globalRunningSum(spark, d, Seq(col("doc_id")), col("n_tokens"))
+    val cum = Tables.globalRunningSum(d, Seq(col("doc_id")), col("n_tokens"),
+      "cum_tokens")
     cum
       .withColumn("cum_before", col("cum_tokens") - col("n_tokens"))
       .withColumn("pack_id", (col("cum_before") / PackBudget).cast("long"))
@@ -180,74 +174,6 @@ object Sampling {
        |       cum_before // $PackBudget AS pack_id,
        |       cum_before % $PackBudget AS pack_offset
        |FROM c ORDER BY doc_id""".stripMargin
-
-  /** Two-phase distributed global running sum of `value` (LONG-typed)
-    * under the total order `sortCols` (which must be tie-free):
-    * range-partition on the order, per-partition local running sums in
-    * parallel, then each partition's offset = prefix sum of the
-    * per-partition totals (a window over ≤ #partitions rows —
-    * config-bounded, not data-bounded) broadcast-joined back. The ranged
-    * frame is cached because BOTH consumers (local sums, partition
-    * totals) must see the identical partition placement. Adds `outCol` =
-    * inclusive running sum (default `cum_tokens`, the token-budget
-    * entries' column). With `value = lit(1L)` the running sum IS
-    * `row_number()` under the total order — the rank-statistic entries
-    * (gini_spend, customer_percentiles, mann_whitney_value,
-    * spearman_value_hour) ride that instead of a single-task global
-    * window.
-    *
-    * The LOCAL sums are a partition-local `mapPartitions` fold, not a
-    * `Window.partitionBy(_pid)` (r22, VERDICT r21 #4): Catalyst cannot
-    * know that `_pid` clustering is already physically satisfied by the
-    * cache's partition layout, so the window form re-shuffled the WHOLE
-    * frame a second time — plan evidence: `Exchange
-    * hashpartitioning(_pid)` + a second Sort between the InMemoryRelation
-    * and the Window in every consumer's r21 plan (e.g.
-    * plans/r21/corpus_prep_pipeline_after.txt), both gone in r22. Rows
-    * inside a cached partition keep their `sortWithinPartitions` order,
-    * so the fold visits them in exactly the window's frame order and
-    * integer addition is exact — identical `_lcum` per row, including
-    * the sum-over-longs NULL contract (NULL until the first non-null
-    * value, nulls skipped after; SamplingSpec pins kernel equality
-    * against a single-window reference). One full-data exchange total
-    * at ANY scale; the fold is the one per-row closure this library
-    * allows itself where the alternative is a data-sized shuffle
-    * (same stance as the multimodal batched decoders). */
-  private[graft] def globalRunningSum(spark: SparkSession, d: DataFrame,
-      sortCols: Seq[Column], value: Column,
-      outCol: String = "cum_tokens"): DataFrame = {
-    val n = spark.sessionState.conf.numShufflePartitions
-    val ranged = d.repartitionByRange(n, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .withColumn("_pid", spark_partition_id())
-      .withColumn("_v", value)
-      .scratchCache()
-    require(ranged.schema("_v").dataType ==
-      org.apache.spark.sql.types.LongType,
-      s"globalRunningSum expects a LONG value column, got " +
-        ranged.schema("_v").dataType.simpleString)
-    val outSchema = ranged.schema.add("_lcum",
-      org.apache.spark.sql.types.LongType)
-    val vIdx = ranged.schema.fieldIndex("_v")
-    val local = ranged.mapPartitions { it =>
-      var acc = 0L
-      var seen = false
-      it.map { r =>
-        if (!r.isNullAt(vIdx)) { acc += r.getLong(vIdx); seen = true }
-        org.apache.spark.sql.Row.fromSeq(
-          r.toSeq :+ (if (seen) java.lang.Long.valueOf(acc) else null))
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-    val offsets = ranged.groupBy("_pid")
-      .agg(sum(col("_v")).as("_ptot"))
-      .withColumn("_off", coalesce(
-        sum(col("_ptot")).over(Window.orderBy(col("_pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("_pid", "_off")
-    local.join(broadcast(offsets), Seq("_pid"))
-      .withColumn(outCol, col("_off") + col("_lcum"))
-      .drop("_pid", "_v", "_lcum", "_off")
-  }
 
   /** Split-version salt: bumping it reshuffles every assignment (a fresh
     * split epoch) without touching code; it also namespaces this split

@@ -1,9 +1,8 @@
 package graft.warehouse
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.Tables
 
@@ -14,77 +13,21 @@ import graft.Tables
   * Key re-derivations for immutable columnar storage:
   *  - SERIAL surrogate keys → row_number() over a documented natural-key
   *    ordering (M4, deterministic and oracle-testable; SURVEY.md §5).
+  *    Dims over a bounded domain (date, year, location) use the plain
+  *    `row_number()` window; category and company ids come from
+  *    [[Tables.globalRunningSum]] with value 1, which assigns exactly
+  *    `row_number()`'s ids under a total order without a single-task
+  *    window.
   *  - ON CONFLICT DO UPDATE (key := key, a no-op) → union + dropDuplicates
   *    on the natural key (M1 — exact semantics, set-oriented).
   *  - ON CONFLICT DO NOTHING → left_anti join against existing keys, then
   *    append (M2 — "keep existing" tie-break).
   *
-  * Scale notes: dimensions are small by construction; the window for
-  * surrogate keys runs on dimension-sized data (single partition is fine).
-  * The distinct() scans over the fact-sized sources are map-side
-  * partial-aggregated by Spark's HashAggregate before the shuffle.
+  * Scale notes: the distinct() scans over the fact-sized sources are
+  * map-side partial-aggregated by Spark's HashAggregate before the
+  * shuffle.
   */
 object Dims {
-
-  /** Scalable surrogate-key assignment (M4 at 100 TB) — the
-    * per-partition-offset alternative to the single-partition
-    * `row_number()` window. The dimension builders in this file keep the
-    * window because their inputs are dimension-sized by construction; a
-    * fact-sized key assignment must not funnel through one partition,
-    * and this is that path:
-    *
-    *  1. range-partition + locally sort on the key ordering (one shuffle,
-    *     any number of partitions);
-    *  2. assign id = exclusive-prefix-sum of partition sizes + local
-    *     position, via `zipWithIndex` — a count job over partition sizes
-    *     (K longs to the driver, K = #partitions) and a map; no global
-    *     single-partition exchange anywhere.
-    *
-    * Produces EXACTLY the ids `row_number() OVER (ORDER BY ordering)`
-    * assigns, provided the ordering is total (ties may straddle a range
-    * boundary, where tie order would become partition-placement-
-    * dependent) — property-tested against the window path in DimsSpec.
-    * The RDD hop is the point: zipWithIndex's two-job
-    * count-then-stamp is the per-partition imperative step Catalyst has
-    * no operator for. */
-  def surrogateKeysScalable(df: DataFrame, idCol: String, order: Seq[Column],
-      numPartitions: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    val n = if (numPartitions > 0) numPartitions
-            else spark.sessionState.conf.numShufflePartitions
-    val ranged = df.repartitionByRange(n, order: _*).sortWithinPartitions(order: _*)
-    val schema = StructType(ranged.schema.fields :+
-      StructField(idCol, LongType, nullable = false))
-    val rows = ranged.rdd.zipWithIndex()
-      .map { case (r, i) => Row.fromSeq(r.toSeq :+ (i + 1)) }
-    spark.createDataFrame(rows, schema)
-  }
-
-  /** Inputs whose Catalyst size estimate is under this are id-stamped by a
-    * single window sort; the RDD hop only pays off above it. 64 MB: a sort
-    * that one task absorbs without spilling at default executor memory. */
-  private[warehouse] val SmallInputBytes: Long = 64L << 20
-
-  /** Adaptive surrogate-key assignment (M4): the window path and the
-    * zipWithIndex path assign IDENTICAL ids under a total ordering
-    * (property-proven in DimsSpec), but their costs cross over — the
-    * single-partition `row_number()` window is ~2× cheaper on
-    * dimension-sized input (no RDD hop, stays in whole-stage codegen),
-    * while only the per-partition-offset path survives fact-sized input.
-    * Pick by Catalyst's planning-time size estimate
-    * (`optimizedPlan.stats.sizeInBytes` — file-size-derived, free, no
-    * extra job or action): at or under [[SmallInputBytes]] take the
-    * window, above it take [[surrogateKeysScalable]]. Because both paths
-    * produce the same ids, a borderline estimate can flip the choice
-    * without ever changing the result. */
-  def surrogateKeys(df: DataFrame, idCol: String, order: Seq[Column],
-      smallInputBytes: Long = SmallInputBytes): DataFrame = {
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est <= BigInt(smallInputBytes))
-      df.withColumn(idCol,
-        row_number().over(Window.orderBy(order: _*)).cast("long"))
-    else surrogateKeysScalable(df, idCol, order)
-  }
 
   /** Date dimension via sequence generation (M3 + F1, reference
     * inserting-data.sql:38-44: generate_series 1-day + EXTRACT). */
@@ -161,12 +104,9 @@ object Dims {
   /** Category dimension: multi-column natural key upsert (M1 + F3,
     * reference inserting-data.sql:74-86 — DISTINCT 4-tuple with COALESCE,
     * ON CONFLICT DO UPDATE ≡ union + dropDuplicates on the key). Surrogate
-    * keys come from the adaptive [[surrogateKeys]]: at test scale the size
-    * estimate picks the window; a fact-sized input routes to the
-    * per-partition-offset path with the identical id contract (the other
-    * dims keep the window unconditionally, fine at dim size). The
+    * keys come from [[Tables.globalRunningSum]] with value 1; the
     * (brand, ptype, psize) ordering is total AFTER dropDuplicates on
-    * exactly those columns, which both paths' contract requires. */
+    * exactly those columns, which the kernel's id contract requires. */
   def categoryDim(spark: SparkSession, dir: String): DataFrame = {
     val part = Tables.part(spark, dir)
     val staged = part.select(
@@ -180,8 +120,8 @@ object Dims {
       col("p_size").as("psize"))
     val dedup = existing.union(staged)
       .dropDuplicates("brand", "ptype", "psize")
-    surrogateKeys(dedup, "category_id",
-      Seq(col("brand"), col("ptype"), col("psize")))
+    Tables.globalRunningSum(dedup,
+        Seq(col("brand"), col("ptype"), col("psize")), lit(1L), "category_id")
       .select("category_id", "brand", "ptype", "psize")
       .orderBy("category_id")
   }
@@ -199,7 +139,10 @@ object Dims {
 
   /** Company dimension: insert-if-absent (M2 + A7, reference
     * inserting-data.sql:61-65 + 44/57/104 ON CONFLICT DO NOTHING —
-    * left_anti join against existing keys, then append). */
+    * left_anti join against existing keys, then append). Ids come from
+    * [[Tables.globalRunningSum]] with value 1; supplier names are unique
+    * and `fresh` excludes the existing ones, so `company` is a total
+    * order. */
   def companyDim(spark: SparkSession, dir: String): DataFrame = {
     val sup = Tables.supplier(spark, dir)
     val li = Tables.lineitem(spark, dir)
@@ -210,9 +153,8 @@ object Dims {
       .join(sup, col("l_suppkey") === sup("s_suppkey"))
       .select(col("s_name").as("company")).distinct()
     val fresh = incoming.join(existing, Seq("company"), "left_anti")
-    existing.union(fresh)
-      .withColumn("company_id",
-        row_number().over(Window.orderBy(col("company"))).cast("long"))
+    Tables.globalRunningSum(existing.union(fresh), Seq(col("company")),
+        lit(1L), "company_id")
       .select("company_id", "company")
       .orderBy("company_id")
   }

@@ -19,20 +19,23 @@ object Lifecycle {
     * deterministic with ORDER BY — O3's TakeOrderedAndProject), append the
     * next 1000 rows INSERT…SELECT-style (OFFSET pagination), and read the
     * result back through the catalog. The table is dropped and rebuilt at
-    * every invocation, exercising the full create→append→scan→drop cycle. */
+    * every invocation, exercising the full create→append→scan→drop cycle.
+    * The source view lives in a child session (`newSession`: own temp
+    * views, shared catalog), so the caller's views are never touched. */
   def tableLifecycle(spark: SparkSession, dir: String): DataFrame = {
-    Tables.orders(spark, dir).createOrReplaceTempView("graft_orders_src")
+    val s = spark.newSession()
+    Tables.orders(s, dir).createOrReplaceTempView("graft_orders_src")
     // S8 drop + object-store-safe cleanup of leftover files from prior JVMs
-    graft.sources.Layout.dropManagedTable(spark, "graft_preview")
-    spark.sql(
+    graft.sources.Layout.dropManagedTable(s, "graft_preview")
+    s.sql(
       """CREATE TABLE graft_preview USING parquet AS
         |SELECT o_orderkey, o_orderstatus, o_totalprice
         |FROM graft_orders_src ORDER BY o_orderkey LIMIT 1000""".stripMargin) // S5+O3
-    spark.sql(
+    s.sql(
       """INSERT INTO graft_preview
         |SELECT o_orderkey, o_orderstatus, o_totalprice
         |FROM graft_orders_src ORDER BY o_orderkey LIMIT 1000 OFFSET 1000""".stripMargin) // S7+O2
-    spark.table("graft_preview")
+    s.table("graft_preview")
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"),
         round(sum(col("o_totalprice").cast("decimal(18,2)")), 2).cast("double").as("total_price"),
@@ -200,11 +203,14 @@ object Lifecycle {
     * dialect divergence in parsing, name resolution, decimal division or
     * HAVING semantics fails the hash compare. Plan-wise this is the same
     * Catalyst pipeline as the DataFrame API — views are lazy scans,
-    * pushdown and broadcast decisions unchanged. */
+    * pushdown and broadcast decisions unchanged. The views live in a
+    * child session (`newSession`), so a caller's own `orders`,
+    * `customer` or `nation` view is never replaced. */
   def sqlDirectQuery(spark: SparkSession, dir: String): DataFrame = {
-    Tables.orders(spark, dir).createOrReplaceTempView("orders")
-    Tables.customer(spark, dir).createOrReplaceTempView("customer")
-    Tables.nation(spark, dir).createOrReplaceTempView("nation")
-    spark.sql(SharedSql)
+    val s = spark.newSession()
+    Tables.orders(s, dir).createOrReplaceTempView("orders")
+    Tables.customer(s, dir).createOrReplaceTempView("customer")
+    Tables.nation(s, dir).createOrReplaceTempView("nation")
+    s.sql(SharedSql)
   }
 }

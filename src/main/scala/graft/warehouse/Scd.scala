@@ -169,22 +169,23 @@ object Scd {
     * post-apply. Unlike the true dimensions, this table is keyed on
     * complain_number — in the reference it grows with complaints
     * (creating-tables.sql:98-124), i.e. fact-sized at scale — so the id
-    * stamp goes through the adaptive [[Dims.surrogateKeys]] kernel: the
-    * single-partition window only on small input, the per-partition-offset
-    * zipWithIndex path above the size threshold. The (complain_number,
-    * start_date, response_to_consumer) ordering is total here — each key's
-    * versions carry distinct start_dates by construction — so both paths
-    * assign identical ids (property-pinned in ScdSpec). */
-  def scd2Resolution(spark: SparkSession, dir: String): DataFrame = {
-    val applied = scd2Apply(
-      resolutionExisting(spark, dir), resolutionIncoming(spark, dir),
-      "complain_number", AsOf)
-    Dims.surrogateKeys(applied, "resolution_id",
-        Seq(col("complain_number"), col("start_date"), col("response_to_consumer")))
+    * stamp is [[Tables.globalRunningSum]] with value 1: `row_number()`'s
+    * ids with no single-task window. The (complain_number, start_date,
+    * response_to_consumer) ordering is total here — each key's versions
+    * carry distinct start_dates by construction (pinned in ScdSpec). */
+  def scd2Resolution(spark: SparkSession, dir: String): DataFrame =
+    Tables.globalRunningSum(resolutionApplied(spark, dir),
+        Seq(col("complain_number"), col("start_date"), col("response_to_consumer")),
+        lit(1L), "resolution_id")
       .select("resolution_id", "complain_number", "public_response",
         "response_to_consumer", "start_date", "end_date", "active")
       .orderBy("resolution_id")
-  }
+
+  /** The SCD2 batch applied over the synthetic state, before id stamping:
+    * shared by [[scd2Resolution]] and [[scd2ActiveView]]. */
+  private def resolutionApplied(spark: SparkSession, dir: String): DataFrame =
+    scd2Apply(resolutionExisting(spark, dir), resolutionIncoming(spark, dir),
+      "complain_number", AsOf)
 
   /** Shared CTE chain for the scd2 oracle SQLs. */
   private val scd2CtesSql: String =
@@ -244,15 +245,14 @@ object Scd {
         .as("consumer_consent"))
 
   /** Registered SCD3 query (M7 + F5 + M4). Complaint-keyed like the SCD2
-    * table above, so the id stamp rides the adaptive [[Dims.surrogateKeys]]
-    * kernel rather than a bare global window; SCD3 keeps exactly one row
-    * per complain_number, so the single-column ordering is total and both
-    * kernel paths assign identical ids. */
+    * table above, so the id stamp is [[Tables.globalRunningSum]] with
+    * value 1 rather than a bare global window; SCD3 keeps exactly one row
+    * per complain_number, so the single-column ordering is total. */
   def scd3Issue(spark: SparkSession, dir: String): DataFrame = {
     val applied = scd3Apply(
       issueExisting(spark, dir), issueIncoming(spark, dir),
       "complain_number", "consumer_consent", AsOf)
-    Dims.surrogateKeys(applied, "issue_id", Seq(col("complain_number")))
+    Tables.globalRunningSum(applied, Seq(col("complain_number")), lit(1L), "issue_id")
       .select("issue_id", "complain_number", "submitted_via",
         "consumer_consent", "consumer_consent_old", "effective_date")
       .orderBy("issue_id")
@@ -260,9 +260,10 @@ object Scd {
 
   /** P5 equality filter: the current-rows view of the SCD2 dimension —
     * the reference's `where r.active = true` (inserting-data.sql:178) as
-    * its own registered surface. */
+    * its own registered surface. Read from the applied frame: the view
+    * drops the surrogate id, so it skips the id stamp. */
   def scd2ActiveView(spark: SparkSession, dir: String): DataFrame =
-    scd2Resolution(spark, dir)
+    resolutionApplied(spark, dir)
       .filter(col("active"))
       .select("complain_number", "public_response", "response_to_consumer", "start_date")
       .orderBy("complain_number")

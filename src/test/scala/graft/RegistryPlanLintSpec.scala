@@ -52,24 +52,21 @@ class RegistryPlanLintSpec extends SparkSpec {
     * key-cardinality screen cannot prove bounded. Until r15 the screen
     * accepted ANY Aggregate below the window; now grouping keys must be
     * domain-bounded, which surfaces these — each is a REAL single-task
-    * funnel, listed with why it is accepted rather than fixed. Two
-    * classes: (a) reference-inherent global ranks over HAVING-shrunk
-    * company aggregates (supplier-dimension cardinality, sf×10k — W1 in
-    * SURVEY §2, the semantics the reference queries demand); (b) rank
-    * statistics / surrogate-key assignment that need a total order over a
-    * dimension-sized reduction. */
+    * funnel, listed with why it is accepted rather than fixed: the
+    * reference-inherent global ranks over HAVING-shrunk company
+    * aggregates (supplier-dimension cardinality, sf×10k — W1 in SURVEY
+    * §2, the semantics the reference queries demand). */
   private val GlobalWindowWhitelist: Map[String, String] = Map(
     "q1_ratio_rank" -> "reference W1: global RANK over the HAVING-shrunk per-company aggregate (supplier-dim cardinality)",
     "q1b_disputed_rank" -> "reference W1 variant: same HAVING-shrunk per-company frame",
     "q1c_companies" -> "reference U2: four global ranks over the same per-company aggregate",
     "q2_state_ratios" -> "reference J5: the q1c rank frame reused before the state rollup",
-    "q3a_cf_view" -> "reference J5/A6: the q1c rank frame feeding the CF view",
-    "company_dim" -> "M4 surrogate-key assignment: contiguous ids require one row_number pass over the supplier-dim-sized distinct set (runs once per dim build)",
-    "scd2_resolution" -> "M6 SCD2 kernel: surrogate keys over the incoming batch's natural-key set — batch-sized, not history-sized")
-  // r17: customer_percentiles, gini_spend, mann_whitney_value and
-  // spearman_value_hour left this list — their global ranks/prefix sums
-  // now ride Sampling.globalRunningSum's two-phase _pid kernel (the
-  // spend_deciles pattern), so no single-task window remains to whitelist.
+    "q3a_cf_view" -> "reference J5/A6: the q1c rank frame feeding the CF view")
+  // Global ranks, prefix sums and surrogate keys over unbounded input
+  // (customer_percentiles, gini_spend, mann_whitney_value,
+  // spearman_value_hour, company_dim, scd2_resolution, ...) ride
+  // Tables.globalRunningSum's two-phase _pid kernel, whose only window is
+  // over the _pid-grouped partition totals, so none needs an entry here.
 
   /** Entries allowed an unbounded global Sort. */
   private val GlobalSortWhitelist: Map[String, String] = Map.empty

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.{BeforeAndAfterAll, Outcome}
 import org.scalatest.funsuite.AnyFunSuite
@@ -49,6 +53,24 @@ object SparkSpec {
       SparkSession.setDefaultSession(base)
       SparkSession.setActiveSession(base)
     }
+  }
+
+  /** Runs `body` and returns its result with the number of Spark jobs it
+    * started, counted by a listener with the listener bus drained before
+    * and after. */
+  def jobsDuring[T](spark: SparkSession)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      ListenerBusDrain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
   }
 
   // One session per JVM (forked test run) — specs share it.

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The loaders build their scan from a driver-side footer read: no Spark
@@ -17,19 +13,9 @@ class TablesSpec extends SparkSpec {
     val loaders = Seq[(SparkSession, String) => DataFrame](Tables.region, Tables.nation,
       Tables.customer, Tables.supplier, Tables.part, Tables.orders, Tables.lineitem,
       Tables.events, Tables.documents, Tables.embeddings)
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val schemas = loaders.map(_(spark, sfDir).schema)
-      ListenerBusDrain(sc)
-      assert(schemas.forall(_.nonEmpty))
-      assert(jobs.get == 0, s"${jobs.get} jobs started while building ${loaders.size} loaders")
-    } finally sc.removeSparkListener(listener)
+    val (schemas, jobs) = SparkSpec.jobsDuring(spark)(loaders.map(_(spark, sfDir).schema))
+    assert(schemas.forall(_.nonEmpty))
+    assert(jobs == 0, s"$jobs jobs started while building ${loaders.size} loaders")
   }
 
   test("footer schema equals parquet inference on every corpus table, nanosAsLong off and on") {

@@ -129,7 +129,7 @@ class SamplingSpec extends SparkSpec {
     val d = Seq[(Long, java.lang.Long)](
       (1L, null), (2L, null), (3L, 5L), (4L, null), (5L, 7L), (6L, 2L))
       .toDF("k", "v")
-    val got = Sampling.globalRunningSum(spark, d, Seq(col("k")), col("v"), "cum")
+    val got = Tables.globalRunningSum(d, Seq(col("k")), col("v"), "cum")
       .select("k", "cum").as[(Long, Option[Long])].collect().toMap
     // the r21 formulation, inline: same range partitioning, local window
     // keyed on _pid, offsets broadcast back

@@ -1,62 +1,59 @@
 package graft.warehouse
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 
-/** Property tests for the scalable surrogate-key path: under a total
-  * ordering it must assign exactly the ids the single-partition
-  * `row_number()` window assigns, for any partition count. */
+/** Property tests for the ordinal kernel: under a total ordering
+  * [[Tables.globalRunningSum]] with value 1 must assign exactly the ids
+  * the single-partition `row_number()` window assigns, a dense 1..n, at
+  * any shuffle-partition count. */
 class DimsSpec extends SparkSpec {
 
-  private def windowIds(df: org.apache.spark.sql.DataFrame) =
+  private val partitionCounts = Seq(1, 3, 8)
+
+  /** `keys` as a scrambled one-column frame `k` on a child session with
+    * `parts` shuffle partitions, which the kernel reads from the frame. */
+  private def keyFrame(keys: Seq[String], parts: Int): DataFrame = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    import s.implicits._
+    keys.toDF("k").repartition(7) // scramble input placement
+  }
+
+  private def kernelIds(df: DataFrame): DataFrame =
+    Tables.globalRunningSum(df, Seq(col("k")), lit(1L), "id").select("k", "id")
+
+  private def windowIds(df: DataFrame): DataFrame =
     df.withColumn("id", row_number().over(Window.orderBy(col("k"))).cast("long"))
       .select("k", "id")
 
-  private def check(keys: Seq[String], parts: Int): Unit = {
-    import spark.implicits._
-    val df = keys.toDF("k").repartition(7) // scramble input placement
-    val scalable = Dims.surrogateKeysScalable(df, "id", Seq(col("k")), parts)
-      .select("k", "id")
-    assert(scalable.except(windowIds(df)).isEmpty
-      && windowIds(df).except(scalable).isEmpty,
+  private def check(keys: Seq[String]): Unit = for (parts <- partitionCounts) {
+    val df = keyFrame(keys, parts)
+    val got = kernelIds(df)
+    assert(got.except(windowIds(df)).isEmpty && windowIds(df).except(got).isEmpty,
       s"keys=${keys.take(5)}... parts=$parts")
   }
 
   test("scalable surrogate keys equal the row_number path (unique keys, several partition counts)") {
-    val keys = scala.util.Random.shuffle((1 to 500).map(i => f"key_$i%04d")).toSeq
-    for (parts <- Seq(1, 3, 8)) check(keys, parts)
+    check(scala.util.Random.shuffle((1 to 500).map(i => f"key_$i%04d")).toSeq)
   }
 
   test("scalable surrogate keys equal the row_number path (skewed key lengths)") {
     // highly skewed ordering values: range partitioner must still place
     // every key so that prefix offsets reproduce the global order
     val keys = (1 to 300).map(i => "a" * (i % 17 + 1) + f"_$i%03d")
-    check(scala.util.Random.shuffle(keys).toSeq, 5)
+    check(scala.util.Random.shuffle(keys).toSeq)
   }
 
   test("ids are a dense 1..n sequence") {
-    import spark.implicits._
-    val df = (1 to 123).map(i => f"v$i%03d").toDF("k")
-    val out = Dims.surrogateKeysScalable(df, "id", Seq(col("k")), 4)
-    val ids = out.select("id").as[Long].collect().sorted
-    assert(ids.toSeq == (1L to 123L))
-  }
-
-  test("adaptive path routes by size estimate and both routes agree") {
-    import spark.implicits._
-    val df = (1 to 200).map(i => f"v$i%03d").toDF("k")
-    // small estimate → window path: plan stays declarative (no RDD scan)
-    val small = Dims.surrogateKeys(df, "id", Seq(col("k")))
-    assert(!small.queryExecution.executedPlan.toString.contains("ExistingRDD"),
-      "small input must take the window path")
-    // forced-zero threshold → zipWithIndex path: RDD scan present
-    val large = Dims.surrogateKeys(df, "id", Seq(col("k")), smallInputBytes = 0L)
-    assert(large.queryExecution.executedPlan.toString.contains("ExistingRDD"),
-      "over-threshold input must take the scalable path")
-    // identical ids either way — the contract that makes the switch safe
-    assert(small.except(large).isEmpty && large.except(small).isEmpty)
+    val keys = (1 to 123).map(i => f"v$i%03d")
+    for (parts <- partitionCounts) {
+      val ids = kernelIds(keyFrame(keys, parts)).select("id").collect().map(_.getLong(0)).sorted
+      assert(ids.toSeq == (1L to 123L), s"parts=$parts")
+    }
   }
 
   test("inferred dim members: exactly the fact-referenced gap keys, flagged") {

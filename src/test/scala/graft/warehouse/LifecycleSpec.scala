@@ -38,4 +38,20 @@ class LifecycleSpec extends SparkSpec {
     assert(viaSql.count() > 0)
     assert(viaSql.except(viaDf).isEmpty && viaDf.except(viaSql).isEmpty)
   }
+
+  test("sql direct query and table lifecycle keep the caller's temp views") {
+    import spark.implicits._
+    def tempViews = spark.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).sorted.toSeq
+    Seq(1L, 2L).toDF("mine").createOrReplaceTempView("orders")
+    try {
+      val before = tempViews
+      assert(before.contains("orders"))
+      Lifecycle.sqlDirectQuery(spark, sfDir).collect()
+      Lifecycle.tableLifecycle(spark, sfDir).collect()
+      assert(tempViews == before)
+      val mine = spark.table("orders")
+      assert(mine.columns.toSeq == Seq("mine") && mine.count() == 2)
+    } finally spark.catalog.dropTempView("orders")
+  }
 }

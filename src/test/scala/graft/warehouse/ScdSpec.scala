@@ -1,6 +1,7 @@
 package graft.warehouse
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -114,22 +115,35 @@ class ScdSpec extends SparkSpec {
     assert(scd3.groupBy("complain_number").count().filter(col("count") > 1).isEmpty)
   }
 
-  test("scd id-stamps: adaptive kernel and scalable path assign identical ids on SCD output") {
-    // the registered entries route through Dims.surrogateKeys (window path
-    // at sf0.001 size); re-stamping the same frames through the forced
-    // zipWithIndex path must reproduce the ids exactly — the DimsSpec
-    // identity contract, proven on the complaint-keyed SCD outputs whose
-    // orderings must therefore be total
-    val scd2 = Scd.scd2Resolution(spark, sfDir).cache()
-    val re2 = Dims.surrogateKeysScalable(scd2.drop("resolution_id"), "resolution_id",
+  test("scd id-stamps: registered ids equal row_number over the applied frame") {
+    // the id stamp is the ordinal kernel; dropping the id gives back the
+    // applied frame, and a single-window row_number over the same total
+    // order must reproduce every row's id
+    def check(stamped: DataFrame, id: String, order: Seq[Column]): Unit = {
+      val want = stamped.drop(id)
+        .withColumn(id, row_number().over(Window.orderBy(order: _*)).cast("long"))
+        .select(stamped.columns.toIndexedSeq.map(col): _*)
+      assert(stamped.except(want).isEmpty && want.except(stamped).isEmpty, id)
+    }
+    check(Scd.scd2Resolution(spark, sfDir).cache(), "resolution_id",
       Seq(col("complain_number"), col("start_date"), col("response_to_consumer")))
-    assert(scd2.except(re2.select(scd2.columns.map(col): _*)).isEmpty
-      && re2.select(scd2.columns.map(col): _*).except(scd2).isEmpty)
-    val scd3 = Scd.scd3Issue(spark, sfDir).cache()
-    val re3 = Dims.surrogateKeysScalable(scd3.drop("issue_id"), "issue_id",
-      Seq(col("complain_number")))
-    assert(scd3.except(re3.select(scd3.columns.map(col): _*)).isEmpty
-      && re3.select(scd3.columns.map(col): _*).except(scd3).isEmpty)
+    check(Scd.scd3Issue(spark, sfDir).cache(), "issue_id", Seq(col("complain_number")))
+  }
+
+  test("scd3_issue builds without a job or RDD scan; scd2_active_view unchanged") {
+    val (scd3, jobs) = SparkSpec.jobsDuring(spark)(Scd.scd3Issue(spark, sfDir))
+    assert(jobs == 0, s"$jobs jobs started while building scd3_issue")
+    val plan = scd3.queryExecution.executedPlan.toString
+    assert(!plan.contains("ExistingRDD"), plan)
+    // the view reads the applied frame now; its old form filtered the
+    // id-stamped scd2_resolution
+    val old = Scd.scd2Resolution(spark, sfDir)
+      .filter(col("active"))
+      .select("complain_number", "public_response", "response_to_consumer", "start_date")
+      .orderBy("complain_number")
+    val got = Scd.scd2ActiveView(spark, sfDir)
+    assert(got.schema == old.schema)
+    assert(got.collect().toSeq == old.collect().toSeq)
   }
 
   test("scd2 point-in-time join resolves exactly one version per fact") {
