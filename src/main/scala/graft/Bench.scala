@@ -114,19 +114,10 @@ object Bench {
     // Since r17, exec() also releases each entry's run-scoped scratch
     // (RunScope.releaseAll) the moment its action completes, so entries
     // no longer leak caches into each other at ANY scale.
-    // SPARK_GRAFT_BENCH_ISOLATE=1 additionally clearCache()s between
-    // ENTRIES — now a belt-and-braces sweep for anything NOT routed
-    // through RunScope; with the kernels converted it should agree with
-    // the default within noise (that agreement is the r17 acceptance
-    // check for the unpersist discipline).
-    val isolate = sys.env.get("SPARK_GRAFT_BENCH_ISOLATE").contains("1")
     def runPasses(ns: Seq[String]): Seq[Map[String, Double]] =
       (1 to reps).map { _ =>
         spark.catalog.clearCache()
-        ns.map { n =>
-          if (isolate) spark.catalog.clearCache()
-          n -> exec(n)
-        }.toMap
+        ns.map(n => n -> exec(n)).toMap
       }
     def median(xs: Seq[Double]): Double =
       if (xs.isEmpty) -1.0

@@ -667,8 +667,9 @@ object Quantiles {
     * measured negative): `.scratchCache()` on the joined (priority,
     * delay) frame — one join execution feeding both consumers — was
     * tried and measured SLOWER in an in-JVM alternated A/B
-    * (CcAbProfile, min estimator): 5× organic 2.55 s uncached vs
-    * 2.94 s cached, 25× 6.73 s vs 7.65 s, and 17 vs 21 driver jobs —
+    * (CcAbProfile, a test main at commit 448c640, min estimator): 5×
+    * organic 2.55 s uncached vs 2.94 s cached, 25× 6.73 s vs 7.65 s,
+    * and 17 vs 21 driver jobs —
     * the consistent sign at both scales. The codegen'd scan+join of two
     * pruned fact columns is cheaper to recompute (even ~3×: range-
     * sampling pass + quantile pass + counter pass) than the columnar

@@ -415,13 +415,14 @@ object Dedup {
         .otherwise(col("tp").cast("double") / col("n_truth")), 6).as("recall"))
   }
 
-  /** Oracle: the two public pair queries as nested subqueries (each
-    * carries its own WITH chain), same confusion arithmetic. */
-  lazy val dedupEvalSql: String =
+  /** Oracle: the two public pair queries over `src` as nested
+    * subqueries (each carries its own WITH chain), same confusion
+    * arithmetic as [[dedupEvalFrom]]. */
+  private def dedupEvalSqlFrom(src: String): String =
     s"""WITH truth AS (
-       |  SELECT doc_a, doc_b FROM ($ngramJaccardPairsSql) WHERE jaccard >= 0.8
+       |  SELECT doc_a, doc_b FROM (${ngramJaccardPairsSqlFrom(src)}) WHERE jaccard >= 0.8
        |), pred AS (
-       |  SELECT doc_a, doc_b FROM ($simhashDedupSql)
+       |  SELECT doc_a, doc_b FROM (${simhashDedupSqlFrom(src)})
        |), j AS (
        |  SELECT coalesce(t.doc_a, p.doc_a) AS doc_a,
        |         coalesce(t.doc_b, p.doc_b) AS doc_b,
@@ -440,6 +441,8 @@ object Dedup {
        |       round(CASE WHEN n_pred = 0 THEN NULL ELSE tp * 1.0 / n_pred END, 6) AS precision,
        |       round(CASE WHEN n_truth = 0 THEN NULL ELSE tp * 1.0 / n_truth END, 6) AS recall
        |FROM c""".stripMargin
+
+  lazy val dedupEvalSql: String = dedupEvalSqlFrom("documents")
 
   /** Salt + modulus for the sampled-eval corpus slice: documents whose
     * salted md5 bucket is 0 (1/[[EvalSampleMod]] of the corpus),
@@ -471,36 +474,12 @@ object Dedup {
       .select("doc_id", "shingles").scratchCache()) // projected: see dedupEval
   }
 
-  /** Oracle: identical confusion arithmetic over the two pair queries,
-    * each rebound to the sampled corpus subquery (same salted-md5
-    * predicate, DuckDB spelling). */
-  lazy val dedupEvalSampledSql: String = {
-    val src = "(SELECT * FROM documents WHERE (('0x' || substr(md5('" +
+  /** Oracle: [[dedupEvalSqlFrom]] over the sampled corpus subquery
+    * (same salted-md5 predicate, DuckDB spelling). */
+  lazy val dedupEvalSampledSql: String = dedupEvalSqlFrom(
+    "(SELECT * FROM documents WHERE (('0x' || substr(md5('" +
       s"$EvalSampleSalt:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT" +
-      s" % $EvalSampleMod) = 0) sampled"
-    s"""WITH truth AS (
-       |  SELECT doc_a, doc_b FROM (${ngramJaccardPairsSqlFrom(src)}) WHERE jaccard >= 0.8
-       |), pred AS (
-       |  SELECT doc_a, doc_b FROM (${simhashDedupSqlFrom(src)})
-       |), j AS (
-       |  SELECT coalesce(t.doc_a, p.doc_a) AS doc_a,
-       |         coalesce(t.doc_b, p.doc_b) AS doc_b,
-       |         (t.doc_a IS NOT NULL) AS in_t, (p.doc_a IS NOT NULL) AS in_p
-       |  FROM truth t FULL OUTER JOIN pred p
-       |    ON t.doc_a = p.doc_a AND t.doc_b = p.doc_b
-       |), c AS (
-       |  SELECT CAST(sum(CASE WHEN in_t THEN 1 ELSE 0 END) AS BIGINT) AS n_truth,
-       |         CAST(sum(CASE WHEN in_p THEN 1 ELSE 0 END) AS BIGINT) AS n_pred,
-       |         CAST(sum(CASE WHEN in_t AND in_p THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-       |         CAST(sum(CASE WHEN NOT in_t AND in_p THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-       |         CAST(sum(CASE WHEN in_t AND NOT in_p THEN 1 ELSE 0 END) AS BIGINT) AS fn
-       |  FROM j
-       |)
-       |SELECT n_truth, n_pred, tp, fp, fn,
-       |       round(CASE WHEN n_pred = 0 THEN NULL ELSE tp * 1.0 / n_pred END, 6) AS precision,
-       |       round(CASE WHEN n_truth = 0 THEN NULL ELSE tp * 1.0 / n_truth END, 6) AS recall
-       |FROM c""".stripMargin
-  }
+      s" % $EvalSampleMod) = 0) sampled")
 
   /** SimHash bit width (60: 15 hex chars of md5 — fits a signed 64-bit
     * lane on both engines), Hamming threshold, and band count. 8 disjoint

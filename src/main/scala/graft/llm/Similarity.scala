@@ -381,8 +381,8 @@ object Similarity {
     * confirmation, `ed` re-attached to surviving candidates from the
     * cached vector frame — was implemented and measured 5× SLOWER at
     * the 25× organic rehearsal (125k vectors: wide 31.3 s payload vs
-    * 161.0 s slim, in-JVM alternated A/B, LshAbProfile). Mechanism: the
-    * candidate stream is the QUADRATIC term (n²·tables/2^planes random
+    * 161.0 s slim, in-JVM alternated A/B, LshAbProfile: a test main at
+    * commit 448c640). Mechanism: the candidate stream is the QUADRATIC term (n²·tables/2^planes random
     * collisions ≈ 7×10⁸ pairs at 125k vectors) while the band rows are
     * the LINEAR term (n·tables = 1.5M); the slim shape must shuffle the
     * quadratic stream (pair dedup + two re-attach joins) where this

@@ -1842,9 +1842,9 @@ object TextAnalysis {
     // aggregating the vocabulary²-bounded lm2 replaces a SECOND
     // full-corpus tokenize+explode+shuffle(w1) pass with a shuffle of
     // the LM table — the w1 exchange's input drops from bigram
-    // OCCURRENCES to distinct bigrams. Local A/B (LmAbProfile, 5×/25×
-    // organic): wall-clock FLAT (min −2%/+2%, mixed signs — at these
-    // sizes the old lm1 pass ran concurrently on idle cores, so less
+    // OCCURRENCES to distinct bigrams. Local A/B (LmAbProfile, a test
+    // main at commit 448c640; 5×/25× organic): wall-clock FLAT (min
+    // −2%/+2%, mixed signs — at these sizes the old lm1 pass ran concurrently on idle cores, so less
     // total work trades against a longer critical path); shipped for
     // the at-scale shape, where the removed pass is corpus-sized. The
     // same derivation measured consistently NEGATIVE for
@@ -1945,8 +1945,9 @@ object TextAnalysis {
     val lm2 = ref.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
     // Deliberately NOT derived from lm2 (c(w1·) = Σ_w2 c(w1,w2), the
     // bigramSurprisal r22 rewrite): the in-JVM alternated A/B
-    // (LmAbProfile) measured the derived form consistently SLOWER here —
-    // 25× organic min 3.58 s → 4.03 s (+12%), same sign every rep, and
+    // (LmAbProfile, a test main at commit 448c640) measured the derived
+    // form consistently SLOWER here — 25× organic min 3.58 s → 4.03 s
+    // (+12%), same sign every rep, and
     // +2% at 5×. Unlike bigramSurprisal, this lm1 aggregates only the
     // REFERENCE-filtered slice (a small fraction of the stream by
     // design), so the pass it would remove is cheap, while deriving

@@ -228,12 +228,18 @@ class RegistryPlanLintSpec extends SparkSpec {
         "BroadcastNestedLoopJoin"
     }
 
+  /** The first 14 lines of a flagged node's child subtree, each cut to
+    * 150 characters: enough of the input's shape to tell bounded from
+    * unbounded when a failure is read. */
+  private def subtree(child: LogicalPlan): String =
+    child.treeString.linesIterator.take(14).map(l => "    " + l.take(150)).mkString("\n")
+
   /** Windows with an empty partitionSpec whose input is not already
-    * reduced — the single-task funnel. */
-  private def globalWindows(opt: LogicalPlan): Seq[String] =
+    * reduced — the single-task funnel — each with its child's subtree. */
+  private def globalWindows(opt: LogicalPlan): Seq[(String, String)] =
     opt.collect {
       case w: LWindow if w.partitionSpec.isEmpty && !bounded(w.child) =>
-        s"global Window(${w.windowExpressions.map(_.name).mkString(",")})"
+        s"global Window(${w.windowExpressions.map(_.name).mkString(",")})" -> subtree(w.child)
     }
 
   /** INTERIOR global Sorts over unreduced input: a global sort is a
@@ -244,9 +250,9 @@ class RegistryPlanLintSpec extends SparkSpec {
     * leaning on a total order mid-plan is the shape that should have been
     * a window/partition-local sort/top-k instead. Sorts under a LIMIT
     * (planned as top-k) pass automatically. */
-  private def unboundedSorts(opt: LogicalPlan): Seq[String] = {
+  private def unboundedSorts(opt: LogicalPlan): Seq[(String, String)] = {
     import org.apache.spark.sql.catalyst.plans.logical.{LocalLimit, Project}
-    def walk(p: LogicalPlan, limited: Boolean, atRoot: Boolean): Seq[String] = p match {
+    def walk(p: LogicalPlan, limited: Boolean, atRoot: Boolean): Seq[(String, String)] = p match {
       case g: GlobalLimit => g.children.flatMap(walk(_, limited = true, atRoot = false))
       // GlobalLimit(LocalLimit(Project(Sort))) is Spark's top-k shape
       // (TakeOrderedAndProject) — the flag must survive the LocalLimit
@@ -257,7 +263,8 @@ class RegistryPlanLintSpec extends SparkSpec {
       // the presentation sort survives Project/column-prune wrappers
       case pr: Project if atRoot => pr.children.flatMap(walk(_, limited, atRoot = true))
       case s: Sort if s.global && !limited && !atRoot && !bounded(s.child) =>
-        s"interior unbounded global Sort(${s.order.map(_.child.sql).mkString(",")})" +:
+        (s"interior unbounded global Sort(${s.order.map(_.child.sql).mkString(",")})" ->
+          subtree(s.child)) +:
           s.children.flatMap(walk(_, limited = false, atRoot = false))
       case s: Sort if atRoot =>
         s.children.flatMap(walk(_, limited = false, atRoot = false))
@@ -271,20 +278,26 @@ class RegistryPlanLintSpec extends SparkSpec {
     val failures = Seq.newBuilder[String]
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, q) =>
       val df = q(spark, sfDir)
-      val found =
-        unkeyedJoins(df.queryExecution.sparkPlan).map(j => s"join:$j") ++
-          globalWindows(df.queryExecution.optimizedPlan).map(w => s"window:$w") ++
-          unboundedSorts(df.queryExecution.optimizedPlan).map(s => s"sort:$s")
+      // each hit with the child subtree a failure prints (joins: none)
+      val detailed =
+        unkeyedJoins(df.queryExecution.sparkPlan).map(j => s"join:$j" -> "") ++
+          globalWindows(df.queryExecution.optimizedPlan).map { case (w, t) => s"window:$w" -> t } ++
+          unboundedSorts(df.queryExecution.optimizedPlan).map { case (s, t) => s"sort:$s" -> t }
+      val found = detailed.map(_._1)
       if (found.nonEmpty) hits(name) = found
+      def report(kind: String): String =
+        detailed.collect {
+          case (h, t) if h.startsWith(kind) => if (t.isEmpty) h else s"$h\n$t"
+        }.mkString(", ")
       val joinsHit = found.exists(_.startsWith("join:"))
       val winsHit = found.exists(_.startsWith("window:"))
       val sortsHit = found.exists(_.startsWith("sort:"))
       if (joinsHit && !UnkeyedJoinWhitelist.contains(name))
-        failures += s"$name: ${found.filter(_.startsWith("join:")).mkString(", ")}"
+        failures += s"$name: ${report("join:")}"
       if (winsHit && !GlobalWindowWhitelist.contains(name))
-        failures += s"$name: ${found.filter(_.startsWith("window:")).mkString(", ")}"
+        failures += s"$name: ${report("window:")}"
       if (sortsHit && !GlobalSortWhitelist.contains(name))
-        failures += s"$name: ${found.filter(_.startsWith("sort:")).mkString(", ")}"
+        failures += s"$name: ${report("sort:")}"
     }
     spark.catalog.clearCache() // some entries cache intermediates at build time
     val bad = failures.result()

@@ -26,26 +26,17 @@ object SparkSpec {
   val sfDir = "/root/testdata/sf0.001"
   val gateDir = "/root/testdata/sf0.01"
 
-  /** The fixture's session settings, factored so specs that must build
-    * their OWN session (ExtensionsSmokeSpec) cannot silently diverge
-    * from the shared fixture's configuration. */
-  def configure(b: SparkSession.Builder): SparkSession.Builder =
-    b.master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-
   /** Runs `body` on a NEW session over the shared SparkContext, built
-    * by [[configure]] and then `wire`: its function registry starts with
-    * Spark's built-ins only. The shared fixture is restored as the
-    * default and active session afterwards. */
+    * by [[SparkEntry.builder]] and then `wire`: its function registry
+    * starts with Spark's built-ins only. The shared fixture is restored
+    * as the default and active session afterwards. */
   def withFreshSession[T](wire: SparkSession.Builder => SparkSession.Builder = identity)
       (body: SparkSession => T): T = {
     val base = session // materialize the shared SparkContext
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val fresh = wire(configure(SparkSession.builder())).getOrCreate()
+      val fresh = wire(SparkEntry.builder()).getOrCreate()
       assert(fresh ne base, "must be a fresh session, not the shared fixture")
       body(fresh)
     } finally {
@@ -73,10 +64,7 @@ object SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
-  // One session per JVM (forked test run) — specs share it.
-  lazy val session: SparkSession = {
-    val s = configure(SparkSession.builder()).getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  /** One session per JVM (forked test run), shared by all specs: the
+    * session Bench and Verify run on. */
+  lazy val session: SparkSession = SparkEntry.local()
 }
