@@ -133,7 +133,7 @@ object Behavior {
   /** Inter-arrival-time quantiles — median and p90 of the gap between a
     * user's consecutive events, grouped by the arriving event's type: the
     * latency profile behind engagement models and session-gap tuning
-    * (the 30-minute sessionizer constant should sit far beyond these
+    * (the 30-minute session gap should sit far beyond these
     * quantiles). Gaps are computed with LAG over each USER's ordered
     * stream (key cardinality scales with the data — never a few-group
     * window), in exact integer microseconds; the per-TYPE quantiles then
@@ -224,19 +224,17 @@ object Behavior {
       |       s.event_type AS last_type, s.value AS last_value, n_events
       |FROM m ORDER BY user_id""".stripMargin
 
-  /** Per-key-per-window cap for [[rateLimitEvents]] — shared with its
-    * streaming twin ([[graft.streaming.EventsStream.streamingRateLimit]]). */
-  private[graft] val RateLimitN = 3
+  /** Per-key-per-window cap for [[rateLimitEvents]]. */
+  private val RateLimitN = 3
 
   /** Ingestion rate limiting — keep only the FIRST [[RateLimitN]] events
     * per (user, day) and drop the rest: the bot/spam throttle every
-    * event pipeline applies before counting anything, and the batch twin
-    * of a streaming token-bucket. Arrival order inside the day is
-    * (ts, event_id) — event_id breaks equal-timestamp ties so the kept
-    * set is deterministic. (Day, not hour: on this corpus the hourly
-    * cells never exceed the cap, which would leave the drop path dead —
-    * the daily cells exceed it in the hundreds, so the oracle gates both
-    * keep and drop behavior.)
+    * event pipeline applies before counting anything. Arrival order
+    * inside the day is (ts, event_id) — event_id breaks equal-timestamp
+    * ties so the kept set is deterministic. (Day, not hour: on this
+    * corpus the hourly cells never exceed the cap, which would leave the
+    * drop path dead — the daily cells exceed it in the hundreds, so the
+    * oracle gates both keep and drop behavior.)
     *
     * Shape at 100 TB: rank-≤-N on a composite key is exactly the
     * WindowGroupLimit shape (see `domain_cap`): Spark pushes the limit
@@ -411,8 +409,7 @@ object Behavior {
     * events carry an observed amount on this corpus model; every event
     * then sees the user's most recent purchase value (NULL before the
     * first purchase). The sparse-to-dense gap-filling every feature
-    * pipeline runs before a model join, and the batch twin of streaming
-    * keyed state.
+    * pipeline runs before a model join.
     *
     * Shape at 100 TB: one window, PARTITIONED BY user and ordered by
     * (ts, event_id) — a per-key sorted pass with bounded partitions,
@@ -1097,7 +1094,7 @@ object Behavior {
   /** Within-session conversion — the funnel measured INSIDE session
     * boundaries: of all sessions (the
     * [[graft.streaming.EventsStream.SessionGapMs]] gap rule, same
-    * constant as the sessionizer family), how many contain a view, and
+    * constant as `session_metrics`), how many contain a view, and
     * of those, how many convert with a purchase strictly after the
     * session's first view. Cross-session journeys deliberately don't
     * count — that distinction (session conversion vs the user-lifetime

@@ -889,12 +889,11 @@ object Stats {
       |ORDER BY abs(s_t) DESC, d
       |LIMIT 1""".stripMargin
 
-  /** [[cusumAlerts]] parameters, shared with the streaming twin
-    * ([[graft.streaming.EventsStream.cusumDetect]]): the slack inflates
-    * the per-type target mean so in-control noise drifts the statistic
-    * DOWN (Page's k), and the decision interval h is the alert line. */
-  val CusumSlackFrac = 0.10
-  val CusumH = 500.0
+  /** [[cusumAlerts]] parameters: the slack inflates the per-type target
+    * mean so in-control noise drifts the statistic DOWN (Page's k), and
+    * the decision interval h is the alert line. */
+  private val CusumSlackFrac = 0.10
+  private val CusumH = 500.0
 
   /** Online CUSUM backtest over the event stream — Page's one-sided
     * cumulative-sum detector, S_t = max(0, S_{t-1} + (x_t − μ·(1+k))),
@@ -914,9 +913,7 @@ object Stats {
     * SUMMARY frame (types × months rows, calendar-bounded). Identical
     * output to the naive window (the oracle IS the naive window), any
     * partition count. Deviations are 6dp-rounded then decimal-summed, so
-    * prefix sums are combination-order-exact in both engines; the
-    * streaming twin folds the SAME micro-unit integers and is
-    * pair-tested equal in EventsStreamSpec. */
+    * prefix sums are combination-order-exact in both engines. */
   def cusumAlerts(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val e = Tables.events(spark, dir)

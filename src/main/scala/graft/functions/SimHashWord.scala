@@ -25,10 +25,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   * stage alone exchanges ~100 rows per document. Every vote only ever
   * reads its own row's shingles, so the fingerprint is row-local: this
   * expression removes that shuffle entirely (fingerprinting becomes a map
-  * stage, which is also what lets the streaming twin
-  * [[graft.streaming.DocStream]] fingerprint per arriving document), and
-  * runs inside WholeStageCodegen — eval and generated code call the same
-  * static kernel, so interpreted and codegen paths cannot diverge.
+  * stage), and runs inside WholeStageCodegen — eval and generated code
+  * call the same static kernel, so interpreted and codegen paths cannot
+  * diverge.
   *
   * Bit-for-bit contract with the vote aggregate (pinned corpus-wide for
   * both words in DedupSpec): hash = conv(substring(md5(s), 15·word+1, 15),

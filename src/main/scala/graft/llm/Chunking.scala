@@ -19,10 +19,10 @@ object Chunking {
     * (overlap = window - stride). Chunks start at 0, stride, 2*stride, …
     * while the start is inside the document, so every token lands in at
     * least one chunk and short docs yield exactly one chunk.
-    * (private[graft] so specs and the streaming twin recompute spans at
-    * the real width instead of duplicating the constant.) */
+    * (private[graft] so specs recompute spans at the real width instead
+    * of duplicating the constant.) */
   private[graft] val ChunkTokens = 64
-  private[graft] val ChunkStride = 48
+  private val ChunkStride = 48
 
   /** One output row per (doc, window): chunk ordinal, token offset, the
     * chunk's token count and re-joined text.
@@ -45,41 +45,28 @@ object Chunking {
     * Tables.spread). */
   private[llm] def tokFrame(spark: SparkSession, dir: String): DataFrame =
     Tables.spread(Tables.documents(spark, dir))
-      .select(col("doc_id"), toksCol(col("text")).as("toks"))
-
-  /** The ONE normalization+tokenization expression (lowercase, trim,
-    * whitespace split) shared by [[tokFrame]] and the streaming census
-    * ([[graft.streaming.DocStream.streamingChunkCensus]]) — single-
-    * sourced so batch and ingest chunking can never silently drift
-    * (advisor finding, r17). */
-  private[graft] def toksCol(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    split(lower(trim(text)), "\\s+")
+      .select(col("doc_id"), split(lower(trim(col("text"))), "\\s+").as("toks"))
 
   /** The unordered chunk frame, shared by [[docChunks]] and
     * [[chunkDedup]] so both see identical windows. */
   private[llm] def chunksFrame(spark: SparkSession, dir: String): DataFrame =
     chunksFrameFrom(tokFrame(spark, dir))
 
-  /** The window math over any (…, toks) frame. Non-`toks` input columns
-    * pass through unchanged, so the streaming twin
-    * ([[graft.streaming.DocStream.streamingChunkCensus]]) can carry its
-    * event time through the identical chunking — ONE definition of the
-    * window math for batch and ingest. Batch callers pass (doc_id, toks)
-    * and get exactly the historical 5-column shape. */
-  private[graft] def chunksFrameFrom(tok: DataFrame): DataFrame = {
-    val carry = tok.columns.filterNot(_ == "toks").map(col).toSeq
+  /** The window math over a (doc_id, toks) frame: (doc_id, chunk_id,
+    * start_tok, n_tokens, chunk_text), one row per window. */
+  private def chunksFrameFrom(tok: DataFrame): DataFrame = {
     val d = tok.withColumn("n", size(col("toks")))
-    d.select(carry ++ Seq(col("toks"), col("n"),
+    d.select(col("doc_id"), col("toks"), col("n"),
         posexplode(sequence(lit(0), greatest(col("n") - 1, lit(0)),
-          lit(ChunkStride)))): _*)
+          lit(ChunkStride))))
       .withColumnRenamed("pos", "chunk_id")
       .withColumnRenamed("col", "start_tok")
-      .select(carry ++ Seq(col("chunk_id").cast("long"),
+      .select(col("doc_id"), col("chunk_id").cast("long"),
         col("start_tok").cast("long"),
         least(lit(ChunkTokens), col("n") - col("start_tok")).cast("long")
           .as("n_tokens"),
         array_join(slice(col("toks"), col("start_tok") + 1, lit(ChunkTokens)), " ")
-          .as("chunk_text")): _*)
+          .as("chunk_text"))
   }
 
   /** The shared chunk CTE (`ch`: doc_id, chunk_id, start_tok, n_tokens,
@@ -177,18 +164,12 @@ object Chunking {
     * `filter`/`exists` over the token array — map-side, no token-level
     * explode or range join anywhere. Documents with no flagged window
     * take the null-spans fast path untouched. */
-  def chunkDedupApply(spark: SparkSession, dir: String): DataFrame =
-    chunkDedupApplyFrom(tokFrame(spark, dir))
-
-  /** The kernel over any (doc_id, toks) frame — shared with the
-    * streaming-twin parity spec, which strips a planted corpus both
-    * ways ([[graft.streaming.DocStream.streamingChunkStrip]]). */
-  private[graft] def chunkDedupApplyFrom(tok: DataFrame): DataFrame = {
+  def chunkDedupApply(spark: SparkSession, dir: String): DataFrame = {
     import graft.RunScope.ScratchCacheOps
     // one tokenization pass: the census branch (occ, via the chunk
     // windows) and the strip branch (d) both read the cached token
     // frame instead of re-running the regex split over the corpus
-    val d = tok.scratchCache()
+    val d = tokFrame(spark, dir).scratchCache()
     val occ = chunksFrameFrom(d)
       .filter(col("n_tokens") === ChunkTokens)
       .select(col("doc_id"), col("start_tok"),

@@ -285,11 +285,11 @@ object Dedup {
     * [[minhashDedup]] and [[Decontaminate.decontaminateFuzzy]] so "same
     * bucket" means the same thing in both audits. */
   private[graft] def minhashBands(sh: DataFrame): DataFrame = {
-    // non-shingle input columns pass through (the chunksFrameFrom
-    // contract): Decontaminate's fuzzy audit carries its split column
-    // here instead of joining it back onto the 16-rows-per-doc band
-    // stream — at corpus scale that join is a 16n-row exchange for a
-    // column the scan already had (r18 pricing study, SCALE.md).
+    // non-shingle input columns pass through: Decontaminate's fuzzy
+    // audit carries its split column here instead of joining it back
+    // onto the 16-rows-per-doc band stream — at corpus scale that join
+    // is a 16n-row exchange for a column the scan already had (r18
+    // pricing study, SCALE.md).
     // CONTRACT (r19, ADVICE): callers must pre-prune to doc_id + the
     // columns they actually want carried — every carry column rides the
     // 16-rows-per-doc band exchange, and relying on Catalyst pruning
@@ -496,20 +496,6 @@ object Dedup {
     Seq((0, 0, 8), (0, 8, 8), (0, 16, 8), (0, 24, 8),
       (0, 32, 7), (0, 39, 7), (0, 46, 7), (0, 53, 7))
 
-  /** The (band_id, band_key) rows of `bands` over the fingerprint
-    * `words`, as one exploded struct column — the band definition the
-    * batch kernel [[bandedHammingPairs]] and the streaming twins in
-    * [[graft.streaming.DocStream]] share. */
-  private[graft] def bandKeys(words: Seq[Column], bands: Seq[Band]): Column =
-    explode(array(bands.zipWithIndex.map { case ((word, off, width), idx) =>
-      struct(lit(idx).as("band_id"),
-        shiftright(words(word), off).bitwiseAND(lit((1L << width) - 1)).as("band_key"))
-    }: _*))
-
-  /** Hamming distance between two multi-word fingerprints, as a long. */
-  private[graft] def hammingOf(a: Seq[Column], b: Seq[Column]): Column =
-    a.zip(b).map { case (x, y) => bit_count(x.bitwiseXOR(y)) }.reduce(_ + _).cast("long")
-
   /** SimHash near-dup pairs: 60-bit md5-derived simhash per document
     * (bit j set iff the +1/-1 vote over the doc's shingle hashes is
     * positive), banded into 8 disjoint bit-slices; docs sharing any band
@@ -524,9 +510,7 @@ object Dedup {
     * per-row [[graft.functions.SimHashWord]] expression — every vote only
     * reads its own row's shingles, so fingerprinting is a map stage with
     * NO shuffle (the vote-aggregate twin below exchanges one row per
-    * shingle to compute the same bits). Shared with the streaming twin
-    * [[graft.streaming.DocStream]], which needs exactly this per-row
-    * shape to fingerprint documents as they arrive. */
+    * shingle to compute the same bits). */
   private[graft] def simhashFingerprints(shingled: DataFrame): DataFrame = {
     shingled.select(col("doc_id"),
       SimHashWord.of(col("shingles"), 0).as("simhash"))
@@ -591,7 +575,13 @@ object Dedup {
     * equal), so an all-pairs oracle matches bit-for-bit. */
   private[graft] def bandedHammingPairs(fp: DataFrame, words: Seq[String],
                                         bands: Seq[Band]): DataFrame = {
-    val banded = fp.scratchCache().withColumn("band", bandKeys(words.map(col), bands))
+    // one exploded (band_id, band_key) struct per band of the words
+    val bandKeys = explode(array(bands.zipWithIndex.map {
+      case ((word, off, width), idx) =>
+        struct(lit(idx).as("band_id"), shiftright(col(words(word)), off)
+          .bitwiseAND(lit((1L << width) - 1)).as("band_key"))
+    }: _*))
+    val banded = fp.scratchCache().withColumn("band", bandKeys)
       .select((col("doc_id") +: words.map(col)) ++
         Seq(col("band.band_id"), col("band.band_key")): _*)
     banded.as("a")
@@ -599,7 +589,8 @@ object Dedup {
         col("a.band_id") === col("b.band_id") && col("a.band_key") === col("b.band_key")
           && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        hammingOf(words.map(w => col(s"a.$w")), words.map(w => col(s"b.$w"))).as("hamming"))
+        words.map(w => bit_count(col(s"a.$w").bitwiseXOR(col(s"b.$w"))))
+          .reduce(_ + _).cast("long").as("hamming"))
       // FILTER before the pair dedup: hamming is functionally determined
       // by (doc_a, doc_b), so the order is semantics-free — but the dedup
       // is a shuffle of every band-join candidate (~n²/2^w rows; ~10⁸ at

@@ -59,17 +59,9 @@ object QualityLr {
   /** Per-document training frame: the three clamped quality terms
     * (UNROUNDED, exactly [[TextAnalysis.withQualityScore]]'s inputs)
     * and the teacher label y = [score ≥ 0.5] on the 6dp-rounded score
-    * both engines output. */
-  private[graft] def featFrame(spark: SparkSession, dir: String): DataFrame =
-    featsOf(Tables.spread(Tables.documents(spark, dir)))
-
-  /** Feature kernel: APPENDS the three clamped terms and the teacher
-    * label to ANY frame with a `text` column — per-row expressions
-    * only, so the same features run in batch and behind a stream (the
-    * [[TextAnalysis.withQualityScore]] contract; the ingest twin
-    * [[graft.streaming.DocStream.streamingModelGate]] rides this).
-    * Factored so the spec can plant a linearly separable fixture. */
-  private[graft] def withFeatures(docs: DataFrame): DataFrame = {
+    * both engines output — per-row expressions only. */
+  private[graft] def featFrame(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.spread(Tables.documents(spark, dir))
     val nTok = TextAnalysis.wsTokenCount(col("text"))
     val nStop = RegexCount.of(col("text"), TextAnalysis.StopRe)
     val nPunct = RegexCount.of(col("text"), "[.,!?;:]")
@@ -79,10 +71,8 @@ object QualityLr {
     val score = f1 * 0.4 + f2 * 0.4 + (lit(1d) - f3) * 0.2
     docs.withColumn("f1", f1).withColumn("f2", f2).withColumn("f3", f3)
       .withColumn("y", when(round(score, 6) >= 0.5, 1d).otherwise(0d))
+      .select("doc_id", "f1", "f2", "f3", "y")
   }
-
-  private[llm] def featsOf(docs: DataFrame): DataFrame =
-    withFeatures(docs).select("doc_id", "f1", "f2", "f3", "y")
 
   /** The trained model: [[Rounds]] batch-GD steps, every arithmetic op
     * IN-PLAN (the one-row weight update is a `select` over the one-row
@@ -115,6 +105,9 @@ object QualityLr {
           round(lit(w(j)) - lit(Lr) * (col(s"g$j").cast("double") / col("n")), 6)
             .as(s"w$j")): _*)
         .head()
+      // sum over no rows is null, and so is every weight derived from it
+      if (row.isNullAt(0)) throw new IllegalArgumentException(
+        "quality_lr_train: the feature frame has no rows to train on")
       w = (0 to 3).map(row.getDouble)
     }
     w
@@ -140,7 +133,7 @@ object QualityLr {
       .orderBy("doc_id")
   }
 
-  private[graft] def scoreWith(feats: DataFrame, w: IndexedSeq[Double]): DataFrame = {
+  private def scoreWith(feats: DataFrame, w: IndexedSeq[Double]): DataFrame = {
     val z = lit(w(0)) + lit(w(1)) * col("f1") +
       lit(w(2)) * col("f2") + lit(w(3)) * col("f3")
     feats.withColumn("lr_score", round(lit(1d) / (lit(1d) + exp(-z)), 6))

@@ -46,8 +46,7 @@ object TextAnalysis {
 
   /** Appends `n_tokens`, `stop_ratio`, `punct_ratio` (6dp) and
     * `quality_score` (6dp) to ANY frame with a `text` column — per-row
-    * expressions only, so the same scorer runs in batch and behind a
-    * stream ([[graft.streaming.DocStream]]'s ingest gate); the score and
+    * expressions only, so every caller shares one scorer; the score and
     * ratio formulas exist exactly once per engine. The score feeds on the
     * UNROUNDED ratios; the appended ratio columns are the 6dp output
     * form. Quality: long-enough docs with organic stopword density and

@@ -1,9 +1,8 @@
 package graft.warehouse
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.Tables
 
@@ -78,78 +77,6 @@ object Merge {
         col("o_totalprice").as("new_bal"))
     mergeInto(target, changes)
   }
-
-  /** STREAMING twin of the CDC merge — the one batch/stream pairing the
-    * mutation family was missing (`window_agg`/`cusum`/sessionizers all
-    * have theirs): a change feed arrives as a stream and each micro-batch
-    * is applied through the SAME three-clause [[mergeInto]] kernel, so
-    * stream state ≡ the batch merge folded over the feed by construction
-    * (pinned in MergeStreamSpec against an independent fold AND across a
-    * stop/restart).
-    *
-    * State discipline — immutable versioned snapshots, exactly-once:
-    * Spark cannot overwrite a parquet path it is reading in the same job,
-    * and this repo's design language is immutable snapshots anyway (M5's
-    * delete-prevention is free for the same reason), so batch `i` reads
-    * the newest snapshot with version < i and writes `stateDir/v=i`.
-    * A checkpoint replay of batch `i` (crash between the state write and
-    * the offset commit) re-reads the SAME predecessor — never its own
-    * half-written output — and mode("overwrite") makes the rewrite
-    * idempotent: restart-safe end-to-end with no lakehouse ACID layer.
-    *
-    * Within a micro-batch the [[mergeInto]] one-change-per-key contract
-    * is restored by keeping the latest change per key (max `seq` — the
-    * CDC log offset): identical to what applying the changes one at a
-    * time in seq order would leave, since each clause's effect depends
-    * only on the final op/value for the key.
-    *
-    * Scale shape: each micro-batch costs ONE keyed full-outer join of
-    * (snapshot, batch-dedup) — the Delta/Iceberg MERGE shape with
-    * copy-on-write at snapshot granularity. The feed side is micro-batch
-    * sized, so AQE broadcasts it; compaction/retention of old versions is
-    * [[graft.sources.Layout]]'s compaction concern, deliberately not
-    * re-modeled here. */
-  def mergeCdcStream(changes: DataFrame, initial: DataFrame,
-      stateDir: String, checkpointDir: String): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val target = latestSnapshot(spark, stateDir, before = batchId)
-          .getOrElse(initial)
-        val w = Window.partitionBy(col("key")).orderBy(col("seq").desc)
-        val feed = batch
-          .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-          .select("key", "op", "new_bal")
-        mergeInto(target, feed)
-          .write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
-      }
-      .start()
-
-  /** Newest committed state snapshot strictly BEFORE `before` — a replayed
-    * batch must fold onto its original predecessor, not onto the partial
-    * output its crashed attempt may have left at its own version. */
-  private[warehouse] def latestSnapshot(spark: SparkSession, stateDir: String,
-      before: Long): Option[DataFrame] = {
-    // Hadoop FS, not java.io.File: the state dir is HDFS/S3A in a real
-    // deployment, and one LIST of the version dirs is the only metadata
-    // cost per micro-batch
-    val path = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val versions =
-      if (!fs.exists(path)) Array.empty[Long]
-      else fs.listStatus(path)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-        .map(_.getPath.getName.stripPrefix("v=").toLong)
-        .filter(_ < before)
-    if (versions.isEmpty) None
-    else Some(spark.read.parquet(s"$stateDir/v=${versions.max}"))
-  }
-
-  /** Current merged state after the stream has processed all available
-    * input — the read side of the versioned-snapshot contract. */
-  def currentState(spark: SparkSession, stateDir: String): Option[DataFrame] =
-    latestSnapshot(spark, stateDir, before = Long.MaxValue)
 
   /** Snapshot diff — the reviewable changeset between a table state and
     * its post-merge successor: one row per key that was added, removed,

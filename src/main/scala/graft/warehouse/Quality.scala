@@ -254,7 +254,7 @@ object Quality {
 
   /** Per-user activity histogram on power-of-two buckets — the "how
     * heavy are our heavy users" distribution that sizes per-user state
-    * (session stores, rate limits, GroupState) before deployment.
+    * (session stores, rate limits) before deployment.
     * Log2 bucketing keeps the output bounded at any corpus size where
     * a raw per-count histogram would grow with the heaviest user. */
   def userActivityHistogram(spark: SparkSession, dir: String): DataFrame = {

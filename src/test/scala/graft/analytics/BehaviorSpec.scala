@@ -27,7 +27,7 @@ class BehaviorSpec extends SparkSpec {
     assert(counts == Seq(tv.size.toLong, tc.size.toLong, tp.size.toLong))
   }
 
-  test("session metrics reconcile with the boundary entry and the sessionizer rule") {
+  test("session metrics reconcile with the boundary entry and the gap rule") {
     val m = graft.streaming.EventsStream.sessionMetrics(spark, sfDir).cache()
     val ev = Tables.events(spark, sfDir)
     // events partition into sessions; session count = users + boundaries
@@ -390,7 +390,7 @@ class BehaviorSpec extends SparkSpec {
     assert(math.abs(r.getAs[Double]("lift") - 12.0 / 9.0) < 1e-6)
   }
 
-  test("session conversion: flags reconcile against a driver-side sessionizer") {
+  test("session conversion: flags reconcile against a driver-side session walk") {
     val r = Behavior.sessionConversion(spark, sfDir).head()
     val ev = graft.Tables.events(spark, sfDir)
       .select("user_id", "event_id", "ts", "event_type").collect()

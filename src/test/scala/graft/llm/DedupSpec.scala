@@ -42,16 +42,18 @@ class DedupSpec extends SparkSpec {
       Seq((1L, 2L, 0L)))
   }
 
-  test("native word-1 fingerprint matches the exploded vote aggregate, corpus-wide") {
-    // word 0 is pinned in DocStreamSpec; this covers the wide kernel's
-    // second md5 word through the same independent groupBy formulation.
+  test("native simhash words 0 and 1 match the exploded vote aggregate, corpus-wide") {
+    // word 0 is the 60-bit fingerprint, word 1 the wide kernel's second
+    // md5 word; both against the same independent groupBy formulation.
     val sh = Dedup.shinglesOf(Tables.documents(spark, sfDir)).cache()
-    val native = sh.select(col("doc_id"),
-      SimHashWord.of(col("shingles"), 1).as("simhash"))
-    val voteAgg = Dedup.simhashFingerprintsVoteAgg(sh, word = 1)
-    assert(native.count() == voteAgg.count())
-    assert(native.except(voteAgg).isEmpty && voteAgg.except(native).isEmpty,
-      "word-1 native kernel and groupBy votes must agree for every doc")
+    for (word <- Seq(0, 1)) {
+      val native = sh.select(col("doc_id"),
+        SimHashWord.of(col("shingles"), word).as("simhash"))
+      val voteAgg = Dedup.simhashFingerprintsVoteAgg(sh, word)
+      assert(native.count() == voteAgg.count())
+      assert(native.except(voteAgg).isEmpty && voteAgg.except(native).isEmpty,
+        s"word-$word native kernel and groupBy votes must agree for every doc")
+    }
   }
 
   test("native minhash signature matches the exploded 64-buffer min aggregate, corpus-wide") {

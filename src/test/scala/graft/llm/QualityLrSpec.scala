@@ -25,6 +25,14 @@ class QualityLrSpec extends SparkSpec {
     assert(correct >= 190, s"fixture accuracy ${correct / 200.0} under 0.95 (w=$w)")
   }
 
+  test("training on a zero-row feature frame fails with a named error") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, Double, Double, Double, Double)]
+      .toDF("doc_id", "f1", "f2", "f3", "y")
+    val e = intercept[IllegalArgumentException](QualityLr.trainWeightsFrom(empty))
+    assert(e.getMessage.contains("quality_lr_train"), e.getMessage)
+  }
+
   test("training is deterministic and the registered entry exposes it") {
     val w1 = QualityLr.trainWeightsFrom(QualityLr.featFrame(spark, sfDir))
     val w2 = QualityLr.trainWeightsFrom(QualityLr.featFrame(spark, sfDir))
@@ -57,5 +65,7 @@ class QualityLrSpec extends SparkSpec {
     assert(s.filter(col("lr_score") < 0 || col("lr_score") > 1).isEmpty)
     assert(s.filter((col("lr_score") >= 0.5) =!= col("keep")).isEmpty,
       "keep must equal lr_score >= 0.5 row-for-row")
+    assert(s.filter(col("keep")).count() > 0 && s.filter(!col("keep")).count() > 0,
+      "the corpus must exercise both the keep and the drop side")
   }
 }

@@ -29,132 +29,6 @@ ENTRY = "src/main/scala/graft/SparkEntry.scala"
 README = "README.md"
 BEGIN = "<!-- BEGIN GENERATED registry index (tools/gen_inventory.py) -->"
 END = "<!-- END GENERATED registry index -->"
-TWIN_BEGIN = "<!-- BEGIN GENERATED streaming twins (tools/gen_inventory.py) -->"
-TWIN_END = "<!-- END GENERATED streaming twins -->"
-
-# ---------------------------------------------------------------------------
-# Streaming-twin coverage (VERDICT r15 #7). TWINS maps every streaming
-# kernel def (parsed from the source files below — drift fails) to the batch
-# registry entries it pairs with; NO_TWIN records, for every in-scope batch
-# entry without a twin, the one-line reason it has none. Scope = entries
-# implemented by EventsStream/Merge plus EXTRA_SCOPE; an in-scope entry in
-# neither map fails the lint.
-# ---------------------------------------------------------------------------
-TWIN_SOURCES = [
-    "src/main/scala/graft/streaming/EventsStream.scala",
-    "src/main/scala/graft/streaming/DocStream.scala",
-    "src/main/scala/graft/warehouse/Merge.scala",
-]
-TWIN_DEF_RE = re.compile(
-    r"def (streaming[A-Z]\w+|sessionize\w*|cusumDetect|mergeCdcStream)\(")
-TWINS = {
-    "streamingWindowAgg": (["window_agg"],
-        "identical transform behind a 2h watermark; append emits closed windows"),
-    "streamingSlidingAgg": (["sliding_window_agg"],
-        "same sliding window() agg; watermark bounds open-frame state"),
-    "streamingIngestDedup": (["ingest_dedup"],
-        "dropDuplicatesWithinWatermark — one key per in-horizon event"),
-    "streamingCorpusGate": (["corpus_prep_pipeline"],
-        "the funnel's per-doc stages at ingest: shared scorer gate, split drop, in-horizon exact dedup, static contamination anti-join"),
-    "streamingChunkCensus": (["chunk_dedup"],
-        "per-tumbling-window boilerplate census: in-horizon (chunk_key, doc_id) dedup feeding a windowed count — distinct spread + first carrier per window"),
-    "streamingChunkStrip": (["chunk_dedup_apply"],
-        "map-side boilerplate gate: in-row flagged-span probe against the collected census artifact + the batch kernel's indexed strip filter — zero state, zero shuffle"),
-    "streamingModelGate": (["quality_lr_score"],
-        "model-gated admission: per-row features + sigmoid with the offline-trained 4-double LR artifact as literals — zero state, zero shuffle; the rule-gate -> model-gate substitution at ingest"),
-    "streamingMediaDedup": (["media_near_dedup"],
-        "per-row dHash fingerprint over the decoded grid + the shared banded pair-stream body — a re-encoded re-upload is flagged at ingest where the digest check passes it"),
-    "streamingMediaGate": (["media_near_apply"],
-        "ingest drop gate: in-row dHash + broadcast anti-join against the static library fingerprint set on the exact batch Hamming predicate — zero state, zero shuffle; a re-encoded re-upload never enters the corpus"),
-    "streamingAudioGate": (["audio_near_dedup"],
-        "the clip twin of the media gate: in-row envelope dHash (same 60-bit batch fingerprint) + broadcast anti-join at Hamming ≤ HamMax against the static library — zero state, zero shuffle; a requantized re-upload never enters the corpus"),
-    "streamingSimhashDedup": (["simhash_dedup"],
-        "per-row native simhash_word fingerprint (no shuffle) + banded stream-stream self-join; state = in-horizon docs × 8 bands"),
-    "streamingSimhashDedupWide": (["simhash_dedup_wide"],
-        "the crawl-scale 120-bit form: two native words, 8×15-bit bands — 32k-value band buckets keep in-horizon state small 181× longer"),
-    "streamingClickAttribution": (["click_attribution"],
-        "watermarked interval stream-stream join, state bounded by the join horizon"),
-    "streamingUnattributedClicks": (["unattributed_clicks"],
-        "left-outer stream-stream join; unmatched side emits at watermark"),
-    "streamingEnrich": (["stream_enrich"],
-        "stream-static broadcast joins against the dimension tables"),
-    "streamingRateLimit": (["rate_limit_events"],
-        "first-n per (user, day) via keyed counter state + event-time TTL"),
-    "streamingForwardFill": (["forward_fill"],
-        "per-user LOCF state; optional staleness TTL; late events dropped"),
-    "streamingInterpolate": (["linear_interpolate"],
-        "bounded-lateness fills: a gap emits when the watermark passes its right endpoint"),
-    "streamingHeavyHitters": (["heavy_hitters_check"],
-        "windowed Misra-Gries state; finalized windows match the batch sketch"),
-    "cusumDetect": (["cusum_alerts"],
-        "Page's recursion as two longs of keyed state; bit-equal to the two-phase batch backtest"),
-    "sessionize": (["session_boundaries", "session_metrics"],
-        "flatMapGroupsWithState gap sessionizer — same 30-min rule as the batch lag kernel"),
-    "sessionizeWithTimeout": (["session_boundaries", "session_metrics"],
-        "the sessionizer with an event-time timeout flushing idle sessions"),
-    "mergeCdcStream": (["merge_cdc"],
-        "foreachBatch CDC fold onto versioned snapshots; replay folds onto the original predecessor"),
-}
-NO_TWIN = {
-    "session_window_agg":
-        "native session_window() is itself streaming-capable — add a watermark and the same plan streams",
-    "dense_hourly_agg":
-        "zero rows for silent hours need the GLOBAL corpus hour bounds — a read-time presentation join, not an online fold",
-    "moving_hourly_avg":
-        "a frame over the dense global grid; its online shape is the sliding-window twin, the grid itself is read-time",
-    "incremental_agg":
-        "already incremental by design — the snapshot-fold artifact lifecycle IS the streaming equivalent",
-    "snapshot_diff":
-        "audits two persisted snapshots after the fact — inherently offline artifact comparison",
-    "revenue_cusum_changepoint":
-        "offline argmax over the COMPLETE series (a changepoint is defined in hindsight); its online form is cusum_alerts",
-}
-# streaming-shaped entries implemented outside EventsStream/Merge that the
-# twin table must still cover
-EXTRA_SCOPE = {"rate_limit_events", "forward_fill", "cusum_alerts",
-               "revenue_cusum_changepoint", "heavy_hitters_check"}
-
-
-def twin_section(queries):
-    problems = []
-    defs = set()
-    for path in TWIN_SOURCES:
-        defs.update(TWIN_DEF_RE.findall(open(path).read()))
-    for d in sorted(defs - set(TWINS)):
-        problems.append(f"streaming def `{d}` missing from gen_inventory TWINS")
-    for d in sorted(set(TWINS) - defs):
-        problems.append(f"TWINS lists `{d}` which no longer exists in source")
-    scope = {n for n, impl in queries.items()
-             if impl.split(".")[0] in ("EventsStream", "Merge")} | EXTRA_SCOPE
-    twinned = {e for entries, _ in TWINS.values() for e in entries}
-    for e in sorted(twinned - set(queries)):
-        problems.append(f"TWINS cites batch entry `{e}` not in the registry")
-    for e in sorted(set(NO_TWIN) - set(queries)):
-        problems.append(f"NO_TWIN cites batch entry `{e}` not in the registry")
-    for e in sorted(scope - twinned - set(NO_TWIN)):
-        problems.append(
-            f"in-scope batch entry `{e}` has neither a streaming twin nor a NO_TWIN reason")
-    rows = [f"| `{d}` | {', '.join('`%s`' % e for e in TWINS[d][0])} | {TWINS[d][1]} |"
-            for d in sorted(TWINS)]
-    rows += [f"| — | `{e}` | {NO_TWIN[e]} |" for e in sorted(NO_TWIN)]
-    gen = "\n".join([
-        TWIN_BEGIN,
-        "",
-        f"### Batch↔streaming twin coverage ({len(TWINS)} twins, generated — do not edit)",
-        "",
-        "Every streaming kernel def in EventsStream/Merge mapped to the batch",
-        "registry entries it is pair-tested against (or, for batch kernels with",
-        "no twin, the reason none exists). `tools/gen_inventory.py` parses the",
-        "defs from source — a new streaming kernel or a renamed batch entry",
-        "fails the lint until this table knows about it.",
-        "",
-        "| Streaming kernel | Batch entries | Pairing / why none |",
-        "|---|---|---|",
-        *rows,
-        "",
-        TWIN_END,
-    ])
-    return gen, problems
 
 REG_RE = re.compile(r'"([a-z0-9_]+)" -> \(\(s, d\) => ([A-Za-z]+\.[A-Za-z0-9]+)\(s, d\)\)')
 ORACLE_RE = re.compile(r'"([a-z0-9_]+)" -> ([A-Za-z]+\.[A-Za-z0-9]+Sql|[A-Za-z]+\.[a-zA-Z0-9]+)\s*[,)]')
@@ -281,14 +155,6 @@ def main():
     else:
         new_src = readme_src.rstrip() + "\n\n" + gen + "\n"
 
-    # streaming-twin coverage table (VERDICT r15 #7)
-    twin_gen, twin_problems = twin_section(queries)
-    problems.extend(twin_problems)
-    if TWIN_BEGIN in new_src:
-        new_src = re.sub(re.escape(TWIN_BEGIN) + r".*?" + re.escape(TWIN_END),
-                         twin_gen, new_src, flags=re.S)
-    else:
-        new_src = new_src.rstrip() + "\n\n" + twin_gen + "\n"
     if new_src != readme_src:
         open(README, "w").write(new_src)
         print(f"README registry index regenerated ({len(queries)} entries)")
