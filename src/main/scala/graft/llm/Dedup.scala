@@ -79,6 +79,7 @@ object Dedup {
     * a fixed-width shuffle key at any shingle length. */
   def ngramJaccardPairs(spark: SparkSession, dir: String): DataFrame =
     ngramJaccardPairsFrom(withShingles(spark, dir), DefaultMaxShingleDf)
+      .orderBy("doc_a", "doc_b")
 
   /** Core kernel over a prepared (doc_id, shingles) frame. Shingles with
     * df > maxDf are dropped from the index as their posting lists build
@@ -99,7 +100,13 @@ object Dedup {
     * df counts) on the engine side only. The two divergence paths ride the
     * same assumption and fail together; at 64-bit width the birthday bound
     * keeps the collision probability negligible below ~10⁹ distinct
-    * shingles per corpus. */
+    * shingles per corpus.
+    *
+    * The pairs come out UNORDERED: every consumer but the
+    * [[ngramJaccardPairs]] entry joins them or resolves components over
+    * them, and a presentation sort there is not free — Catalyst drops it
+    * under a join, but under [[connectedComponents]]' `localCheckpoint`
+    * it survives as a range-sample job plus a range shuffle. */
   private[llm] def ngramJaccardPairsFrom(sh: DataFrame, maxDf: Int): DataFrame = {
     // Shingles are hashed INSIDE the array and |shingles| rides along
     // through the explode: the shuffled stream is (doc_id, n, hash) —
@@ -138,7 +145,6 @@ object Dedup {
       .withColumn("jaccard", round(col("j"), 6))
       .filter(col("jaccard") >= 0.5)
       .select("doc_a", "doc_b", "jaccard")
-      .orderBy("doc_a", "doc_b")
   }
 
   /** The inverted-index Jaccard pipeline as a reusable CTE chain ending in
@@ -845,15 +851,21 @@ object Dedup {
     * (through [[clusterLabels]]) the consumer entries, which feed joins —
     * a presentation sort under them would be wasted work. */
   private[llm] def dedupClustersFrame(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = ngramJaccardPairsFrom(withShingles(spark, dir), DefaultMaxShingleDf)
-      .select(col("doc_a").as("u"), col("doc_b").as("v"))
-    val comp = connectedComponents(pairs)
+    val comp = components(spark, dir)
     // cluster count ≪ corpus: the size side broadcasts under AQE
     val sizes = comp.groupBy("component").agg(count(lit(1)).as("cluster_size"))
     comp.join(sizes, "component")
       .select(col("node").as("doc_id"), col("component").as("cluster_id"),
         col("cluster_size"), (col("node") === col("component")).as("is_canonical"))
   }
+
+  /** (node, component) over the corpus's exact-Jaccard pair graph: the
+    * shingle → pairs → [[connectedComponents]] wiring under both
+    * [[dedupClustersFrame]] and [[dedupApply]]. */
+  private def components(spark: SparkSession, dir: String): DataFrame =
+    connectedComponents(
+      ngramJaccardPairsFrom(withShingles(spark, dir), DefaultMaxShingleDf)
+        .select(col("doc_a").as("u"), col("doc_b").as("v")))
 
   /** The drop step that finishes the dedup pipeline: the corpus with
     * every non-canonical clustered document removed — one row per
@@ -863,13 +875,16 @@ object Dedup {
     * Scale shape: the drop list is only the clustered non-canonical
     * documents — near-dup clusters are a small fraction of any corpus —
     * so the anti-join broadcasts under AQE and the corpus side streams
-    * map-only, never shuffling a document row. The cluster table is
-    * built by [[clusterLabels]] inside this call, so every execution
-    * pays the full build plus the anti-join. */
+    * map-only, never shuffling a document row. The drop list is read
+    * straight off the [[components]] built inside this call — a node
+    * whose component is not itself — so every execution pays the pair
+    * and component build plus the anti-join, and none of the cluster
+    * sizes or the label checkpoint [[clusterLabels]] adds for its
+    * multi-read consumers. */
   def dedupApply(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val drops = clusterLabels(spark, dir)
-      .filter(!col("is_canonical")).select("doc_id")
+    val drops = components(spark, dir)
+      .filter(col("node") =!= col("component")).select(col("node").as("doc_id"))
     docs.join(drops, Seq("doc_id"), "left_anti")
       .select("doc_id", "lang", "source", "n_chars")
       .orderBy("doc_id")

@@ -1,7 +1,11 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.math.RoundingMode
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.Decimal
 
 import graft.Tables
 import graft.functions.RegexCount
@@ -30,18 +34,21 @@ import graft.RunScope.ScratchCacheOps
   *    DOUBLE and divided by n with the same IEEE ops on both engines;
   *  - weight updates round to 6dp per round; the oracle unrolls the
   *    identical [[Rounds]]-step chain as cross-joined one-row CTEs
-  *    generated by the same loop bounds the engine uses;
+  *    generated by the same loop bounds the engine uses, and the engine
+  *    runs each round as one RDD job that repeats Catalyst's ops in
+  *    Catalyst's order ([[gdTrajectory]]);
   *  - `exp` is the same assumed-identical-libm class as the `ln` the
   *    idf/PMI/BM25/Zipf oracles already rely on (green at both scales
   *    since r13).
   *
-  * Scale shape (100 TB): each GD round is ONE aggregated pass over the
-  * cached feature frame — map-side partial sums, a 5-column one-row
-  * reduce, no shuffle of document rows; the model is 4 doubles (a
-  * bounded driver artifact, the [[TextAnalysis]] BPE-merge-table
-  * class), so [[Rounds]] driver round-trips move 32 bytes each.
-  * Scoring and eval are map-only over the corpus plus a one-row
-  * aggregate. A web-scale run would mini-batch or subsample rounds;
+  * Scale shape (100 TB): each GD round is ONE tree-aggregated pass over
+  * the cached feature frame, the way MLlib trains — map-side partial
+  * sums, a 5-value reduce, no shuffle of document rows, and no query
+  * planned per round; the model is 4 doubles (a bounded driver artifact,
+  * the [[TextAnalysis]] BPE-merge-table class), so [[Rounds]] driver
+  * round-trips move 32 bytes each. Scoring and eval are map-only over
+  * the same cached frame, the sigmoid fused into the plan, plus a
+  * one-row aggregate. A web-scale run would mini-batch or subsample rounds;
   * full-batch GD is the deterministic, oracle-mirrorable formulation
   * and its per-round cost is the cheapest scan in the registry. */
 object QualityLr {
@@ -74,48 +81,99 @@ object QualityLr {
       .select("doc_id", "f1", "f2", "f3", "y")
   }
 
-  /** The trained model: [[Rounds]] batch-GD steps, every arithmetic op
-    * IN-PLAN (the one-row weight update is a `select` over the one-row
-    * gradient aggregate, so engine and oracle share the exact SQL op
-    * sequence — no driver-side float math beyond reading the 4 doubles
-    * back per round).
+  /** The feature frame a call trains and scores over: [[featFrame]]
+    * spread by [[Tables.sizedSpread]] and cached. A feature row is 5
+    * numerics (~40 B), so at bench scale the whole frame is a few hundred
+    * KB, and a `defaultParallelism` layout would make each of the
+    * [[Rounds]] training jobs schedule near-empty tasks. The repartition
+    * is a shuffle, so the regex-heavy extraction upstream keeps its full
+    * scan parallelism; it runs once per call, for training and scoring
+    * alike. Results are invariant to the partition count (every gradient
+    * is an exact decimal sum). */
+  private[graft] def cachedFeats(spark: SparkSession, dir: String): DataFrame =
+    Tables.sizedSpread(featFrame(spark, dir)).scratchCache()
+
+  /** The trained model: [[Rounds]] batch-GD steps from zero weights.
+    * Pass [[cachedFeats]]; any (f1, f2, f3, y) double frame trains. */
+  private[graft] def trainWeightsFrom(feats: DataFrame): IndexedSeq[Double] =
+    gdTrajectory(feats).last
+
+  /** The weights after each round, the zero start first. The feature rows
+    * are read as one `RDD[InternalRow]` taken once, and each round is one
+    * `treeAggregate` job over it: four exact decimal sums and the row
+    * count, combined map-side. No query is planned or code-generated
+    * inside the loop; a plan per round cost more than the round's scan.
     *
-    * The cached frame is [[Tables.sizedSpread]] before caching: a feature
-    * row is 5 numerics (~40 B), so at bench scale the whole frame is a few
-    * hundred KB and the [[Rounds]] sequential one-row aggregate jobs
-    * would otherwise each schedule `defaultParallelism` near-empty tasks
-    * over the cached partitions — pure scheduler overhead paid 16×. The
-    * repartition is a shuffle, so the regex-heavy feature extraction
-    * upstream keeps its full scan parallelism. Results are invariant to
-    * the partition count: every per-round aggregate is an exact decimal
-    * sum (combination-order-proof). */
-  private[graft] def trainWeightsFrom(feats0: DataFrame): IndexedSeq[Double] = {
-    val feats = Tables.sizedSpread(feats0).scratchCache() // Rounds aggregated passes
-    var w = IndexedSeq(0d, 0d, 0d, 0d)
-    for (_ <- 1 to Rounds) {
-      val z = lit(w(0)) + lit(w(1)) * col("f1") +
-        lit(w(2)) * col("f2") + lit(w(3)) * col("f3")
-      val r = lit(1d) / (lit(1d) + exp(-z)) - col("y")
-      def g(x: Column) = sum(round(r * x, 12).cast("decimal(28,14)"))
-      val row = feats
-        .agg(g(lit(1d)).as("g0"), g(col("f1")).as("g1"),
-          g(col("f2")).as("g2"), g(col("f3")).as("g3"),
-          count(lit(1)).as("n"))
-        .select((0 to 3).map(j =>
-          round(lit(w(j)) - lit(Lr) * (col(s"g$j").cast("double") / col("n")), 6)
-            .as(s"w$j")): _*)
-        .head()
-      // sum over no rows is null, and so is every weight derived from it
-      if (row.isNullAt(0)) throw new IllegalArgumentException(
+    * Each op is Catalyst's, in Catalyst's order, so the weights are the
+    * ones the SQL formulation (the oracle's unrolled CTE chain) computes:
+    *  - z = ((w0 + w1·f1) + w2·f2) + w3·f3, then
+    *    r = 1 / (1 + exp(−z)) − y with `StrictMath.exp`, as Spark's `Exp`;
+    *  - each term r·x is rounded to 12dp as Spark's double `round` does,
+    *    cast DECIMAL(28,14) through Spark's `Decimal` (HALF_UP), and the
+    *    terms are summed exactly, so the combination order cannot matter;
+    *  - w ← round(w − Lr · (g.toDouble / n), 6), with `Decimal.toDouble`.
+    * A row with a null feature or label adds to n but to no sum, as a
+    * SQL `sum` skips nulls. With no row to sum, the weights would be null,
+    * so training fails with a named error instead. */
+  private[llm] def gdTrajectory(feats: DataFrame): IndexedSeq[IndexedSeq[Double]] = {
+    val rows = feats.select("f1", "f2", "f3", "y").queryExecution.toRdd
+    (1 to Rounds).scanLeft(IndexedSeq(0d, 0d, 0d, 0d)) { (w, _) =>
+      val ws = w.toArray
+      val g = rows.treeAggregate(new GradSums)(_.add(_, ws), _.merge(_))
+      if (g.live == 0) throw new IllegalArgumentException(
         "quality_lr_train: the feature frame has no rows to train on")
-      w = (0 to 3).map(row.getDouble)
+      (0 to 3).map(j => sqlRound(w(j) - Lr * (Decimal(g.sums(j)).toDouble / g.n), 6))
     }
-    w
+  }
+
+  /** Spark's `round` on a double: HALF_UP over the shortest decimal form. */
+  private def sqlRound(d: Double, scale: Int): Double =
+    if (d.isNaN || d.isInfinite) d
+    else java.math.BigDecimal.valueOf(d).setScale(scale, RoundingMode.HALF_UP).doubleValue
+
+  /** One round's partial gradient: the four decimal sums, the row count
+    * n, and how many rows had non-null terms. */
+  private final class GradSums extends Serializable {
+    val sums: Array[java.math.BigDecimal] = Array.fill(4)(java.math.BigDecimal.ZERO)
+    var n = 0L
+    var live = 0L
+
+    def add(row: InternalRow, w: Array[Double]): GradSums = {
+      n += 1
+      if (!(row.isNullAt(0) || row.isNullAt(1) || row.isNullAt(2) || row.isNullAt(3))) {
+        val f1 = row.getDouble(0)
+        val f2 = row.getDouble(1)
+        val f3 = row.getDouble(2)
+        val z = ((w(0) + w(1) * f1) + w(2) * f2) + w(3) * f3
+        val r = 1d / (1d + StrictMath.exp(-z)) - row.getDouble(3)
+        term(0, r * 1d)
+        term(1, r * f1)
+        term(2, r * f2)
+        term(3, r * f3)
+        live += 1
+      }
+      this
+    }
+
+    // round(r·x, 12) cast DECIMAL(28,14); a term lies in [−1, 1], so the
+    // cast cannot overflow
+    private def term(j: Int, rx: Double): Unit = {
+      val d = Decimal(sqlRound(rx, 12))
+      d.changePrecision(28, 14)
+      sums(j) = sums(j).add(d.toJavaBigDecimal)
+    }
+
+    def merge(o: GradSums): GradSums = {
+      for (j <- 0 to 3) sums(j) = sums(j).add(o.sums(j))
+      n += o.n
+      live += o.live
+      this
+    }
   }
 
   /** The trained weights, one row per feature. */
   def qualityLrTrain(spark: SparkSession, dir: String): DataFrame = {
-    val w = trainWeightsFrom(featFrame(spark, dir))
+    val w = trainWeightsFrom(cachedFeats(spark, dir))
     spark.createDataFrame(FeatNames.zip(w)).toDF("feature", "weight")
       .orderBy("feature")
   }
@@ -125,9 +183,10 @@ object QualityLr {
     * model-gated ingest actually reads. The model is trained by
     * [[trainWeightsFrom]] inside this call (the weights are a value, so
     * a rewritten corpus is always scored by a model trained on it);
-    * scoring is then map-only over the corpus. */
+    * scoring is then map-only over the same cached feature frame, with
+    * the sigmoid fused into the plan as one expression. */
   def qualityLrScore(spark: SparkSession, dir: String): DataFrame = {
-    val feats = featFrame(spark, dir)
+    val feats = cachedFeats(spark, dir)
     scoreWith(feats, trainWeightsFrom(feats))
       .select(col("doc_id"), col("lr_score"), (col("lr_score") >= 0.5).as("keep"))
       .orderBy("doc_id")
@@ -144,7 +203,7 @@ object QualityLr {
     * audit a pipeline runs before swapping a hand rule for a model.
     * Trains its own model in the call, like [[qualityLrScore]]. */
   def qualityLrEval(spark: SparkSession, dir: String): DataFrame = {
-    val feats = featFrame(spark, dir)
+    val feats = cachedFeats(spark, dir)
     scoreWith(feats, trainWeightsFrom(feats))
       .select(col("y"), (col("lr_score") >= 0.5).as("keep"))
       .agg(

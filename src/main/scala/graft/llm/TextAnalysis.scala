@@ -1,7 +1,11 @@
 package graft.llm
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.Tables
 import graft.analytics.Quantiles
@@ -1168,18 +1172,15 @@ object TextAnalysis {
     * leftmost non-overlapping replace, the exact pass semantics
     * [[bpeTokenizeM]]/`bpe_apply` use at encode time.
     *
-    * Shape at 100 TB: the corpus collapses ONCE to the frequency-weighted
-    * word VOCABULARY (the classic BPE trainer structure — training cost
-    * scales with distinct words, not corpus bytes); each round is one
-    * aggregate over that vocab-sized frame plus a bounded
-    * top-[[BpeBatchWindow]] collect of which the first row is the
-    * merge. The per-round rewrite appends a single
-    * `replace` projection to the run-scoped cached vocab frame, so round
-    * k never re-tokenizes from scratch. Pair extraction zips adjacent
-    * slices of the token array (no per-index `element_at` into a derived
-    * array — the projection-collapse inlining trap, SCALE.md r17) and
-    * explodes with `explode_outer` (non-outer explode plants an
-    * interpreted generator filter, same study).
+    * Shape at 100 TB: the corpus collapses ONCE, in Catalyst, to the
+    * frequency-weighted word VOCABULARY (the classic BPE trainer
+    * structure — training cost scales with distinct words, not corpus
+    * bytes), which is cached and cut once into per-word token arrays.
+    * Each round is then one plain RDD job over that vocab-sized set: a
+    * pair-count `reduceByKey` plus a bounded top-[[BpeBatchWindow]]
+    * `takeOrdered`, of which the first row is the merge. The merge is
+    * applied to the token arrays of the round before, so round k never
+    * re-tokenizes from scratch, and no query is planned inside the loop.
     *
     * The loop is [[bpeTrainBatchedFrom]] with a batch of one: the first
     * candidate of a round's window has no higher-ranked candidate, so it
@@ -1242,18 +1243,16 @@ object TextAnalysis {
   private[llm] val BpeBatchWindow = BpeBatchK * 4
 
   /** Lineage-truncation cadence for DEEP trains (r20, found by the
-    * 256-merge pricing probe at 25×): every round extends `cur`'s
-    * LOGICAL plan by one rewrite projection, so a deep train's plan
-    * grows linearly — and the plan-STRING that AQE's onUpdatePlan
-    * renders per executed job grows with it, going quadratic across
-    * rounds (the probe died in `QueryExecution.explainString` →
-    * StringBuilder OOM, with the data itself a comfortable few hundred
-    * MB). Caching bounds RECOMPUTE, not plan text; only lineage
-    * truncation bounds both. Every [[BpeCheckpointEvery]]-th round the
-    * trainers swap the cached frame for an eager `localCheckpoint()`
-    * (plan collapses to a LogicalRDD scan; blocks freed by the context
-    * cleaner as references retire), so plan depth — and with it
-    * analysis, optimization, and string cost per round — is O(cadence)
+    * 256-merge pricing probe at 25×): every round extends the working
+    * RDD's lineage by one merge step, so a deep train's lineage grows
+    * linearly — and every task of a round serializes that whole chain,
+    * and the scheduler walks it (SCALE.md r20: as a growing plan, it
+    * killed the probe's driver long before the data mattered).
+    * Persisting bounds RECOMPUTE, not lineage; only truncation bounds
+    * both. Every
+    * [[BpeCheckpointEvery]]-th round's RDD is marked `localCheckpoint()`,
+    * which its next job materializes and cuts, so lineage depth — and
+    * with it task size and scheduling cost per round — is O(cadence)
     * regardless of train depth. Output-invariant: checkpointing only
     * pins the same deterministic rows (prefix-stability across the
     * boundary is spec-pinned). The registered entries never reach the
@@ -1293,8 +1292,8 @@ object TextAnalysis {
     * round mines ONE pair-count aggregate over the vocab frame, collects
     * the bounded top-[[BpeBatchWindow]] candidate window, accepts up to
     * `batchK` pairwise-non-interacting merges from it
-    * ([[bpeSelectBatch]]), and applies them all in ONE rewrite
-    * projection. A 32k-merge vocabulary then costs 32k/K Spark jobs
+    * ([[bpeSelectBatch]]), and applies them all in ONE pass over the
+    * token arrays. A 32k-merge vocabulary then costs 32k/K Spark jobs
     * instead of 32k, and the chained-lineage depth drops by the same
     * factor (the r18 verdict's "scale anti-pattern in embryo"). Merges
     * whose counts a same-round merge could invalidate are NOT batched —
@@ -1316,61 +1315,98 @@ object TextAnalysis {
       .select(explode(split(lower(trim(col("text"))), "\\s+")).as("w"))
       .filter(length(col("w")) >= 2)
       .groupBy("w").agg(count(lit(1)).as("cnt"))
-    var cur = graft.Tables.sizedSpread(vocab.select(col("cnt"),
-      regexp_replace(col("w"), "(.)", TokO + "$1" + TokC).as("s"))).scratchCache()
-    // ^ size-derived cache layout (r21, Tables.sizedSpread): the vocab
+    // size-derived cache layout (r21, Tables.sizedSpread): the vocab
     // frame is tens of KB at bench scale, and every training round runs
-    // a full aggregate job over the cached partitions — a blanket
-    // 32-partition cache made each round schedule near-empty tasks
-    // deep-train cache discipline (r20, found by the 256-merge pricing
-    // probe at 25×): each round caches a NEW rewritten frame, so an
-    // R-round train would stack R vocab-sized caches and OOM long
-    // before a production 32k-merge depth. The round's window collect
-    // fully materializes the CURRENT round's cache, after which the
-    // previous round's blocks are dead — release them there, keeping
-    // ≤ 2 resident regardless of depth (RunScope's end-of-entry
-    // releaseAll still sweeps the final two; double-unpersist is a no-op)
-    var prevCur: DataFrame = null
+    // a full pass over its partitions — a blanket 32-partition layout
+    // made each round schedule near-empty tasks
+    val cached = graft.Tables.sizedSpread(vocab.select(col("cnt"),
+      regexp_replace(col("w"), "(.)", TokO + "$1" + TokC).as("s"))).scratchCache()
+    // the token arrays, cut ONCE from the cached strings by the oracle's
+    // delimiter regex; every round after that is plain RDD work
+    val words0 = cached.select(col("cnt"), regexp_extract_all(col("s"),
+        lit(TokO + "([^" + TokC + "]*)" + TokC), lit(1)).as("toks"))
+      .queryExecution.toRdd.map { row =>
+        val a = row.getArray(1)
+        (row.getLong(0), Array.tabulate(a.numElements())(a.getUTF8String(_).toString))
+      }
+    val parts = words0.getNumPartitions
+    // deep-train cache discipline (r20): each round persists a NEW
+    // rewritten RDD, so an R-round train would stack R vocab-sized
+    // copies. The round's mining job fully materializes the CURRENT
+    // round's blocks, after which the previous round's are dead —
+    // release them there, keeping ≤ 2 resident regardless of depth
+    var cur: RDD[(Long, Array[String])] = words0
+    var prev: RDD[(Long, Array[String])] = null
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var done = false
-    for (round <- 1 to rounds if !done) {
-      val toks = regexp_extract_all(col("s"),
-        lit(TokO + "([^" + TokC + "]*)" + TokC), lit(1))
-      // bounded driver artifact: the window is BpeBatchWindow rows
-      val window = cur.select(col("cnt"), toks.as("toks"))
-        .filter(size(col("toks")) >= 2)
-        .select(col("cnt"), explode_outer(zip_with(
-          slice(col("toks"), lit(1), size(col("toks")) - 1),
-          slice(col("toks"), lit(2), size(col("toks")) - 1),
-          (l, r) => struct(l.as("l"), r.as("r")))).as("pr"))
-        .groupBy(col("pr.l").as("lhs"), col("pr.r").as("rhs"))
-        .agg(sum(col("cnt")).as("n"))
-        .orderBy(col("n").desc, col("lhs"), col("rhs"))
-        .limit(BpeBatchWindow).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
-      if (prevCur != null) prevCur.unpersist()
-      prevCur = cur
-      val accepted = bpeSelectBatch(window, batchK)
-      if (accepted.isEmpty) done = true
-      else {
-        merges ++= accepted.map { case (l, r, n) => (round, l, r, n) }
-        // one rewrite projection applies the whole batch: the replaces
-        // commute (footprint-disjoint), applied in rank order anyway
-        val next = cur.select(col("cnt"),
-          accepted.foldLeft(col("s")) { case (c, (l, r, _)) =>
-            replace(c, lit(TokO + l + TokC + TokO + r + TokC),
-              lit(TokO + l + r + TokC))
-          }.as("s"))
-        // deep-train lineage truncation — see BpeCheckpointEvery
-        cur = if (round % BpeCheckpointEvery == 0) next.localCheckpoint()
-          else next.scratchCache()
+    try {
+      for (round <- 1 to rounds if !done) {
+        // bounded driver artifact: the window is BpeBatchWindow rows
+        val window = cur
+          .flatMap { case (cnt, t) =>
+            Iterator.range(0, t.length - 1).map(i => ((t(i), t(i + 1)), cnt)) }
+          .reduceByKey(_ + _, parts)
+          .takeOrdered(BpeBatchWindow)(BpePairRank)
+          .map { case ((l, r), n) => (l, r, n) }.toSeq
+        if (prev != null) prev.unpersist(blocking = false)
+        prev = cur
+        val accepted = bpeSelectBatch(window, batchK)
+        if (accepted.isEmpty) done = true
+        else {
+          merges ++= accepted.map { case (l, r, n) => (round, l, r, n) }
+          val batch = accepted.map { case (l, r, _) => (l, r) }
+          // a word left with one token can never yield a pair again
+          val next = cur.map { case (cnt, t) => (cnt, bpeMergeTokens(t, batch)) }
+            .filter(_._2.length >= 2)
+            .persist(StorageLevel.MEMORY_AND_DISK)
+          // deep-train lineage truncation — see BpeCheckpointEvery
+          if (round % BpeCheckpointEvery == 0) next.localCheckpoint()
+          cur = next
+        }
       }
+    } finally {
+      Seq(cur, prev).filter(_ != null).foreach(_.unpersist(blocking = false))
+      cached.unpersist()
     }
     import spark.implicits._
     merges.toSeq.zipWithIndex
       .map { case ((round, l, r, n), i) => (i + 1L, round, l, r, n) }
       .toDF("rk", "round", "lhs", "rhs", "n")
       .orderBy("rk")
+  }
+
+  /** Applies a merge batch to one word's tokens, in rank order, each merge
+    * one left-to-right non-overlapping pass: the token-array form of the
+    * `replace(s, ␟l␞␟r␞, ␟lr␞)` that [[bpeTokenizeM]] and the oracle run
+    * over the delimited string (a match there starts at an open mark, so
+    * it always covers two whole adjacent tokens). */
+  private def bpeMergeTokens(toks: Array[String],
+                             batch: Seq[(String, String)]): Array[String] =
+    batch.foldLeft(toks) { case (t, (l, r)) =>
+      val out = Array.newBuilder[String]
+      var i = 0
+      while (i < t.length) {
+        if (i + 1 < t.length && t(i) == l && t(i + 1) == r) { out += l + r; i += 2 }
+        else { out += t(i); i += 1 }
+      }
+      out.result()
+    }
+
+  /** The candidate order (n DESC, lhs, rhs), with tokens compared as
+    * Spark compares strings: unsigned UTF-8 bytes, i.e. code points — not
+    * `String.compareTo`'s UTF-16 units, which put a supplementary
+    * character before U+E000..U+FFFF. */
+  private object BpePairRank extends Ordering[((String, String), Long)] {
+    private def bin(a: String, b: String): Int =
+      java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8))
+    def compare(x: ((String, String), Long), y: ((String, String), Long)): Int = {
+      val byN = java.lang.Long.compare(y._2, x._2)
+      if (byN != 0) byN
+      else {
+        val byL = bin(x._1._1, y._1._1)
+        if (byL != 0) byL else bin(x._1._2, y._1._2)
+      }
+    }
   }
 
   /** Oracle: the same batched rule unrolled as chained CTE stages. Per

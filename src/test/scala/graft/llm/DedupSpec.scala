@@ -1,5 +1,7 @@
 package graft.llm
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
@@ -497,5 +499,28 @@ class DedupSpec extends SparkSpec {
     assert(out.length == 1)
     assert(out.head.getLong(0) == 7L && out.head.getLong(1) == 8L)
     assert(math.abs(out.head.getAs[Double]("cosine") - 1.0) < 1e-4)
+  }
+
+  test("dedup_apply equals its clusterLabels form at sf0.001 and sf0.01") {
+    for (dir <- Seq(sfDir, SparkSpec.gateDir)) {
+      val docs = Tables.documents(spark, dir)
+      val viaLabels = docs
+        .join(Dedup.clusterLabels(spark, dir).filter(!col("is_canonical")).select("doc_id"),
+          Seq("doc_id"), "left_anti")
+        .select("doc_id", "lang", "source", "n_chars")
+        .orderBy("doc_id")
+        .collect().toSeq
+      val got = Dedup.dedupApply(spark, dir).collect().toSeq
+      assert(got == viaLabels, s"$dir: dedup_apply diverged from the clusterLabels form")
+      assert(got.length < docs.count(), s"$dir: nothing was dropped")
+    }
+  }
+
+  test("the pair kernel carries no global sort; the pairs entry adds one") {
+    def globalSorts(df: DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect { case s: Sort if s.global => s }.size
+    val sh = Dedup.shinglesOf(Tables.documents(spark, sfDir))
+    assert(globalSorts(Dedup.ngramJaccardPairsFrom(sh, Dedup.DefaultMaxShingleDf)) == 0)
+    assert(globalSorts(Dedup.ngramJaccardPairs(spark, sfDir)) == 1)
   }
 }

@@ -1,20 +1,52 @@
 package graft.llm
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
 
 class QualityLrSpec extends SparkSpec {
 
-  test("GD learns a planted separable boundary (sign and accuracy)") {
+  /** y = [f1 > 0.5] with f2 = f3 = 0: one live feature, linearly
+    * separable. */
+  private def planted: DataFrame = {
     import spark.implicits._
-    // y = [f1 > 0.5] with f2 = f3 = 0: one live feature, linearly
-    // separable; after Rounds steps the learned plane must classify
-    // the fixture perfectly and put positive weight on f1
-    val feats = (0 until 200).map { i =>
+    (0 until 200).map { i =>
       val f1 = (i % 100) / 100.0
       (i.toLong, f1, 0.0, 0.0, if (f1 > 0.5) 1.0 else 0.0)
     }.toDF("doc_id", "f1", "f2", "f3", "y")
+  }
+
+  /** One GD round as a Catalyst query: the per-round aggregate and weight
+    * update the trainer ran before it moved to one RDD job per round. */
+  private def catalystRound(feats: DataFrame, w: IndexedSeq[Double]): IndexedSeq[Double] = {
+    val z = lit(w(0)) + lit(w(1)) * col("f1") +
+      lit(w(2)) * col("f2") + lit(w(3)) * col("f3")
+    val r = lit(1d) / (lit(1d) + exp(-z)) - col("y")
+    def g(x: Column) = sum(round(r * x, 12).cast("decimal(28,14)"))
+    val row = feats
+      .agg(g(lit(1d)).as("g0"), g(col("f1")).as("g1"),
+        g(col("f2")).as("g2"), g(col("f3")).as("g3"),
+        count(lit(1)).as("n"))
+      .select((0 to 3).map(j =>
+        round(lit(w(j)) - lit(QualityLr.Lr) * (col(s"g$j").cast("double") / col("n")), 6)
+          .as(s"w$j")): _*)
+      .head()
+    (0 to 3).map(row.getDouble)
+  }
+
+  private def bits(w: IndexedSeq[Double]) = w.map(java.lang.Double.doubleToRawLongBits)
+
+  test("GD learns a planted separable boundary (sign and accuracy)") {
+    // after Rounds steps the learned plane must classify the planted
+    // fixture perfectly and put positive weight on its one live feature
+    val feats = planted
     val w = QualityLr.trainWeightsFrom(feats)
     assert(w(1) > 0, s"live feature weight must be positive: $w")
     assert(w(2) == 0.0 && w(3) == 0.0,
@@ -67,5 +99,48 @@ class QualityLrSpec extends SparkSpec {
       "keep must equal lr_score >= 0.5 row-for-row")
     assert(s.filter(col("keep")).count() > 0 && s.filter(!col("keep")).count() > 0,
       "the corpus must exercise both the keep and the drop side")
+  }
+
+  test("every RDD training round equals the Catalyst round, bit for bit") {
+    for ((name, feats) <- Seq("planted" -> planted,
+        "sf0.001" -> QualityLr.cachedFeats(spark, sfDir),
+        "sf0.01" -> QualityLr.cachedFeats(spark, SparkSpec.gateDir))) {
+      val traj = QualityLr.gdTrajectory(feats)
+      assert(traj.length == QualityLr.Rounds + 1)
+      assert(traj.head == IndexedSeq(0d, 0d, 0d, 0d))
+      for (k <- 1 to QualityLr.Rounds) {
+        val want = catalystRound(feats, traj(k - 1))
+        assert(bits(traj(k)) == bits(want),
+          s"$name round $k: RDD ${traj(k)} vs Catalyst $want")
+      }
+      assert(traj.last != traj.head, s"$name: the weights never moved")
+    }
+  }
+
+  test("training runs Rounds jobs once the cache is built, and no SQL execution") {
+    val sc = spark.sparkContext
+    val feats = QualityLr.cachedFeats(spark, sfDir)
+    feats.count() // builds the cache
+    val sqlRuns = new AtomicInteger
+    val onSql = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => sqlRuns.incrementAndGet()
+        case _ =>
+      }
+    }
+    val jobs = try SparkSpec.jobsDuring(spark) {
+      sc.addSparkListener(onSql)
+      QualityLr.trainWeightsFrom(feats)
+    }._2 finally sc.removeSparkListener(onSql)
+    assert(jobs == QualityLr.Rounds, s"$jobs jobs for ${QualityLr.Rounds} rounds")
+    assert(sqlRuns.get == 0, s"${sqlRuns.get} SQL executions inside the training loop")
+  }
+
+  test("scoring reads the cached feature frame the model trained on") {
+    val plan = QualityLr.qualityLrScore(spark, sfDir).queryExecution.withCachedData
+    assert(plan.collect { case r: InMemoryRelation => r }.nonEmpty,
+      s"scoring does not read the cached features:\n$plan")
+    assert(plan.collect { case r: LogicalRelation => r }.isEmpty,
+      s"scoring re-reads the corpus instead of the cached features:\n$plan")
   }
 }

@@ -329,6 +329,82 @@ class TextAnalysisSpec extends SparkSpec {
       s"a 9-round train must equal the 12-round prefix:\n$nine\nvs\n$deep")
   }
 
+  /** The trainer loop as Catalyst queries, the form the RDD rounds
+    * replaced: per round, a pair-count aggregate over the delimited word
+    * strings, the ordered top-window collect, and one `replace` per
+    * accepted merge. */
+  private def catalystBpe(docs: DataFrame, rounds: Int,
+                          batchK: Int): Seq[(Long, Int, String, String, Long)] = {
+    val (o, c) = ("\u001F", "\u001E")
+    var cur = docs.select(explode(split(lower(trim(col("text"))), "\\s+")).as("w"))
+      .filter(length(col("w")) >= 2)
+      .groupBy("w").agg(count(lit(1)).as("cnt"))
+      .select(col("cnt"), regexp_replace(col("w"), "(.)", o + "$1" + c).as("s"))
+      .cache()
+    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
+    var done = false
+    for (round <- 1 to rounds if !done) {
+      val toks = regexp_extract_all(col("s"), lit(o + "([^" + c + "]*)" + c), lit(1))
+      val window = cur.select(col("cnt"), toks.as("toks"))
+        .filter(size(col("toks")) >= 2)
+        .select(col("cnt"), explode_outer(zip_with(
+          slice(col("toks"), lit(1), size(col("toks")) - 1),
+          slice(col("toks"), lit(2), size(col("toks")) - 1),
+          (l, r) => struct(l.as("l"), r.as("r")))).as("pr"))
+        .groupBy(col("pr.l").as("lhs"), col("pr.r").as("rhs"))
+        .agg(sum(col("cnt")).as("n"))
+        .orderBy(col("n").desc, col("lhs"), col("rhs"))
+        .limit(TextAnalysis.BpeBatchWindow).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+      val accepted = TextAnalysis.bpeSelectBatch(window, batchK)
+      if (accepted.isEmpty) done = true
+      else {
+        merges ++= accepted.map { case (l, r, n) => (round, l, r, n) }
+        cur = cur.select(col("cnt"), accepted.foldLeft(col("s")) { case (s, (l, r, _)) =>
+          replace(s, lit(o + l + c + o + r + c), lit(o + l + r + c))
+        }.as("s")).cache()
+      }
+    }
+    merges.toSeq.zipWithIndex.map { case ((round, l, r, n), i) => (i + 1L, round, l, r, n) }
+  }
+
+  private def rddBpe(docs: DataFrame, rounds: Int,
+                     batchK: Int): Seq[(Long, Int, String, String, Long)] = {
+    import spark.implicits._
+    TextAnalysis.bpeTrainBatchedFrom(spark, docs, rounds, batchK)
+      .as[(Long, Int, String, String, Long)].collect().toSeq
+  }
+
+  test("RDD bpe rounds equal the Catalyst loop at sf0.01, K = 1 and K = 4") {
+    val docs = Tables.documents(spark, SparkSpec.gateDir)
+    for ((rounds, k) <- Seq((8, 1), (4, 4))) {
+      val got = rddBpe(docs, rounds, k)
+      assert(got.map(_._2).distinct == (1 to rounds), s"K=$k: the corpus dried up early: $got")
+      assert(got == catalystBpe(docs, rounds, k), s"K=$k diverged: $got")
+    }
+  }
+
+  test("bpe ties break by UTF-8 bytes, not UTF-16 units") {
+    import spark.implicits._
+    // ａ (U+FF41) sorts BEFORE 𝐚 (U+1D41A) by code point, which is the
+    // UTF-8 byte order Spark compares strings by; in UTF-16 units 𝐚's
+    // high surrogate U+D835 sorts first. Both pairs count 3, so only the
+    // string order decides which merge leads.
+    val docs = ((1 to 3).map(i => (i.toLong, "ａｂ")) ++
+      (4 to 6).map(i => (i.toLong, "𝐚𝐛"))).toDF("doc_id", "text")
+    assert("𝐚".compareTo("ａ") < 0, "fixture assumes the UTF-16 order is reversed")
+    val seq = rddBpe(docs, rounds = 2, batchK = 1)
+    assert(seq == Seq((1L, 1, "ａ", "ｂ", 3L), (2L, 2, "𝐚", "𝐛", 3L)), s"got $seq")
+    assert(seq == catalystBpe(docs, rounds = 2, batchK = 1))
+    assert(rddBpe(docs, rounds = 1, batchK = 2) == catalystBpe(docs, rounds = 1, batchK = 2))
+  }
+
+  test("bpe training on a zero-row corpus learns zero merges") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    assert(rddBpe(empty, rounds = 8, batchK = 1).isEmpty)
+  }
+
   test("batched bpe defers interacting candidates to the next round") {
     import spark.implicits._
     // "abc"×10 + "de"×5: round-1 candidates are (a,b)=10, (b,c)=10,
