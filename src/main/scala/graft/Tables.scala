@@ -60,17 +60,23 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame = table(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame = table(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
+  /** The reader setting that reads parquet TIMESTAMP(NANOS) as long. */
+  private[graft] val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
   /** The driver's events.parquet stores ts as TIMESTAMP(NANOS), which
     * Spark's parquet reader rejects by default: read nanos as long and
     * convert to a µs timestamp with integer division (the corpus
     * generator emits µs precision, so the ns remainder is 0 — lossless).
     * Other writers (e.g. tools/gen_scale.py via DuckDB) emit encodings
     * Spark reads natively as TIMESTAMP_NTZ or TIMESTAMP — normalize all
-    * three to a session-TZ timestamp so every consumer sees one type. */
+    * three to a session-TZ timestamp so every consumer sees one type.
+    * The reader reads [[NanosAsLong]] from the frame's own session when
+    * the scan runs, so a session without it (one not built by
+    * [[SparkEntry.builder]], which sets it) gets it set here. */
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if (!s.conf.get(NanosAsLong, "false").toBoolean) s.conf.set(NanosAsLong, "true")
     val raw = table(s, d, "events")
     raw.schema("ts").dataType match {
       case LongType => raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))

@@ -29,7 +29,7 @@ import graft.RunScope.ScratchCacheOps
   *  2. Exact dedup: keep the min doc_id per md5(text) group among
   *     survivors.
   *  3. Near-dup drop, EDGE-GREEDY: drop every doc that is the larger
-  *     member of a [[Dedup.simhashDedupFrom]] pair (Hamming ≤ 7) among
+  *     member of a 60-bit [[Dedup.simhashPairsFrom]] pair (Hamming ≤ 7) among
   *     remaining survivors. This is deliberately the single-pass policy,
   *     not [[Dedup.dedupClusters]]' cluster-canonical one: a composite
   *     that ran iterative connected components could not be expressed as
@@ -88,8 +88,8 @@ object CorpusPrep {
     exact: DataFrame, nd: DataFrame, clean: DataFrame, picked: DataFrame)
 
   /** `wideNearDup = true` runs stage 3 on the 120-bit
-    * [[Dedup.simhashDedupWideFrom]] kernel instead of the 60-bit
-    * [[Dedup.simhashDedupFrom]] — the production width SCALE.md names as
+    * [[Dedup.simhashPairsFrom]] kernel (two words) instead of the 60-bit
+    * one — the production width SCALE.md names as
     * the scale path once 60-bit band occupancy saturates. The registered
     * entries keep the 60-bit default (their oracle nests the 60-bit
     * kernel's SQL, and the two widths legitimately pin different
@@ -131,9 +131,7 @@ object CorpusPrep {
       .scratchCache() // read by: fuzzy bands + 2 confirm joins + stage-3 semi
     // stage 3: near-dup edge-greedy drop among survivors
     val exactSh = shAll.join(exact.select("doc_id"), Seq("doc_id"), "left_semi")
-    val ndPairs =
-      if (wideNearDup) Dedup.simhashDedupWideFrom(exactSh)
-      else Dedup.simhashDedupFrom(exactSh)
+    val ndPairs = Dedup.simhashPairsFrom(exactSh, if (wideNearDup) 2 else 1)
     val ndDrop = ndPairs.select(col("doc_b").as("doc_id")).distinct()
     val nd = exact.join(ndDrop, Seq("doc_id"), "left_anti").scratchCache()
     // stage 4: test split out; fuzzy-contaminated docs out
@@ -189,7 +187,7 @@ object CorpusPrep {
        |  SELECT g.* FROM gated g WHERE g.doc_id IN (SELECT doc_id FROM keepers)
        |), nd_drop AS (
        |  SELECT DISTINCT doc_b AS doc_id
-       |  FROM (${Dedup.simhashDedupSqlFrom("exact")})
+       |  FROM (${Dedup.simhashPairsSql("exact", words = 1)})
        |), nd AS (
        |  SELECT * FROM exact WHERE doc_id NOT IN (SELECT doc_id FROM nd_drop)
        |), sp AS (

@@ -107,7 +107,23 @@ object Dedup {
     * them, and a presentation sort there is not free — Catalyst drops it
     * under a join, but under [[connectedComponents]]' `localCheckpoint`
     * it survives as a range-sample job plus a range shuffle. */
-  private[llm] def ngramJaccardPairsFrom(sh: DataFrame, maxDf: Int): DataFrame = {
+  private[llm] def ngramJaccardPairsFrom(sh: DataFrame, maxDf: Int): DataFrame =
+    shingleIntersections(sh, maxDf)
+      // raw prefilter before the BigDecimal-backed round — see
+      // Similarity.cosineAtLeast; identical survivors
+      .withColumn("j",
+        col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
+      .filter(col("j") >= 0.5 - 1e-6)
+      .withColumn("jaccard", round(col("j"), 6))
+      .filter(col("jaccard") >= 0.5)
+      .select("doc_a", "doc_b", "jaccard")
+
+  /** The bounded inverted index both set-overlap kernels ([[ngramJaccardPairsFrom]],
+    * [[containmentPairsFrom]]) count over: (doc_a, doc_b, na, nb, inter)
+    * for every doc pair (doc_a < doc_b) sharing an indexed shingle, with
+    * the FULL shingle-set sizes and the shared count in the df-capped
+    * index. */
+  private def shingleIntersections(sh: DataFrame, maxDf: Int): DataFrame = {
     // Shingles are hashed INSIDE the array and |shingles| rides along
     // through the explode: the shuffled stream is (doc_id, n, hash) —
     // fixed-width longs, no string leaves the scan stage, and no later
@@ -137,20 +153,13 @@ object Dedup {
       .groupBy(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
         col("p.a.n").as("na"), col("p.b.n").as("nb"))
       .agg(count(lit(1)).as("inter"))
-      // raw prefilter before the BigDecimal-backed round — see
-      // Similarity.lshDedupKernel's note; identical survivors
-      .withColumn("j",
-        col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
-      .filter(col("j") >= 0.5 - 1e-6)
-      .withColumn("jaccard", round(col("j"), 6))
-      .filter(col("jaccard") >= 0.5)
-      .select("doc_a", "doc_b", "jaccard")
   }
 
-  /** The inverted-index Jaccard pipeline as a reusable CTE chain ending in
-    * `pairs(doc_a, doc_b, jaccard)` — shared by the pairs entry and the
-    * cluster-resolution oracle so both see the identical edge set. */
-  private[llm] val jaccardPairsCteSql: String =
+  /** [[shingleIntersections]]' oracle over raw shingle strings, after
+    * `sh`: `ex` drops the shingles in more than [[DefaultMaxShingleDf]]
+    * documents, `inter(doc_a, doc_b, inter)` counts each pair's shared
+    * shingles, `sizes(doc_id, n)` holds the full set sizes. */
+  private val shingleInterCteSql: String =
     s"""ex0 AS (
        |  SELECT doc_id, unnest(shingles) AS s FROM sh
        |), hot AS (
@@ -162,7 +171,13 @@ object Dedup {
        |  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
        |  GROUP BY 1, 2
        |), sizes AS (SELECT doc_id, len(shingles) AS n FROM sh
-       |), pairs AS (
+       |)""".stripMargin
+
+  /** The inverted-index Jaccard pipeline as a reusable CTE chain ending in
+    * `pairs(doc_a, doc_b, jaccard)` — shared by the pairs entry and the
+    * cluster-resolution oracle so both see the identical edge set. */
+  private[llm] val jaccardPairsCteSql: String =
+    s"""$shingleInterCteSql, pairs AS (
        |  SELECT doc_a, doc_b,
        |         round(inter * 1.0 / (sa.n + sb.n - inter), 6) AS jaccard
        |  FROM inter
@@ -170,6 +185,33 @@ object Dedup {
        |  JOIN sizes sb ON sb.doc_id = doc_b
        |  WHERE round(inter * 1.0 / (sa.n + sb.n - inter), 6) >= 0.5
        |)""".stripMargin
+
+  /** The recursive-closure oracle chain over a pair CTE: `edges` (both
+    * directions of `pairs`' (a, b) columns) → `reach` (every node's
+    * reachable set) → `comp(id, label)`, the min reachable id per node.
+    * Tractable at oracle scale only; the Spark side never materializes
+    * reachability, just labels ([[connectedComponents]]). Needs
+    * `WITH RECURSIVE`. */
+  private[llm] def closureCteSql(pairs: String, a: String, b: String,
+                                 id: String, label: String): String =
+    s"""edges AS (
+       |  SELECT $a AS u, $b AS v FROM $pairs
+       |  UNION ALL
+       |  SELECT $b, $a FROM $pairs
+       |), reach AS (
+       |  SELECT u, u AS v FROM (SELECT DISTINCT u FROM edges) nodes
+       |  UNION
+       |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
+       |), comp AS (
+       |  SELECT u AS $id, min(v) AS $label FROM reach GROUP BY u
+       |)""".stripMargin
+
+  /** The shingle → Jaccard pairs → closure chain ending in
+    * `comp(doc_id, cluster_id)`: the cluster labels every text-dedup
+    * oracle resolves against. */
+  private[llm] val jaccardClosureCteSql: String =
+    s"$shinglesCteSql, $jaccardPairsCteSql, " +
+      closureCteSql("pairs", "doc_a", "doc_b", "doc_id", "cluster_id")
 
   /** Full pairs SQL over an arbitrary corpus source (see [[shinglesCte]]). */
   private[llm] def ngramJaccardPairsSqlFrom(src: String): String =
@@ -208,24 +250,11 @@ object Dedup {
   /** Core containment kernel over a prepared (doc_id, shingles) frame —
     * see [[containmentDedup]] for semantics and the scale story. */
   private[llm] def containmentPairsFrom(sh: DataFrame, maxDf: Int,
-      minC: Double): DataFrame = {
-    // one-pass capped posting build — see ngramJaccardPairsFrom (r22)
-    val ex = sh.select(col("doc_id"), size(col("shingles")).as("n"),
-        explode(expr("transform(shingles, s -> xxhash64(s))")).as("s"))
-    val postings = ex
-      .groupBy("s")
-      .agg(CappedStructList.of(struct(col("doc_id"), col("n")), maxDf).as("ds0"))
-      .filter(col("ds0").isNotNull && size(col("ds0")) >= 2)
-      .select(sort_array(col("ds0")).as("ds"))
-    // native pair expansion — see ngramJaccardPairsFrom (r22 §12)
-    val occ = postings.select(explode(OrderedPairs.of(col("ds"))).as("p"))
-    occ
-      .groupBy(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
-        col("p.a.n").as("na"), col("p.b.n").as("nb"))
-      .agg(count(lit(1)).as("inter"))
+      minC: Double): DataFrame =
+    shingleIntersections(sh, maxDf)
       // both directions of one unordered pair, expanded in-row; the raw
       // ratio rides the struct and the BigDecimal-backed round is paid
-      // only by prefilter survivors (see Similarity.lshDedupKernel)
+      // only by prefilter survivors (see Similarity.cosineAtLeast)
       .select(explode(array(
         struct(col("doc_a").as("contained"), col("doc_b").as("container"),
           (col("inter").cast("double") / col("na")).as("c")),
@@ -239,23 +268,11 @@ object Dedup {
       .filter(col("containment") >= minC)
       .select("contained", "container", "containment")
       .orderBy("contained", "container")
-  }
 
   /** Oracle: same inverted-index intersection over raw shingle strings
     * (same hot-shingle cap), both directions via UNION ALL. */
   val containmentDedupSql: String =
-    s"""WITH $shinglesCteSql, ex0 AS (
-       |  SELECT doc_id, unnest(shingles) AS s FROM sh
-       |), hot AS (
-       |  SELECT s FROM ex0 GROUP BY s HAVING count(*) > $DefaultMaxShingleDf
-       |), ex AS (
-       |  SELECT * FROM ex0 WHERE s NOT IN (SELECT s FROM hot)
-       |), inter AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-       |  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2
-       |), sizes AS (SELECT doc_id, len(shingles) AS n FROM sh
-       |), dirs AS (
+    s"""WITH $shinglesCteSql, $shingleInterCteSql, dirs AS (
        |  SELECT doc_a AS contained, doc_b AS container,
        |         round(inter * 1.0 / sa.n, 6) AS containment
        |  FROM inter
@@ -405,7 +422,7 @@ object Dedup {
     val truth = ngramJaccardPairsFrom(sh, DefaultMaxShingleDf)
       .filter(col("jaccard") >= 0.8)
       .select(col("doc_a"), col("doc_b"), lit(1L).as("t"))
-    val pred = simhashDedupFrom(sh)
+    val pred = simhashPairsFrom(sh, words = 1)
       .select(col("doc_a"), col("doc_b"), lit(1L).as("p"))
     val joined = truth.join(pred, Seq("doc_a", "doc_b"), "full_outer")
     val counts = joined.agg(
@@ -428,7 +445,7 @@ object Dedup {
     s"""WITH truth AS (
        |  SELECT doc_a, doc_b FROM (${ngramJaccardPairsSqlFrom(src)}) WHERE jaccard >= 0.8
        |), pred AS (
-       |  SELECT doc_a, doc_b FROM (${simhashDedupSqlFrom(src)})
+       |  SELECT doc_a, doc_b FROM (${simhashPairsSql(src, words = 1)})
        |), j AS (
        |  SELECT coalesce(t.doc_a, p.doc_a) AS doc_a,
        |         coalesce(t.doc_b, p.doc_b) AS doc_b,
@@ -509,18 +526,24 @@ object Dedup {
     * Banding is recall-exact here (pigeonhole), so the all-pairs oracle
     * matches bit-for-bit. */
   def simhashDedup(spark: SparkSession, dir: String): DataFrame =
-    simhashDedupFrom(withShingles(spark, dir))
+    simhashPairsFrom(withShingles(spark, dir), words = 1)
 
-  /** The 60-bit fingerprint stage of the SimHash kernel: (doc_id,
-    * simhash) from a prepared (doc_id, shingles) frame, via the native
-    * per-row [[graft.functions.SimHashWord]] expression — every vote only
-    * reads its own row's shingles, so fingerprinting is a map stage with
-    * NO shuffle (the vote-aggregate twin below exchanges one row per
-    * shingle to compute the same bits). */
-  private[graft] def simhashFingerprints(shingled: DataFrame): DataFrame = {
-    shingled.select(col("doc_id"),
-      SimHashWord.of(col("shingles"), 0).as("simhash"))
-  }
+  /** The fingerprint columns of a `words`-word SimHash: `simhash` for
+    * one 60-bit word, `sim1`, `sim2` for the 120-bit fingerprint. */
+  private def simhashColumns(words: Int): Seq[String] =
+    if (words == 1) Seq("simhash") else (1 to words).map(w => s"sim$w")
+
+  /** The fingerprint stage of the SimHash kernel: (doc_id, one 60-bit
+    * column per word) from a prepared (doc_id, shingles) frame, via the
+    * native per-row [[graft.functions.SimHashWord]] expression over words
+    * 0, 1, … of each shingle's md5 — every vote only reads its own row's
+    * shingles, so fingerprinting is a map stage with NO shuffle (the
+    * vote-aggregate twin below exchanges one row per shingle to compute
+    * the same bits). */
+  private[graft] def simhashFingerprints(shingled: DataFrame, words: Int): DataFrame =
+    shingled.select(col("doc_id") +: simhashColumns(words).zipWithIndex.map {
+      case (c, w) => SimHashWord.of(col("shingles"), w).as(c)
+    }: _*)
 
   /** The exploded groupBy formulation of the same fingerprint — the
     * shape the DuckDB oracle mirrors, kept as the independent cross-check
@@ -563,11 +586,13 @@ object Dedup {
     votes.select(col("doc_id"), simhash.as("simhash"))
   }
 
-  /** Core SimHash kernel over a prepared (doc_id, shingles) frame —
-    * shared by the entry and [[dedupEval]] (which feeds both estimators
-    * from ONE cached shingle pass). */
-  private[graft] def simhashDedupFrom(shingled: DataFrame): DataFrame =
-    bandedHammingPairs(simhashFingerprints(shingled), Seq("simhash"), SimBands)
+  /** The SimHash kernel over a prepared (doc_id, shingles) frame, at one
+    * 60-bit word ([[SimBands]]) or two ([[WideBands]]) — shared by both
+    * entries, [[dedupEval]] (which feeds both estimators from ONE cached
+    * shingle pass) and the corpus-prep near-dup stage. */
+  private[graft] def simhashPairsFrom(shingled: DataFrame, words: Int): DataFrame =
+    bandedHammingPairs(simhashFingerprints(shingled, words), simhashColumns(words),
+      if (words == 1) SimBands else WideBands)
 
   /** The banded-Hamming pair kernel every fingerprint family rides: the
     * 60-bit word-shingle SimHash ([[SimBands]], 8 bands over one word),
@@ -610,7 +635,6 @@ object Dedup {
 
   /** Wide-fingerprint width: two 60-bit md5 words = 120 bits, banded as
     * 8 disjoint 15-bit slices (4 per word — 8×15 = 120 exactly). */
-  private[graft] val WideBits = 60 // per word; 2 words
   private[graft] val WideBands: Seq[Band] =
     for (word <- 0 until 2; k <- 0 until 4) yield (word, k * 15, 15)
 
@@ -637,40 +661,11 @@ object Dedup {
     * lane-packed vote aggregate this replaced survives as the 60-bit
     * cross-check twin [[simhashFingerprintsVoteAgg]]. */
   def simhashDedupWide(spark: SparkSession, dir: String): DataFrame =
-    simhashDedupWideFrom(withShingles(spark, dir))
-
-  private[graft] def simhashDedupWideFrom(shingled: DataFrame): DataFrame = {
-    bandedHammingPairs(shingled.select(col("doc_id"),
-        SimHashWord.of(col("shingles"), 0).as("sim1"),
-        SimHashWord.of(col("shingles"), 1).as("sim2")),
-      Seq("sim1", "sim2"), WideBands)
-  }
+    simhashPairsFrom(withShingles(spark, dir), words = 2)
 
   /** Oracle: all-pairs 120-bit Hamming at the same threshold — banding
     * is recall-exact by pigeonhole, so the pair sets match exactly. */
-  val simhashDedupWideSql: String =
-    s"""WITH $shinglesCteSql, hs AS (
-       |  SELECT doc_id,
-       |         list_transform(shingles, s -> ('0x' || substr(md5(s), 1, 15))::BIGINT) AS h1,
-       |         list_transform(shingles, s -> ('0x' || substr(md5(s), 16, 15))::BIGINT) AS h2
-       |  FROM sh
-       |), sim AS (
-       |  SELECT doc_id,
-       |         list_reduce(list_prepend(0::BIGINT, range(0, $WideBits)),
-       |           (acc, j) -> acc + CASE WHEN list_reduce(list_prepend(0::BIGINT, h1),
-       |                                   (a, h) -> a + CASE WHEN ((h >> j) & 1) = 1 THEN 1 ELSE -1 END) > 0
-       |                             THEN (1::BIGINT << j) ELSE 0::BIGINT END) AS sim1,
-       |         list_reduce(list_prepend(0::BIGINT, range(0, $WideBits)),
-       |           (acc, j) -> acc + CASE WHEN list_reduce(list_prepend(0::BIGINT, h2),
-       |                                   (a, h) -> a + CASE WHEN ((h >> j) & 1) = 1 THEN 1 ELSE -1 END) > 0
-       |                             THEN (1::BIGINT << j) ELSE 0::BIGINT END) AS sim2
-       |  FROM hs
-       |)
-       |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |       CAST(bit_count(xor(a.sim1, b.sim1)) + bit_count(xor(a.sim2, b.sim2)) AS BIGINT) AS hamming
-       |FROM sim a JOIN sim b ON a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.sim1, b.sim1)) + bit_count(xor(a.sim2, b.sim2)) <= $HamMax
-       |ORDER BY doc_a, doc_b""".stripMargin
+  val simhashDedupWideSql: String = simhashPairsSql("documents", words = 2)
 
   /** Edit-distance budget for [[levenshteinDedup]] and the per-block
     * document-frequency cap mirroring [[DefaultMaxShingleDf]]. */
@@ -850,8 +845,13 @@ object Dedup {
   /** Unordered cluster labels, shared by [[dedupClusters]] and
     * (through [[clusterLabels]]) the consumer entries, which feed joins —
     * a presentation sort under them would be wasted work. */
-  private[llm] def dedupClustersFrame(spark: SparkSession, dir: String): DataFrame = {
-    val comp = components(spark, dir)
+  private[llm] def dedupClustersFrame(spark: SparkSession, dir: String): DataFrame =
+    clusterRows(components(spark, dir))
+
+  /** (doc_id, cluster_id, cluster_size, is_canonical) from (node,
+    * component) labels — the row shape of the full and the incremental
+    * cluster entries. */
+  private def clusterRows(comp: DataFrame): DataFrame = {
     // cluster count ≪ corpus: the size side broadcasts under AQE
     val sizes = comp.groupBy("component").agg(count(lit(1)).as("cluster_size"))
     comp.join(sizes, "component")
@@ -920,17 +920,7 @@ object Dedup {
   /** Oracle: recursive-closure labels → per-cluster sizes → histogram,
     * singleton mass from the complement count. */
   val clusterSizeHistogramSql: String =
-    s"""WITH RECURSIVE $shinglesCteSql, $jaccardPairsCteSql, edges AS (
-       |  SELECT doc_a AS u, doc_b AS v FROM pairs
-       |  UNION ALL
-       |  SELECT doc_b, doc_a FROM pairs
-       |), reach AS (
-       |  SELECT u, u AS v FROM (SELECT DISTINCT u FROM edges) nodes
-       |  UNION
-       |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-       |), comp AS (
-       |  SELECT u AS doc_id, min(v) AS cluster_id FROM reach GROUP BY u
-       |), sized AS (
+    s"""WITH RECURSIVE $jaccardClosureCteSql, sized AS (
        |  SELECT cluster_id, count(*) AS cluster_size FROM comp GROUP BY cluster_id
        |), hist AS (
        |  SELECT cluster_size, count(*) AS n_clusters,
@@ -978,10 +968,12 @@ object Dedup {
   def substringDedup(spark: SparkSession, dir: String): DataFrame =
     substringDedupFrom(Tables.spread(Tables.documents(spark, dir)))
 
-  /** Kernel over any (doc_id, text) frame — factored so the spec can pin
-    * the semantics on planted fixtures (a known shared run, a
-    * within-doc-only repeat, a short doc). */
-  private[llm] def substringDedupFrom(docs: DataFrame): DataFrame = {
+  /** The window stream both substring entries read: the tokenized docs
+    * (doc_id, ws) and, cached, one (doc_id, pos, h) row per
+    * [[SubstrWin]]-token window, h the xxhash64 of the window text at
+    * 1-based token pos. Each entry reads the stream twice (its
+    * duplicated-hash set and its mark-back join). */
+  private def windowHashes(docs: DataFrame): (DataFrame, DataFrame) = {
     val toks = docs
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("ws"))
     val ex = toks.filter(size(col("ws")) >= SubstrWin)
@@ -991,7 +983,15 @@ object Dedup {
            |               'h', xxhash64(concat_ws(' ', slice(ws, i, $SubstrWin)))))"""
           .stripMargin)).as("w"))
       .select(col("doc_id"), col("w.pos").as("pos"), col("w.h").as("h"))
-      .scratchCache() // read twice: duplicated-hash set + mark-back join
+      .scratchCache()
+    (toks, ex)
+  }
+
+  /** Kernel over any (doc_id, text) frame — factored so the spec can pin
+    * the semantics on planted fixtures (a known shared run, a
+    * within-doc-only repeat, a short doc). */
+  private[llm] def substringDedupFrom(docs: DataFrame): DataFrame = {
+    val (toks, ex) = windowHashes(docs)
     // windows present in >= 2 DISTINCT docs (within-doc repetition is
     // repetition_metrics' business, not dedup's)
     val dup = ex.select("h", "doc_id").distinct()
@@ -1047,16 +1047,7 @@ object Dedup {
     substringTrimFrom(Tables.spread(Tables.documents(spark, dir)))
 
   private[llm] def substringTrimFrom(docs: DataFrame): DataFrame = {
-    val toks = docs
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("ws"))
-    val ex = toks.filter(size(col("ws")) >= SubstrWin)
-      .select(col("doc_id"), explode(expr(
-        s"""transform(sequence(1, size(ws) - ${SubstrWin - 1}), i ->
-           |  named_struct('pos', i,
-           |               'h', xxhash64(concat_ws(' ', slice(ws, i, $SubstrWin)))))"""
-          .stripMargin)).as("w"))
-      .select(col("doc_id"), col("w.pos").as("pos"), col("w.h").as("h"))
-      .scratchCache()
+    val (toks, ex) = windowHashes(docs)
     // duplicated windows with their corpus-wide keeper (min doc_id)
     val keepers = ex.select("h", "doc_id").distinct()
       .groupBy("h").agg(count(lit(1)).as("dd"), min(col("doc_id")).as("keeper"))
@@ -1085,11 +1076,10 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** Oracle: keeper pick and removal mark over raw window strings;
-    * coverage via lateral range expansion + DISTINCT instead of the
-    * engine's interval fold — same merged-union semantics. */
-  val substringTrimSql: String =
-    s"""WITH w AS (
+  /** The substring oracles' window stream over raw window strings: `w`
+    * (doc_id, ws) and `s` (doc_id, pos, win), one row per window. */
+  private val windowsCteSql: String =
+    s"""w AS (
        |  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ws FROM documents
        |), wins AS (
        |  SELECT doc_id, unnest(range(1, len(ws) - ${SubstrWin - 2})) AS pos, ws
@@ -1098,7 +1088,13 @@ object Dedup {
        |  SELECT doc_id, pos,
        |         array_to_string(list_slice(ws, pos, pos + ${SubstrWin - 1}), ' ') AS win
        |  FROM wins
-       |), dupk AS (
+       |)""".stripMargin
+
+  /** Oracle: keeper pick and removal mark over raw window strings;
+    * coverage via lateral range expansion + DISTINCT instead of the
+    * engine's interval fold — same merged-union semantics. */
+  val substringTrimSql: String =
+    s"""WITH $windowsCteSql, dupk AS (
        |  SELECT win, min(doc_id) AS keeper
        |  FROM (SELECT DISTINCT win, doc_id FROM s)
        |  GROUP BY win HAVING count(*) >= 2
@@ -1122,16 +1118,7 @@ object Dedup {
   /** Oracle: identical phases over raw window strings; the run length
     * uses the gaps-and-islands idiom where the engine folds in-row. */
   val substringDedupSql: String =
-    s"""WITH w AS (
-       |  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ws FROM documents
-       |), wins AS (
-       |  SELECT doc_id, unnest(range(1, len(ws) - ${SubstrWin - 2})) AS pos, ws
-       |  FROM w WHERE len(ws) >= $SubstrWin
-       |), s AS (
-       |  SELECT doc_id, pos,
-       |         array_to_string(list_slice(ws, pos, pos + ${SubstrWin - 1}), ' ') AS win
-       |  FROM wins
-       |), dup AS (
+    s"""WITH $windowsCteSql, dup AS (
        |  SELECT win FROM s GROUP BY win HAVING count(DISTINCT doc_id) >= 2
        |), m AS (
        |  SELECT doc_id, pos FROM s WHERE win IN (SELECT win FROM dup)
@@ -1174,7 +1161,7 @@ object Dedup {
     * emitted pairs to carry the same jaccard the full kernel computes
     * (the equivalence [[dedupIncremental]]'s oracle asserts). */
   private[llm] def ngramJaccardPairsTouchingNew(sh: DataFrame, maxDf: Int): DataFrame = {
-    // one-pass capped posting build — see ngramJaccardPairsFrom (r22).
+    // one-pass capped posting build — see shingleIntersections (r22).
     // The r21 sizedSpread+scratchCache existed for the two-read shape
     // (df head count + posting build, where the A/B measured −11% on
     // the min); with the fused aggregate the stream is consumed ONCE,
@@ -1232,11 +1219,7 @@ object Dedup {
     // label star, so CC never revisits existing-existing pairs, yet
     // connectivity (and the min-id labels) is exactly that of the full
     // pair graph on base ∪ new
-    val comp = connectedComponents(prior.unionByName(delta))
-    val sizes = comp.groupBy("component").agg(count(lit(1)).as("cluster_size"))
-    comp.join(sizes, "component")
-      .select(col("node").as("doc_id"), col("component").as("cluster_id"),
-        col("cluster_size"), (col("node") === col("component")).as("is_canonical"))
+    clusterRows(connectedComponents(prior.unionByName(delta)))
   }
 
   /** Incremental dedup — the MERGE-shaped cluster maintenance a 100 TB
@@ -1307,7 +1290,7 @@ object Dedup {
       .scratchCache()
     val counts = bySh.select(explode(col("srcs")).as("source"))
       .groupBy("source").agg(count(lit(1)).as("n"))
-    // native pair expansion — see ngramJaccardPairsFrom (r22 §12)
+    // native pair expansion — see shingleIntersections (r22 §12)
     val pairs = bySh
       .filter(size(col("srcs")) >= 2)
       .select(explode(OrderedPairs.of(col("srcs"))).as("p"))
@@ -1371,17 +1354,7 @@ object Dedup {
 
   /** Oracle: the shared recursive-closure labels, LEFT-joined per source. */
   val dedupReportSql: String =
-    s"""WITH RECURSIVE $shinglesCteSql, $jaccardPairsCteSql, edges AS (
-       |  SELECT doc_a AS u, doc_b AS v FROM pairs
-       |  UNION ALL
-       |  SELECT doc_b, doc_a FROM pairs
-       |), reach AS (
-       |  SELECT u, u AS v FROM (SELECT DISTINCT u FROM edges) nodes
-       |  UNION
-       |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-       |), comp AS (
-       |  SELECT u AS doc_id, min(v) AS cluster_id FROM reach GROUP BY u
-       |)
+    s"""WITH RECURSIVE $jaccardClosureCteSql
        |SELECT d.source, count(*) AS n_docs,
        |       CAST(sum(CASE WHEN c.doc_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
        |         AS n_clustered,
@@ -1423,17 +1396,7 @@ object Dedup {
   /** Oracle: same closure labels; the winner per cluster via ROW_NUMBER
     * over (n_chars DESC, doc_id). */
   val dedupKeepBestSql: String =
-    s"""WITH RECURSIVE $shinglesCteSql, $jaccardPairsCteSql, edges AS (
-       |  SELECT doc_a AS u, doc_b AS v FROM pairs
-       |  UNION ALL
-       |  SELECT doc_b, doc_a FROM pairs
-       |), reach AS (
-       |  SELECT u, u AS v FROM (SELECT DISTINCT u FROM edges) nodes
-       |  UNION
-       |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-       |), comp AS (
-       |  SELECT u AS doc_id, min(v) AS cluster_id FROM reach GROUP BY u
-       |), best AS (
+    s"""WITH RECURSIVE $jaccardClosureCteSql, best AS (
        |  SELECT doc_id FROM (
        |    SELECT c.doc_id,
        |           row_number() OVER (PARTITION BY c.cluster_id
@@ -1451,17 +1414,7 @@ object Dedup {
     * min reachable id per node. Tractable at oracle scale only; the Spark
     * side never materializes reachability, just labels. */
   val dedupClustersSql: String =
-    s"""WITH RECURSIVE $shinglesCteSql, $jaccardPairsCteSql, edges AS (
-       |  SELECT doc_a AS u, doc_b AS v FROM pairs
-       |  UNION ALL
-       |  SELECT doc_b, doc_a FROM pairs
-       |), reach AS (
-       |  SELECT u, u AS v FROM (SELECT DISTINCT u FROM edges) nodes
-       |  UNION
-       |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-       |), comp AS (
-       |  SELECT u AS doc_id, min(v) AS cluster_id FROM reach GROUP BY u
-       |), sized AS (
+    s"""WITH RECURSIVE $jaccardClosureCteSql, sized AS (
        |  SELECT cluster_id, count(*) AS cluster_size FROM comp GROUP BY cluster_id
        |)
        |SELECT c.doc_id, c.cluster_id, s.cluster_size,
@@ -1472,43 +1425,46 @@ object Dedup {
   /** Oracle: same recursive-closure labels; keep documents that are not a
     * non-canonical member of any cluster. */
   val dedupApplySql: String =
-    s"""WITH RECURSIVE $shinglesCteSql, $jaccardPairsCteSql, edges AS (
-       |  SELECT doc_a AS u, doc_b AS v FROM pairs
-       |  UNION ALL
-       |  SELECT doc_b, doc_a FROM pairs
-       |), reach AS (
-       |  SELECT u, u AS v FROM (SELECT DISTINCT u FROM edges) nodes
-       |  UNION
-       |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-       |), comp AS (
-       |  SELECT u AS doc_id, min(v) AS cluster_id FROM reach GROUP BY u
-       |)
+    s"""WITH RECURSIVE $jaccardClosureCteSql
        |SELECT d.doc_id, d.lang, d.source, d.n_chars
        |FROM documents d
        |WHERE d.doc_id NOT IN (SELECT doc_id FROM comp WHERE doc_id <> cluster_id)
        |ORDER BY d.doc_id""".stripMargin
 
-  /** Full SimHash pairs SQL over an arbitrary corpus source. */
-  private[llm] def simhashDedupSqlFrom(src: String): String =
+  /** The SimHash oracle over an arbitrary corpus source at 1 or 2
+    * words: per-bit ±1 votes over each shingle's md5 word, then all-pairs
+    * Hamming summed over the words — the unbanded truth the kernel's
+    * pigeonhole banding matches exactly. */
+  private[llm] def simhashPairsSql(src: String, words: Int): String = {
+    val fps = simhashColumns(words)
+    val hashes = if (words == 1) Seq("hashes") else (1 to words).map(w => s"h$w")
+    val hashCols = hashes.zipWithIndex.map { case (h, w) =>
+      s"         list_transform(shingles, s -> ('0x' || substr(md5(s), ${w * 15 + 1}, 15))::BIGINT) AS $h"
+    }.mkString(",\n")
+    val voteCols = hashes.zip(fps).map { case (h, fp) =>
+      s"""         list_reduce(list_prepend(0::BIGINT, range(0, $SimBits)),
+         |           (acc, j) -> acc + CASE WHEN list_reduce(list_prepend(0::BIGINT, $h),
+         |                                   (a, h) -> a + CASE WHEN ((h >> j) & 1) = 1 THEN 1 ELSE -1 END) > 0
+         |                             THEN (1::BIGINT << j) ELSE 0::BIGINT END) AS $fp""".stripMargin
+    }.mkString(",\n")
+    val hamming = fps.map(fp => s"bit_count(xor(a.$fp, b.$fp))").mkString(" + ")
     s"""WITH ${shinglesCte(src)}, hs AS (
        |  SELECT doc_id,
-       |         list_transform(shingles, s -> ('0x' || substr(md5(s), 1, 15))::BIGINT) AS hashes
+       |$hashCols
        |  FROM sh
        |), sim AS (
        |  SELECT doc_id,
-       |         list_reduce(list_prepend(0::BIGINT, range(0, $SimBits)),
-       |           (acc, j) -> acc + CASE WHEN list_reduce(list_prepend(0::BIGINT, hashes),
-       |                                   (a, h) -> a + CASE WHEN ((h >> j) & 1) = 1 THEN 1 ELSE -1 END) > 0
-       |                             THEN (1::BIGINT << j) ELSE 0::BIGINT END) AS simhash
+       |$voteCols
        |  FROM hs
        |)
        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |       CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
+       |       CAST($hamming AS BIGINT) AS hamming
        |FROM sim a JOIN sim b ON a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.simhash, b.simhash)) <= $HamMax
+       |WHERE $hamming <= $HamMax
        |ORDER BY doc_a, doc_b""".stripMargin
+  }
 
-  val simhashDedupSql: String = simhashDedupSqlFrom("documents")
+  val simhashDedupSql: String = simhashPairsSql("documents", words = 1)
 
   /** Document-frequency cap for [[tfidfCosinePairs]]'s inverted index —
     * shingles in more documents than this are dropped before the pair

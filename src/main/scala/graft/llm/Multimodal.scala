@@ -629,20 +629,13 @@ object Multimodal {
        |ORDER BY media_a, media_b""".stripMargin
   }
 
+  private val mediaClosureCteSql: String =
+    Dedup.closureCteSql("prs", "media_a", "media_b", "media_id", "cluster_id")
+
   /** Oracle: the shared pair CTE resolved by the same recursive closure
     * as the text family's apply oracle, anti-filtered keep-first. */
   val mediaNearApplySql: String =
-    s"""WITH RECURSIVE $mediaPairsCteSql, edges AS (
-       |  SELECT media_a AS u, media_b AS v FROM prs
-       |  UNION ALL
-       |  SELECT media_b, media_a FROM prs
-       |), reach AS (
-       |  SELECT u, u AS v FROM (SELECT DISTINCT u FROM edges) nodes
-       |  UNION
-       |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-       |), comp AS (
-       |  SELECT u AS media_id, min(v) AS cluster_id FROM reach GROUP BY u
-       |)
+    s"""WITH RECURSIVE $mediaPairsCteSql, $mediaClosureCteSql
        |SELECT l.media_id,
        |       CASE WHEN l.media_id >= $ReencodeIdOffset THEN 'reencode'
        |            ELSE 'original' END AS kind

@@ -174,8 +174,10 @@ object QualityLr {
   /** The trained weights, one row per feature. */
   def qualityLrTrain(spark: SparkSession, dir: String): DataFrame = {
     val w = trainWeightsFrom(cachedFeats(spark, dir))
-    spark.createDataFrame(FeatNames.zip(w)).toDF("feature", "weight")
-      .orderBy("feature")
+    // four rows, sorted on the driver; one partition, so a write makes
+    // one file and collecting runs one job, not a distributed sort's three
+    spark.createDataFrame(FeatNames.zip(w).sortBy(_._1)).toDF("feature", "weight")
+      .coalesce(1)
   }
 
   /** Every document scored with the trained model: sigmoid probability

@@ -431,17 +431,7 @@ object Sampling {
   /** Oracle: the recursive-closure cluster labels (shared CTE chain with
     * the dedup oracles) + the same salted md5 split on the coalesced key. */
   lazy val leakageSafeSplitSql: String =
-    s"""WITH RECURSIVE ${Dedup.shinglesCteSql}, ${Dedup.jaccardPairsCteSql}, edges AS (
-       |  SELECT doc_a AS u, doc_b AS v FROM pairs
-       |  UNION ALL
-       |  SELECT doc_b, doc_a FROM pairs
-       |), reach AS (
-       |  SELECT u, u AS v FROM (SELECT DISTINCT u FROM edges) nodes
-       |  UNION
-       |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-       |), comp AS (
-       |  SELECT u AS doc_id, min(v) AS cluster_id FROM reach GROUP BY u
-       |), keyed AS (
+    s"""WITH RECURSIVE ${Dedup.jaccardClosureCteSql}, keyed AS (
        |  SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) AS split_key
        |  FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
        |), b AS (

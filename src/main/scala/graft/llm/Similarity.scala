@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -37,20 +37,41 @@ object Similarity {
     * the HOF fold (same double widening, same ascending-order sum; pinned
     * by SimilaritySpec's kernel-parity test), so the oracle contract is
     * unchanged while the whole pair stream stays inside codegen. */
-  def embeddingTopk(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val queries = e.filter(col("vec_id") < 5)
+  def embeddingTopk(spark: SparkSession, dir: String): DataFrame =
+    cosineTopK(Tables.embeddings(spark, dir), 10, Some(col("vec_id") < 5))
+      .orderBy("q_id", "rank")
+
+  /** Exact cosine top-k: for every query vector, its `k` most similar
+    * other vectors by the native [[CosineSimilarity]] kernel, ranked
+    * (sim DESC, c_id) — rows (q_id, c_id, c_`carry`…, sim, rank).
+    *
+    * With a `queries` filter the few queries broadcast and the candidate
+    * scan streams. Over every vector, the query side is spread across the
+    * shuffle partitions and streams: a broadcast nested-loop join runs one
+    * task per STREAM partition, so the parquet's couple of splits would
+    * funnel the whole n² pair stream, and its top-k sort, through one
+    * core (measured 6.3 s single-task vs ~1.5 s at 32-way). The
+    * candidates broadcast by hint: carried columns make them the larger
+    * size estimate, and left alone Catalyst would build the query side
+    * and stream over those splits instead. The embeddings are projected away
+    * before the rank window, so its exchange shuffles (q_id, c_id, sim)
+    * triples, not 2×64-float payloads. */
+  private def cosineTopK(e: DataFrame, k: Int, queries: Option[Column],
+                         carry: Seq[String] = Nil): DataFrame = {
+    val q = queries.fold(e)(e.filter)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val cands = e.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-    val sim = round(CosineSimilarity.of(col("q_emb"), col("c_emb")), 6)
-    cands.crossJoin(broadcast(queries))
-      .filter(col("c_id") =!= col("q_id"))
-      .withColumn("sim", sim)
+    val c = e.select(Seq(col("vec_id").as("c_id"), col("embedding").as("c_emb")) ++
+      carry.map(n => col(n).as(s"c_$n")): _*)
+    val pairs =
+      if (queries.isDefined) c.crossJoin(broadcast(q))
+      else q.repartition(e.sparkSession.sessionState.conf.numShufflePartitions)
+        .crossJoin(broadcast(c))
+    pairs.filter(col("c_id") =!= col("q_id"))
+      .select(Seq(col("q_id"), col("c_id")) ++ carry.map(n => col(s"c_$n")) :+
+        round(CosineSimilarity.of(col("q_emb"), col("c_emb")), 6).as("sim"): _*)
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))).cast("long"))
-      .filter(col("rank") <= 10)
-      .select("q_id", "c_id", "sim", "rank")
-      .orderBy("q_id", "rank")
+      .filter(col("rank") <= k)
   }
 
   private val cosineCteSql: String =
@@ -66,57 +87,30 @@ object Similarity {
        |        list_transform(list_zip($qa.ed, $ca.ed), x -> x[1] * x[2])), (a, b) -> a + b)
        |      / (sqrt($qa.n2) * sqrt($ca.n2)), 6)""".stripMargin
 
-  val embeddingTopkSql: String =
+  /** Oracle of [[cosineTopK]]: all (query, other vector) pairs, the
+    * queries restricted by the `queries` predicate over `q`. */
+  private def cosineTopKSql(k: Int, queries: Option[String]): String =
     s"""WITH $cosineCteSql, pairs AS (
        |  SELECT q.vec_id AS q_id, c.vec_id AS c_id,
        |         ${pairSimSql("q", "c")} AS sim
-       |  FROM emb q JOIN emb c ON q.vec_id < 5 AND c.vec_id <> q.vec_id
+       |  FROM emb q JOIN emb c ON ${queries.fold("")(_ + " AND ")}c.vec_id <> q.vec_id
        |)
        |SELECT q_id, c_id, sim,
        |       ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank
        |FROM pairs
-       |QUALIFY rank <= 10
+       |QUALIFY rank <= $k
        |ORDER BY q_id, rank""".stripMargin
+
+  val embeddingTopkSql: String = cosineTopKSql(10, Some("q.vec_id < 5"))
 
   /** All-pairs kNN join (top-3 neighbors for EVERY vector) on the native
     * CosineSimilarity expression — the codegen'd kernel keeps the whole
     * join stage compiled where the HOF formulation would interpret three
     * lambda folds per pair. */
-  def embeddingKnnNative(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    // The embeddings parquet is a couple of splits; a broadcast nested-loop
-    // join runs one task per STREAM-side partition, so without this the
-    // whole n² pair stream (and its top-k sort) funnels through one core
-    // (measured 6.3 s single-task vs ~1.5 s at 32-way). Spread the
-    // candidate side across the configured parallelism first.
-    val a = e.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      .repartition(spark.sessionState.conf.numShufflePartitions)
-    val b = e.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-    a.crossJoin(b)
-      .filter(col("c_id") =!= col("q_id"))
-      // project the embeddings away BEFORE the window: the row_number
-      // exchange must shuffle (q_id, c_id, sim) triples, not 2×64-float
-      // payloads (measured 6.3 s -> ~1.5 s at sf0.1)
-      .select(col("q_id"), col("c_id"),
-        round(CosineSimilarity.of(col("q_emb"), col("c_emb")), 6).as("sim"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))).cast("long"))
-      .filter(col("rank") <= 3)
-      .select("q_id", "c_id", "sim", "rank")
-      .orderBy("q_id", "rank")
-  }
+  def embeddingKnnNative(spark: SparkSession, dir: String): DataFrame =
+    cosineTopK(Tables.embeddings(spark, dir), 3, None).orderBy("q_id", "rank")
 
-  val embeddingKnnNativeSql: String =
-    s"""WITH $cosineCteSql, pairs AS (
-       |  SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-       |         ${pairSimSql("q", "c")} AS sim
-       |  FROM emb q JOIN emb c ON c.vec_id <> q.vec_id
-       |)
-       |SELECT q_id, c_id, sim,
-       |       ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank
-       |FROM pairs
-       |QUALIFY rank <= 3
-       |ORDER BY q_id, rank""".stripMargin
+  val embeddingKnnNativeSql: String = cosineTopKSql(3, None)
 
   /** Neighbor count for the [[knnLabelVote]] majority vote. */
   private val KnnVoteK = 5
@@ -143,33 +137,12 @@ object Similarity {
   /** The per-query (q_id, pred_label) stage of [[knnLabelVote]] —
     * factored so specs can pin individual predictions against a
     * driver-side model. */
-  private[graft] def knnPredictions(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    // spread the stream side: see embeddingKnnNative (one task per
-    // stream partition under a broadcast nested-loop join otherwise)
-    val a = e.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      .repartition(spark.sessionState.conf.numShufflePartitions)
-    val b = e.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
-      col("label").as("c_label"))
-    // broadcast the CANDIDATE side explicitly: its extra label column
-    // makes it the larger size estimate, and left alone Catalyst builds
-    // the query side instead — streaming the pair generation over the
-    // candidate parquet's 2 splits (one task per split; measured 11 s vs
-    // 2 s with the 32-way repartitioned query side as the stream)
-    val neighbors = a.crossJoin(broadcast(b))
-      .filter(col("c_id") =!= col("q_id"))
-      // project embeddings away before the rank exchange (knn lesson)
-      .select(col("q_id"), col("c_id"), col("c_label"),
-        round(CosineSimilarity.of(col("q_emb"), col("c_emb")), 6).as("sim"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))))
-      .filter(col("rank") <= KnnVoteK)
-    neighbors
+  private[graft] def knnPredictions(spark: SparkSession, dir: String): DataFrame =
+    cosineTopK(Tables.embeddings(spark, dir), KnnVoteK, None, Seq("label"))
       .groupBy(col("q_id"), col("c_label")).agg(count(lit(1)).as("votes"))
       .groupBy(col("q_id"))
       .agg(min(struct((-col("votes")).as("nv"), col("c_label").as("lbl"))).as("best"))
       .select(col("q_id"), col("best").getField("lbl").as("pred_label"))
-  }
 
   def knnLabelVote(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
@@ -218,28 +191,42 @@ object Similarity {
     * from the md5 parity of "plane_dim" — embedded as literals in both the
     * Spark plan and the oracle SQL, so the engines share bit-identical
     * hyperplanes. */
-  private val NumPlanes = 8
   private val Dim = 64
-  private[llm] val planeWeights: Seq[Seq[Int]] = {
+
+  /** `tables` × `planes` ±1 hyperplanes of [[Dim]] weights; weight d of
+    * plane p in table t is +1 iff the md5 of "`prefix(t)`p_d" has an even
+    * first byte. Each LSH family draws under its own key prefix, so the
+    * families are disjoint. */
+  private def md5Planes(tables: Int, planes: Int,
+                        prefix: Int => String): Seq[Seq[Seq[Int]]] = {
     val md = java.security.MessageDigest.getInstance("MD5")
-    (0 until NumPlanes).map { p =>
-      (0 until Dim).map { d =>
-        val h = md.digest(s"${p}_$d".getBytes("UTF-8"))
-        if ((h(0) & 1) == 0) 1 else -1
+    (0 until tables).map { t =>
+      (0 until planes).map { p =>
+        (0 until Dim).map { d =>
+          val h = md.digest(s"${prefix(t)}${p}_$d".getBytes("UTF-8"))
+          if ((h(0) & 1) == 0) 1 else -1
+        }
       }
     }
   }
 
+  /** The single-table ANN family: 8 planes keyed "plane_dim". */
+  private[llm] val planeWeights: Seq[Seq[Int]] = md5Planes(1, 8, _ => "").head
+
   /** Signed projection of `ed` (1-based element access syntax shared by
     * Spark SQL element_at and DuckDB indexing) onto a ±1 plane. */
-  private def projSqlW(weights: Seq[Int], elem: Int => String): String =
+  private def projSql(weights: Seq[Int], elem: Int => String): String =
     weights.zipWithIndex.map { case (w, d) =>
       val sign = if (w > 0) "+" else "-"
       s"$sign ${elem(d + 1)}"
     }.mkString("(", " ", ")")
 
-  private def projSql(p: Int, elem: Int => String): String =
-    projSqlW(planeWeights(p), elem)
+  /** The bucket code of one table: bit p set iff the projection on plane
+    * p is positive. */
+  private def bucketCode(planes: Seq[Seq[Int]]): Column =
+    planes.zipWithIndex.map { case (w, p) =>
+      when(projDotExpr(w) > 0, lit(1L << p)).otherwise(lit(0L))
+    }.reduce(_ + _)
 
   /** The same signed projection on the Spark side, as ONE native codegen'd
     * [[DotProduct]] node against a constant ±1 weight array — instead of a
@@ -251,7 +238,7 @@ object Similarity {
     * per plane compiles cleanly. Bit-identical to the oracle's textual sum:
     * both accumulate doubles in ascending element order and ±1.0 multiplies
     * are exact (see [[DotProduct]] scaladoc). */
-  private def projDotExpr(weights: Seq[Int]): org.apache.spark.sql.Column =
+  private def projDotExpr(weights: Seq[Int]): Column =
     DotProduct.of(col("ed"), array(weights.map(w => lit(w.toDouble)): _*))
 
   /** Random-hyperplane LSH ANN: 8-bit bucket from projection signs, then
@@ -268,23 +255,24 @@ object Similarity {
     // scan would serialize them (identity at real scale, see Tables.spread)
     val e = Tables.spread(Tables.embeddings(spark, dir))
       .withColumn("ed", col("embedding").cast("array<double>"))
-    val bucket = (0 until NumPlanes).map { p =>
-      when(projDotExpr(planeWeights(p)) > 0, lit(1L << p)).otherwise(lit(0L))
-    }.reduce(_ + _)
-    val b = e.select(col("vec_id"), col("ed"), bucket.as("bucket"))
-    val pairs = b.as("a")
+    bucketTop1(e.select(col("vec_id"), col("ed"), bucketCode(planeWeights).as("bucket")))
+  }
+
+  /** The in-bucket top-1 search over a (vec_id, ed, bucket) frame: every
+    * vector's best cosine neighbor among its bucket mates, ties to the
+    * lower id. */
+  private def bucketTop1(b: DataFrame): DataFrame =
+    b.as("a")
       .join(b.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("q_id"), col("b.vec_id").as("c_id"),
         col("a.bucket").as("bucket"),
         round(CosineSimilarity.of(col("a.ed"), col("b.ed")), 6).as("sim"))
-    pairs
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))))
       .filter(col("rank") === 1)
       .select("q_id", "c_id", "bucket", "sim")
       .orderBy("q_id")
-  }
 
   /** Embedding-cosine near-duplicate pairs (the dedup-family member over
     * the embedding space): all pairs with cosine ≥ 0.45 via the native
@@ -299,45 +287,46 @@ object Similarity {
     val a = e.select(col("vec_id").as("doc_a"), col("embedding").as("ea"))
       .repartition(spark.sessionState.conf.numShufflePartitions)
     val b = e.select(col("vec_id").as("doc_b"), col("embedding").as("eb"))
-    a.crossJoin(b)
+    cosineAtLeast(a.crossJoin(b)
       .filter(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b"),
-        CosineSimilarity.of(col("ea"), col("eb")).as("c"))
-      // raw prefilter before the BigDecimal-backed round (see
-      // lshDedupKernel's note) — on this O(n²) exact baseline the round
-      // was paid per PAIR; identical survivors by the 1e-6 slack
-      .filter(col("c") >= 0.45 - 1e-6)
-      .select(col("doc_a"), col("doc_b"), round(col("c"), 6).as("cosine"))
-      .filter(col("cosine") >= 0.45)
+        CosineSimilarity.of(col("ea"), col("eb")).as("c")), 0.45)
       .orderBy("doc_a", "doc_b")
   }
 
-  val embeddingCosineDedupSql: String =
+  /** The pairs of a (doc_a, doc_b, …, c: raw cosine) stream whose
+    * 6dp-rounded cosine is at least `threshold`, with `c` replaced by
+    * that rounded `cosine` as the last column. RAW prefilter before the
+    * round: Spark's round(double) goes through
+    * BigDecimal.valueOf(Double.toString(x)) — a per-row string format
+    * that dominated the LSH dedup kernel at the 25× rehearsal (jstack:
+    * every worker inside FloatingDecimal under hashAgg). The 1e-6 slack
+    * keeps every candidate that COULD round up to the threshold, so the
+    * rounded filter sees the same survivors and the output is
+    * bit-identical; the random-pair candidates never pay the BigDecimal. */
+  private def cosineAtLeast(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs.filter(col("c") >= threshold - 1e-6)
+      .select(pairs.columns.filter(_ != "c").map(col) :+ round(col("c"), 6).as("cosine"): _*)
+      .filter(col("cosine") >= threshold)
+
+  /** Oracle of the all-pairs and the LSH embedding near-dup entries: all
+    * pairs whose rounded cosine is at least `threshold`. */
+  private def cosinePairsSql(threshold: Double): String =
     s"""WITH $cosineCteSql
        |SELECT a.vec_id AS doc_a, b.vec_id AS doc_b,
        |       ${pairSimSql("a", "b")} AS cosine
        |FROM emb a JOIN emb b ON a.vec_id < b.vec_id
-       |WHERE ${pairSimSql("a", "b")} >= 0.45
+       |WHERE ${pairSimSql("a", "b")} >= $threshold
        |ORDER BY doc_a, doc_b""".stripMargin
+
+  val embeddingCosineDedupSql: String = cosinePairsSql(0.45)
 
   /** Multi-table LSH parameters for the production-threshold near-dup
     * path: 8 independent tables of 6 hyperplanes each, drawn from the same
     * deterministic md5-parity family as [[planeWeights]] (key
     * "table_plane_dim", disjoint from the single-table family's keys). */
-  private val DedupTables = 8
-  private val DedupPlanes = 6
   private val DedupCosine = 0.95
-  private[llm] val dedupPlaneWeights: Seq[Seq[Seq[Int]]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    (0 until DedupTables).map { t =>
-      (0 until DedupPlanes).map { p =>
-        (0 until Dim).map { d =>
-          val h = md.digest(s"${t}_${p}_$d".getBytes("UTF-8"))
-          if ((h(0) & 1) == 0) 1 else -1
-        }
-      }
-    }
-  }
+  private[llm] val dedupPlaneWeights: Seq[Seq[Seq[Int]]] = md5Planes(8, 6, t => s"${t}_")
 
   /** Embedding near-dup pairs at the production threshold (cosine ≥ 0.95)
     * routed through multi-table LSH buckets — the scaled sibling of
@@ -361,18 +350,20 @@ object Similarity {
     * empty on both engines by construction; SimilaritySpec drives the
     * non-empty path with synthetic near-identical vectors. */
   def embeddingLshDedup(spark: SparkSession, dir: String): DataFrame =
-    embeddingLshDedupFrom(
-      // spread: 8 tables × 6 planes of dot products per row serialize on a
-      // single-split scan (identity at real scale, see Tables.spread)
-      Tables.spread(Tables.embeddings(spark, dir))
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("ed")))
+    lshDedupEntry(spark, dir, dedupPlaneWeights)
 
-  /** Core kernel over a prepared (vec_id, ed: array&lt;double&gt;) frame. */
-  private[llm] def embeddingLshDedupFrom(e: DataFrame): DataFrame =
-    lshDedupKernel(e, DedupTables, DedupPlanes, dedupPlaneWeights)
+  /** The entry body both geometries share: the embeddings as (vec_id,
+    * ed: array&lt;double&gt;), spread first — tables × planes dot products
+    * per row serialize on a single-split scan (identity at real scale,
+    * see Tables.spread). */
+  private def lshDedupEntry(spark: SparkSession, dir: String,
+                            weights: Seq[Seq[Seq[Int]]]): DataFrame =
+    lshDedupKernel(Tables.spread(Tables.embeddings(spark, dir))
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("ed")), weights)
 
-  /** The multi-table LSH dedup body, parameterized by table/plane
-    * geometry so the default (8×6) and wide (12×8,
+  /** The multi-table LSH dedup body over a prepared (vec_id, ed) frame,
+    * parameterized by the plane geometry (`weights`: tables × planes ×
+    * [[Dim]]) so the default (8×6) and wide (12×8,
     * [[embeddingLshDedupWide]]) configurations ride ONE definition.
     *
     * Payload-through-the-exchange is DELIBERATE (r22, closing VERDICT
@@ -406,33 +397,19 @@ object Similarity {
     * loop — the join's row plumbing dominates — so trading 2 FMAs/elem
     * for an extra exchange column plus a when/divide expression loses.
     * Reverted; do not re-try either shape without new evidence. */
-  private def lshDedupKernel(e: DataFrame, tables: Int, planes: Int,
-                             weights: Seq[Seq[Seq[Int]]]): DataFrame = {
-    val tb = explode(array((0 until tables).map { t =>
-      val code = (0 until planes).map { p =>
-        when(projDotExpr(weights(t)(p)) > 0, lit(1L << p)).otherwise(lit(0L))
-      }.reduce(_ + _)
-      struct(lit(t).as("t"), code.as("bkt"))
+  private[llm] def lshDedupKernel(e: DataFrame,
+                                  weights: Seq[Seq[Seq[Int]]]): DataFrame = {
+    val tb = explode(array(weights.zipWithIndex.map { case (planes, t) =>
+      struct(lit(t).as("t"), bucketCode(planes).as("bkt"))
     }: _*))
     val b = e.select(col("vec_id"), col("ed"), tb.as("tb"))
       .select(col("vec_id"), col("ed"), col("tb.t").as("t"), col("tb.bkt").as("bkt"))
-    b.as("a")
+    cosineAtLeast(b.as("a")
       .join(b.as("b"),
         col("a.t") === col("b.t") && col("a.bkt") === col("b.bkt")
           && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("doc_a"), col("b.vec_id").as("doc_b"),
-        CosineSimilarity.of(col("a.ed"), col("b.ed")).as("c"))
-      // RAW prefilter before the 6dp round: Spark's round(double) goes
-      // through BigDecimal.valueOf(Double.toString(x)) — a per-row string
-      // format that dominated this kernel at the 25× rehearsal (jstack:
-      // every worker inside FloatingDecimal under hashAgg). The 1e-6
-      // slack keeps every candidate that COULD round up to the
-      // threshold, so the rounded filter below sees the same survivors
-      // and the output is bit-identical; the ~n²/2^planes random-pair
-      // candidates never pay the BigDecimal.
-      .filter(col("c") >= DedupCosine - 1e-6)
-      .select(col("doc_a"), col("doc_b"), round(col("c"), 6).as("cosine"))
-      .filter(col("cosine") >= DedupCosine)
+        CosineSimilarity.of(col("a.ed"), col("b.ed")).as("c")), DedupCosine)
       .dropDuplicates("doc_a", "doc_b") // a pair can collide in several tables
       .orderBy("doc_a", "doc_b")
   }
@@ -440,13 +417,7 @@ object Similarity {
   /** Oracle: the all-pairs formulation at the same threshold — valid
     * because LSH only prunes candidates and the ≥ 0.9975 recall bound
     * (scaladoc above) exceeds any pair this corpus contains. */
-  val embeddingLshDedupSql: String =
-    s"""WITH $cosineCteSql
-       |SELECT a.vec_id AS doc_a, b.vec_id AS doc_b,
-       |       ${pairSimSql("a", "b")} AS cosine
-       |FROM emb a JOIN emb b ON a.vec_id < b.vec_id
-       |WHERE ${pairSimSql("a", "b")} >= $DedupCosine
-       |ORDER BY doc_a, doc_b""".stripMargin
+  val embeddingLshDedupSql: String = cosinePairsSql(DedupCosine)
 
   /** Wide-geometry LSH parameters — the scale configuration of the
     * near-dup path (the `simhash_dedup_wide` move applied to vector
@@ -458,19 +429,7 @@ object Similarity {
     * extra cost is 4 more map-side sign projections per vector — the
     * cheap side of the trade at any n. Weights come from the same
     * deterministic md5-parity family under a DISJOINT key prefix. */
-  private val WideTables = 12
-  private val WidePlanes = 8
-  private[llm] val widePlaneWeights: Seq[Seq[Seq[Int]]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    (0 until WideTables).map { t =>
-      (0 until WidePlanes).map { p =>
-        (0 until Dim).map { d =>
-          val h = md.digest(s"w${t}_${p}_$d".getBytes("UTF-8"))
-          if ((h(0) & 1) == 0) 1 else -1
-        }
-      }
-    }
-  }
+  private[llm] val widePlaneWeights: Seq[Seq[Seq[Int]]] = md5Planes(12, 8, t => s"w${t}_")
 
   /** [[embeddingLshDedup]] in the wide 12×8 geometry — identical exact
     * output (every candidate is cosine-confirmed; the all-pairs oracle
@@ -493,12 +452,7 @@ object Similarity {
     * registered as the benchmark-scale configuration and cross-check
     * twin (the `simhash_dedup` → `simhash_dedup_wide` precedent). */
   def embeddingLshDedupWide(spark: SparkSession, dir: String): DataFrame =
-    embeddingLshDedupWideFrom(
-      Tables.spread(Tables.embeddings(spark, dir))
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("ed")))
-
-  private[llm] def embeddingLshDedupWideFrom(e: DataFrame): DataFrame =
-    lshDedupKernel(e, WideTables, WidePlanes, widePlaneWeights)
+    lshDedupEntry(spark, dir, widePlaneWeights)
 
   /** Oracle: the same all-pairs truth — the wide geometry only prunes
     * candidates harder while confirming exactly. */
@@ -641,27 +595,32 @@ object Similarity {
     var cents = e.filter(col("vec_id") < k)
       .select(col("vec_id").as("cent_id"), col("ed").as("ced"))
     for (_ <- 1 to IvfIters) {
-      val assigned = argmaxCellLit(e, centroidModel(cents))
-        .select(col("vec_id"), col("ed"), col("cell").as("cent_id"))
-      // per-dimension decimal-exact mean via explode + narrow groupBy —
-      // NOT 64 separate sum columns: that generates a 64-accumulator
-      // aggregate class (heavy codegen per Lloyd iteration) where this
-      // shape is one 2-column sum over K×Dim groups (512 at K=8), with
-      // map-side partials collapsing each partition to ≤512 rows before
-      // the shuffle. Same math: decimal addition is exact and
-      // order-independent, so the per-(cent, dim) sums are bit-identical
-      // to the wide-column formulation and to the oracle's
-      val means = assigned
-        .select(col("cent_id"), posexplode(col("ed")).as(Seq("d", "v")))
-        .groupBy("cent_id", "d")
-        .agg(round(sum(col("v").cast("decimal(28,14)")).cast("double")
-          / count(lit(1)), CentroidDp).as("m"))
-      cents = means.groupBy("cent_id")
-        .agg(array_sort(collect_list(struct(col("d"), col("m")))).as("dm"))
-        .select(col("cent_id"), col("dm.m").as("ced"))
+      cents = centroidMeans(argmaxCellLit(e, centroidModel(cents))
+        .select(col("cell").as("cent_id"), col("ed")), Seq("cent_id"), "ed")
     }
     cents
   }
+
+  /** The Lloyd update both quantizers share: each centroid, keyed by the
+    * `keys` columns, becomes the per-dimension mean of the `vec` arrays
+    * assigned to it — (keys…, ced), rounded to [[CentroidDp]] decimals.
+    * The mean is decimal-exact (see the IVF-parameter scaladoc), via
+    * explode + a narrow groupBy — NOT Dim separate sum columns: that
+    * generates a Dim-accumulator aggregate class (heavy codegen per Lloyd
+    * iteration) where this shape is one 2-column sum over centroid×Dim
+    * groups, with map-side partials collapsing each partition to that
+    * many rows before the shuffle. Decimal addition is exact and
+    * order-independent, so the sums equal the oracle's. */
+  private def centroidMeans(assigned: DataFrame, keys: Seq[String],
+                            vec: String): DataFrame =
+    assigned
+      .select(keys.map(col) :+ posexplode(col(vec)).as(Seq("d", "v")): _*)
+      .groupBy((keys :+ "d").map(col): _*)
+      .agg(round(sum(col("v").cast("decimal(28,14)")).cast("double")
+        / count(lit(1)), CentroidDp).as("mv"))
+      .groupBy(keys.map(col): _*)
+      .agg(array_sort(collect_list(struct(col("d"), col("mv")))).as("dm"))
+      .select(keys.map(col) :+ col("dm.mv").as("ced"): _*)
 
   /** IVF-bucketed ANN: a trained coarse quantizer of K cells
     * ([[trainCentroidsK]] — deterministic k-means, seeded with the
@@ -691,23 +650,18 @@ object Similarity {
     * drives it with a clustered corpus where ground-truth neighbors are
     * known by construction). */
   private[llm] def ivfSearchFrom(e: DataFrame, cents: DataFrame,
-      qLo: Long, qHi: Long): DataFrame = {
+      qLo: Long, qHi: Long): DataFrame =
     // full-corpus assignment: the map-side argmax fold over the
     // collected K-row model — one codegen'd projection, no n×K
     // ed-carrying stream (see argmaxCellLit)
-    val assign = argmaxCellLit(e, centroidModel(cents))
-    // probe ranking needs top-nprobe (not argmax) but only for the few
-    // query vectors — filter FIRST, then window over |queries|×K rows
-    val probes = e
-      .filter(col("vec_id") >= qLo && col("vec_id") < qHi)
-      .crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("ed"), col("cent_id"),
-        round(CosineSimilarity.of(col("ed"), col("ced")), 6).as("csim"))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cent_id"))))
-      .filter(col("crank") <= IvfNprobe)
-      .select(col("vec_id").as("q_id"), col("ed").as("qed"), col("cent_id").as("cell"))
-    probes
+    probedTop3(e, argmaxCellLit(e, centroidModel(cents)), cents, qLo, qHi)
+
+  /** The probed search both IVF entries run: each query of `e` in
+    * `[qLo, qHi)` scores the members of its probed cells in `assign`
+    * (vec_id, ed, cell) — top 3 by cosine, ties to the lower id. */
+  private def probedTop3(e: DataFrame, assign: DataFrame, cents: DataFrame,
+                         qLo: Long, qHi: Long): DataFrame =
+    probeCells(e, qLo, qHi, cents)
       .join(assign, Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("c_id"),
@@ -718,7 +672,57 @@ object Similarity {
       .filter(col("rank") <= 3)
       .select("q_id", "c_id", "sim", "rank")
       .orderBy("q_id", "rank")
-  }
+
+  /** The IVF cell ranking against the last Lloyd iteration's centroids:
+    * `ranked` orders every vector's cells by cosine (ties to the lower
+    * cent_id) and `assign(vec_id, cell)` keeps the first — the probe
+    * lists and the cell assignment every IVF oracle reads. */
+  private def ivfAssignCteSql: String =
+    s"""ranked AS (
+       |${cellRankSql(s"cents$IvfIters")}
+       |), assign AS (
+       |  SELECT vec_id, cent_id AS cell FROM ranked WHERE crank = 1
+       |)""".stripMargin
+
+  /** Probe ranking: each vector of `e` with id in `[qLo, qHi)`, as a
+    * (q_id, qed) query, with its [[IvfNprobe]] best cells by cosine to
+    * the centroids, ties to the lower cent_id — (q_id, qed, cell). It
+    * ranks top-nprobe, not the argmax, but only for the few queries:
+    * filter them FIRST, then window over |queries|×K rows. */
+  private def probeCells(e: DataFrame, qLo: Long, qHi: Long,
+                         cents: DataFrame): DataFrame =
+    e.filter(col("vec_id") >= qLo && col("vec_id") < qHi)
+      .select(col("vec_id").as("q_id"), col("ed").as("qed"))
+      .crossJoin(broadcast(cents))
+      .select(col("q_id"), col("qed"), col("cent_id"),
+        round(CosineSimilarity.of(col("qed"), col("ced")), 6).as("csim"))
+      .withColumn("crank", row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(col("csim").desc, col("cent_id"))))
+      .filter(col("crank") <= IvfNprobe)
+      .select(col("q_id"), col("qed"), col("cent_id").as("cell"))
+
+  /** The cell ranking every IVF assignment reads, the Lloyd steps' and
+    * the final one's: each vector's cells of the `cents` stage by cosine,
+    * ties to the lower cent_id (`crank`), carrying the `carry` vector
+    * columns, every line indented by `pad`. */
+  private def cellRankSql(cents: String, carry: String = "", pad: String = "  "): String =
+    s"""${pad}SELECT e.vec_id$carry, c.cent_id,
+       |$pad       ROW_NUMBER() OVER (PARTITION BY e.vec_id
+       |$pad         ORDER BY ${pairSimSql("e", "c")} DESC, c.cent_id) AS crank
+       |${pad}FROM emb e CROSS JOIN $cents c""".stripMargin
+
+  /** [[ivfAssignCteSql]] plus the probed search's candidates: `probes`
+    * (each query in `[qLo, qHi)` with its [[IvfNprobe]] best cells) and
+    * `cand(q_id, c_id)`, the distinct other members of those cells. */
+  private def ivfCandCteSql(qLo: Long, qHi: Long): String =
+    s"""$ivfAssignCteSql, probes AS (
+       |  SELECT vec_id AS q_id, cent_id AS cell FROM ranked
+       |  WHERE vec_id >= $qLo AND vec_id < $qHi AND crank <= $IvfNprobe
+       |), cand AS (
+       |  SELECT DISTINCT p.q_id, a.vec_id AS c_id
+       |  FROM probes p JOIN assign a USING (cell)
+       |  WHERE a.vec_id <> p.q_id
+       |)""".stripMargin
 
   /** The k-means training chain, unrolled once per Lloyd iteration (the
     * CTE text is generated by the same loop bounds the Spark side uses,
@@ -755,10 +759,7 @@ object Similarity {
     for (i <- 1 to IvfIters) {
       sb.append(s""", assign$i AS (
          |  SELECT vec_id, ed, cent_id FROM (
-         |    SELECT e.vec_id, e.ed, c.cent_id,
-         |           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-         |             ORDER BY ${pairSimSql("e", "c")} DESC, c.cent_id) AS crank
-         |    FROM emb e CROSS JOIN cents${i - 1} c)
+         |${cellRankSql(s"cents${i - 1}", ", e.ed", "    ")})
          |  WHERE crank = 1
          |), cents$i AS (
          |  SELECT cent_id, ed, $n2OfEd AS n2
@@ -769,21 +770,7 @@ object Similarity {
   }
 
   val embeddingAnnIvfSql: String =
-    s"""WITH $cosineCteSql, $kmeansCteSql, ranked AS (
-       |  SELECT e.vec_id, c.cent_id,
-       |         ROW_NUMBER() OVER (PARTITION BY e.vec_id
-       |           ORDER BY ${pairSimSql("e", "c")} DESC, c.cent_id) AS crank
-       |  FROM emb e CROSS JOIN cents$IvfIters c
-       |), assign AS (
-       |  SELECT vec_id, cent_id AS cell FROM ranked WHERE crank = 1
-       |), probes AS (
-       |  SELECT vec_id AS q_id, cent_id AS cell FROM ranked
-       |  WHERE vec_id >= 100 AND vec_id < 105 AND crank <= $IvfNprobe
-       |), cand AS (
-       |  SELECT DISTINCT p.q_id, a.vec_id AS c_id
-       |  FROM probes p JOIN assign a USING (cell)
-       |  WHERE a.vec_id <> p.q_id
-       |)
+    s"""WITH $cosineCteSql, $kmeansCteSql, ${ivfCandCteSql(100L, 105L)}
        |SELECT q_id, c_id, sim,
        |       ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rank
        |FROM (
@@ -796,8 +783,8 @@ object Similarity {
        |ORDER BY q_id, rank""".stripMargin
 
   val embeddingAnnLshSql: String = {
-    val bucketExpr = (0 until NumPlanes).map { p =>
-      s"(CASE WHEN ${projSql(p, i => s"ed[$i]")} > 0 THEN ${1L << p} ELSE 0 END)"
+    val bucketExpr = planeWeights.zipWithIndex.map { case (w, p) =>
+      s"(CASE WHEN ${projSql(w, i => s"ed[$i]")} > 0 THEN ${1L << p} ELSE 0 END)"
     }.mkString(" + ")
     s"""WITH $cosineCteSql, bucketed AS (
        |  SELECT vec_id, ed, n2, CAST($bucketExpr AS BIGINT) AS bucket FROM emb
@@ -856,27 +843,7 @@ object Similarity {
       .saveAsTable("graft_ivf_assign")
     // ---- search: reads ONLY the persisted artifacts ----
     val assign = spark.table("graft_ivf_assign")
-    val probes = assign
-      .filter(col("vec_id") >= 100 && col("vec_id") < 105)
-      .select(col("vec_id").as("q_id"), col("ed").as("qed"))
-      .crossJoin(broadcast(cents))
-      .select(col("q_id"), col("qed"), col("cent_id"),
-        round(CosineSimilarity.of(col("qed"), col("ced")), 6).as("csim"))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("csim").desc, col("cent_id"))))
-      .filter(col("crank") <= IvfNprobe)
-      .select(col("q_id"), col("qed"), col("cent_id").as("cell"))
-    probes
-      .join(assign, Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("c_id"),
-        round(CosineSimilarity.of(col("qed"), col("ed")), 6).as("sim"))
-      .dropDuplicates("q_id", "c_id") // a candidate can sit in both probed cells
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))).cast("long"))
-      .filter(col("rank") <= 3)
-      .select("q_id", "c_id", "sim", "rank")
-      .orderBy("q_id", "rank")
+    probedTop3(assign, assign, cents, 100L, 105L)
   }
 
   /** Same result set as [[embeddingAnnIvf]] — the lifecycle differs, the
@@ -903,25 +870,11 @@ object Similarity {
     Layout.dropManagedTable(spark, "graft_lsh_buckets")
     val e = Tables.embeddings(spark, dir)
       .withColumn("ed", col("embedding").cast("array<double>"))
-    val bucket = (0 until NumPlanes).map { p =>
-      when(projDotExpr(planeWeights(p)) > 0, lit(1L << p)).otherwise(lit(0L))
-    }.reduce(_ + _)
-    e.select(col("vec_id"), col("ed"), bucket.as("bucket"))
+    e.select(col("vec_id"), col("ed"), bucketCode(planeWeights).as("bucket"))
       .write.bucketBy(8, "bucket").sortBy("bucket")
       .mode("overwrite").saveAsTable("graft_lsh_buckets")
     // ---- search: bucket-colocated self-join, no exchange ----
-    val b = spark.table("graft_lsh_buckets")
-    b.as("a")
-      .join(b.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("q_id"), col("b.vec_id").as("c_id"),
-        col("a.bucket").as("bucket"),
-        round(CosineSimilarity.of(col("a.ed"), col("b.ed")), 6).as("sim"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))))
-      .filter(col("rank") === 1)
-      .select("q_id", "c_id", "bucket", "sim")
-      .orderBy("q_id")
+    bucketTop1(spark.table("graft_lsh_buckets"))
   }
 
   /** Same result set as [[embeddingAnnLsh]] — bucket layout must never
@@ -1238,7 +1191,7 @@ object Similarity {
     * per candidate per subspace). The r19 HOF finding, SCALE.md:
     * native-in-lambda forfeits codegen; this kernel keeps the pass
     * compiled. Output bit-identical — 242/242 oracle-green unchanged.) */
-  private def subL2: org.apache.spark.sql.Column =
+  private def subL2: Column =
     round(SquaredL2.of(col("sub"), col("ced")), 6)
 
   /** Per-subspace subvectors: (vec_id, m, sub) — one row per vector per
@@ -1271,14 +1224,7 @@ object Similarity {
         .agg(min_by(struct(col("cent_id"), col("sub")),
           struct(col("d2"), col("cent_id"))).as("best"))
         .select(col("m"), col("best.cent_id").as("cent_id"), col("best.sub").as("sub"))
-      val means = assigned
-        .select(col("m"), col("cent_id"), posexplode(col("sub")).as(Seq("d", "v")))
-        .groupBy("m", "cent_id", "d")
-        .agg(round(sum(col("v").cast("decimal(28,14)")).cast("double")
-          / count(lit(1)), CentroidDp).as("mv"))
-      cents = means.groupBy("m", "cent_id")
-        .agg(array_sort(collect_list(struct(col("d"), col("mv")))).as("dm"))
-        .select(col("m"), col("cent_id"), col("dm.mv").as("ced"))
+      cents = centroidMeans(assigned, Seq("m", "cent_id"), "sub")
     }
     cents
   }
@@ -1404,6 +1350,16 @@ object Similarity {
   private val AdcQLo = 100L
   private val AdcQHi = 105L
 
+  /** The ADC oracles' lookup table `qtab(q_id, m, cent_id, dq)`: each
+    * query's subvector distances to every codebook centroid. */
+  private def adcQtabCteSql: String =
+    s"""qtab AS (
+       |  SELECT s.vec_id AS q_id, s.m, c.cent_id,
+       |         ${l2DuckSql("s.sub", "c.ced")} AS dq
+       |  FROM msubs s JOIN pq$PqIters c USING (m)
+       |  WHERE s.vec_id >= $AdcQLo AND s.vec_id < $AdcQHi
+       |)""".stripMargin
+
   /** Asymmetric-distance (ADC) top-k search over the PQ codes — the
     * serving path product quantization exists for: per query, an M×K
     * lookup table of subspace distances to every codebook centroid is
@@ -1432,11 +1388,17 @@ object Similarity {
       .join(broadcast(cents), Seq("m"))
       .select(col("vec_id").as("q_id"), col("m").as("dm"), col("cent_id"),
         subL2.as("dq"))
-    codes
+    adcTop3(codes
       .join(broadcast(dtab),
         col("m") === col("dm") && col("code") === col("cent_id"))
-      .filter(col("c_id") =!= col("q_id"))
-      .groupBy("q_id", "c_id")
+      .filter(col("c_id") =!= col("q_id")))
+  }
+
+  /** The ADC ranking over (q_id, c_id, dq) lookup-table hits: each
+    * candidate's table-sum `adist`, accumulated in DECIMAL, top 3 per
+    * query, ties to the lower c_id. */
+  private def adcTop3(hits: DataFrame): DataFrame =
+    hits.groupBy("q_id", "c_id")
       .agg(sum(col("dq").cast("decimal(18,6)")).as("adist_dec"))
       .select(col("q_id"), col("c_id"),
         col("adist_dec").cast("double").as("adist"))
@@ -1445,7 +1407,6 @@ object Similarity {
       .filter(col("rank") <= 3)
       .select("q_id", "c_id", "adist", "rank")
       .orderBy("q_id", "rank")
-  }
 
   /** IVF candidate generation against a trained coarse quantizer — the
     * (q_id, c_id) pairs a probed search scores, WITHOUT scoring them:
@@ -1456,16 +1417,8 @@ object Similarity {
       qLo: Long, qHi: Long): DataFrame = {
     val assign = argmaxCellLit(e, centroidModel(cents))
       .select(col("vec_id"), col("cell"))
-    val probes = e
-      .filter(col("vec_id") >= qLo && col("vec_id") < qHi)
-      .crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("cent_id"),
-        round(CosineSimilarity.of(col("ed"), col("ced")), 6).as("csim"))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cent_id"))))
-      .filter(col("crank") <= IvfNprobe)
-      .select(col("vec_id").as("q_id"), col("cent_id").as("cell"))
-    probes.join(assign, Seq("cell"))
+    probeCells(e, qLo, qHi, cents).select("q_id", "cell")
+      .join(assign, Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("c_id"))
       .dropDuplicates("q_id", "c_id")
@@ -1505,45 +1458,17 @@ object Similarity {
       .join(broadcast(pqCents), Seq("m"))
       .select(col("vec_id").as("dq_id"), col("m").as("dm"), col("cent_id"),
         subL2.as("dq"))
-    cand.join(codes, Seq("c_id"))
+    adcTop3(cand.join(codes, Seq("c_id"))
       .join(broadcast(dtab),
         col("q_id") === col("dq_id") && col("m") === col("dm") &&
-          col("code") === col("cent_id"))
-      .groupBy("q_id", "c_id")
-      .agg(sum(col("dq").cast("decimal(18,6)")).as("adist_dec"))
-      .select(col("q_id"), col("c_id"),
-        col("adist_dec").cast("double").as("adist"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("adist"), col("c_id"))).cast("long"))
-      .filter(col("rank") <= 3)
-      .select("q_id", "c_id", "adist", "rank")
-      .orderBy("q_id", "rank")
+          col("code") === col("cent_id")))
   }
 
   /** Oracle: the IVF k-means chain and the PQ chain composed in one WITH
     * (collision-free by the passign renaming), candidates from the probe
     * join, distances from the code tables — same rounding/tiebreaks. */
   val embeddingIvfAdcSearchSql: String =
-    s"""WITH $cosineCteSql, $kmeansCteSql, $pqChainSql, ranked AS (
-       |  SELECT e.vec_id, c.cent_id,
-       |         ROW_NUMBER() OVER (PARTITION BY e.vec_id
-       |           ORDER BY ${pairSimSql("e", "c")} DESC, c.cent_id) AS crank
-       |  FROM emb e CROSS JOIN cents$IvfIters c
-       |), assign AS (
-       |  SELECT vec_id, cent_id AS cell FROM ranked WHERE crank = 1
-       |), probes AS (
-       |  SELECT vec_id AS q_id, cent_id AS cell FROM ranked
-       |  WHERE vec_id >= $AdcQLo AND vec_id < $AdcQHi AND crank <= $IvfNprobe
-       |), cand AS (
-       |  SELECT DISTINCT p.q_id, a.vec_id AS c_id
-       |  FROM probes p JOIN assign a USING (cell)
-       |  WHERE a.vec_id <> p.q_id
-       |), qtab AS (
-       |  SELECT s.vec_id AS q_id, s.m, c.cent_id,
-       |         ${l2DuckSql("s.sub", "c.ced")} AS dq
-       |  FROM msubs s JOIN pq$PqIters c USING (m)
-       |  WHERE s.vec_id >= $AdcQLo AND s.vec_id < $AdcQHi
-       |)
+    s"""WITH $cosineCteSql, $kmeansCteSql, $pqChainSql, ${ivfCandCteSql(AdcQLo, AdcQHi)}, $adcQtabCteSql
        |SELECT q_id, c_id, adist, rank FROM (
        |  SELECT q_id, c_id, adist,
        |         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY adist, c_id) AS rank
@@ -1559,12 +1484,7 @@ object Similarity {
 
   /** Oracle: the query tables off the shared PQ chain, same decimal sum. */
   val embeddingAdcSearchSql: String =
-    s"""WITH $pqCteSql, qtab AS (
-       |  SELECT s.vec_id AS q_id, s.m, c.cent_id,
-       |         ${l2DuckSql("s.sub", "c.ced")} AS dq
-       |  FROM msubs s JOIN pq$PqIters c USING (m)
-       |  WHERE s.vec_id >= $AdcQLo AND s.vec_id < $AdcQHi
-       |)
+    s"""WITH $pqCteSql, $adcQtabCteSql
        |SELECT q_id, c_id, adist, rank FROM (
        |  SELECT q_id, c_id, adist,
        |         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY adist, c_id) AS rank
@@ -1631,26 +1551,7 @@ object Similarity {
     * search results restricted to (q_id, c_id), and the per-query hit
     * counts — same rounding, decimal sums, and id tie-breaks. */
   val annRecallReportSql: String =
-    s"""WITH $cosineCteSql, $kmeansCteSql, $pqChainSql, ranked AS (
-       |  SELECT e.vec_id, c.cent_id,
-       |         ROW_NUMBER() OVER (PARTITION BY e.vec_id
-       |           ORDER BY ${pairSimSql("e", "c")} DESC, c.cent_id) AS crank
-       |  FROM emb e CROSS JOIN cents$IvfIters c
-       |), assign AS (
-       |  SELECT vec_id, cent_id AS cell FROM ranked WHERE crank = 1
-       |), probes AS (
-       |  SELECT vec_id AS q_id, cent_id AS cell FROM ranked
-       |  WHERE vec_id >= $AdcQLo AND vec_id < $AdcQHi AND crank <= $IvfNprobe
-       |), cand AS (
-       |  SELECT DISTINCT p.q_id, a.vec_id AS c_id
-       |  FROM probes p JOIN assign a USING (cell)
-       |  WHERE a.vec_id <> p.q_id
-       |), qtab AS (
-       |  SELECT s.vec_id AS q_id, s.m, c.cent_id,
-       |         ${l2DuckSql("s.sub", "c.ced")} AS dq
-       |  FROM msubs s JOIN pq$PqIters c USING (m)
-       |  WHERE s.vec_id >= $AdcQLo AND s.vec_id < $AdcQHi
-       |), truth AS (
+    s"""WITH $cosineCteSql, $kmeansCteSql, $pqChainSql, ${ivfCandCteSql(AdcQLo, AdcQHi)}, $adcQtabCteSql, truth AS (
        |  SELECT q_id, c_id FROM (
        |    SELECT q.vec_id AS q_id, c.vec_id AS c_id,
        |           ROW_NUMBER() OVER (PARTITION BY q.vec_id
@@ -1743,21 +1644,13 @@ object Similarity {
   /** Within-cell candidate pairs confirmed at [[SemCosine]] — shared by
     * [[semanticDedup]] and [[semanticDedupApply]] (and the spec's
     * planted-cluster fixture through [[semanticAssignWith]]). */
-  private[llm] def semanticPairsFrom(assign: DataFrame): DataFrame = {
-    assign.as("a")
+  private[llm] def semanticPairsFrom(assign: DataFrame): DataFrame =
+    cosineAtLeast(assign.as("a")
       .join(assign.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("doc_a"), col("b.vec_id").as("doc_b"),
         col("a.cell").as("cell"),
-        CosineSimilarity.of(col("a.ed"), col("b.ed")).as("c"))
-      // raw prefilter before the BigDecimal-backed round (the
-      // lshDedupKernel pattern): candidates are cell-random, the 1e-6
-      // slack keeps every pair that could round up to the threshold
-      .filter(col("c") >= SemCosine - 1e-6)
-      .select(col("doc_a"), col("doc_b"), col("cell"),
-        round(col("c"), 6).as("cosine"))
-      .filter(col("cosine") >= SemCosine)
-  }
+        CosineSimilarity.of(col("a.ed"), col("b.ed")).as("c")), SemCosine)
 
   /** The semantic-dedup path at K cells: train the K-cell quantizer on
     * `e` ([[ivfModel]]), assign every vector to its cell, and confirm
@@ -1800,14 +1693,7 @@ object Similarity {
     semanticDedupSqlExpr(k.toString)
 
   private def semanticDedupSqlExpr(kExpr: String): String =
-    s"""WITH $cosineCteSql, ${kmeansCteSqlExpr(kExpr)}, ranked AS (
-       |  SELECT e.vec_id, c.cent_id,
-       |         ROW_NUMBER() OVER (PARTITION BY e.vec_id
-       |           ORDER BY ${pairSimSql("e", "c")} DESC, c.cent_id) AS crank
-       |  FROM emb e CROSS JOIN cents$IvfIters c
-       |), assign AS (
-       |  SELECT vec_id, cent_id AS cell FROM ranked WHERE crank = 1
-       |)
+    s"""WITH $cosineCteSql, ${kmeansCteSqlExpr(kExpr)}, $ivfAssignCteSql
        |SELECT doc_a, doc_b, cell, cosine FROM (
        |  SELECT a.vec_id AS doc_a, b.vec_id AS doc_b, aa.cell,
        |         ${pairSimSql("a", "b")} AS cosine
@@ -1921,14 +1807,7 @@ object Similarity {
   /** Oracle: same probe-anchored truth, same centroid chain, same
     * one-row reduction. */
   val semanticDedupRecallSql: String =
-    s"""WITH $cosineCteSql, $kmeansCteSql, ranked AS (
-       |  SELECT e.vec_id, c.cent_id,
-       |         ROW_NUMBER() OVER (PARTITION BY e.vec_id
-       |           ORDER BY ${pairSimSql("e", "c")} DESC, c.cent_id) AS crank
-       |  FROM emb e CROSS JOIN cents$IvfIters c
-       |), assign AS (
-       |  SELECT vec_id, cent_id AS cell FROM ranked WHERE crank = 1
-       |), truth AS (
+    s"""WITH $cosineCteSql, $kmeansCteSql, $ivfAssignCteSql, truth AS (
        |  SELECT p.vec_id AS p_id, c.vec_id AS c_id
        |  FROM emb p JOIN emb c
        |    ON p.vec_id < $SemProbeN AND c.vec_id > p.vec_id
@@ -1968,14 +1847,7 @@ object Similarity {
     * pairs (the [[Dedup.clusterSizeHistogramSql]] reach pattern),
     * min-label components, survivors by anti-membership. */
   val semanticDedupApplySql: String =
-    s"""WITH RECURSIVE $cosineCteSql, $kmeansCteSql, ranked AS (
-       |  SELECT e.vec_id, c.cent_id,
-       |         ROW_NUMBER() OVER (PARTITION BY e.vec_id
-       |           ORDER BY ${pairSimSql("e", "c")} DESC, c.cent_id) AS crank
-       |  FROM emb e CROSS JOIN cents$IvfIters c
-       |), assign AS (
-       |  SELECT vec_id, cent_id AS cell FROM ranked WHERE crank = 1
-       |), spairs AS (
+    s"""WITH RECURSIVE $cosineCteSql, $kmeansCteSql, $ivfAssignCteSql, spairs AS (
        |  SELECT doc_a, doc_b FROM (
        |    SELECT a.vec_id AS doc_a, b.vec_id AS doc_b,
        |           ${pairSimSql("a", "b")} AS cosine
@@ -1984,17 +1856,7 @@ object Similarity {
        |    JOIN assign aa ON aa.vec_id = a.vec_id
        |    JOIN assign ab ON ab.vec_id = b.vec_id AND ab.cell = aa.cell)
        |  WHERE cosine >= $SemCosine
-       |), edges AS (
-       |  SELECT doc_a AS u, doc_b AS v FROM spairs
-       |  UNION ALL
-       |  SELECT doc_b, doc_a FROM spairs
-       |), reach AS (
-       |  SELECT u, u AS v FROM (SELECT DISTINCT u FROM edges) nodes
-       |  UNION
-       |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-       |), comp AS (
-       |  SELECT u AS vec_id, min(v) AS component FROM reach GROUP BY u
-       |)
+       |), ${Dedup.closureCteSql("spairs", "doc_a", "doc_b", "vec_id", "component")}
        |SELECT vec_id, label FROM embeddings
        |WHERE vec_id NOT IN (SELECT vec_id FROM comp WHERE vec_id <> component)
        |ORDER BY vec_id""".stripMargin

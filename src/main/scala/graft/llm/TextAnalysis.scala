@@ -243,17 +243,7 @@ object TextAnalysis {
   }
 
   val datasetCardSql: String =
-    s"""WITH RECURSIVE ${Dedup.shinglesCteSql}, ${Dedup.jaccardPairsCteSql}, edges AS (
-       |  SELECT doc_a AS u, doc_b AS v FROM pairs
-       |  UNION ALL
-       |  SELECT doc_b, doc_a FROM pairs
-       |), reach AS (
-       |  SELECT u, u AS v FROM (SELECT DISTINCT u FROM edges) nodes
-       |  UNION
-       |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-       |), comp AS (
-       |  SELECT u AS doc_id, min(v) AS cluster_id FROM reach GROUP BY u
-       |), corpus AS (
+    s"""WITH RECURSIVE ${Dedup.jaccardClosureCteSql}, corpus AS (
        |  SELECT count(*) AS n_docs, count(DISTINCT lang) AS n_langs,
        |         count(DISTINCT source) AS n_sources,
        |         CAST(sum(n_chars) AS BIGINT) AS n_chars
@@ -1192,48 +1182,6 @@ object TextAnalysis {
     bpeTrainBatchedFrom(spark, Tables.spread(Tables.documents(spark, dir)),
       BpeTrainRounds, batchK = 1).drop("round")
 
-  /** Oracle: the SAME loop unrolled as chained CTE stages (merge #k's
-    * stage counts pairs over stage k-1's rewritten strings — generated
-    * for the fixed [[BpeTrainRounds]]; a recursive CTE cannot aggregate
-    * over its own recursive term, so unrolling IS the SQL spelling of
-    * the trainer loop). */
-  val bpeTrainSql: String = {
-    val pat = s"chr(31) || '([^' || chr(30) || ']*)' || chr(30)"
-    def stage(k: Int): String = {
-      val prev = s"s${k - 1}"
-      s"""p$k AS (
-         |  SELECT cnt, unnest(list_transform(range(1, len(toks)),
-         |           i -> {'l': toks[i], 'r': toks[i+1]})) AS pr
-         |  FROM (SELECT cnt, regexp_extract_all(s, $pat, 1) AS toks FROM $prev)
-         |), m$k AS (
-         |  SELECT pr.l AS lhs, pr.r AS rhs, CAST(sum(cnt) AS BIGINT) AS n
-         |  FROM p$k GROUP BY 1, 2
-         |  ORDER BY n DESC, lhs, rhs LIMIT 1
-         |), s$k AS (
-         |  SELECT cnt, replace(s, chr(31) || m.lhs || chr(30) || chr(31) || m.rhs || chr(30),
-         |                         chr(31) || m.lhs || m.rhs || chr(30)) AS s
-         |  FROM $prev, m$k m
-         |)""".stripMargin
-    }
-    val stages = (1 to BpeTrainRounds).map(stage).mkString(",\n")
-    val out = (1 to BpeTrainRounds)
-      .map(k => s"SELECT $k::BIGINT AS rk, lhs, rhs, n FROM m$k")
-      .mkString("\nUNION ALL\n")
-    s"""WITH s0 AS (
-       |  SELECT cnt, regexp_replace(w, '(.)', chr(31) || '\\1' || chr(30), 'g') AS s
-       |  FROM (
-       |    SELECT w, count(*) AS cnt FROM (
-       |      SELECT unnest(string_split_regex(lower(trim(text)), '\\s+')) AS w
-       |      FROM documents
-       |    ) WHERE length(w) >= 2 GROUP BY w
-       |  )
-       |),
-       |$stages
-       |SELECT * FROM (
-       |$out
-       |) ORDER BY rk""".stripMargin
-  }
-
   /** Batched-trainer geometry: merges accepted per round, rounds, and the
     * mined candidate window the batch is selected from. All three are
     * compile-time constants, so every driver-side artifact in the trainer
@@ -1276,7 +1224,7 @@ object TextAnalysis {
     * (which compares only against already-ACCEPTED candidates): the two
     * differ only for candidates shadowed by a rejected higher rank, both
     * yield pairwise non-interacting batches, and this one has a direct
-    * SQL spelling (a NOT EXISTS self-join over the window) so the DuckDB
+    * SQL spelling (a running footprint union over the window) so the DuckDB
     * oracle replays the IDENTICAL rule. */
   private[llm] def bpeSelectBatch(cands: Seq[(String, String, Long)],
                                   batchK: Int): Seq[(String, String, Long)] = {
@@ -1369,10 +1317,13 @@ object TextAnalysis {
       cached.unpersist()
     }
     import spark.implicits._
+    // ≤ K·R rows, already in rank order on the driver; one partition, so
+    // a write makes one file and collecting runs one job, not a
+    // distributed sort's three
     merges.toSeq.zipWithIndex
       .map { case ((round, l, r, n), i) => (i + 1L, round, l, r, n) }
       .toDF("rk", "round", "lhs", "rhs", "n")
-      .orderBy("rk")
+      .coalesce(1)
   }
 
   /** Applies a merge batch to one word's tokens, in rank order, each merge
@@ -1412,12 +1363,26 @@ object TextAnalysis {
   /** Oracle: the same batched rule unrolled as chained CTE stages. Per
     * round: cand = the rank-ordered top-[[BpeBatchWindow]] pair counts;
     * acc = candidates with NO interacting higher-ranked candidate
-    * (footprint overlap checked by list_has_any over {lhs, rhs,
-    * lhs||rhs}), first [[BpeBatchK]] kept; the rewrite folds the
-    * accepted (pattern, replacement) list over each word string with
+    * (list_has_any of the footprint {lhs, rhs, lhs||rhs} against the
+    * running union of the higher ranks' footprints), first
+    * [[BpeBatchK]] kept; ms = the accepted (pattern, replacement) list,
+    * which the rewrite folds over each word string with
     * list_reduce(list_prepend(...)) — the same ascending fold order as
-    * the Spark side's foldLeft replace chain (which commutes anyway). */
-  val bpeTrainBatchedSql: String = {
+    * the Spark side's foldLeft replace chain (which commutes anyway).
+    * DuckDB inlines each CTE at every reference, so a stage reads the
+    * stage before exactly twice (the rewrite and the mining): R rounds
+    * cost 2^R, not the 3^R a candidate self-join would.
+    * The unrolling IS the SQL spelling of the trainer loop: a recursive
+    * CTE cannot aggregate over its own recursive term. */
+  val bpeTrainBatchedSql: String = bpeTrainBatchedSqlFor(BpeBatchRounds, BpeBatchK)
+
+  /** Oracle: the batched oracle at K = 1, `round` projected away — a
+    * round's first candidate is always accepted, so round k learns merge
+    * k. Defined after the window constants the generator reads. */
+  val bpeTrainSql: String = "SELECT rk, lhs, rhs, n FROM (\n" +
+    bpeTrainBatchedSqlFor(BpeTrainRounds, batchK = 1) + "\n) ORDER BY rk"
+
+  private def bpeTrainBatchedSqlFor(rounds: Int, batchK: Int): String = {
     val pat = s"chr(31) || '([^' || chr(30) || ']*)' || chr(30)"
     def stage(k: Int): String =
       s"""p$k AS (
@@ -1433,23 +1398,27 @@ object TextAnalysis {
          |    ORDER BY n DESC, lhs, rhs LIMIT $BpeBatchWindow
          |  )
          |), acc$k AS (
-         |  SELECT c.lhs AS lhs, c.rhs AS rhs, c.n AS n,
-         |         row_number() OVER (ORDER BY c.cr) AS rn
-         |  FROM cand$k c
-         |  ANTI JOIN cand$k h ON h.cr < c.cr AND list_has_any(h.foot, c.foot)
-         |  ORDER BY c.cr LIMIT $BpeBatchK
-         |), s$k AS (
-         |  SELECT cnt, list_reduce(list_prepend(s,
-         |    (SELECT coalesce(list(
+         |  SELECT lhs, rhs, n, row_number() OVER (ORDER BY cr) AS rn
+         |  FROM (
+         |    SELECT *, flatten(coalesce(list(foot) OVER (ORDER BY cr
+         |             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), [])) AS higher
+         |    FROM cand$k
+         |  )
+         |  WHERE NOT list_has_any(higher, foot)
+         |  ORDER BY cr LIMIT $batchK
+         |), ms$k AS (
+         |  SELECT coalesce(list(
          |       chr(31) || lhs || chr(30) || chr(31) || rhs || chr(30) ||
-         |       chr(29) || chr(31) || lhs || rhs || chr(30) ORDER BY rn), [])
-         |     FROM acc$k)),
+         |       chr(29) || chr(31) || lhs || rhs || chr(30) ORDER BY rn), []) AS ms
+         |  FROM acc$k
+         |), s$k AS (
+         |  SELECT cnt, list_reduce(list_prepend(s, ms),
          |    (acc, m) -> replace(acc, split_part(m, chr(29), 1),
          |                             split_part(m, chr(29), 2))) AS s
-         |  FROM s${k - 1}
+         |  FROM s${k - 1}, ms$k
          |)""".stripMargin
-    val stages = (1 to BpeBatchRounds).map(stage).mkString(",\n")
-    val out = (1 to BpeBatchRounds)
+    val stages = (1 to rounds).map(stage).mkString(",\n")
+    val out = (1 to rounds)
       .map(k => s"SELECT $k AS round, lhs, rhs, n, rn FROM acc$k")
       .mkString("\nUNION ALL\n")
     s"""WITH s0 AS (

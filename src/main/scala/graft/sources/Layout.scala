@@ -157,14 +157,16 @@ object Layout {
     * would have truncated them). At 100 TB this is how a backfill
     * repairs one bad day without rewriting the table: the swap is
     * metadata-plus-one-partition I/O, proportional to the repaired slice,
-    * not the table. `partitionOverwriteMode=dynamic` is scoped to the
-    * repair write and restored afterwards (the per-write DataFrameWriter
-    * option is NOT honored on this path — verified: the write ran static
-    * and truncated the sibling partitions — so the session conf is the
-    * working mechanism, set/finally-restored). */
+    * not the table. `partitionOverwriteMode=dynamic` is set for the
+    * repair write only, on a CHILD session (`newSession`: own conf,
+    * shared catalog), so the caller's conf is never written (the
+    * per-write DataFrameWriter option is NOT honored on this path —
+    * verified: the write ran static and truncated the sibling partitions
+    * — so the session conf is the working mechanism). */
   def partitionOverwrite(spark: SparkSession, dir: String): DataFrame = {
-    recreate(spark, "graft_events_po")
-    val ev = Tables.events(spark, dir)
+    val s = spark.newSession()
+    recreate(s, "graft_events_po")
+    val ev = Tables.events(s, dir)
       .select("event_id", "user_id", "value", "event_type")
     ev.write.partitionBy("event_type")
       .mode("overwrite").saveAsTable("graft_events_po")
@@ -172,15 +174,9 @@ object Layout {
     val cleaned = ev
       .filter(col("event_type") === "purchase" && col("value").isNotNull)
       .withColumn("value", least(col("value"), lit(100.0)))
-    val modeKey = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(modeKey)
-    spark.conf.set(modeKey, "dynamic")
-    try cleaned.write.mode("overwrite").insertInto("graft_events_po")
-    finally prev match {
-      case Some(v) => spark.conf.set(modeKey, v)
-      case None => spark.conf.unset(modeKey)
-    }
-    spark.table("graft_events_po")
+    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    cleaned.write.mode("overwrite").insertInto("graft_events_po")
+    s.table("graft_events_po")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         round(sum(col("value").cast("decimal(18,6)")), 6)
@@ -330,8 +326,9 @@ object Layout {
     * oracle compare fails loudly — the audit is the safety net, not
     * decoration. */
   def forgetUsers(spark: SparkSession, dir: String): DataFrame = {
-    recreate(spark, "graft_events_rtbf")
-    val ev = Tables.events(spark, dir)
+    val s = spark.newSession()
+    recreate(s, "graft_events_rtbf")
+    val ev = Tables.events(s, dir)
       .select(col("event_id"), col("user_id"), col("value"),
         col("ts").cast("date").as("m"))
     ev.write.partitionBy("m").mode("overwrite")
@@ -342,24 +339,18 @@ object Layout {
     val forget = ev.select("user_id").distinct()
       .filter(col("user_id") % ForgetMod === 0)
       .localCheckpoint()
-    val t = spark.table("graft_events_rtbf")
+    val t = s.table("graft_events_rtbf")
     val affected = t.join(broadcast(forget), "user_id")
       .select("m").distinct()
       .localCheckpoint()
     val rewritten = t.join(broadcast(affected), "m")
       .join(broadcast(forget), Seq("user_id"), "left_anti")
-    val modeKey = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(modeKey)
-    spark.conf.set(modeKey, "dynamic")
+    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     // insertInto resolves by position: match the table's column order
     // (partition column last)
-    try rewritten.select("event_id", "user_id", "value", "m")
+    rewritten.select("event_id", "user_id", "value", "m")
       .write.mode("overwrite").insertInto("graft_events_rtbf")
-    finally prev match {
-      case Some(v) => spark.conf.set(modeKey, v)
-      case None => spark.conf.unset(modeKey)
-    }
-    val after = spark.table("graft_events_rtbf")
+    val after = s.table("graft_events_rtbf")
     after.agg(
       countDistinct(col("m")).as("n_partitions"),
       count(lit(1)).as("rows_after"),

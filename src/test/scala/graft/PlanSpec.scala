@@ -175,7 +175,7 @@ class PlanSpec extends SparkSpec {
     // expressions eliminated).
     val docs = Tables.documents(spark, sfDir)
     val sim = planString(
-      graft.llm.Dedup.simhashFingerprints(graft.llm.Dedup.shinglesOf(docs)))
+      graft.llm.Dedup.simhashFingerprints(graft.llm.Dedup.shinglesOf(docs), 1))
     assert(!sim.contains("Exchange"), sim.take(3000))
     assert(sim.contains("simhash_word"), sim.take(3000))
     val mh = planString(

@@ -33,6 +33,14 @@ class TablesSpec extends SparkSpec {
     } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
+  test("reading events writes no conf on a session built by SparkEntry.builder") {
+    SparkSpec.withFreshSession() { s =>
+      val before = s.conf.getAll
+      assert(Tables.events(s, sfDir).count() > 0)
+      assert(s.conf.getAll == before)
+    }
+  }
+
   test("a path without a data file keeps Spark's own error") {
     val dir = java.nio.file.Files.createTempDirectory("tables-spec")
     try {

@@ -56,7 +56,7 @@ class CorpusPrepSpec extends SparkSpec {
     // 120-bit Hamming <= 7 bar is strictly tighter on this corpus's
     // near-identical families).
     val s = CorpusPrep.stages(spark, sfDir, wideNearDup = true)
-    val widePairs = Dedup.simhashDedupWideFrom(Dedup.shinglesOf(s.exact))
+    val widePairs = Dedup.simhashPairsFrom(Dedup.shinglesOf(s.exact), words = 2)
     val wideDrop = widePairs.select(col("doc_b").as("doc_id")).distinct()
     val expectNd = s.exact.join(wideDrop, Seq("doc_id"), "left_anti")
     assert(s.nd.count() == expectNd.count(),
@@ -67,7 +67,7 @@ class CorpusPrepSpec extends SparkSpec {
     assert(s.gated.count() == narrow.gated.count() &&
       s.exact.count() == narrow.exact.count(),
       "width only affects stage 3 and beyond")
-    val narrowDrop = Dedup.simhashDedupFrom(Dedup.shinglesOf(narrow.exact))
+    val narrowDrop = Dedup.simhashPairsFrom(Dedup.shinglesOf(narrow.exact), words = 1)
       .select(col("doc_b").as("doc_id")).distinct()
     assert(wideDrop.join(narrowDrop, Seq("doc_id"), "left_anti").isEmpty,
       "on this corpus the 120-bit drop set is a subset of the 60-bit one")
@@ -89,7 +89,7 @@ class CorpusPrepSpec extends SparkSpec {
     val keepers = gated.groupBy(md5(col("text")).as("k"))
       .agg(min(col("doc_id")).as("doc_id"))
     val exact = gated.join(keepers.select("doc_id"), Seq("doc_id"), "left_semi")
-    val threaded = Dedup.simhashDedupFrom(Dedup.shinglesOf(exact))
+    val threaded = Dedup.simhashPairsFrom(Dedup.shinglesOf(exact), words = 1)
       .select(col("doc_b").as("doc_id")).distinct()
     val naive = Dedup.simhashDedup(spark, sfDir)
       .select(col("doc_b").as("doc_id")).distinct()

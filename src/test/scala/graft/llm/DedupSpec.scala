@@ -39,7 +39,7 @@ class DedupSpec extends SparkSpec {
     // so the wide (stricter) kernel still catches exact duplicates
     val dupText = (1 to 20).map(i => s"w$i").mkString(" ")
     val docs = Seq((1L, dupText), (2L, dupText)).toDF("doc_id", "text")
-    val got = Dedup.simhashDedupWideFrom(Dedup.shinglesOf(docs)).collect()
+    val got = Dedup.simhashPairsFrom(Dedup.shinglesOf(docs), words = 2).collect()
     assert(got.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq ==
       Seq((1L, 2L, 0L)))
   }

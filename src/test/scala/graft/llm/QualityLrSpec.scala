@@ -143,4 +143,13 @@ class QualityLrSpec extends SparkSpec {
     assert(plan.collect { case r: LogicalRelation => r }.isEmpty,
       s"scoring re-reads the corpus instead of the cached features:\n$plan")
   }
+
+  test("quality_lr_train sorts its 4-row model on the driver: collecting it runs one job") {
+    val model = QualityLr.qualityLrTrain(spark, sfDir)
+    val (rows, jobs) = SparkSpec.jobsDuring(spark)(model.collect())
+    val names = rows.map(_.getString(0)).toSeq
+    assert(names == names.sorted && names.size == 4, names)
+    assert(model.rdd.getNumPartitions == 1, "a write would split the model into several files")
+    assert(jobs == 1, s"collecting the trained model started $jobs jobs")
+  }
 }

@@ -87,23 +87,33 @@ class SimilaritySpec extends SparkSpec {
     assert(perQ.filter(col("n") =!= 10 || col("lo") =!= 1 || col("hi") =!= 10).isEmpty)
   }
 
-  test("lsh dedup finds synthetic near-identical pairs at the 0.95 threshold") {
+  /** Doc 2 = doc 1 + a tiny perturbation (cosine > 0.999); docs 10-19 are
+    * deterministic pseudo-random directions, pairwise far from collinear. */
+  private def nearPairFixture(): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    // doc 2 = doc 1 + a tiny perturbation (cosine > 0.999); docs 10-19 are
-    // deterministic pseudo-random directions, pairwise far from collinear
     val base = (0 until 64).map(d => math.sin(d + 1.0))
     val near = base.zipWithIndex.map { case (v, d) => v + (if (d == 0) 0.01 else 0.0) }
     val far = (10L to 19L).map { i =>
       (i, (0 until 64).map(d => math.cos(3.0 * i + 7.0 * d)))
     }
-    val e = (Seq((1L, base), (2L, near)) ++ far).toDF("vec_id", "ed")
-    val out = Similarity.embeddingLshDedupFrom(e).collect()
+    (Seq((1L, base), (2L, near)) ++ far).toDF("vec_id", "ed")
+  }
+
+  /** The synthetic near-pair set under one plane geometry: the planted pair
+    * is found, each emitted pair appears once (multi-table collisions
+    * deduped) and really clears the threshold. */
+  private def nearPairs(weights: Seq[Seq[Seq[Int]]]): Set[(Long, Long)] = {
+    val out = Similarity.lshDedupKernel(nearPairFixture(), weights).collect()
     val pairs = out.map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(pairs.contains((1L, 2L)), pairs.mkString(","))
-    // each emitted pair appears once (multi-table collisions deduped) and
-    // really clears the threshold
     assert(pairs.distinct == pairs)
     assert(out.forall(_.getDouble(2) >= 0.95))
+    pairs.toSet
+  }
+
+  test("lsh dedup finds synthetic near-identical pairs at the 0.95 threshold") {
+    // default 8×6 geometry (recall bound 0.9975 at cosine 0.95)
+    nearPairs(Similarity.dedupPlaneWeights)
   }
 
   test("lsh dedup registered entry is empty on this corpus (max pair cosine ~0.51)") {
@@ -111,20 +121,11 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("wide lsh geometry finds the synthetic near-pair and stays empty on the corpus") {
-    import spark.implicits._
-    // same recall path as the 8×6 test, under the 12×8 scale geometry
-    // (bound 0.9987 at cosine 0.95 — stronger than the default's 0.9975)
-    val base = (0 until 64).map(d => math.sin(d + 1.0))
-    val near = base.zipWithIndex.map { case (v, d) => v + (if (d == 0) 0.01 else 0.0) }
-    val far = (10L to 19L).map { i =>
-      (i, (0 until 64).map(d => math.cos(3.0 * i + 7.0 * d)))
-    }
-    val e = (Seq((1L, base), (2L, near)) ++ far).toDF("vec_id", "ed")
-    val out = Similarity.embeddingLshDedupWideFrom(e).collect()
-    val pairs = out.map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(pairs.contains((1L, 2L)), pairs.mkString(","))
-    assert(pairs.distinct == pairs)
-    assert(out.forall(_.getDouble(2) >= 0.95))
+    // same recall path under the 12×8 scale geometry (bound 0.9987 at
+    // cosine 0.95 — stronger than the default's 0.9975); both geometries
+    // run the one kernel, so they emit the same pair set
+    val wide = nearPairs(Similarity.widePlaneWeights)
+    assert(wide == nearPairs(Similarity.dedupPlaneWeights))
     assert(Similarity.embeddingLshDedupWide(spark, sfDir).isEmpty)
   }
 

@@ -759,4 +759,11 @@ class TextAnalysisSpec extends SparkSpec {
     assert(d20.getAs[Double]("avg_nll") < d21.getAs[Double]("avg_nll"))
   }
 
+  test("bpe_train sorts its merge list on the driver: collecting it runs one job") {
+    val merges = TextAnalysis.bpeTrain(spark, sfDir)
+    val (rows, jobs) = SparkSpec.jobsDuring(spark)(merges.collect())
+    assert(rows.map(_.getLong(0)).toSeq == (1L to rows.length.toLong), "rk is 1..n in order")
+    assert(merges.rdd.getNumPartitions == 1, "a write would split the merge list into several files")
+    assert(jobs == 1, s"collecting the merge list started $jobs jobs")
+  }
 }

@@ -67,6 +67,15 @@ class LayoutSpec extends SparkSpec {
       ev.filter(col("event_type") === "purchase" && col("value").isNotNull).count())
   }
 
+  test("the dynamic-overwrite entries leave the caller's conf unchanged") {
+    SparkSpec.withFreshSession() { s =>
+      val before = s.conf.getAll
+      Layout.partitionOverwrite(s, sfDir).collect()
+      Layout.forgetUsers(s, sfDir).collect()
+      assert(s.conf.getAll == before)
+    }
+  }
+
   test("forget users: audit reconciles and no forgotten row survives the rewrite") {
     val r = Layout.forgetUsers(spark, sfDir).head()
     assert(r.getAs[Long]("forgotten_rows_remaining") == 0L)

@@ -3,6 +3,7 @@
 
 Usage: after `sbt "runMain graft.Verify <sfDir> <outDir>"`, run
     python3 tools/local_verify.py <sfDir> <outDir> [--json <artifact.json>]
+                                  [--against <parent oracle_sql.json>]
 
 For each <outDir>/<name>/ parquet dir, runs <outDir>/oracle_sql.json[name]
 in DuckDB (tables = views over <sfDir>/*.parquet), sorts columns by name,
@@ -18,6 +19,11 @@ second-scale (sf0.1) oracle pass a first-class, machine-checkable
 artifact instead of a hand-pasted text log (VERDICT r16 #5);
 tools/gen_inventory.py fails when the committed artifact's entry set
 drifts from the registry.
+
+--against <parent oracle_sql.json> first lists every entry whose oracle
+SQL text differs from that earlier Verify dump (added, removed or
+changed), so "byte-identical except the listed entries" is checked by
+the command rather than by reading the diff.
 """
 import json, math, os, re, sys
 import duckdb
@@ -43,11 +49,24 @@ def frame(rel):
             for t in df.dtypes.astype(str)]
     return sorted(rows, key=repr), fams
 
-def main(sf_dir, out_dir, json_out=None):
+def oracle_diff(oracle, against):
+    """Names whose oracle SQL text differs from the `against` dump."""
+    before = json.load(open(against))
+    changed = sorted(n for n in oracle.keys() | before.keys()
+                     if oracle.get(n) != before.get(n))
+    for n in changed:
+        how = "added" if n not in before else "removed" if n not in oracle else "changed"
+        print(f"sql  {n}: {how}")
+    print(f"== {len(changed)} oracle strings differ from {against}")
+    return changed
+
+def main(sf_dir, out_dir, json_out=None, against=None):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    if against:
+        oracle_diff(oracle, against)
     # Under a SPARK_GRAFT_VERIFY_ONLY subset dump, only the requested names
     # are gated; in a full run a missing dump dir means the Verify dump
     # crashed or silently dropped the entry — that is a FAIL, not a skip.
@@ -102,15 +121,23 @@ def main(sf_dir, out_dir, json_out=None):
         print(f"== wrote {json_out} ({len(report)} entries)")
     return 1 if fail else 0
 
+USAGE = ("usage: local_verify.py <sfDir> <outDir> [--json <artifact.json>]"
+         " [--against <parent oracle_sql.json>]")
+
+def take_opt(args, flag):
+    if flag not in args:
+        return None
+    i = args.index(flag)
+    if i + 1 >= len(args):
+        sys.exit(USAGE)
+    val = args[i + 1]
+    del args[i:i + 2]
+    return val
+
 if __name__ == "__main__":
     args = sys.argv[1:]
-    jout = None
-    if "--json" in args:
-        i = args.index("--json")
-        if i + 1 >= len(args):
-            sys.exit("usage: local_verify.py <sfDir> <outDir> [--json <artifact.json>]")
-        jout = args[i + 1]
-        del args[i:i + 2]
+    jout = take_opt(args, "--json")
+    against = take_opt(args, "--against")
     if len(args) != 2:
-        sys.exit("usage: local_verify.py <sfDir> <outDir> [--json <artifact.json>]")
-    sys.exit(main(args[0], args[1], jout))
+        sys.exit(USAGE)
+    sys.exit(main(args[0], args[1], jout, against))
